@@ -133,7 +133,7 @@ def _q_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return graph_ops.connected_components(datagen.nodes(spark), datagen.edges(spark))
+    return graph_ops.road_components(datagen.nodes(spark), datagen.edges(spark))
 
 
 def _q_hop_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,9 +304,7 @@ def _q_collapse_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~((F.col("src") % 37 == 0) & (F.col("edge_id") % 2 == 1))
     )
     st = datagen.nodes(spark).filter("is_station").select("node_id")
-    # truncate the 3-round orphan lineage before the collapse loop's own
-    # bounded rounds — keeps every round's plan shallow
-    pruned = graph_passes.delete_orphan_edges(eds, st).localCheckpoint(eager=True)
+    pruned = graph_passes.delete_orphan_edges(eds, st)
     return graph_passes.collapse_edges(pruned, st)
 
 
@@ -359,9 +357,7 @@ def _q_lifecycle_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pfaedle_spark.plans import lifecycle
 
     nodes_f, edges_f, _ = lifecycle.composed_graph(spark)
-    return graph_ops.connected_components(
-        nodes_f.select("node_id"), edges_f
-    )
+    return graph_ops.road_components(nodes_f, edges_f)
 
 
 def _q_collapse_geoms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +368,7 @@ def _q_collapse_geoms(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~((F.col("src") % 37 == 0) & (F.col("edge_id") % 2 == 1))
     )
     st = datagen.nodes(spark).filter("is_station").select("node_id")
-    pruned = graph_passes.delete_orphan_edges(eds, st).localCheckpoint(eager=True)
+    pruned = graph_passes.delete_orphan_edges(eds, st)
     geoms = graph_passes.zigzag_geoms(pruned)
     merged = graph_passes.collapse_edges(pruned, st, geoms=geoms)
     return (

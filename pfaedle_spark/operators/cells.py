@@ -12,6 +12,7 @@ built-in column expressions (JVM-side, whole-stage codegen) — no UDFs.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -75,3 +76,39 @@ def edge_cells(edges: DataFrame) -> DataFrame:
 def point_cells(points: DataFrame, radius: float) -> DataFrame:
     """Point -> cells within `radius` (padded range query, Grid.h:113-153)."""
     return bbox_cells(points, F.col("x"), F.col("y"), F.col("x"), F.col("y"), pad=radius)
+
+
+# --------------------------------------------------------------------
+# numpy twins for the driver-side graph kernels (same cell arithmetic)
+# --------------------------------------------------------------------
+
+def _ranks(counts: np.ndarray) -> np.ndarray:
+    """0..c-1 for every count c, concatenated (the explode offsets)."""
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
+
+
+def box_cells(xmin, ymin, xmax, ymax, pad: float = 0.0) -> tuple[np.ndarray, np.ndarray]:
+    """(row, cell_id) for every cell each padded box covers — the numpy
+    twin of :func:`bbox_cells`."""
+    ix0 = np.floor((xmin - pad) / C.CELL).astype(np.int64)
+    ix1 = np.floor((xmax + pad) / C.CELL).astype(np.int64)
+    iy0 = np.floor((ymin - pad) / C.CELL).astype(np.int64)
+    iy1 = np.floor((ymax + pad) / C.CELL).astype(np.int64)
+    ny = iy1 - iy0 + 1
+    n = (ix1 - ix0 + 1) * ny
+    row = np.repeat(np.arange(len(ix0)), n)
+    k = _ranks(n)
+    return row, (ix0[row] + k // ny[row]) * C.CELL_STRIDE + iy0[row] + k % ny[row]
+
+
+def cell_pairs(a: tuple, b: tuple) -> tuple[np.ndarray, np.ndarray]:
+    """Distinct (a row, b row) pairs sharing a cell: the cell equi-join
+    plus ``dropDuplicates`` over :func:`box_cells` outputs, O(pairs)."""
+    (ra, ca), (rb, cb) = a, b
+    order = np.argsort(cb, kind="stable")
+    rb, cb = rb[order], cb[order]
+    lo = np.searchsorted(cb, ca, "left")
+    n = np.searchsorted(cb, ca, "right") - lo
+    ia, ib = np.repeat(ra, n), rb[np.repeat(lo, n) + _ranks(n)]
+    pairs = np.unique(np.stack([ia, ib], axis=1), axis=0)
+    return pairs[:, 0], pairs[:, 1]

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from .. import sqlgen
 from ..functions import strings
 from . import gtfs_ops
+from .graph_ops import component_labels
 
 # --- config weights (pfaedle.cfg:377-419 semantics; field names mirror
 #     routing_options, router/misc.h:35-50). Parsed from the shipped MOT
@@ -415,10 +416,9 @@ def build_edge_csr(trans_pdf: pd.DataFrame) -> dict:
     cost = trans_pdf["cost"].to_numpy(np.float64)
     states = np.unique(np.concatenate([frm, to]))
     idx = {int(e): i for i, e in enumerate(states)}
-    fi = np.array([idx[int(e)] for e in frm], dtype=np.int64)
-    ti = np.array([idx[int(e)] for e in to], dtype=np.int64)
-    order = np.lexsort((to, ti, fi))  # (from, to-edge-id) deterministic
-    fi, ti, cost = fi[order], ti[order], cost[order]
+    all_fi, all_ti = np.searchsorted(states, frm), np.searchsorted(states, to)
+    order = np.lexsort((to, all_ti, all_fi))  # (from, to-edge-id) deterministic
+    fi, ti, cost = all_fi[order], all_ti[order], cost[order]
     n = len(states)
     indptr = np.zeros(n + 1, dtype=np.int64)
     np.add.at(indptr, fi + 1, 1)
@@ -428,8 +428,6 @@ def build_edge_csr(trans_pdf: pd.DataFrame) -> dict:
     # turn_transitions fx/fy/tx/ty)
     if {"fx", "fy", "tx", "ty"} <= set(trans_pdf.columns):
         xy = np.full((n, 2), np.nan)
-        all_fi = np.array([idx[int(e)] for e in frm], dtype=np.int64)
-        all_ti = np.array([idx[int(e)] for e in to], dtype=np.int64)
         xy[all_fi, 0] = trans_pdf["fx"].to_numpy(np.float64)
         xy[all_fi, 1] = trans_pdf["fy"].to_numpy(np.float64)
         xy[all_ti, 0] = trans_pdf["tx"].to_numpy(np.float64)
@@ -444,19 +442,7 @@ def build_edge_csr(trans_pdf: pd.DataFrame) -> dict:
     # (router.cpp:598-599 — different component => cost inf). Without
     # it, ONE cross-component target in a Viterbi layer makes the A*
     # exhaust the whole reachable graph before concluding "unreachable".
-    parent = np.arange(n, dtype=np.int64)
-
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = int(parent[a])
-        return a
-
-    for a, b in zip(fi.tolist(), ti.tolist()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[ra] = rb
-    csr["comp"] = np.array([find(i) for i in range(n)], dtype=np.int64)
+    csr["comp"] = component_labels(fi, ti, n)
     return csr
 
 

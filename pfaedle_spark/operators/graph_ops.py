@@ -1,22 +1,52 @@
-"""G1-G9 / A4 — graph topology passes as bounded iterative DataFrame ops.
+"""G1-G9 / A4 — graph topology passes.
 
 Reference: ``src/libs/pfaedle/src/trgraph/graph.cpp`` — node degrees,
 orphan deletion (G3/G4), reverse-edge completion (G8
 ``writeODirEdgs`` :364-377), connected components (G7/A4
 ``write_components`` :159-201, DFS with min-edge-level tracking).
 
-Spark strategy: degrees and orphan rounds are joins; components use
-min-label propagation with path doubling (label(v) <- min over
-neighbors' labels and label(label(v))), converging in O(log diameter)
-rounds — the alternating-star pattern from the public MapReduce
-connected-components literature. Each round is one shuffle; we
-localCheckpoint every few rounds to truncate lineage.
+Road graphs fit the driver (the router collects them anyway), so
+:func:`road_components` labels them with :func:`component_labels`
+(hooking + pointer jumping over numpy arrays) after one collect.
+:func:`connected_components` stays distributed — min-label propagation
+with path doubling, one shuffle per round — for the corpus pair graph
+(``dedup.neardup_clusters``), which is never collected.
+:func:`collect_columns` / :func:`columns_frame` are the collect ->
+kernel -> Arrow-frame plumbing of the driver-side graph kernels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def collect_columns(df: DataFrame) -> dict[str, np.ndarray]:
+    """One Arrow collect -> column name -> numpy array (strings and
+    lists arrive as object arrays)."""
+    tbl = df.toArrow()
+    return {c: tbl.column(c).to_numpy() for c in tbl.column_names}
+
+
+def lookup(keys: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Position of each ``q`` in the sorted unique ``keys``, and whether
+    it is there."""
+    pos = np.searchsorted(keys, q)
+    hit = pos < len(keys)
+    hit[hit] = keys[pos[hit]] == q[hit]
+    return pos, hit
+
+
+def columns_frame(spark: SparkSession, cols: dict, schema: StructType | str) -> DataFrame:
+    """Driver-side columns -> DataFrame with ``schema``. The rows enter
+    the plan as an Arrow relation, not through a Python UDF."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    tbl = pa.table({c: cols[c] for c in schema.names})
+    return spark.createDataFrame(tbl, schema=schema)
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -62,6 +92,53 @@ def write_odir_edges(edges: DataFrame) -> DataFrame:
         .withColumn("reversed", F.lit(True))
     )
     return fwd.unionByName(rev)
+
+
+def component_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Min-index weak-component label of each of ``n`` vertices, given
+    undirected edges (u[i], v[i]) over 0..n-1.
+
+    Labels only ever point to a smaller index. Each round hooks the
+    larger label root of every edge that still spans two labels onto
+    the smaller one, then pointer-jumps every label to its root; at the
+    fixpoint each component's root is its minimum index."""
+    lab = np.arange(n, dtype=np.int64)
+    u, v = np.asarray(u, dtype=np.int64), np.asarray(v, dtype=np.int64)
+    while True:
+        lu, lv = lab[u], lab[v]
+        cross = lu != lv
+        if not cross.any():
+            return lab
+        lu, lv = lu[cross], lv[cross]
+        np.minimum.at(lab, np.maximum(lu, lv), np.minimum(lu, lv))
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
+
+def road_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """A4/G7 for a graph that fits the driver: (node_id, label) with the
+    min node_id of each node's component, as :func:`connected_components`
+    computes it (edges with an endpoint outside ``nodes`` are ignored).
+
+    Nodes and edges are collected in ONE job, as tagged (a, b) rows —
+    a node is the self-pair (id, id)."""
+    rows = collect_columns(
+        nodes.select(F.col("node_id").alias("a"), F.col("node_id").alias("b"),
+                     F.lit(True).alias("is_node"))
+        .unionByName(edges.select(F.col("src").alias("a"), F.col("dst").alias("b"),
+                                  F.lit(False).alias("is_node")))
+    )
+    is_node = rows["is_node"].astype(bool)
+    ids = np.unique(rows["a"][is_node])
+    u, v = rows["a"][~is_node], rows["b"][~is_node]
+    (ui, hu), (vi, hv) = lookup(ids, u), lookup(ids, v)
+    lab = component_labels(ui[hu & hv], vi[hu & hv], len(ids))
+    return columns_frame(
+        nodes.sparkSession, {"node_id": ids, "label": ids[lab]}, "node_id long, label long"
+    )
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame, max_rounds: int = 20) -> DataFrame:

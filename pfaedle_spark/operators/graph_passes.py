@@ -1,21 +1,25 @@
-"""Bounded iterative graph passes (reference trgraph/graph.cpp).
+"""Graph passes (reference trgraph/graph.cpp) as driver-side numpy
+kernels over flat edge columns.
 
 * G4 delete_orphan_edges (``graph.cpp:335-363``): exactly 3 rounds of
   dangling-spur removal (degree-1 non-station endpoint) — round count
   mirrors the reference's fixed ``for (int i = 0; i < 3; ++i)``.
 * G2 fix_gaps (``graph.cpp:212-268``): degree-1 node pairs within
-  1 m merge (non-stations) — cell self-join + threshold.
+  1 m merge (non-stations) — cell pairing + threshold.
 * G5 collapse_edges (``graph.cpp:105-148``): contract degree-2
   non-station nodes whose two edges are mergeable (same oneway/level),
   looped to fixpoint with a bounded round count; geometries
-  concatenate (the reference's 4 orientation cases collapse to
-  endpoint bookkeeping here since geoms are endpoint pairs + length).
+  concatenate per the reference's 4 orientation cases.
 * G6 simplify_geometries (``graph.cpp:149-158``): Douglas-Peucker at
   0.5 m per edge polyline via an Arrow-batched UDF over vertex arrays.
 
-Each round of each pass is one or two joins — no driver-side
-collection; rounds are bounded constants, so lineage stays shallow
-(plus localCheckpoint between collapse rounds).
+The road graph fits the driver (the router collects it anyway), so
+G2/G4/G5 are sequences of rounds over numpy arrays — an edge table is
+a dict of equal-length columns (``xs``/``ys`` polylines as object
+arrays). Each round keeps the algebra of the round-unrolled SQL
+mirrors below: same degree rule, same (mid, edge_id) pairing, same
+race guard, same merged-length addition order. The DataFrame entry
+points are collect -> kernel -> local-frame wrappers over them.
 """
 
 from __future__ import annotations
@@ -26,18 +30,130 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import douglas_peucker
+from . import cells
+from .graph_ops import collect_columns, columns_frame, lookup
 
 ORPHAN_ROUNDS = 3
 COLLAPSE_MAX_ROUNDS = 8
 GAP_DIST = 1.0
 SIMPLIFY_EPS = 0.5
+COLLAPSE_COLS = ("edge_id", "src", "dst", "level", "oneway", "length", "xs", "ys")
 
 
-def _endpoint_degrees(edges: DataFrame) -> DataFrame:
-    ends = edges.select(F.col("src").alias("node_id")).unionAll(
-        edges.select(F.col("dst").alias("node_id"))
+def take(t: dict, sel) -> dict:
+    return {k: v[sel] for k, v in t.items()}
+
+
+def concat(*ts: dict) -> dict:
+    return {k: np.concatenate([t[k] for t in ts]) for k in ts[0]}
+
+
+def first_rows(*keys: np.ndarray) -> np.ndarray:
+    """Rows that come first in their group when sorted by ``keys``
+    (``np.lexsort`` order: the last key is the group) — the
+    ``ROW_NUMBER() ... = 1`` argmin."""
+    order = np.lexsort(keys)
+    g = keys[-1][order]
+    return order[np.r_[True, g[1:] != g[:-1]]] if len(g) else order
+
+
+def _endpoint_degrees(e: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(node ids, inverse of concat(src, dst) into them, degrees)."""
+    return np.unique(np.concatenate([e["src"], e["dst"]]),
+                     return_inverse=True, return_counts=True)
+
+
+def delete_orphan_arrays(e: dict, station_ids: np.ndarray, rounds: int = ORPHAN_ROUNDS) -> dict:
+    """G4 kernel: `rounds` rounds of dropping every edge with a degree-1
+    non-station endpoint (a round with nothing to drop ends the pass)."""
+    for _ in range(rounds):
+        ids, _, deg = _endpoint_degrees(e)
+        hang = np.setdiff1d(ids[deg == 1], station_ids)
+        if not len(hang):
+            break
+        e = take(e, ~(np.isin(e["src"], hang) | np.isin(e["dst"], hang)))
+    return e
+
+
+def fix_gaps_arrays(nodes: dict, e: dict, max_dist: float = GAP_DIST) -> dict:
+    """G2 kernel: rewrite each non-station degree-1 node onto the
+    smallest-id such node within `max_dist`. Pairs come from the padded
+    cell pairing (the J5/J6 pattern), so only same/adjacent-cell pairs
+    are ever compared."""
+    ids, _, deg = _endpoint_degrees(e)
+    d1 = np.isin(nodes["node_id"], ids[deg == 1]) & ~nodes["is_station"].astype(bool)
+    nid, x, y = nodes["node_id"][d1], nodes["x"][d1], nodes["y"][d1]
+    ia, ib = cells.cell_pairs(cells.box_cells(x, y, x, y, max_dist), cells.box_cells(x, y, x, y))
+    close = (nid[ia] < nid[ib]) & (
+        (x[ia] - x[ib]) * (x[ia] - x[ib]) + (y[ia] - y[ib]) * (y[ia] - y[ib])
+        <= max_dist * max_dist
     )
-    return ends.groupBy("node_id").agg(F.count("*").cast("long").alias("deg"))
+    frm, to = nid[ib][close], nid[ia][close]
+    first = first_rows(to, frm)  # min to_id per from_id, sorted by from_id
+    frm, to = frm[first], to[first]
+    out = dict(e)
+    for col in ("src", "dst"):
+        pos, hit = lookup(frm, e[col])
+        out[col] = e[col].copy()
+        out[col][hit] = to[pos[hit]]
+    return out
+
+
+def collapse_arrays(e: dict, station_ids: np.ndarray) -> dict:
+    """G5 kernel: per round, pair the two incident edges of every
+    degree-2 non-station node (side a = smaller edge_id), keep mergeable
+    pairs (same level/oneway, no self-loop creation) whose neighbours
+    are not smaller-id mergeable nodes (one contraction per disjoint
+    pair per round), and replace each pair with edge_id = a's id,
+    endpoints a.other -> b.other and length a + b. Loops to fixpoint or
+    COLLAPSE_MAX_ROUNDS.
+
+    With ``xs``/``ys`` polylines (oriented src->dst) the merged edge
+    concatenates them (graph.cpp:290-334): side a is reversed iff it
+    starts at the contraction node, side b iff it does not, and b's
+    shared via point is dropped. Other columns (coordinates) are dropped."""
+    e = {k: v for k, v in e.items() if k in COLLAPSE_COLS}
+    for _ in range(COLLAPSE_MAX_ROUNDS):
+        eid, src, dst = e["edge_id"], e["src"], e["dst"]
+        ids, inv, deg = _endpoint_degrees(e)
+        is_mid = (deg == 2) & ~np.isin(ids, station_ids)
+        # the two incidences of each mid sorted by (mid, edge_id): a self-
+        # loop at mid yields the same edge twice and fails a != b below
+        row = np.tile(np.arange(len(eid)), 2)
+        inc = np.flatnonzero(is_mid[inv])
+        inc = inc[np.lexsort((eid[row[inc]], inv[inc]))]
+        mid = ids[inv[inc[0::2]]]
+        a, b = row[inc[0::2]], row[inc[1::2]]
+        oa = np.where(src[a] == mid, dst[a], src[a])
+        ob = np.where(src[b] == mid, dst[b], src[b])
+        merg = (
+            (eid[a] != eid[b]) & (e["level"][a] == e["level"][b])
+            & (e["oneway"][a] == e["oneway"][b]) & (oa != ob)
+        )
+        # race guard: skip a mid whose neighbour is a smaller mergeable mid
+        mm = mid[merg]
+        safe = merg & ~((np.isin(oa, mm) & (oa < mid)) | (np.isin(ob, mm) & (ob < mid)))
+        if not safe.any():
+            break
+        a, b, m = a[safe], b[safe], mid[safe]
+        merged = {
+            "edge_id": eid[a], "src": oa[safe], "dst": ob[safe],
+            "level": e["level"][a], "oneway": e["oneway"][a],
+            "length": e["length"][a] + e["length"][b],
+        }
+        for col in ("xs", "ys"):
+            if col in e:
+                merged[col] = np.empty(len(a), dtype=object)
+                merged[col][:] = [
+                    np.concatenate([p if fa else p[::-1], (q if fb else q[::-1])[1:]])
+                    for p, q, fa, fb in zip(e[col][a], e[col][b], src[a] != m, src[b] == m)
+                ]
+        e = concat(take(e, ~np.isin(np.arange(len(eid)), np.r_[a, b])), {k: merged[k] for k in e})
+    return e
+
+
+def _ids(df: DataFrame) -> np.ndarray:
+    return collect_columns(df.select("node_id"))["node_id"]
 
 
 def delete_orphan_edges(
@@ -45,31 +161,43 @@ def delete_orphan_edges(
 ) -> DataFrame:
     """Drop spur edges whose degree-1 endpoint is not a station;
     repeat `rounds` times (reference fixed 3)."""
-    stations = station_node_ids.select(F.col("node_id").alias("st_id"))
-    cur = edges
-    for r in range(rounds):
-        # materialize between rounds: `cur` feeds both the degree agg and
-        # the two anti-joins, so without a cut each round re-embeds the
-        # previous round's DAG ~4x (plan growth is exponential in rounds;
-        # bounded rounds make the per-round materialization cheap)
-        cur = cur.localCheckpoint(eager=True)
-        deg = _endpoint_degrees(cur)
-        hang = (
-            deg.filter(F.col("deg") == 1)
-            .join(stations, deg.node_id == stations.st_id, "left_anti")
-            .select(F.col("node_id").alias("hang_id"))
-        )
-        cur = (
-            cur.join(hang.withColumnRenamed("hang_id", "src"), "src", "left_anti")
-            .join(hang.withColumnRenamed("hang_id", "dst"), "dst", "left_anti")
-        )
-    return cur
+    out = delete_orphan_arrays(collect_columns(edges), _ids(station_node_ids), rounds)
+    return columns_frame(edges.sparkSession, out, edges.schema)
+
+
+def fix_gaps(nodes: DataFrame, edges: DataFrame, max_dist: float = GAP_DIST) -> DataFrame:
+    """G2: merge non-station degree-1 nodes within `max_dist`: rewrite
+    the higher node id onto the lower in the edge list (returned with
+    the input's columns)."""
+    nd = collect_columns(nodes.select("node_id", "x", "y", "is_station"))
+    out = fix_gaps_arrays(nd, collect_columns(edges), max_dist)
+    return columns_frame(edges.sparkSession, out, edges.schema)
+
+
+def collapse_edges(
+    edges: DataFrame,
+    station_node_ids: DataFrame,
+    geoms: DataFrame | None = None,
+) -> DataFrame:
+    """G5 (see :func:`collapse_arrays`); with ``geoms`` (edge_id, xs, ys
+    polylines oriented src->dst) merged edges carry the concatenated
+    polylines."""
+    cur = edges.select(*COLLAPSE_COLS[:6])
+    if geoms is not None:
+        cur = cur.join(geoms, "edge_id")
+    out = collapse_arrays(collect_columns(cur), _ids(station_node_ids))
+    return columns_frame(edges.sparkSession, out, cur.schema)
 
 
 def delete_orphan_edges_sql(
-    edges_cte: str, rounds: int = ORPHAN_ROUNDS, src_table: str = "edges"
+    edges_cte: str,
+    rounds: int = ORPHAN_ROUNDS,
+    src_table: str = "edges",
+    station_src: str = "(SELECT node_id FROM nodes WHERE is_station)",
+    final_select: bool = True,
 ) -> str:
-    """Unrolled SQL mirror: `rounds` rounds of deg/spur CTEs."""
+    """Unrolled SQL mirror: `rounds` rounds of deg/spur CTEs, ending in
+    ``e<rounds>`` (composable with ``final_select=False``)."""
     sql = edges_cte + f",\ne0 AS (SELECT * FROM {src_table})"
     for r in range(rounds):
         sql += f""",
@@ -80,7 +208,7 @@ deg{r} AS (
 ),
 hang{r} AS (
   SELECT d.node_id FROM deg{r} d
-  LEFT JOIN (SELECT node_id FROM nodes WHERE is_station) s USING (node_id)
+  LEFT JOIN {station_src} s USING (node_id)
   WHERE d.deg = 1 AND s.node_id IS NULL
 ),
 e{r + 1} AS MATERIALIZED (
@@ -88,172 +216,9 @@ e{r + 1} AS MATERIALIZED (
   WHERE e.src NOT IN (SELECT node_id FROM hang{r})
     AND e.dst NOT IN (SELECT node_id FROM hang{r})
 )"""
+    if not final_select:
+        return sql
     return sql + f"\nSELECT edge_id, src, dst, level, oneway, length FROM e{rounds}\n"
-
-
-def fix_gaps(nodes: DataFrame, edges: DataFrame, max_dist: float = GAP_DIST) -> DataFrame:
-    """G2: merge non-station degree-1 nodes within `max_dist`: rewrite
-    the higher node id onto the lower in the edge list.
-
-    Returns the edges with remapped endpoints. Cell join on a 1 m-padded
-    bbox finds the pairs without an n^2 scan."""
-    deg = _endpoint_degrees(edges)
-    d1 = (
-        nodes.join(deg, "node_id")
-        .filter((F.col("deg") == 1) & (~F.col("is_station")))
-        .select("node_id", "x", "y")
-    )
-    from . import cells
-
-    # padded-cell equi-join (the same J5/J6 pattern): the degree-1 set
-    # can be millions of rows on a continental graph, so no crossJoin —
-    # only same/adjacent-cell pairs are ever compared.
-    a = cells.point_cells(d1, max_dist).select(
-        "cell_id",
-        F.col("node_id").alias("na"), F.col("x").alias("xa"), F.col("y").alias("ya"),
-    )
-    b = cells.tile_assign(d1).select(
-        "cell_id",
-        F.col("node_id").alias("nb"), F.col("x").alias("xb"), F.col("y").alias("yb"),
-    )
-    pairs = (
-        a.join(b, "cell_id")
-        .dropDuplicates(["na", "nb"])
-        .filter(
-            (F.col("na") < F.col("nb"))
-            & (
-                (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-                + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb"))
-                <= max_dist * max_dist
-            )
-        )
-        .select(F.col("nb").alias("from_id"), F.col("na").alias("to_id"))
-    )
-    remap = pairs.groupBy("from_id").agg(F.min("to_id").alias("to_id"))
-    e = edges
-    for col in ("src", "dst"):
-        e = (
-            e.join(remap.withColumnRenamed("from_id", col), col, "left")
-            .withColumn(col, F.coalesce("to_id", F.col(col)))
-            .drop("to_id")
-        )
-    return e
-
-
-def collapse_edges(
-    edges: DataFrame,
-    station_node_ids: DataFrame,
-    geoms: DataFrame | None = None,
-) -> DataFrame:
-    """G5: contract chains through degree-2 non-station nodes whose two
-    incident edges agree on (level, oneway). Each round merges one layer
-    of chain nodes; loops until fixpoint or COLLAPSE_MAX_ROUNDS.
-
-    Merged edge: new endpoints are the two outer nodes, length sums,
-    edge_id = min of the pair (deterministic).
-
-    With ``geoms`` (edge_id, xs, ys polylines oriented src->dst), merged
-    edges also CONCATENATE their polylines per the reference's 4
-    orientation cases (graph.cpp:290-334): each side is reversed iff it
-    does not already run toward/away from the contraction node, and the
-    shared via point is dropped from the second side."""
-    stations = station_node_ids.select(F.col("node_id").alias("st_id"))
-    cur = edges.select("edge_id", "src", "dst", "level", "oneway", "length")
-    geo_cols = []
-    if geoms is not None:
-        cur = cur.join(geoms, "edge_id")
-        geo_cols = ["xs", "ys"]
-    for _ in range(COLLAPSE_MAX_ROUNDS):
-        deg = _endpoint_degrees(cur)
-        mid = (
-            deg.filter(F.col("deg") == 2)
-            .join(stations, deg.node_id == stations.st_id, "left_anti")
-            .select(F.col("node_id").alias("mid"))
-        )
-        # the two edges at each contraction node: explode endpoints so
-        # the incident lookup is a hash equi-join on the node id (the
-        # OR-form src==mid|dst==mid would be a nested-loop join — O(E*M)
-        # comparisons, a scale-killer on a continental edge set). A
-        # self-loop at mid yields two exploded rows with e1==e2, which
-        # the e1<>e2 merge guard below discards — same outcome as the
-        # OR-join's single row failing the n==2 guard.
-        inc = (
-            cur.select(
-                "edge_id", "src", "dst", "level", "oneway", "length", *geo_cols,
-                F.explode(F.array("src", "dst")).alias("end_pt"),
-            )
-            .join(mid, F.col("end_pt") == F.col("mid"))
-            .select(
-                "mid", "edge_id", "src", "dst", "level", "oneway", "length", *geo_cols,
-                F.when(F.col("src") == F.col("mid"), F.col("dst"))
-                .otherwise(F.col("src"))
-                .alias("other"),
-            )
-        )
-        pair_fields = ["other", "level", "oneway", "length", "src", *geo_cols]
-        g = inc.groupBy("mid").agg(
-            F.count("*").alias("n"),
-            F.min("edge_id").alias("e1"),
-            F.max("edge_id").alias("e2"),
-            F.min_by(F.struct(*pair_fields), "edge_id").alias("a"),
-            F.max_by(F.struct(*pair_fields), "edge_id").alias("b"),
-        )
-        merg = g.filter(
-            (F.col("n") == 2)
-            & (F.col("e1") != F.col("e2"))
-            & (F.col("a.level") == F.col("b.level"))
-            & (F.col("a.oneway") == F.col("b.oneway"))
-            & (F.col("a.other") != F.col("b.other"))  # no self-loop creation
-        )
-        # one contraction per round per disjoint pair: a chain node whose
-        # neighbor is also being contracted this round could race; keep
-        # only nodes where neither neighbor is a (smaller-id) mid node.
-        safe = (
-            merg.join(
-                merg.select(F.col("mid").alias("n_mid")),
-                (F.col("a.other") == F.col("n_mid")) & (F.col("n_mid") < F.col("mid")),
-                "left_anti",
-            )
-            .join(
-                merg.select(F.col("mid").alias("n_mid2")),
-                (F.col("b.other") == F.col("n_mid2")) & (F.col("n_mid2") < F.col("mid")),
-                "left_anti",
-            )
-        )
-        safe = safe.localCheckpoint(eager=True)  # reused 3x below; also
-        # lets the fixpoint probe short-circuit without re-deriving
-        if safe.isEmpty():
-            break
-        merged_cols = [
-            F.col("e1").alias("edge_id"),
-            F.col("a.other").alias("src"),
-            F.col("b.other").alias("dst"),
-            F.col("a.level").alias("level"),
-            F.col("a.oneway").alias("oneway"),
-            (F.col("a.length") + F.col("b.length")).alias("length"),
-        ]
-        if geoms is not None:
-            # orientation cases: side a must END at mid (reverse if its
-            # stored orientation starts there); side b must START at mid
-            def _or_a(col):
-                return F.when(F.col("a.src") != F.col("mid"), F.col(f"a.{col}"))                     .otherwise(F.reverse(F.col(f"a.{col}")))
-
-            def _or_b(col):
-                b = F.when(F.col("b.src") == F.col("mid"), F.col(f"b.{col}"))                     .otherwise(F.reverse(F.col(f"b.{col}")))
-                return F.slice(b, 2, F.size(b))  # drop the shared via point
-
-            merged_cols += [
-                F.concat(_or_a("xs"), _or_b("xs")).alias("xs"),
-                F.concat(_or_a("ys"), _or_b("ys")).alias("ys"),
-            ]
-        merged_edges = safe.select(*merged_cols)
-        dead = safe.select(F.explode(F.array("e1", "e2")).alias("edge_id"))
-        cur = (
-            cur.join(dead, "edge_id", "left_anti")
-            .unionByName(merged_edges)
-            .localCheckpoint(eager=True)
-        )
-    return cur
 
 
 def simplify_geometries(edge_geoms: DataFrame, eps: float = SIMPLIFY_EPS) -> DataFrame:
@@ -332,24 +297,9 @@ def collapse_edges_sql(
     fixed unroll equals the engine's early-exit loop.  Merged lengths
     add in the same pairing order every round, so doubles stay
     bit-identical."""
-    sql = edges_cte + f",\ne0 AS (SELECT * FROM {src_table})"
-    for r in range(orphan_rounds):
-        sql += f""",
-deg{r} AS (
-  SELECT node_id, COUNT(*) AS deg FROM (
-    SELECT src AS node_id FROM e{r} UNION ALL SELECT dst FROM e{r}
-  ) GROUP BY node_id
-),
-hang{r} AS (
-  SELECT d.node_id FROM deg{r} d
-  LEFT JOIN {station_src} s USING (node_id)
-  WHERE d.deg = 1 AND s.node_id IS NULL
-),
-e{r + 1} AS MATERIALIZED (
-  SELECT e.* FROM e{r} e
-  WHERE e.src NOT IN (SELECT node_id FROM hang{r})
-    AND e.dst NOT IN (SELECT node_id FROM hang{r})
-)"""
+    sql = delete_orphan_edges_sql(
+        edges_cte, orphan_rounds, src_table, station_src, final_select=False
+    )
     gsel = ", xs, ys" if with_geoms else ""
     if with_geoms:
         # zigzag polyline twin (zigzag_geoms): n_seg points every `step`

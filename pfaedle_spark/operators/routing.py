@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from .graph_ops import component_labels
 
 
 def dp_partitions(spark) -> int:
@@ -95,19 +96,7 @@ def build_csr(edges_pdf: pd.DataFrame, level_punish: bool = True) -> dict:
     # component labels (undirected): the reference's component-infinity
     # shortcut (router.cpp:598-599) — a cross-component target is +inf
     # WITHOUT exploring the whole component first.
-    comp = np.arange(n, dtype=np.int64)
-
-    def find(i: int) -> int:
-        while comp[i] != i:
-            comp[i] = comp[comp[i]]
-            i = comp[i]
-        return i
-
-    for u, v in zip(src, dst):
-        ru, rv = find(int(u)), find(int(v))
-        if ru != rv:
-            comp[max(ru, rv)] = min(ru, rv)
-    comp = np.array([find(i) for i in range(n)], dtype=np.int64)
+    comp = component_labels(src, dst, n)
     csr = {"indptr": indptr, "dst": dst, "cost": cost, "n": n, "comp": comp}
     # node coordinates (for the A* heuristic, R4): recoverable from the
     # edge endpoints when the edge list carries them. Admissible because

@@ -14,12 +14,17 @@ Spark plan: same cell-id equi-join as J5, names normalized with chained
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
 from .. import sqlgen
 from . import cells
+from .graph_ops import collect_columns, columns_frame
+from .graph_passes import concat, first_rows, take
 
 # Order-sensitive normalizer chain (reference normalizer.cpp semantics,
 # rules modeled on pfaedle.cfg:8-215): lowercase, strip punctuation,
@@ -97,19 +102,26 @@ def snap_stations(
 # the projection and insert a new station node. Driver loop
 # ``snap_stations`` (:1649-1785) escalates the search radius
 # (pfaedle.cfg:354). The reference mutates the grid in place; here each
-# round is an immutable DataFrame generation: round k consumes round
-# k-1's edge set, split edges are tombstoned (anti-join) and their two
-# halves appended (SURVEY §7 risk 2 / Stage 3 design).
+# round is a new generation of flat numpy edge columns on the driver:
+# round k consumes round k-1's edge set, split edges are tombstoned and
+# their two halves appended (SURVEY §7 risk 2 / Stage 3 design). The
+# round-unrolled DuckDB oracle below replays the same algebra.
 
 SPLIT_RADII = [25.0, 100.0, 200.0]
 SPLIT_EPS = 2.0           # endpoint-promotion distance (osm_builder.cpp:1413)
 PROJ_NODE_OFF = 2_000_000  # new projection-node ids: OFF + stop number
 SPLIT_EDGE_OFF = 4_000_000  # split-half edge ids: OFF + stopnum*2 (+1)
 
-_STOPNUM = "CAST(REGEXP_EXTRACT(stop_id, '([0-9]+)', 1) AS BIGINT)"
+STOPNUM_RE = "([0-9]+)"  # the stop number: first digit run of stop_id
+_STOPNUM = f"CAST(REGEXP_EXTRACT(stop_id, '{STOPNUM_RE}', 1) AS BIGINT)"
+EDGE_COLS = ["edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "oneway", "length"]
+SNAP_SCHEMA = (
+    "stop_id string, node_id long, kind string, round int, dist double,"
+    " qx double, qy double, split_edge long"
+)
 
 # projection onto the best edge — ONE dialect-neutral derivation used by
-# Spark (F.expr) and DuckDB so every value is bit-identical
+# the DuckDB oracle; :func:`_project` evaluates it in the same order
 _DX, _DY = "(x2 - x1)", "(y2 - y1)"
 _LEN2 = f"({_DX}*{_DX} + {_DY}*{_DY})"
 _T_RAW = f"(((x - x1)*{_DX} + (y - y1)*{_DY}) / {_LEN2})"
@@ -130,99 +142,83 @@ _NODE_ID = (
 )
 
 
+def _project(x, y, x1, y1, x2, y2):
+    """(t, qx, qy) of ``_T``/``_QX``/``_QY`` — also the projection
+    inside ``sqlgen.dist_to_segment`` — with the same operation order,
+    so every double is bit-identical to the SQL."""
+    dx, dy = x2 - x1, y2 - y1
+    len2 = dx * dx + dy * dy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t_raw = ((x - x1) * dx + (y - y1) * dy) / len2
+    t = np.where(len2 <= 0, 0.0, np.minimum(1.0, np.maximum(0.0, t_raw)))
+    return t, x1 + t * dx, y1 + t * dy
+
+
+def snap_arrays(
+    stops: dict, edges: dict, radii: list[float] | None = None, eps: float = SPLIT_EPS
+) -> tuple[dict, dict]:
+    """J7 kernel: escalating-radius snap with edge splitting over
+    (stop_id, x, y) stops and ``EDGE_COLS`` edges. Returns (snap rows
+    per ``SNAP_SCHEMA``, post-split edges).
+
+    Per round: padded-cell pairing (stops x current edges) -> best edge
+    per stop (argmin dist, edge_id) -> ONE winner stop per edge (argmin
+    dist, stop_id — the race-safe stand-in for the reference's
+    sequential in-place mutation; losers retry next round against the
+    updated edge set) -> endpoint promotion within `eps`, else split."""
+    sid = stops["stop_id"].astype(str)
+    stopnum = np.array([int(re.search(STOPNUM_RE, s).group(1)) for s in sid], dtype=np.int64)
+    srank = np.argsort(np.argsort(sid, kind="stable"))  # stop_id string order
+    cur, left, parts = {c: edges[c] for c in EDGE_COLS}, np.arange(len(sid)), []
+    for rnd, r in enumerate(radii or SPLIT_RADII, start=1):
+        px, py = stops["x"][left], stops["y"][left]
+        x1, y1, x2, y2 = (cur[c] for c in ("x1", "y1", "x2", "y2"))
+        ia, e = cells.cell_pairs(
+            cells.box_cells(px, py, px, py, r),
+            cells.box_cells(np.minimum(x1, x2), np.minimum(y1, y2),
+                            np.maximum(x1, x2), np.maximum(y1, y2)),
+        )
+        s, x, y = left[ia], px[ia], py[ia]
+        _, qx, qy = _project(x, y, x1[e], y1[e], x2[e], y2[e])
+        dist = np.sqrt((x - qx) * (x - qx) + (y - qy) * (y - qy))
+        k = np.flatnonzero(dist <= r)
+        k = k[first_rows(cur["edge_id"][e[k]], dist[k], s[k])]  # best edge per stop
+        k = k[first_rows(srank[s[k]], dist[k], e[k])]  # winner stop per edge
+        s, e, dist = s[k], e[k], dist[k]
+        w = take(cur, e)
+        t, qx, qy = _project(stops["x"][s], stops["y"][s], w["x1"], w["y1"], w["x2"], w["y2"])
+        dpos = t * w["length"]
+        at_src, at_dst = dpos <= eps, w["length"] - dpos <= eps
+        split = ~at_src & ~at_dst
+        node = np.where(at_src, w["src"], np.where(at_dst, w["dst"], PROJ_NODE_OFF + stopnum[s]))
+        parts.append({
+            "stop_id": stops["stop_id"][s], "node_id": node,
+            "kind": np.where(at_src, "src", np.where(at_dst, "dst", "split")).astype(object),
+            "round": np.full(len(s), rnd, dtype=np.int32), "dist": dist,
+            "qx": qx, "qy": qy, "split_edge": w["edge_id"],
+        })
+        sp, n2 = take(w, split), SPLIT_EDGE_OFF + stopnum[s][split] * 2
+        half1 = dict(sp, edge_id=n2, dst=node[split], x2=qx[split], y2=qy[split],
+                     length=t[split] * sp["length"])
+        half2 = dict(sp, edge_id=n2 + 1, src=node[split], x1=qx[split], y1=qy[split],
+                     length=(1.0 - t[split]) * sp["length"])
+        cur = concat(take(cur, ~np.isin(np.arange(len(cur["edge_id"])), e[split])), half1, half2)
+        left = np.setdiff1d(left, s)
+    return concat(*parts), cur
+
+
 def snap_with_splits(
-    stops: DataFrame,
-    edges: DataFrame,
-    radii: list[float] | None = None,
-    eps: float = SPLIT_EPS,
-    return_edges: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Escalating-radius snap with edge splitting.
+    stops: DataFrame, edges: DataFrame, radii: list[float] | None = None, eps: float = SPLIT_EPS
+) -> DataFrame:
+    """Escalating-radius snap with edge splitting (:func:`snap_arrays`).
 
-    Per round: cell join (stops x current edges) -> best edge per stop
-    (argmin dist, edge_id) -> ONE winner stop per edge (argmin dist,
-    stop_id — the race-safe stand-in for the reference's sequential
-    in-place mutation; losers retry next round against the updated edge
-    set) -> endpoint promotion within `eps`, else split.
-
-    Output: (stop_id, node_id, kind, round, dist, qx, qy, split_edge).
-    """
-    from . import candidates as cand_ops
-
-    radii = radii or SPLIT_RADII
-    cur_edges = edges.select(
-        "edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "oneway", "length"
+    Output: (stop_id, node_id, kind, round, dist, qx, qy, split_edge)."""
+    snaps, _ = snap_arrays(
+        collect_columns(stops.select("stop_id", "x", "y")),
+        collect_columns(edges.select(*EDGE_COLS)),
+        radii, eps,
     )
-    unsnapped = stops.select(
-        "stop_id", F.expr(_STOPNUM).alias("stopnum"), "x", "y"
-    )
-    parts = []
-    for rnd, r in enumerate(radii, start=1):
-        pc = cells.point_cells(unsnapped, r)
-        ec = cells.edge_cells(cur_edges)
-        j = pc.join(ec, "cell_id").dropDuplicates(["stop_id", "edge_id"])
-        j = j.withColumn("dist", F.expr(cand_ops.DIST_EXPR)).filter(F.col("dist") <= r)
-        w_stop = Window.partitionBy("stop_id").orderBy(
-            F.col("dist").asc(), F.col("edge_id").asc()
-        )
-        best = j.withColumn("rk", F.row_number().over(w_stop)).filter("rk = 1")
-        w_edge = Window.partitionBy("edge_id").orderBy(
-            F.col("dist").asc(), F.col("stop_id").asc()
-        )
-        winner = best.withColumn("ek", F.row_number().over(w_edge)).filter("ek = 1")
-        snapped = winner.select(
-            "stop_id", "stopnum", "dist", "edge_id", "src", "dst",
-            "x1", "y1", "x2", "y2", "level", "oneway", "length",
-            F.expr(_T).alias("t"),
-            F.expr(_QX).alias("qx"),
-            F.expr(_QY).alias("qy"),
-            F.expr(_KIND.format(eps=eps)).alias("kind"),
-            F.expr(_NODE_ID.format(eps=eps)).alias("node_id"),
-            F.lit(rnd).alias("round"),
-        ).localCheckpoint(eager=True)
-        parts.append(
-            snapped.select(
-                "stop_id", "node_id", "kind", "round", "dist", "qx", "qy",
-                F.col("edge_id").alias("split_edge"),
-            )
-        )
-        splits = snapped.filter("kind = 'split'")
-        half1 = splits.select(
-            (F.lit(SPLIT_EDGE_OFF) + F.col("stopnum") * 2).alias("edge_id"),
-            "src",
-            F.col("node_id").alias("dst"),
-            "x1", "y1",
-            F.col("qx").alias("x2"), F.col("qy").alias("y2"),
-            "level", "oneway",
-            (F.col("t") * F.col("length")).alias("length"),
-        )
-        half2 = splits.select(
-            (F.lit(SPLIT_EDGE_OFF) + F.col("stopnum") * 2 + 1).alias("edge_id"),
-            F.col("node_id").alias("src"),
-            "dst",
-            F.col("qx").alias("x1"), F.col("qy").alias("y1"),
-            "x2", "y2",
-            "level", "oneway",
-            ((F.lit(1.0) - F.col("t")) * F.col("length")).alias("length"),
-        )
-        cur_edges = (
-            cur_edges.join(splits.select("edge_id"), "edge_id", "left_anti")
-            .unionByName(half1)
-            .unionByName(half2)
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-        unsnapped = unsnapped.join(
-            snapped.select("stop_id"), "stop_id", "left_anti"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    if return_edges:
-        # the post-split edge set — the composed lifecycle feeds it to
-        # collapse/routing so split edges become routing states (the
-        # reference's in-place graph mutation, osm_builder.cpp:1363-1506)
-        return out, cur_edges
-    return out
+    return columns_frame(stops.sparkSession, snaps, SNAP_SCHEMA)
 
 
 def _cell_join_sql(stop_src: str, edge_src: str, radius: float) -> str:

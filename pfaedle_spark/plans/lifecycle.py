@@ -9,23 +9,27 @@ re-expressed as one chained Spark plan:
 
 Two surfaces:
 
-* :func:`composed_graph` — the relational prefix (through collapse),
-  lazily composed; the ``lifecycle_graph`` driver query runs it against
-  the round-unrolled DuckDB oracle in :func:`lifecycle_graph_sql`
+* :func:`composed_graph` — the road-graph prefix (through collapse);
+  the ``lifecycle_graph`` driver query runs it against the
+  round-unrolled DuckDB oracle in :func:`lifecycle_graph_sql`
   (fix-gaps remap + snap rounds + orphan/collapse rounds, every value
   bit-checkable).
 * :func:`checkpointed_lifecycle` — the whole chain through the DP tail
   and the GTFS shapes sink, checkpointed per stage (kill + re-run
   resumes from the last durable stage; see tests/test_checkpoint.py).
 
-Scale notes: every stage is the already-scaled operator (cell joins,
-bounded unrolled rounds with per-round localCheckpoint, broadcast
-graph-metadata sides); composition adds no new shuffle — each stage
-reads the previous stage's parquet partition-parallel.
+Scale notes: the road graph fits the driver (the router collects it
+anyway), so the prefix is one collect of nodes, edges and stations,
+the passes as numpy kernels in sequence, and local Arrow relations
+out — a handful of jobs, not one per round. Everything observation-
+sized after it (candidate join, DP, sinks) stays distributed, and
+each checkpointed stage reads the previous stage's parquet
+partition-parallel.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,90 +39,60 @@ from .checkpoint import CheckpointedPipeline
 
 
 _COMPOSED_MEMO: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
+NODE_SCHEMA = "node_id long, x double, y double, is_station boolean"
+EDGE_SCHEMA = (
+    "edge_id long, src long, dst long, x1 double, y1 double, x2 double, y2 double,"
+    " level int, oneway boolean, length double"
+)
 
 
-def composed_graph(
-    spark: SparkSession,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def composed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
     """fix_gaps -> snap_with_splits -> orphan prune -> collapse, with
     node/edge bookkeeping: snapped nodes become station nodes, split
     projection nodes join the node table, final edges re-acquire
     endpoint coordinates. Returns (final_nodes, final_edges, snaps).
 
-    Memoized per session (same rationale as
-    ``edge_routing.build_variant_transitions``): the prefix is a
-    deterministic function of the static graph, and three consumers
-    run it in one session (``lifecycle_graph``, ``lifecycle_candidates``,
-    the checkpointed run) — re-paying the multi-round snap/collapse
-    loops per invocation is pure waste. The returned frames end at
-    eager localCheckpoints, so reuse is a metadata read; the memo dies
-    with the context (keyed on applicationId + startTime)."""
+    Nodes, edges and stations are collected once; the passes run as
+    driver-side kernels, round for round what the oracle unrolls.
+    Memoized per session: three consumers run the prefix in one
+    session (``lifecycle_graph``, ``lifecycle_candidates``, the
+    checkpointed run); the memo dies with the context (keyed on
+    applicationId + startTime)."""
     from ..operators.routing import session_token
 
     tok = session_token(spark)
     hit = _COMPOSED_MEMO.get(tok)
     if hit is not None:
         return hit
-    nd = datagen.nodes(spark)
-    e0 = datagen.edges(spark)
-    # cut the remap-join lineage before the snap loop: each of the 3
-    # snap rounds (and later every orphan/collapse round) would re-run
-    # the fix_gaps joins otherwise
-    e1 = graph_passes.fix_gaps(nd, e0).localCheckpoint(eager=True)
-    snaps, e2 = snap.snap_with_splits(
-        datagen.stations(spark), e1, return_edges=True
+    nd = graph_ops.collect_columns(datagen.nodes(spark).select("node_id", "x", "y", "is_station"))
+    e1 = graph_passes.fix_gaps_arrays(
+        nd, graph_ops.collect_columns(datagen.edges(spark).select(*snap.EDGE_COLS))
+    )
+    snaps, e2 = snap.snap_arrays(
+        graph_ops.collect_columns(datagen.stations(spark).select("stop_id", "x", "y")), e1
     )
     # every snapped node is a station node from here on (the reference
     # attaches the stop to the node, osm_builder.cpp:1363-1506); split
     # projections are NEW nodes at (qx, qy)
-    snapped = snaps.select("node_id").distinct().withColumn("snapped", F.lit(True))
-    base_nodes = (
-        nd.select("node_id", "x", "y", "is_station")
-        .join(snapped, "node_id", "left")
-        .select(
-            "node_id", "x", "y",
-            (F.col("is_station") | F.coalesce(F.col("snapped"), F.lit(False)))
-            .alias("is_station"),
-        )
+    nd["is_station"] = nd["is_station"] | np.isin(nd["node_id"], snaps["node_id"])
+    split = graph_passes.take(snaps, snaps["kind"] == "split")
+    nodes = graph_passes.concat(nd, {
+        "node_id": split["node_id"], "x": split["qx"], "y": split["qy"],
+        "is_station": np.ones(len(split["node_id"]), dtype=bool),
+    })
+    st_ids = nodes["node_id"][nodes["is_station"]]
+    ed = graph_passes.collapse_arrays(graph_passes.delete_orphan_arrays(e2, st_ids), st_ids)
+    # endpoint coordinates from the final node table (every endpoint is
+    # an original node or a split projection node)
+    order = np.argsort(nodes["node_id"])
+    for end, cx, cy in (("src", "x1", "y1"), ("dst", "x2", "y2")):
+        at = order[np.searchsorted(nodes["node_id"], ed[end], sorter=order)]
+        ed[cx], ed[cy] = nodes["x"][at], nodes["y"][at]
+    _COMPOSED_MEMO[tok] = (
+        graph_ops.columns_frame(spark, nodes, NODE_SCHEMA),
+        graph_ops.columns_frame(spark, ed, EDGE_SCHEMA),
+        graph_ops.columns_frame(spark, snaps, snap.SNAP_SCHEMA),
     )
-    split_nodes = snaps.filter("kind = 'split'").select(
-        "node_id",
-        F.col("qx").alias("x"),
-        F.col("qy").alias("y"),
-        F.lit(True).alias("is_station"),
-    )
-    # nodes_f feeds every orphan/collapse round's station anti-join plus
-    # the final coordinate re-join — one materialization, many readers
-    nodes_f = base_nodes.unionByName(split_nodes).localCheckpoint(eager=True)
-    st_ids = nodes_f.filter("is_station").select("node_id")
-    pruned = graph_passes.delete_orphan_edges(e2, st_ids)
-    collapsed = graph_passes.collapse_edges(pruned, st_ids)
-    edges_f = (
-        collapsed.join(
-            nodes_f.select(
-                F.col("node_id").alias("src"),
-                F.col("x").alias("x1"),
-                F.col("y").alias("y1"),
-            ),
-            "src",
-        )
-        .join(
-            nodes_f.select(
-                F.col("node_id").alias("dst"),
-                F.col("x").alias("x2"),
-                F.col("y").alias("y2"),
-            ),
-            "dst",
-        )
-        .select(
-            "edge_id", "src", "dst", "x1", "y1", "x2", "y2",
-            "level", "oneway", "length",
-        )
-        # cut the coordinate-re-join lineage too: every memo reader
-        # (candidate join, router, sink) starts from materialized edges
-        .localCheckpoint(eager=True)
-    )
-    _COMPOSED_MEMO[tok] = (nodes_f, edges_f, snaps)
     return _COMPOSED_MEMO[tok]
 
 
@@ -211,13 +185,13 @@ def checkpointed_lifecycle(
 
     # the three graph outputs share one composition; _graph() is only
     # invoked when a stage actually recomputes, so a fully-checkpointed
-    # resume never re-runs the (eager, multi-round) snap loop
+    # resume never re-collects the graph
     snaps = cp.stage("snaps", lambda: _graph()[2], inputs=["stations", "edges"])
     nodes_f = cp.stage("graph_nodes", lambda: _graph()[0], inputs=["snaps"])
     edges_f = cp.stage("graph_edges", lambda: _graph()[1], inputs=["snaps"])
     comps = cp.stage(
         "components",
-        lambda: graph_ops.connected_components(nodes_f, edges_f),
+        lambda: graph_ops.road_components(nodes_f, edges_f),
         inputs=["graph_nodes", "graph_edges"],
     )
     cand = cp.stage(

@@ -32,12 +32,28 @@ def _local_dir() -> str:
     return os.path.join(os.environ.get("TMPDIR", "/tmp"), "spark-local")
 
 
+def host_defaults(meminfo: str = "/proc/meminfo") -> tuple[int, str]:
+    """(cores, driver memory) sized from the host: the CPUs this process
+    may run on, and half of MemTotal for the driver JVM (local mode runs
+    the executors inside it; the other half is left to the Python
+    workers, the page cache and whatever else shares the machine).
+    ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` override either."""
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+        mem = f"{kb // 2 // 1024}m"
+    return int(cores), mem
+
+
 def get_spark(
     app: str = "pfaedle_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    host_cores, driver_mem = host_defaults()
+    cores = cores or host_cores
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     return (
         SparkSession.builder.master(f"local[{cores}]")
@@ -56,7 +72,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.local.dir", _local_dir())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

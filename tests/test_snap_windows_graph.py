@@ -188,3 +188,28 @@ def test_eq_reach_semantics(spark):
     for r in rows:
         assert r.eq_node % snap_mod.EQ_ATTR_MOD == r.seed % snap_mod.EQ_ATTR_MOD
         assert 0.0 < r.cost <= snap_mod.EQ_CAP
+
+
+def test_component_labels_match_union_find():
+    """Vectorized hooking + pointer jumping gives the min-index labels
+    of a sequential union-find, on random multigraphs with self-loops,
+    isolated vertices and long chains."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for n, m in [(1, 0), (50, 0), (200, 150), (500, 900)]:
+        u, v = rng.integers(0, n, m), rng.integers(0, n, m)
+        chain = rng.permutation(n)  # one long path in random id order
+        u, v = np.r_[u, chain[:-1][: n // 3]], np.r_[v, chain[1:][: n // 3]]
+        parent = list(range(n))
+
+        def find(i):
+            while parent[i] != i:
+                i = parent[i]
+            return i
+
+        for a, b in zip(u, v):
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        want = [find(i) for i in range(n)]
+        assert graph_ops.component_labels(u, v, n).tolist() == want

@@ -235,3 +235,29 @@ def test_lifecycle_components_matches_closure_oracle(spark):
     assert_matches_oracle(df, entrymod.oracle_sql()["lifecycle_components"])
     # the composed graph is NOT the intact grid: more than 2 labels
     assert df.select("label").distinct().count() > 2
+
+
+def test_lifecycle_graph_matches_oracle(spark):
+    """§3.1 the composed prefix itself: the final edge table with its
+    re-joined endpoint coordinates against the round-unrolled SQL."""
+    assert_matches_oracle(*_entry("lifecycle_graph", spark))
+
+
+def test_composed_graph_job_budget(spark):
+    """A cold composed_graph plus the lifecycle's road-graph components
+    is one collect per input table and one for the components — not
+    one job per pass round."""
+    from pfaedle_spark.operators import graph_ops
+    from pfaedle_spark.operators.routing import session_token
+    from pfaedle_spark.plans import lifecycle
+
+    lifecycle._COMPOSED_MEMO.pop(session_token(spark), None)
+    sc, group = spark.sparkContext, "composed-graph-job-budget"
+    sc.setJobGroup(group, "cold composed_graph + road components")
+    try:
+        nodes_f, edges_f, _ = lifecycle.composed_graph(spark)
+        graph_ops.road_components(nodes_f, edges_f)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 4, f"{len(jobs)} jobs"

@@ -14,7 +14,7 @@ import os
 SF = os.environ.get("SF", "/root/testdata/sf0.01")
 TABLES = ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]
 
-spark = get_spark(cores=8); spark.sparkContext.setLogLevel("ERROR")
+spark = get_spark(); spark.sparkContext.setLogLevel("ERROR")
 df = E.entry(spark)
 n = df.count()
 print(f"entry(): {n} rows, schema: {[f.name for f in df.schema.fields]}")
