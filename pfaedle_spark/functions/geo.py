@@ -307,7 +307,9 @@ def acc_frechet_dist(ax, ay, bx, by, seg: float = 25.0) -> float:
     return float(ca[p - 1, q - 1] / max(p, q))
 
 
-_DP_CHUNK = 32  # bound the padded DP cube: 2 cubes x 32 x 256 x 256 x 8B ~ 34 MB
+# bound on the padded wavefront cubes per batch (2 float64 cubes of
+# batch x p_max x q_max): 32 pairs at the 256-point densify cap ~ 34 MB
+_DP_BUDGET_BYTES = 2 * 8 * 32 * 256 * 256
 
 
 def frechet_dists_batch(paths) -> tuple[np.ndarray, np.ndarray]:
@@ -324,27 +326,35 @@ def frechet_dists_batch(paths) -> tuple[np.ndarray, np.ndarray]:
     single per-cell add keep the exact scalar operand order, boundary
     rows use ``np.{maximum,add}.accumulate`` (strictly sequential, the
     scalar loop's order), and padded cells only ever CONSUME real
-    cells — each pair's answer cell never reads padding. Batches are
-    chunked to ``_DP_CHUNK`` so memory stays bounded however many pairs
-    a caller groups together.
+    cells — each pair's answer cell never reads padding. Consecutive
+    pairs are batched while the padded cubes stay within
+    ``_DP_BUDGET_BYTES``, so memory stays bounded however many pairs a
+    caller groups together, and one long path (densify keeps every raw
+    vertex) does not pad its neighbours to its size.
 
     ``paths``: iterable of raw (ax, ay, bx, by) float64 arrays
     (pre-densify). Returns (d_f, acc_d_f) arrays aligned with input.
     """
-    paths = list(paths)
-    df_out = np.empty(len(paths))
-    adf_out = np.empty(len(paths))
-    for lo in range(0, len(paths), _DP_CHUNK):
-        chunk = paths[lo:lo + _DP_CHUNK]
-        for acc, seg0, out in ((False, 50.0, df_out), (True, 25.0, adf_out)):
-            dens = []
-            for ax, ay, bx, by in chunk:
-                ax = np.asarray(ax, np.float64); ay = np.asarray(ay, np.float64)
-                bx = np.asarray(bx, np.float64); by = np.asarray(by, np.float64)
-                seg = max(_eff_seg(ax, ay, seg0), _eff_seg(bx, by, seg0))
-                dens.append(densify(ax, ay, seg) + densify(bx, by, seg))
-            out[lo:lo + len(chunk)] = _frechet_dp_wavefront(dens, acc)
-    return df_out, adf_out
+    paths = [tuple(np.asarray(a, np.float64) for a in p) for p in paths]
+    outs = []
+    for acc, seg0 in ((False, 50.0), (True, 25.0)):
+        dens = []
+        for ax, ay, bx, by in paths:
+            seg = max(_eff_seg(ax, ay, seg0), _eff_seg(bx, by, seg0))
+            dens.append(densify(ax, ay, seg) + densify(bx, by, seg))
+        out = np.empty(len(dens))
+        lo = 0
+        while lo < len(dens):
+            hi, p_max, q_max = lo + 1, len(dens[lo][0]), len(dens[lo][2])
+            while hi < len(dens):
+                p2, q2 = max(p_max, len(dens[hi][0])), max(q_max, len(dens[hi][2]))
+                if 2 * 8 * (hi - lo + 1) * p2 * q2 > _DP_BUDGET_BYTES:
+                    break
+                hi, p_max, q_max = hi + 1, p2, q2
+            out[lo:hi] = _frechet_dp_wavefront(dens[lo:hi], acc)
+            lo = hi
+        outs.append(out)
+    return outs[0], outs[1]
 
 
 def _frechet_dp_wavefront(dens, acc: bool) -> np.ndarray:

@@ -332,7 +332,7 @@ wpairs AS (
 ),
 wpath AS MATERIALIZED (
   -- per-hop path capture: predecessor backtrack from target to source
-  -- (engine: edge_dijkstra_path; unique optimum => identical walk)
+  -- (engine: edge_routing.state_path; unique optimum => identical walk)
   WITH RECURSIVE pw(fingerprint, k, a_state, pos, state) AS (
     SELECT fingerprint, k, a_state, 0, b_state FROM wpairs
     UNION ALL

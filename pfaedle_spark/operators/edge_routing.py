@@ -22,9 +22,10 @@ Spark-first design: the *entire* cost model is a relational
 every cost term a JVM-side column expression built from ONE
 dialect-neutral SQL string that both Spark (``F.expr``) and the DuckDB
 oracle evaluate, so every term is bit-identically checkable. The
-Dijkstra kernel then runs over the broadcast transition CSR inside
-``applyInPandas`` groups — same axis the reference parallelizes with
-OpenMP threads.
+shared search kernel (``routing.search`` over a ``routing.build_csr``
+of the transitions, states = directed edge ids) then runs over the
+broadcast transitions inside ``applyInPandas`` groups — same axis the
+reference parallelizes with OpenMP threads.
 
 At 100 TB the transitions table is graph-sized (scales with geography,
 not with the observation/image table), so broadcasting it follows the
@@ -33,7 +34,6 @@ same budget argument as the node CSR in ``routing.py``.
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
@@ -44,14 +44,7 @@ from pyspark.sql import functions as F
 from .. import sqlgen
 from ..functions import strings
 from . import gtfs_ops
-from .graph_ops import component_labels
-
-# --- config weights (pfaedle.cfg:377-419 semantics; field names mirror
-#     routing_options, router/misc.h:35-50). Parsed from the shipped MOT
-#     config (S8), not hard-coded: motconfig.MotConfig.routing_opts().
-from .. import motconfig as _MC
-
-OPTS = _MC.load("rail").routing_opts()
+from .routing import OPTS, build_csr, heuristic, index_of, reachable, search
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
 SIMI_EPS = 0.0001    # router.cpp:116 "cur < 0.0001 => perfect match"
@@ -408,169 +401,68 @@ SELECT from_edge, to_edge, via_node, cost FROM trans
 # R2 — Dijkstra over edge states
 # --------------------------------------------------------------------
 
-def build_edge_csr(trans_pdf: pd.DataFrame) -> dict:
+def transition_csr(trans_pdf: pd.DataFrame) -> dict:
     """CSR over directed-edge states from a transitions table. State ids
-    are the (sparse, offset-bearing) edge ids, index-mapped."""
-    frm = trans_pdf["from_edge"].to_numpy(np.int64)
-    to = trans_pdf["to_edge"].to_numpy(np.int64)
-    cost = trans_pdf["cost"].to_numpy(np.float64)
-    states = np.unique(np.concatenate([frm, to]))
-    idx = {int(e): i for i, e in enumerate(states)}
-    all_fi, all_ti = np.searchsorted(states, frm), np.searchsorted(states, to)
-    order = np.lexsort((to, all_ti, all_fi))  # (from, to-edge-id) deterministic
-    fi, ti, cost = all_fi[order], all_ti[order], cost[order]
-    n = len(states)
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, fi + 1, 1)
-    indptr = np.cumsum(indptr)
-    csr = {"indptr": indptr, "dst": ti, "cost": cost, "states": states, "idx": idx}
-    # per-state start-node coords for the A* heuristic (see
-    # turn_transitions fx/fy/tx/ty)
+    are the (sparse, offset-bearing) edge ids; the per-state start-node
+    coords (turn_transitions fx/fy/tx/ty) feed the A* heuristic. The
+    weak-component labels matter here: without the R6 shortcut ONE
+    cross-component target in a Viterbi layer makes the A* exhaust the
+    whole reachable graph before concluding "unreachable"."""
+    ends = None
     if {"fx", "fy", "tx", "ty"} <= set(trans_pdf.columns):
-        xy = np.full((n, 2), np.nan)
-        xy[all_fi, 0] = trans_pdf["fx"].to_numpy(np.float64)
-        xy[all_fi, 1] = trans_pdf["fy"].to_numpy(np.float64)
-        xy[all_ti, 0] = trans_pdf["tx"].to_numpy(np.float64)
-        xy[all_ti, 1] = trans_pdf["ty"].to_numpy(np.float64)
-        # admissibility gate (same invariant as routing._heuristic_admissible):
-        # an editable config with a level factor < 1 would make A* inexact.
-        from .routing import _heuristic_admissible
-
-        if _heuristic_admissible(csr, xy):
-            csr["xy"] = xy
-    # weak-component labels over the state graph: the R6 shortcut
-    # (router.cpp:598-599 — different component => cost inf). Without
-    # it, ONE cross-component target in a Viterbi layer makes the A*
-    # exhaust the whole reachable graph before concluding "unreachable".
-    csr["comp"] = component_labels(fi, ti, n)
-    return csr
-
-
-def edge_dijkstra(csr: dict, source_edge: int, target_edges=None) -> dict[int, float]:
-    """Deterministic (d, state-edge-id) PQ order (EDijkstra.h:50-53 uses
-    (h, d) — with targets and state coords this IS A*: h = min straight
-    line to a target start node, admissible because every transition
-    cost >= a_len >= that displacement). Early exit once all targets
-    settle. Keys/values in raw edge ids; distances are exact either way.
-    """
-    idx = csr["idx"]
-    if source_edge not in idx:
-        return {}
-    indptr, dsts, cost, states = csr["indptr"], csr["dst"], csr["cost"], csr["states"]
-    src = idx[source_edge]
-    remaining = (
-        {idx[t] for t in target_edges if t in idx} if target_edges is not None else None
+        ends = [trans_pdf[c].to_numpy(np.float64) for c in ("fx", "fy", "tx", "ty")]
+    return build_csr(
+        trans_pdf["from_edge"].to_numpy(np.int64),
+        trans_pdf["to_edge"].to_numpy(np.int64),
+        trans_pdf["cost"].to_numpy(np.float64),
+        ends,
     )
-    # R6 component shortcut: cross-component targets are inf — drop them
-    # so early exit still fires instead of sweeping the reachable graph
-    comp = csr.get("comp")
-    if comp is not None and remaining:
-        sc = int(comp[src])
-        remaining = {t for t in remaining if int(comp[t]) == sc}
-        if not remaining:
-            return {}
-    xy = csr.get("xy")
-    if xy is not None and remaining:
-        # whole-table heuristic in ONE vectorized pass (n x |targets|
-        # flops), cached per target set — every source of a DP layer
-        # shares the same targets, so pay the table once per layer
-        hkey = frozenset(remaining)
-        hcache = csr.setdefault("_hcache", {})
-        harr = hcache.get(hkey)
-        if harr is None:
-            if len(hcache) > 4096:
-                hcache.clear()
-            txy = xy[np.fromiter(remaining, dtype=np.int64)]
-            dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
-            dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
-            harr = np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1)
-            hcache[hkey] = harr
-    else:
-        harr = None
-
-    dist: dict[int, float] = {}
-    h0 = float(harr[src]) if harr is not None else 0.0
-    pq: list[tuple[float, float, int, int]] = [(h0, 0.0, int(states[src]), src)]
-    while pq:
-        _, d, _, u = heapq.heappop(pq)
-        if u in dist:
-            continue
-        dist[u] = d
-        if remaining is not None:
-            remaining.discard(u)
-            if not remaining:
-                break
-        if harr is None:
-            for i in range(indptr[u], indptr[u + 1]):
-                v = int(dsts[i])
-                if v not in dist:
-                    d2 = d + float(cost[i])
-                    heapq.heappush(pq, (d2, d2, int(states[v]), v))
-        else:
-            for i in range(indptr[u], indptr[u + 1]):
-                v = int(dsts[i])
-                if v not in dist:
-                    d2 = d + float(cost[i])
-                    heapq.heappush(pq, (d2 + float(harr[v]), d2, int(states[v]), v))
-    return {int(states[u]): d for u, d in dist.items()}
 
 
-def edge_dijkstra_path(csr: dict, source_edge: int, target_edge: int) -> list[int] | None:
-    """1x1 edge Dijkstra with predecessor capture: the state sequence
+def state_search(
+    csr: dict, seeds: list[tuple[int, float]], targets: list[int], band: bool = False
+) -> tuple[dict[int, float], dict[int, int]]:
+    """:func:`routing.search` in raw edge-state ids: ONE multi-source A*
+    for a whole Viterbi layer transition, or a single-seed query
+    (restricted_paths).
+
+    ``seeds`` are (state edge id, accumulated DP cost), so a settled
+    target t carries min_i(dp_i + dist(i -> t)) without ever
+    materializing the |prev| x |cur| matrix or running |prev| separate
+    searches (the reference pays the full N x M hop matrix per layer,
+    router.cpp:626-688; the combined frontier explores each region
+    once). ``band`` applies the R5 hop band.
+
+    Returns ({target edge id: min total cost}, {target edge id: seed
+    ORDINAL that won}). Deterministic: heap ties break on (cost, state
+    edge id, seed ordinal)."""
+    si = index_of(csr, [s for s, _ in seeds]).tolist()
+    iseeds = [(i, float(c)) for i, (_, c) in zip(si, seeds)]
+    ti = index_of(csr, targets).tolist()
+    tg = reachable(csr, iseeds, ti)
+    dist, origin = search(csr, iseeds, tg, heuristic(csr, tg), band=band)
+    hits = [(t, i) for t, i in zip(targets, ti) if i in dist]
+    return {t: dist[i] for t, i in hits}, {t: origin[i] for t, i in hits}
+
+
+def state_path(csr: dict, source_edge: int, target_edge: int) -> list[int] | None:
+    """1x1 edge-state A* with predecessor capture: the state sequence
     source..target, or None if unreachable (R10 needs the actual walked
     edges — reference ``EDijkstra`` per-target path capture,
-    ``EDijkstra.h:190-418``)."""
-    idx = csr["idx"]
-    if source_edge not in idx or target_edge not in idx:
+    ``EDijkstra.h:190-418``). On equal-cost routes the walk takes the
+    smallest predecessor state."""
+    si, ti = index_of(csr, [source_edge, target_edge]).tolist()
+    seeds = [(si, 0.0)]
+    tg = reachable(csr, seeds, [ti])
+    if not tg:
         return None
-    indptr, dsts, cost, states = csr["indptr"], csr["dst"], csr["cost"], csr["states"]
-    src, tgt = idx[source_edge], idx[target_edge]
-    comp = csr.get("comp")
-    if comp is not None and int(comp[src]) != int(comp[tgt]):
-        return None  # R6: cross-component => unreachable, skip the sweep
-    xy = csr.get("xy")
-    if xy is not None:  # 1x1 A*: the heuristic's best case
-        # cache per target: shape assembly walks MANY consecutive state
-        # pairs against the same graph, and a fresh |states| table (let
-        # alone a tolist) per call dominates the search itself
-        hcache = csr.setdefault("_hcache_1x1", {})
-        harr = hcache.get(tgt)
-        if harr is None:
-            if len(hcache) > 4096:
-                hcache.clear()
-            harr = np.nan_to_num(
-                np.hypot(xy[:, 0] - xy[tgt, 0], xy[:, 1] - xy[tgt, 1]), nan=0.0
-            )
-            hcache[tgt] = harr
-    else:
-        harr = None
-
-    dist: dict[int, float] = {}
-    prev: dict[int, int] = {}
-    h0 = float(harr[src]) if harr is not None else 0.0
-    pq: list[tuple[float, float, int, int, int]] = [(h0, 0.0, int(states[src]), src, -1)]
-    while pq:
-        _, d, _, u, p = heapq.heappop(pq)
-        if u in dist:
-            continue
-        dist[u] = d
-        prev[u] = p
-        if u == tgt:
-            break
-        for i in range(indptr[u], indptr[u + 1]):
-            v = int(dsts[i])
-            if v not in dist:
-                d2 = d + float(cost[i])
-                hv = float(harr[v]) if harr is not None else 0.0
-                heapq.heappush(pq, (d2 + hv, d2, int(states[v]), v, u))
-    if tgt not in dist:
+    dist, pred = search(csr, seeds, tg, heuristic(csr, tg), preds=True)
+    if ti not in dist:
         return None
-    path = []
-    cur = tgt
-    while cur != -1:
-        path.append(int(states[cur]))
-        cur = prev[cur]
-    return path[::-1]
+    walk = [ti]
+    while pred[walk[-1]] >= 0:
+        walk.append(pred[walk[-1]])
+    return csr["states"][walk[::-1]].tolist()
 
 
 def shape_assembly(
@@ -627,7 +519,7 @@ def shape_assembly(
         stop_xy = pdf.groupby("seq")[["x", "y"]].first().sort_index()
         walk: list[int] = []
         for i in range(len(states) - 1):
-            p = edge_dijkstra_path(csr, int(states[i]), int(states[i + 1]))
+            p = state_path(csr, int(states[i]), int(states[i + 1]))
             if p is None:
                 continue
             walk.extend(p[:-1])  # target re-enters as next hop's source
@@ -770,10 +662,10 @@ def restricted_paths(spark: SparkSession) -> DataFrame:
     tgt_nodes = dict(targets)
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        csr = build_edge_csr(bc.value)
+        csr = transition_csr(bc.value)
         out = []
         for fe, sn in zip(pdf["from_edge"], pdf["src_node"]):
-            d = edge_dijkstra(csr, int(fe), tgt_states)
+            d, _ = state_search(csr, [(int(fe), 0.0)], tgt_states)
             for t in tgt_states:
                 out.append((int(fe), int(sn), t, tgt_nodes[t], d.get(t)))
         return pd.DataFrame(
@@ -838,9 +730,9 @@ def restricted_paths_cogrouped(
         out = []
         if len(src_pdf) == 0:
             return pd.DataFrame(columns=cols)
-        csr = build_edge_csr(trans_pdf) if len(trans_pdf) else None
+        csr = transition_csr(trans_pdf) if len(trans_pdf) else None
         for fe, sn in zip(src_pdf["from_edge"], src_pdf["src_node"]):
-            d = edge_dijkstra(csr, int(fe), tgt_states) if csr else {}
+            d = state_search(csr, [(int(fe), 0.0)], tgt_states)[0] if csr else {}
             for t in tgt_states:
                 out.append((int(fe), int(sn), t, tgt_nodes[t], d.get(t)))
         return pd.DataFrame(out, columns=cols)
@@ -1121,219 +1013,8 @@ def _vf_csr(bc_value: dict, variant: int) -> dict:
     if key not in _VF_CSR_CACHE:
         if len(_VF_CSR_CACHE) > 8:
             _VF_CSR_CACHE.clear()
-        csr = build_edge_csr(bc_value[variant])
-        csr["cache_key"] = key
-        _VF_CSR_CACHE[key] = csr
+        _VF_CSR_CACHE[key] = transition_csr(bc_value[variant])
     return _VF_CSR_CACHE[key]
-
-
-def _layer_heuristic(csr: dict, tgt_idx: frozenset) -> list | None:
-    """Admissible per-state A* heuristic (min straight-line displacement
-    to any target's start node), cached per target set — all seeds of a
-    DP layer share one table."""
-    xy = csr.get("xy")
-    if xy is None or not tgt_idx:
-        return None
-    hcache = csr.setdefault("_hcache", {})
-    harr = hcache.get(tgt_idx)
-    if harr is None:
-        if len(hcache) > 4096:
-            hcache.clear()
-        txy = xy[np.fromiter(tgt_idx, dtype=np.int64)]
-        dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
-        dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
-        harr = np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1)
-        # keep the ndarray: a tolist() here allocates |states| python
-        # floats per distinct layer target set, while A* only ever reads
-        # the states it explores
-        hcache[tgt_idx] = harr
-    return harr
-
-
-def edge_dijkstra_viterbi_step(
-    csr: dict,
-    seeds: list[tuple[int, float]],
-    targets: list[int],
-    band: bool = True,
-) -> tuple[dict[int, float], dict[int, int]]:
-    """ONE multi-source A* for a whole Viterbi layer transition.
-
-    ``seeds`` are (state edge id, accumulated DP cost) for the previous
-    layer; the heap is seeded with those costs, so a settled target t
-    directly carries min_i(dp_i + dist(i -> t)) — the min-plus product
-    the DP needs — without ever materializing the |prev| x |cur| matrix
-    or running |prev| separate searches (the reference pays the full
-    N x M hop matrix per layer, router.cpp:626-688; the combined
-    frontier here explores each region once).
-
-    Returns ({target edge id: min total cost}, {target edge id: seed
-    ORDINAL that won}). Deterministic: heap ties break on (cost, state
-    edge id, seed ordinal).
-    """
-    idx = csr["idx"]
-    indptr, dsts, cost, states = csr["indptr"], csr["dst"], csr["cost"], csr["states"]
-    remaining = {idx[t] for t in targets if t in idx}
-
-    live_seeds = []
-    for ordn, (s, c) in enumerate(seeds):
-        si = idx.get(int(s))
-        if si is not None and math.isfinite(c):
-            live_seeds.append((ordn, si, c))
-    # R6 component shortcut (router.cpp:598-599): a target in a weak
-    # component no seed can reach is inf by construction — drop it up
-    # front, or the A* exhausts the reachable graph before giving up
-    comp = csr.get("comp")
-    if comp is not None and remaining:
-        seed_comps = {int(comp[si]) for _, si, _ in live_seeds}
-        remaining = {t for t in remaining if int(comp[t]) in seed_comps}
-    tgt_idx = frozenset(remaining)
-    harr = _layer_heuristic(csr, tgt_idx)
-
-    pq: list[tuple[float, float, int, int, int]] = []
-    for ordn, si, c in live_seeds:
-        h0 = float(harr[si]) if harr is not None else 0.0
-        pq.append((c + h0, c, int(states[si]), ordn, si))
-    heapq.heapify(pq)
-
-    # R5 hop band (router::getHopBand, router.cpp:229-306): once the
-    # pilot (the first settled target, reusing THIS search instead of a
-    # separate pilot Dijkstra) fixes the min hop cost c0, cap the search
-    # at max(c0, pend*levelPunish[2])*3 + turn + station pens, where
-    # pend is the max straight-line seed->target distance. The band is
-    # on the PURE HOP cost (d minus the winning seed's dp), as the
-    # reference bands each pairwise hop — NOT on the combined DP total:
-    # a target whose hop is in-band must stay reachable even when its
-    # best seed carries dp far above the layer minimum. An entry whose
-    # hop exceeds the cap is discarded (that seed-pair is inf); the
-    # state can still settle later via an in-band seed.
-    band_cap: float | None = None
-    relax_cap: float | None = None
-    pend = 0.0
-    seed_dp = {ordn: c for ordn, _, c in live_seeds}
-    # dp SPREAD across the layer's seeds: settle-once keys states by min
-    # TOTAL (dp + hop), while the reference bands each PAIRWISE hop
-    # (router.cpp:229-306). A low-dp seed can settle a shared transit
-    # state first and then get band-pruned en route, shadowing an
-    # in-band higher-dp seed. Expansion therefore prunes at
-    # band_cap + spread: if pair (B, T) is strictly in-band, every state
-    # x on B's shortest path settles at total <= dp_B + hop_B(x), so the
-    # settling seed s has hop(x) = total - dp_s <= spread + band_cap —
-    # never pruned — and T provably receives a delivery with
-    # total <= dp_B + hop_B(T). A target RESOLVES only on a strictly
-    # in-band first settle (then its value equals the pairwise banded
-    # min — any strict pop witnesses an in-band pair, so first-pop total
-    # == min in-band pair total); a target whose first settle is only
-    # relax-band goes to the exact pairwise repair pass below.
-    spread = 0.0
-    if live_seeds:
-        dps = [c for _, _, c in live_seeds]
-        spread = max(dps) - min(dps)
-    if band and live_seeds and remaining:
-        xy = csr.get("xy")
-        if xy is not None:
-            sxy = xy[[si for _, si, _ in live_seeds]]
-            txy = xy[np.fromiter(remaining, dtype=np.int64)]
-            dx = sxy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
-            dy = sxy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
-            pend = float(np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).max())
-
-    dist: dict[int, float] = {}
-    origin: dict[int, int] = {}
-    suspects: set[int] = set()  # targets settled only via out-of-band pops
-    tgt_set = tgt_idx
-    while pq and remaining:
-        _, d, _, ordn, u = heapq.heappop(pq)
-        if u in dist:
-            continue
-        hop = d - seed_dp[ordn]
-        if relax_cap is not None and hop > relax_cap:
-            continue  # beyond the band for EVERY seed => truly inf
-        strict = band_cap is None or hop <= band_cap
-        dist[u] = d  # transit settle: min TOTAL, proven sufficient above
-        origin[u] = ordn
-        if u in remaining:
-            remaining.discard(u)
-            if not strict:
-                suspects.add(u)  # pairwise-banded value uncertain
-            if not remaining:
-                break
-            if band and band_cap is None:
-                c0 = hop  # the pilot's pure hop cost
-                band_cap = max(c0, pend * OPTS["level_punish"][2]) * 3.0 + \
-                    OPTS["full_turn_punish"] + OPTS["pass_thru_station_punish"]
-                relax_cap = band_cap + spread
-        for i in range(indptr[u], indptr[u + 1]):
-            v = int(dsts[i])
-            if v not in dist:
-                d2 = d + float(cost[i])
-                if relax_cap is not None and d2 - seed_dp[ordn] > relax_cap:
-                    continue  # prune pushes beyond every seed's hop band
-                hv = float(harr[v]) if harr is not None else 0.0
-                heapq.heappush(pq, (d2 + hv, d2, int(states[v]), ordn, v))
-    out_d: dict[int, float] = {}
-    out_o: dict[int, int] = {}
-    if suspects and band_cap is not None:
-        rd, ro = _pairwise_band_step(csr, live_seeds, suspects, band_cap, harr)
-        for ti, dv in rd.items():
-            dist[ti] = dv
-            origin[ti] = ro[ti]
-        for ti in suspects - rd.keys():
-            dist.pop(ti, None)  # no strictly in-band pair => inf
-    for t in targets:
-        ti = idx.get(t)
-        if ti is not None and ti in dist:
-            out_d[t] = dist[ti]
-            out_o[t] = origin[ti]
-    return out_d, out_o
-
-
-def _pairwise_band_step(
-    csr: dict,
-    live_seeds: list[tuple[int, int, float]],
-    tgt_idx: set[int],
-    band_cap: float,
-    harr,
-) -> tuple[dict[int, float], dict[int, int]]:
-    """Exact pairwise-banded repair: settlement keyed by (state, seed)
-    — the reference's N x M granularity (router.cpp:626-688) — with the
-    strict per-seed hop cap, run only for the rare targets the combined
-    search could not resolve strictly in-band. First pop at a target is
-    the min total over strictly in-band pairs; a target never popped
-    has no in-band pair and stays inf."""
-    indptr, dsts = csr["indptr"], csr["dst"]
-    cost, states = csr["cost"], csr["states"]
-    seed_dp = {ordn: c for ordn, _, c in live_seeds}
-    remaining = set(tgt_idx)
-    pq: list[tuple[float, float, int, int, int]] = []
-    for ordn, si, c in live_seeds:
-        h0 = float(harr[si]) if harr is not None else 0.0
-        pq.append((c + h0, c, int(states[si]), ordn, si))
-    heapq.heapify(pq)
-    seen: set[tuple[int, int]] = set()
-    out_d: dict[int, float] = {}
-    out_o: dict[int, int] = {}
-    while pq and remaining:
-        _, d, _, ordn, u = heapq.heappop(pq)
-        if (u, ordn) in seen:
-            continue
-        if d - seed_dp[ordn] > band_cap:
-            continue
-        seen.add((u, ordn))
-        if u in remaining:
-            remaining.discard(u)
-            out_d[u] = d
-            out_o[u] = ordn
-            if not remaining:
-                break
-        for i in range(indptr[u], indptr[u + 1]):
-            v = int(dsts[i])
-            if (v, ordn) not in seen:
-                d2 = d + float(cost[i])
-                if d2 - seed_dp[ordn] > band_cap:
-                    continue
-                hv = float(harr[v]) if harr is not None else 0.0
-                heapq.heappush(pq, (d2 + hv, d2, int(states[v]), ordn, v))
-    return out_d, out_o
 
 
 def _viterbi_full_one(
@@ -1385,7 +1066,7 @@ def _viterbi_full_one(
         prev_states = s_state[lay[li - 1]]
         cur_states = [int(t) for t in s_state[lay[li]]]
         seeds = list(zip((int(s) for s in prev_states), dp_cost[-1].tolist()))
-        d, o = edge_dijkstra_viterbi_step(csr, seeds, cur_states)
+        d, o = state_search(csr, seeds, cur_states, band=True)
         emission = s_em[lay[li]]
         dp_cost.append(np.array([d.get(t, np.inf) for t in cur_states]) + emission)
         dp_prev.append(np.array([o.get(t, 0) for t in cur_states], dtype=np.int64))

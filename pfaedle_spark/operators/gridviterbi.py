@@ -11,14 +11,15 @@ This generator produces a DuckDB statement that reproduces the engine
 REAL float costs. Exactness rests on three proven facts:
 
 1. **Left-to-right float accumulation.** The engine's layer search
-   (``edge_dijkstra_viterbi_step``) seeds the heap with the previous
-   layer's DP totals and accumulates ``d2 = d + cost`` along each path.
+   (``edge_routing.state_search`` -> ``routing.search``) seeds the heap
+   with the previous layer's DP totals and accumulates ``g2 = g + cost``
+   along each path.
    An unrolled Bellman-Ford seeded with the same DP totals performs the
    SAME float additions in the SAME order per path; float addition of a
    non-negative cost is monotone (fl(x+c) >= x), so both compute the
    identical min over identical per-path accumulated values — the same
    argument that bit-matched ``restricted_paths_sql`` against the
-   engine's Dijkstra (edge_routing.py:1520+).
+   engine's search (``edge_routing.restricted_paths_sql``).
 
 2. **The hop band never binds on the graded worlds.** The R5 band
    (router.cpp:229-306 semantics) can exclude pairs whose pure hop
@@ -80,7 +81,7 @@ BF_ROUNDS = 56   # measured fixpoint 52 (sf0.001/sf0.01) / 53 (sf0.1)
 # single-seed hop-path BF (shape_geoms): full fixpoint measured at 52
 # rounds over all 428 walked hops at the graded SFs and 53 over the
 # 4290 hops at sf0.1 (tools/path_probe.py), which also verified the
-# min-achieving-pred backtrack rule against engine edge_dijkstra_path
+# min-achieving-pred backtrack rule against engine state_path
 # on every hop at every SF.
 PATH_BF_ROUNDS = 56
 
@@ -280,10 +281,10 @@ def _path_walk_ctes() -> str:
     consecutive chosen-state pair (hop), a single-seed unrolled BF to
     value fixpoint, then pred(u) = MIN(state) over in-neighbors b with
     ``b.total + cost == u.total`` — exactly the engine's first-pop pred
-    (heap ties break (f, d, state, idx, pred); strictly positive arc
+    (heap ties break (f, g, index, pred); strictly positive arc
     costs settle every achieving pred before u pops, so the first pop
     carries the min pred index, and CSR index order IS state-id order
-    via np.unique). Verified pred-rule == edge_dijkstra_path on all 428
+    via the sorted states array). Verified pred-rule == state_path on all 428
     hops at both graded SFs (tools/path_probe.py). Ends with
     ``walk(fid, state, hop_seq, n_walk)`` — the engine's walked state
     sequence (each hop path minus its target, then the final chosen

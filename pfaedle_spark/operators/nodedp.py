@@ -6,13 +6,13 @@ rows-only surfaces with bit-exact DuckDB twins.
 Exactness:
 
 1. **Hop costs are EXACT dyadics.** The node graph's arc cost is
-   ``length * LEVEL_PUNISH[level]`` (routing.build_csr, router.cpp:
+   ``length * LEVEL_PUNISH[level]`` (routing.node_csr, router.cpp:
    53-117) — length is the 2048 m grid spacing and every punish factor
    {1, 1.5, 2, 3, 4, 6, 8} is dyadic, so each arc cost and every
    shortest-path sum is an exact float64 integer below 2^53. Summation
    ORDER therefore cannot matter: a plain unrolled Bellman-Ford equals
-   the engine's Dijkstra (cached_dijkstra) bit-for-bit, and the hop
-   table depends only on the source node — computed ONCE per distinct
+   the engine's search (cached_dijkstra -> routing.search) bit-for-bit,
+   and the hop table depends only on the source node — computed ONCE per distinct
    candidate node and shared by every trip/layer (exactly like the
    engine's route cache) and by BOTH oracles.
 

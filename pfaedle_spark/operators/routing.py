@@ -3,7 +3,11 @@
 Reference:
 * R1/R2 Dijkstra / edge-Dijkstra — ``util/graph/Dijkstra.h:118-304``,
   ``util/graph/EDijkstra.h:190-418`` (PQ ordered by (h, d), tie-broken
-  deterministically).
+  deterministically). Both are ONE label-setting loop here,
+  :func:`search`, over ONE CSR layout, :func:`build_csr`: node graphs
+  and edge-state graphs (edge_routing) differ only in their state ids.
+* R4 A* heuristic (:func:`heuristic`) and R5 hop band (``search``'s
+  ``band``).
 * R3 cost function — per-meter level punish
   (``router/router.cpp:53-117``; defaults ``pfaedle.cfg:377-419``).
 * R6 N×M hop matrix + component-infinity shortcut (``router.cpp:580-624``,
@@ -26,6 +30,7 @@ that join prunes precisely.
 from __future__ import annotations
 
 import heapq
+import math
 
 import numpy as np
 import pandas as pd
@@ -33,7 +38,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import constants as C
+from .. import motconfig as _MC
 from .graph_ops import component_labels
+
+# R3 config weights (pfaedle.cfg:377-419 semantics; field names mirror
+# routing_options, router/misc.h:35-50), parsed from the shipped MOT
+# config (S8), not hard-coded. The R5 band reads them here; the edge
+# transition costs in edge_routing share the same object.
+OPTS = _MC.load("rail").routing_opts()
 
 
 def dp_partitions(spark) -> int:
@@ -76,43 +88,58 @@ def bucketed_apply(df: DataFrame, key: str, n_part: int, solve, schema: str) -> 
 # graph representation: CSR adjacency over flat numpy arrays
 # ---------------------------------------------------------------------------
 
-def build_csr(edges_pdf: pd.DataFrame, level_punish: bool = True) -> dict:
-    """Directed CSR adjacency from an edge list (after write_odir_edges,
-    so oneway is already honored by the reverse-copy pass).
+def build_csr(frm, to, cost, ends=None, states=None) -> dict:
+    """Directed CSR adjacency over integer state ids — the one layout
+    behind node routing (states = node ids) and edge-state routing
+    (states = directed edge ids).
 
-    cost = length * LEVEL_PUNISH[level]  (R3, router.cpp:53-117)
-    """
-    src = edges_pdf["src"].to_numpy(np.int64)
-    dst = edges_pdf["dst"].to_numpy(np.int64)
-    length = edges_pdf["length"].to_numpy(np.float64)
-    level = edges_pdf["level"].to_numpy(np.int64)
-    cost = length * (np.array(C.LEVEL_PUNISH)[level] if level_punish else 1.0)
-    n = int(max(src.max(), dst.max())) + 1 if len(src) else 0
-    order = np.lexsort((dst, src))
-    src, dst, cost = src[order], dst[order], cost[order]
-    indptr = np.zeros(n + 1, dtype=np.int64)
-    np.add.at(indptr, src + 1, 1)
-    indptr = np.cumsum(indptr)
-    # component labels (undirected): the reference's component-infinity
-    # shortcut (router.cpp:598-599) — a cross-component target is +inf
-    # WITHOUT exploring the whole component first.
-    comp = component_labels(src, dst, n)
-    csr = {"indptr": indptr, "dst": dst, "cost": cost, "n": n, "comp": comp}
-    # node coordinates (for the A* heuristic, R4): recoverable from the
-    # edge endpoints when the edge list carries them. Admissible because
-    # cost = length * punish >= length >= straight-line distance
-    # (min LEVEL_PUNISH factor is 1.0).
-    if {"x1", "y1", "x2", "y2"} <= set(edges_pdf.columns):
+    ``states`` is the sorted probe array that maps a state id to its
+    index (``np.searchsorted``); node graphs pass ``np.arange(n)`` so a
+    node id is its own index, edge-state graphs default to the distinct
+    ids. Arcs are ordered by (from, to) index, ties stable. ``ends`` =
+    (fx, fy, tx, ty), the coordinates of each arc's from/to state, feed
+    the A* heuristic (R4) when they pass the admissibility gate."""
+    frm, to = np.asarray(frm, np.int64), np.asarray(to, np.int64)
+    cost = np.asarray(cost, np.float64)
+    if states is None:
+        states = np.unique(np.concatenate([frm, to]))
+    fi, ti = np.searchsorted(states, frm), np.searchsorted(states, to)
+    order = np.lexsort((ti, fi))
+    n = len(states)
+    indptr = np.concatenate([[0], np.cumsum(np.bincount(fi, minlength=n))])
+    # weak-component labels: the reference's component-infinity shortcut
+    # (router.cpp:598-599) — a cross-component target is +inf WITHOUT
+    # exploring the whole component first.
+    csr = {
+        "indptr": indptr, "dst": ti[order], "cost": cost[order],
+        "states": states, "comp": component_labels(fi, ti, n),
+    }
+    if ends is not None:
         xy = np.full((n, 2), np.nan)
-        s_all = edges_pdf["src"].to_numpy(np.int64)
-        d_all = edges_pdf["dst"].to_numpy(np.int64)
-        xy[s_all, 0] = edges_pdf["x1"].to_numpy(np.float64)
-        xy[s_all, 1] = edges_pdf["y1"].to_numpy(np.float64)
-        xy[d_all, 0] = edges_pdf["x2"].to_numpy(np.float64)
-        xy[d_all, 1] = edges_pdf["y2"].to_numpy(np.float64)
+        xy[fi, 0], xy[fi, 1] = ends[0], ends[1]
+        xy[ti, 0], xy[ti, 1] = ends[2], ends[3]
         if _heuristic_admissible(csr, xy):
             csr["xy"] = xy  # else: plain Dijkstra (exact, just unpruned)
     return csr
+
+
+def node_csr(edges_pdf: pd.DataFrame, level_punish: bool = True) -> dict:
+    """Node-graph CSR from an edge list (after write_odir_edges, so
+    oneway is already honored by the reverse-copy pass).
+
+    cost = length * LEVEL_PUNISH[level]  (R3, router.cpp:53-117). The
+    heuristic is admissible because cost >= length >= straight-line
+    distance (min LEVEL_PUNISH factor is 1.0)."""
+    src = edges_pdf["src"].to_numpy(np.int64)
+    dst = edges_pdf["dst"].to_numpy(np.int64)
+    cost = edges_pdf["length"].to_numpy(np.float64)
+    if level_punish:
+        cost = cost * np.array(C.LEVEL_PUNISH)[edges_pdf["level"].to_numpy(np.int64)]
+    ends = None
+    if {"x1", "y1", "x2", "y2"} <= set(edges_pdf.columns):
+        ends = [edges_pdf[c].to_numpy(np.float64) for c in ("x1", "y1", "x2", "y2")]
+    n = int(max(src.max(), dst.max())) + 1 if len(src) else 0
+    return build_csr(src, dst, cost, ends, states=np.arange(n))
 
 
 def _heuristic_admissible(csr: dict, xy: np.ndarray) -> bool:
@@ -129,6 +156,164 @@ def _heuristic_admissible(csr: dict, xy: np.ndarray) -> bool:
     with np.errstate(invalid="ignore"):
         bad = csr["cost"] + 1e-6 < disp  # NaN coords compare False: admissible (h=0)
     return not bool(bad.any())
+
+
+def index_of(csr: dict, ids) -> np.ndarray:
+    """Indices of state ids in ``csr["states"]``; -1 where absent (a
+    state with no transitions is never reached)."""
+    states = csr["states"]
+    ids = np.asarray(ids, dtype=np.int64)
+    i = np.searchsorted(states, ids)
+    hit = i < len(states)
+    hit[hit] = states[i[hit]] == ids[hit]
+    return np.where(hit, i, -1)
+
+
+def reachable(csr: dict, seeds, targets) -> frozenset:
+    """R6 component shortcut (router.cpp:598-599): the target indices
+    that share a weak component with a live seed. The rest are +inf by
+    construction — dropping them up front keeps the early exit firing
+    instead of sweeping the reachable graph."""
+    comp = csr["comp"]
+    live = {int(comp[i]) for i, c in seeds if i >= 0 and math.isfinite(c)}
+    return frozenset(int(t) for t in targets if t >= 0 and int(comp[t]) in live)
+
+
+def heuristic(csr: dict, targets: frozenset):
+    """R4 A* table over every state: min straight-line distance to any
+    target (reference DistHeur, ``router/router.h`` /
+    ``router.cpp:119-145``). Admissible and consistent, so popped ==
+    settled exactly like Dijkstra; NaN coords give 0. One vectorized
+    pass, cached per target set — every seed of a DP layer, and every
+    source of a hop matrix row, shares one table. None without coords."""
+    xy = csr.get("xy")
+    if xy is None or not targets:
+        return None
+    hcache = csr.setdefault("_hcache", {})
+    harr = hcache.get(targets)
+    if harr is None:
+        if len(hcache) > 4096:
+            hcache.clear()
+        txy = xy[np.fromiter(targets, dtype=np.int64)]
+        dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
+        dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
+        harr = np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1)
+        hcache[targets] = harr
+    return harr
+
+
+def search(csr: dict, seeds, targets, harr, *, preds: bool = False, band=False):
+    """The label-setting search (R1/R2 Dijkstra, R4 A*, R5 hop band) in
+    index space — reference ``Dijkstra.h:118-304`` / ``EDijkstra.h:
+    190-418``: one PQ ordered by (h, d) with deterministic tie-breaks.
+
+    ``seeds`` are (index, start cost) pairs; a seed's list position is
+    its ordinal, and a seed with index < 0 or a non-finite cost is dead.
+    Seeding the heap with the costs makes a settled state carry
+    min_i(cost_i + dist(i -> state)) — the min-plus product a Viterbi
+    layer needs — from one combined frontier instead of |seeds|
+    searches. The search stops once every index in ``targets`` has
+    settled (``None``: settle everything reachable). ``harr`` is the
+    :func:`heuristic` table or None (plain Dijkstra).
+
+    Heap entries are (f, g, index, tag): ``states`` is sorted, so index
+    order is state-id order, and ties break on (cost, state id, tag).
+    The tag is the seed ordinal, or with ``preds`` the predecessor index
+    (-1 at a seed). Returns ({index: cost}, {index: tag}) over the
+    settled states.
+
+    ``band=True`` applies the R5 hop band (router::getHopBand,
+    router.cpp:229-306): once the pilot (the first settled target,
+    reusing THIS search) fixes the min hop cost c0, hops are capped at
+    max(c0, pend*levelPunish[2])*3 + turn + station pens, where pend is
+    the max straight-line seed->target distance. A float ``band`` is a
+    hop cap fixed up front (the repair pass below)."""
+    indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
+    dp = [c for _, c in seeds]
+    live = [(o, i, c) for o, (i, c) in enumerate(seeds) if i >= 0 and math.isfinite(c)]
+    remaining = set(targets) if targets is not None else None
+    dist: dict[int, float] = {}
+    tags: dict[int, int] = {}
+    if remaining is not None and not remaining:
+        return dist, tags
+    pq = [(c + (float(harr[i]) if harr is not None else 0.0), c, i, -1 if preds else o)
+          for o, i, c in live]
+    heapq.heapify(pq)
+    # The band is on the PURE HOP cost (g minus the entry's seed cost),
+    # as the reference bands each pairwise hop — not on the combined DP
+    # total. Settle-once keys states by min TOTAL, so a low-cost seed
+    # can settle a shared transit state first and then get band-pruned
+    # en route, shadowing an in-band higher-cost seed. Expansion
+    # therefore prunes at cap + spread (the seeds' cost spread): if pair
+    # (B, T) is strictly in-band, every state x on B's shortest path
+    # settles at total <= dp_B + hop_B(x), so its settling seed s has
+    # hop(x) <= spread + cap — never pruned — and T receives a delivery
+    # with total <= dp_B + hop_B(T). A target RESOLVES only on a strictly
+    # in-band first settle (its value is then the pairwise banded min);
+    # one settled only out of band is a suspect for the exact repair.
+    cap = relax = None if isinstance(band, bool) else float(band)
+    pend = spread = 0.0
+    if band is True and live and remaining:
+        spread = max(c for _, _, c in live) - min(c for _, _, c in live)
+        xy = csr.get("xy")
+        if xy is not None:
+            sxy = xy[[i for _, i, _ in live]]
+            txy = xy[np.fromiter(remaining, dtype=np.int64)]
+            dx = sxy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
+            dy = sxy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
+            pend = float(np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).max())
+    suspects: set[int] = set()
+    while pq:
+        _, g, u, tag = heapq.heappop(pq)
+        if u in dist:
+            continue
+        if relax is not None and g - dp[tag] > relax:
+            continue  # beyond the band for EVERY seed => truly inf
+        dist[u] = g
+        tags[u] = tag
+        if remaining is not None and u in remaining:
+            remaining.discard(u)
+            if cap is not None and g - dp[tag] > cap:
+                suspects.add(u)  # pairwise-banded value uncertain
+            if not remaining:
+                break
+            if band is True and cap is None:
+                cap = max(g - dp[tag], pend * OPTS["level_punish"][2]) * 3.0 + \
+                    OPTS["full_turn_punish"] + OPTS["pass_thru_station_punish"]
+                relax = cap + spread
+        nxt = u if preds else tag
+        for j in range(indptr[u], indptr[u + 1]):
+            v = int(dsts[j])
+            if v not in dist:
+                g2 = g + float(cost[j])
+                if relax is not None and g2 - dp[tag] > relax:
+                    continue  # prune pushes beyond every seed's hop band
+                hv = float(harr[v]) if harr is not None else 0.0
+                heapq.heappush(pq, (g2 + hv, g2, v, nxt))
+    if suspects:
+        best = _pairwise_repair(csr, live, suspects, cap, harr)
+        for t in suspects:
+            if t in best:
+                dist[t], tags[t] = best[t]
+            else:
+                del dist[t]  # no strictly in-band pair => inf
+    return dist, tags
+
+
+def _pairwise_repair(csr: dict, live, suspects: set, cap: float, harr) -> dict:
+    """Exact pairwise-banded repair for the targets the combined search
+    could not resolve strictly in band — the reference's N x M
+    granularity (router.cpp:626-688): each live seed searched alone
+    under the strict hop cap. Returns {target: (total, ordinal)}, the
+    min (total, ordinal) over in-band pairs; a target no pair reaches in
+    band is absent (inf)."""
+    best: dict[int, tuple[float, int]] = {}
+    for o, i, c in live:
+        d1, _ = search(csr, [(i, c)], suspects, harr, band=cap)
+        for t in suspects & d1.keys():
+            if t not in best or d1[t] < best[t][0]:
+                best[t] = (d1[t], o)
+    return best
 
 
 # R9 route cache (reference ``router::cache``/``getCachedHops``,
@@ -186,7 +371,7 @@ def csr_for_broadcast(bc, level_punish: bool = True) -> dict:
         if len(_CSR_CACHE) > 4:
             _CSR_CACHE.clear()
             _ROUTE_CACHE.clear()  # route entries reference evicted CSRs
-        csr = build_csr(bc.value, level_punish=level_punish)
+        csr = node_csr(bc.value, level_punish=level_punish)
         _CSR_TOKEN += 1
         csr["token"] = _CSR_TOKEN
         _CSR_CACHE[key] = csr
@@ -194,102 +379,25 @@ def csr_for_broadcast(bc, level_punish: bool = True) -> dict:
 
 
 def cached_dijkstra(csr: dict, source: int, targets: set[int]) -> dict[int, float]:
-    """Memoized multi-target Dijkstra (exact-key memo)."""
-    comp = csr.get("comp")
-    if comp is not None:  # component-infinity shortcut (R6)
-        sc = comp[source]
-        targets = {t for t in targets if comp[t] == sc}
-        if not targets:
-            return {}
+    """Memoized multi-target node search (exact-key memo): {target:
+    cost} for the reachable targets."""
+    seeds = [(source, 0.0)]
+    targets = reachable(csr, seeds, targets)
+    if not targets:
+        return {}
     key = (csr.get("token", id(csr)), source, tuple(sorted(targets)))
     hit = _ROUTE_CACHE.get(key)
     if hit is None:
         if len(_ROUTE_CACHE) > _ROUTE_CACHE_MAX:
             _ROUTE_CACHE.clear()
-        if "xy" in csr and targets:
-            res = astar(csr, source, targets)  # R4: same distances, fewer pops
-        else:
-            res = dijkstra(csr, source, targets=targets)
+        dist, _ = search(csr, seeds, targets, heuristic(csr, targets))
         # store ONLY the target distances: callers read targets and
         # nothing else, and full settled-set dicts at the cache cap are
         # gigabytes per worker (measured: 16 workers swapped the box and
         # scaling efficiency fell off a cliff)
-        hit = {t: res[t] for t in targets if t in res}
+        hit = {t: dist[t] for t in targets if t in dist}
         _ROUTE_CACHE[key] = hit
     return hit
-
-
-def dijkstra(
-    csr: dict,
-    source: int,
-    targets: set[int] | None = None,
-    max_cost: float | None = None,
-) -> dict[int, float]:
-    """Single-source shortest path with deterministic (d, node)
-    tie-break (reference PQ order, EDijkstra.h:50-53). Early exit once
-    all targets are settled; `max_cost` is the R5 hop-band cost cap —
-    nodes beyond the cap stay unreached (=> +inf at the caller)."""
-    indptr, dst, cost = csr["indptr"], csr["dst"], csr["cost"]
-    dist: dict[int, float] = {}
-    remaining = set(targets) if targets is not None else None
-    pq: list[tuple[float, int]] = [(0.0, source)]
-    while pq:
-        d, u = heapq.heappop(pq)
-        if u in dist:
-            continue
-        if max_cost is not None and d > max_cost:
-            break  # pq is sorted: everything else is farther
-        dist[u] = d
-        if remaining is not None:
-            remaining.discard(u)
-            if not remaining:
-                break
-        for i in range(indptr[u], indptr[u + 1]):
-            v = int(dst[i])
-            if v not in dist:
-                heapq.heappush(pq, (d + float(cost[i]), v))
-    return dist
-
-
-def astar(
-    csr: dict,
-    source: int,
-    targets: set[int],
-    max_cost: float | None = None,
-) -> dict[int, float]:
-    """R4 — multi-target A*: h(u) = min over targets of the straight-line
-    distance (admissible + consistent, so popped == settled exactly like
-    Dijkstra; reference heuristic ``router/router.h`` DistHeur /
-    ``router.cpp:119-145``). Returns exact distances for every settled
-    node, including all reachable targets."""
-    indptr, dst, cost, xy = csr["indptr"], csr["dst"], csr["cost"], csr["xy"]
-    # whole-table heuristic in one vectorized pass (isolated nodes carry
-    # NaN coords -> 0, still admissible); per-push python math would
-    # cost more than the pruning saves
-    txy = xy[np.fromiter(targets, dtype=np.int64)]
-    dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
-    dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
-    harr = np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1).tolist()
-
-    dist: dict[int, float] = {}
-    remaining = set(targets)
-    pq: list[tuple[float, float, int]] = [(harr[source], 0.0, source)]
-    while pq:
-        f, g, u = heapq.heappop(pq)
-        if u in dist:
-            continue
-        dist[u] = g
-        remaining.discard(u)
-        if not remaining:
-            break
-        for i in range(indptr[u], indptr[u + 1]):
-            v = int(dst[i])
-            if v not in dist:
-                g2 = g + float(cost[i])
-                if max_cost is not None and g2 > max_cost:
-                    continue  # R5 cap: prune pushes beyond the band
-                heapq.heappush(pq, (g2 + harr[v], g2, v))
-    return dist
 
 
 # ---------------------------------------------------------------------------
@@ -531,15 +639,13 @@ def hop_shortest_paths_cogrouped(
             out = hops_pdf[cols].copy() if len(hops_pdf) else pd.DataFrame(columns=cols)
             out["path_cost"] = np.nan
             return out
-        csr = build_csr(
-            edges_pdf[["src", "dst", "length", "level"]], level_punish=False
-        )
+        csr = node_csr(edges_pdf[["src", "dst", "length", "level"]], level_punish=False)
         us = hops_pdf["cand_node"].to_numpy(np.int64)
         vs = hops_pdf["to_node"].to_numpy(np.int64)
         costs = np.full(len(hops_pdf), np.nan)
         for u in np.unique(us):
             mask = us == u
-            d = dijkstra(csr, int(u), set(int(v) for v in np.unique(vs[mask])))
+            d, _ = search(csr, [(int(u), 0.0)], set(np.unique(vs[mask]).tolist()), None)
             costs[mask] = [d.get(int(v), np.nan) for v in vs[mask]]
         out = hops_pdf[cols].copy()
         out["path_cost"] = costs

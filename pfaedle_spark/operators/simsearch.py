@@ -321,19 +321,24 @@ def _srp_keys_np():
     as (n,64)@(64,32) in one BLAS-free numpy int64 matmul — bit-identical
     to the expression form and the DuckDB oracle because every operand
     is an in-range int64 (|qv| <= ~Q, |w| < 2^31: max |sum| < 2^47, no
-    overflow on either engine), and sign/band packing is pure integer."""
+    overflow on either engine), and sign/band packing is pure integer.
+    A null or wrong-length ``qv`` gets a null key (as the expression
+    form propagates NULL) instead of failing the stage."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     def srp_keys(qv):
-        if len(qv) == 0:
-            return pd.Series([], dtype=object)
-        m = np.vstack([np.asarray(v, dtype=np.int64) for v in qv])
-        bits = (m @ _srp_weights().T >= 0).astype(np.int64)  # (n, SRP_BITS)
-        pw = np.int64(1) << np.arange(BAND_W, dtype=np.int64)
-        keys = bits.reshape(-1, SRP_BANDS, BAND_W) @ pw      # (n, SRP_BANDS)
-        return pd.Series(list(keys))
+        ok = [v is not None and len(v) == EMB_DIM for v in qv]
+        out = [None] * len(qv)
+        if any(ok):
+            m = np.vstack([np.asarray(v, dtype=np.int64) for v, k in zip(qv, ok) if k])
+            bits = (m @ _srp_weights().T >= 0).astype(np.int64)  # (n, SRP_BITS)
+            pw = np.int64(1) << np.arange(BAND_W, dtype=np.int64)
+            keys = bits.reshape(-1, SRP_BANDS, BAND_W) @ pw      # (n, SRP_BANDS)
+            for i, key in zip(np.flatnonzero(ok), keys):
+                out[i] = key
+        return pd.Series(out, dtype=object)
 
     # annotations set as OBJECTS (not strings): this module's
     # `from __future__ import annotations` would stringify inline hints

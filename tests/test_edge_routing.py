@@ -12,7 +12,7 @@ import __spark_entry__ as entrymod
 from conftest import assert_matches_oracle
 from pfaedle_spark import datagen
 from pfaedle_spark.operators import edge_routing as ER
-from pfaedle_spark.operators import gtfs_ops
+from pfaedle_spark.operators import gtfs_ops, routing
 
 
 def brute_force_cost(trans: pd.DataFrame, src: int, dst: int, max_hops: int = 8):
@@ -42,9 +42,11 @@ def test_edge_dijkstra_matches_brute_force_on_toy_graph():
         if rng.random() < 0.25:
             rows.append((f, t, float(rng.integers(1, 100))))
     trans = pd.DataFrame(rows, columns=["from_edge", "to_edge", "cost"])
-    csr = ER.build_edge_csr(trans)
+    csr = ER.transition_csr(trans)
     for src in [0, 3, 7]:
-        d = ER.edge_dijkstra(csr, src)
+        si = int(routing.index_of(csr, [src])[0])
+        dist, _ = routing.search(csr, [(si, 0.0)], None, None)
+        d = {int(csr["states"][i]): v for i, v in dist.items()}
         for dst in edges:
             want = 0.0 if dst == src else brute_force_cost(trans, src, dst, max_hops=12)
             got = d.get(dst)
@@ -52,6 +54,63 @@ def test_edge_dijkstra_matches_brute_force_on_toy_graph():
                 assert got is None
             else:
                 assert got == pytest.approx(want, abs=1e-12), (src, dst)
+
+
+@pytest.mark.parametrize("astar", [False, True])
+@pytest.mark.parametrize("seed", range(4))
+def test_search_matches_bellman_ford_fixpoint(seed, astar):
+    """routing.search vs a Bellman-Ford fixpoint on random small graphs
+    whose integer costs force ties: multi-seed values, origin = min
+    (total, seed ordinal) with dead seeds keeping their ordinals, and
+    the preds=True predecessor = the min-achieving-pred rule the
+    gridviterbi path oracle relies on (-1 where the state's own seed
+    cost is optimal). Pure numpy."""
+    rng = np.random.default_rng(seed)
+    n, m = 30, 100
+    xy = rng.integers(0, 6, (n, 2)).astype(float)
+    f, t = rng.integers(0, n, m), rng.integers(0, n, m)
+    # cost >= 1 and >= the straight-line span, so the heuristic is admissible
+    cost = np.ceil(np.hypot(*(xy[t] - xy[f]).T)) + rng.integers(1, 3, m)
+    ends = [xy[f, 0], xy[f, 1], xy[t, 0], xy[t, 1]] if astar else None
+    csr = routing.build_csr(7 * f + 3, 7 * t + 3, cost, ends)  # sparse state ids
+    ids = np.unique(np.concatenate([f, t]))
+    assert list(csr["states"]) == list(7 * ids + 3)
+    assert ("xy" in csr) == astar
+    fi, ti = np.searchsorted(ids, f), np.searchsorted(ids, t)
+    nn = len(ids)
+    seeds = (
+        [(-1, 0.0)]
+        + [(int(i), float(rng.integers(0, 4))) for i in rng.choice(nn, 3, replace=False)]
+        + [(0, np.inf)]
+    )
+    targets = frozenset(rng.choice(nn, 5, replace=False).tolist())
+
+    best = [(np.inf, -1)] * nn  # lexicographic (total, ordinal) fixpoint
+    for o, (i, c) in enumerate(seeds):
+        if i >= 0 and np.isfinite(c):
+            best[i] = min(best[i], (c, o))
+    changed = True
+    while changed:
+        changed = False
+        for a, b, c in zip(fi, ti, cost):
+            if (best[a][0] + c, best[a][1]) < best[b]:
+                best[b] = (best[a][0] + c, best[a][1])
+                changed = True
+
+    harr = routing.heuristic(csr, targets)
+    dist, origin = routing.search(csr, seeds, targets, harr)
+    assert {x for x in targets if np.isfinite(best[x][0])} == targets & dist.keys()
+    for u, g in dist.items():
+        assert (g, origin[u]) == best[u], u
+
+    dist_p, pred = routing.search(csr, seeds, targets, harr, preds=True)
+    assert dist_p == dist
+    for u, g in dist_p.items():
+        if any(i == u and c == g for i, c in seeds):
+            assert pred[u] == -1, u
+        else:
+            ach = [a for a, b, c in zip(fi, ti, cost) if b == u and best[a][0] + c == g]
+            assert pred[u] == min(ach), u
 
 
 def _sub_setup(spark, opts):
@@ -81,13 +140,14 @@ def test_negative_restriction_forces_detour(spark):
 
     src_state = 66 + ER.REV_OFF  # traveling way 66 backwards: 34 -> 33
     tgt_state = 67               # departing 33 -> 65 on way 67 (forbidden turn)
-    d_hard = ER.edge_dijkstra(ER.build_edge_csr(tp_hard), src_state, {tgt_state})
-    d_free = ER.edge_dijkstra(ER.build_edge_csr(tp_free), src_state, {tgt_state})
+    seeds = [(src_state, 0.0)]
+    d_hard, _ = ER.state_search(ER.transition_csr(tp_hard), seeds, [tgt_state])
+    d_free, _ = ER.state_search(ER.transition_csr(tp_free), seeds, [tgt_state])
     got, free = d_hard[tgt_state], d_free[tgt_state]
     assert got < 1e6, "route paid the prohibitive restriction punish"
     assert got > free, "restriction did not change the optimum"
     # soft mode (reference default): violation = oneway-meter punish
-    d_soft = ER.edge_dijkstra(ER.build_edge_csr(tp_soft), src_state, {tgt_state})
+    d_soft, _ = ER.state_search(ER.transition_csr(tp_soft), seeds, [tgt_state])
     assert free < d_soft[tgt_state] <= got
 
 
@@ -445,14 +505,12 @@ def test_hop_band_semantics(spark):
     tpdf = ER.turn_transitions(
         eds, restr, nodes, rattrs=ER.rattrs_for_variant(0)
     ).toPandas()
-    csr = ER.build_edge_csr(tpdf)
-    states = sorted(csr["idx"].keys())
+    csr = ER.transition_csr(tpdf)
+    states = csr["states"].tolist()
     seed = states[0]
     targets = states[1:40:7]
-    banded, ob = ER.edge_dijkstra_viterbi_step(csr, [(seed, 0.0)], targets)
-    unbanded, ou = ER.edge_dijkstra_viterbi_step(
-        csr, [(seed, 0.0)], targets, band=False
-    )
+    banded, ob = ER.state_search(csr, [(seed, 0.0)], targets, band=True)
+    unbanded, ou = ER.state_search(csr, [(seed, 0.0)], targets)
     assert banded == unbanded and ob == ou  # band is invisible in-envelope
 
     # toy: A->B->C->D->E->F chain, each transition 10000, all states
@@ -469,9 +527,9 @@ def test_hop_band_semantics(spark):
             "ty": [0.0] * 5,
         }
     )
-    tcsr = ER.build_edge_csr(toy)
-    b, _ = ER.edge_dijkstra_viterbi_step(tcsr, [(0, 0.0)], [1, 5])
-    u, _ = ER.edge_dijkstra_viterbi_step(tcsr, [(0, 0.0)], [1, 5], band=False)
+    tcsr = ER.transition_csr(toy)
+    b, _ = ER.state_search(tcsr, [(0, 0.0)], [1, 5], band=True)
+    u, _ = ER.state_search(tcsr, [(0, 0.0)], [1, 5])
     assert b[1] == u[1] == 10000.0
     assert u[5] == 50000.0
     assert 5 not in b  # beyond the band => inf, as the reference prunes
@@ -499,15 +557,13 @@ def test_hop_band_no_shadowing_through_shared_state():
             "ty": [0.0] * 4,
         }
     )
-    tcsr = ER.build_edge_csr(toy)
+    tcsr = ER.transition_csr(toy)
     seeds = [(0, 0.0), (10, 26000.0)]
-    banded, ob = ER.edge_dijkstra_viterbi_step(tcsr, seeds, [100, 60])
+    banded, ob = ER.state_search(tcsr, seeds, [100, 60], band=True)
     assert banded[100] == 10000.0 and ob[100] == 0  # pilot via A
     # pair (A,T) hop 35000 is out-of-band => inf; pair (B,T) survives
     assert banded[60] == 36000.0 and ob[60] == 1
-    unbanded, ou = ER.edge_dijkstra_viterbi_step(
-        tcsr, seeds, [100, 60], band=False
-    )
+    unbanded, ou = ER.state_search(tcsr, seeds, [100, 60])
     assert unbanded[60] == 35000.0 and ou[60] == 0  # min TOTAL ignores band
 
 

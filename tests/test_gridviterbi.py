@@ -10,12 +10,12 @@ import pyspark.sql.functions as F
 
 from conftest import SF_DIR, duck, normalize
 from pfaedle_spark import datagen
-from pfaedle_spark.operators import candidates, edge_routing, gridviterbi
+from pfaedle_spark.operators import candidates, edge_routing, gridviterbi, routing
 
 
 def _rep_layers(spark):
     """Per rep fingerprint: the engine's candidate layers + seeds, the
-    exact inputs of each edge_dijkstra_viterbi_step call."""
+    exact inputs of each edge_routing.state_search call."""
     eds = datagen.edges(spark)
     cand = edge_routing.echo_candidates(
         candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
@@ -58,9 +58,7 @@ def _iter_transitions(keyed, tbv):
             seeds = list(zip((int(s) for s in prev_l["state"]), dp.tolist()))
             tgts = [int(t) for t in cur_l["state"]]
             yield csr, seeds, tgts
-            d, _ = edge_routing.edge_dijkstra_viterbi_step(
-                csr, seeds, tgts, band=True
-            )
+            d, _ = edge_routing.state_search(csr, seeds, tgts, band=True)
             emis = cur_l["emission"].to_numpy(np.float64)
             dp = np.array([d.get(t, np.inf) for t in tgts]) + emis
 
@@ -73,26 +71,22 @@ def test_band_never_binds_on_grid(spark):
     cross-gated by the corridor oracle, where the band binds ~33%.)"""
     keyed, tbv = _rep_layers(spark)
     calls = [0]
-    orig = edge_routing._pairwise_band_step
+    orig = routing._pairwise_repair
 
     def counting(*a, **kw):
         calls[0] += 1
         return orig(*a, **kw)
 
-    edge_routing._pairwise_band_step = counting
+    routing._pairwise_repair = counting
     try:
         n = 0
         for csr, seeds, tgts in _iter_transitions(keyed, tbv):
-            d1, o1 = edge_routing.edge_dijkstra_viterbi_step(
-                csr, seeds, tgts, band=True
-            )
-            d0, o0 = edge_routing.edge_dijkstra_viterbi_step(
-                csr, seeds, tgts, band=False
-            )
+            d1, o1 = edge_routing.state_search(csr, seeds, tgts, band=True)
+            d0, o0 = edge_routing.state_search(csr, seeds, tgts)
             assert d1 == d0 and o1 == o0
             n += 1
     finally:
-        edge_routing._pairwise_band_step = orig
+        routing._pairwise_repair = orig
     assert n > 100 and calls[0] == 0
 
 
@@ -104,13 +98,12 @@ def test_bf_rounds_sufficient(spark):
     keyed, tbv = _rep_layers(spark)
     max_rounds = 0
     for csr, seeds, tgts in _iter_transitions(keyed, tbv):
-        idx = csr["idx"]
         n = len(csr["states"])
         cur = np.full(n, np.inf)
-        for s, c in seeds:
-            si = idx.get(int(s))
-            if si is not None and np.isfinite(c):
-                cur[si] = min(cur[si], c)
+        si = routing.index_of(csr, [s for s, _ in seeds])
+        for i, (_, c) in zip(si, seeds):
+            if i >= 0 and np.isfinite(c):
+                cur[i] = min(cur[i], c)
         indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
         frm = np.repeat(np.arange(n), np.diff(indptr))
         r = 0
@@ -133,7 +126,7 @@ def test_path_bf_rounds_and_pred_rule(spark):
     """Gates for the shape_geoms oracle's path walk: on walked hops
     (consecutive chosen Viterbi states), (a) the single-seed BF reaches
     value fixpoint within PATH_BF_ROUNDS with margin, and (b) the
-    min-achieving-pred backtrack reproduces engine edge_dijkstra_path
+    min-achieving-pred backtrack reproduces engine state_path
     exactly. Every 7th hop here (deterministic); all 427 hops were
     verified by tools/path_probe.py and the driver's graded bit-exact
     shape_geoms row re-verifies end-to-end each round."""
@@ -160,12 +153,13 @@ def test_path_bf_rounds_and_pred_rule(spark):
     checked = 0
     for variant, s, t in hops[::3]:
         csr = edge_routing._vf_csr(tbv, variant)
-        idx, indptr = csr["idx"], csr["indptr"]
-        dsts, cost, stid = csr["dst"], csr["cost"], csr["states"]
+        indptr, dsts, cost, stid = csr["indptr"], csr["dst"], csr["cost"], csr["states"]
+        si, ti = routing.index_of(csr, [s, t]).tolist()
+        assert si >= 0 and ti >= 0
         n = len(stid)
         frm = np.repeat(np.arange(n), np.diff(indptr))
         cur = np.full(n, np.inf)
-        cur[idx[s]] = 0.0
+        cur[si] = 0.0
         r = 0
         while True:
             r += 1
@@ -178,12 +172,12 @@ def test_path_bf_rounds_and_pred_rule(spark):
                 break
             cur = nxt
             assert r <= gridviterbi.PATH_BF_ROUNDS - 3, "margin violated"
-        p = edge_routing.edge_dijkstra_path(csr, s, t)
+        p = edge_routing.state_path(csr, s, t)
         if p is None:
-            assert not np.isfinite(cur[idx[t]])
+            assert not np.isfinite(cur[ti])
             continue
-        walk = [idx[t]]
-        while walk[-1] != idx[s]:
+        walk = [ti]
+        while walk[-1] != si:
             u = walk[-1]
             js = np.flatnonzero(dsts == u)
             ach = frm[js][cur[frm[js]] + cost[js] == cur[u]]

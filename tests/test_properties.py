@@ -238,3 +238,33 @@ def test_frechet_batch_wavefront_matches_scalar_dps(pairs):
     for i, (ax, ay, bx, by) in enumerate(paths):
         assert dfs[i] == geo.frechet_dist(ax, ay, bx, by)
         assert adfs[i] == geo.acc_frechet_dist(ax, ay, bx, by)
+
+
+def test_frechet_batch_long_path_does_not_pad_its_neighbours(monkeypatch):
+    """One path with thousands of raw vertices (densify keeps every raw
+    vertex) batched with 31 short ones: no wavefront batch of several
+    pairs exceeds the padded-cube byte budget, and every result stays
+    bit-identical to the scalar kernels."""
+    batches = []
+    wavefront = geo._frechet_dp_wavefront
+
+    def spy(dens, acc):
+        batches.append((len(dens), max(len(t[0]) for t in dens), max(len(t[2]) for t in dens)))
+        return wavefront(dens, acc)
+
+    monkeypatch.setattr(geo, "_frechet_dp_wavefront", spy)
+    t = np.linspace(0.0, 1.0, 3000)
+    long = (t * 5000.0, np.sin(t * 40.0) * 300.0, np.array([0.0, 5000.0]), np.zeros(2))
+    short = [
+        (np.array([0.0, 100.0 + i]), np.array([0.0, 10.0]),
+         np.array([0.0, 90.0]), np.array([5.0, 0.0]))
+        for i in range(31)
+    ]
+    paths = [long] + short
+    dfs, adfs = geo.frechet_dists_batch(paths)
+    assert all(n < len(paths) for n, p, _ in batches if p >= 3000)
+    for n, p, q in batches:
+        assert n == 1 or 2 * 8 * n * p * q <= geo._DP_BUDGET_BYTES, (n, p, q)
+    for i, (ax, ay, bx, by) in enumerate(paths):
+        assert dfs[i] == geo.frechet_dist(ax, ay, bx, by)
+        assert adfs[i] == geo.acc_frechet_dist(ax, ay, bx, by)

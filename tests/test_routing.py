@@ -50,10 +50,10 @@ def test_dijkstra_kernel_vs_floyd_warshall(grid_fw, spark):
     edges_pdf = graph_ops.write_odir_edges(datagen.edges(spark)).select(
         "src", "dst", "length", "level"
     ).toPandas()
-    csr = routing.build_csr(edges_pdf)
+    csr = routing.node_csr(edges_pdf)
     rng = np.random.RandomState(7)
     for src in rng.choice(C.GRID_N * C.GRID_N, 5, replace=False):
-        got = routing.dijkstra(csr, int(src))
+        got, _ = routing.search(csr, [(int(src), 0.0)], None, None)
         for v in rng.choice(C.GRID_N * C.GRID_N, 20, replace=False):
             want = grid_fw[int(src), int(v)]
             g = got.get(int(v), np.inf)
@@ -156,12 +156,14 @@ def test_viterbi_deterministic_across_partitioning(spark):
 
 def test_astar_parity_and_pruning(spark):
     """R4: A* returns the same target distances as Dijkstra and settles
-    (strictly) fewer nodes; R5: the cost cap drops far targets only."""
+    (strictly) fewer nodes. Dijkstra = the same search over a CSR built
+    without node coords (no heuristic table)."""
     edges_pdf = graph_ops.write_odir_edges(datagen.edges(spark)).select(
         "src", "dst", "length", "level", "x1", "y1", "x2", "y2"
     ).toPandas()
-    csr = routing.build_csr(edges_pdf)
-    assert "xy" in csr
+    csr = routing.node_csr(edges_pdf)
+    plain = routing.node_csr(edges_pdf[["src", "dst", "length", "level"]])
+    assert "xy" in csr and "xy" not in plain
     rng = np.random.RandomState(11)
     n = C.GRID_N * C.GRID_N
     fewer = 0
@@ -171,25 +173,14 @@ def test_astar_parity_and_pruning(spark):
         same_comp = {t for t in targets if csr["comp"][t] == csr["comp"][src]}
         if not same_comp:
             continue
-        da = routing.astar(csr, src, set(same_comp))
-        dd = routing.dijkstra(csr, src, targets=set(same_comp))
+        harr = routing.heuristic(csr, frozenset(same_comp))
+        da, _ = routing.search(csr, [(src, 0.0)], same_comp, harr)
+        dd, _ = routing.search(plain, [(src, 0.0)], same_comp, None)
         for t in same_comp:
             assert da.get(t, np.inf) == pytest.approx(dd.get(t, np.inf))
         if len(da) < len(dd):
             fewer += 1
     assert fewer >= 3, "A* should usually settle fewer nodes than Dijkstra"
-
-    # R5 cap: targets beyond the band become unreachable, near ones exact
-    src = 0
-    far = {n - 1}
-    near = {1}
-    full = routing.dijkstra(csr, src, targets=far | near)
-    capped = routing.dijkstra(csr, src, targets=far | near, max_cost=full[1] + 1.0)
-    assert capped.get(1) == pytest.approx(full[1])
-    assert (n - 1) not in capped
-    capped_a = routing.astar(csr, src, far | near, max_cost=full[1] + 1.0)
-    assert capped_a.get(1) == pytest.approx(full[1])
-    assert (n - 1) not in capped_a
 
 
 def test_heuristic_admissibility_gate_pure():
@@ -199,7 +190,7 @@ def test_heuristic_admissibility_gate_pure():
     shortest paths. Pure numpy — no Spark session."""
     import pandas as pd
 
-    from pfaedle_spark.operators.routing import build_csr
+    from pfaedle_spark.operators.routing import node_csr
 
     base = dict(level=[0, 0], oneway=[False, False])
     ok = pd.DataFrame(
@@ -209,9 +200,9 @@ def test_heuristic_admissibility_gate_pure():
             **base,
         )
     )
-    csr = build_csr(ok, level_punish=False)
+    csr = node_csr(ok, level_punish=False)
     assert "xy" in csr  # admissible: cost == displacement
 
     bad = ok.assign(length=[1.0, 100.0])  # arc cheaper than its span
-    csr2 = build_csr(bad, level_punish=False)
+    csr2 = node_csr(bad, level_punish=False)
     assert "xy" not in csr2  # heuristic dropped -> plain Dijkstra

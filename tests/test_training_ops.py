@@ -181,6 +181,22 @@ def test_srp_keys_udf_matches_expression_twin(spark):
         assert r.np_keys == r.expr_keys, r.vec_id
 
 
+def test_srp_keys_udf_null_key_for_null_or_ragged_vector(spark):
+    """A null or wrong-length qv yields a null key instead of failing
+    the stage; the well-formed row in the same batch keeps its key."""
+    good = [(i * 7) % 11 - 5 for i in range(simsearch.EMB_DIM)]
+    df = spark.createDataFrame(
+        [(0, good), (1, None), (2, good[:5])], "vec_id long, qv array<long>"
+    )
+    rows = df.select(
+        "vec_id",
+        simsearch._srp_keys_np()(F.col("qv")).alias("np_keys"),
+        simsearch._srp_keys_expr().alias("expr_keys"),
+    ).orderBy("vec_id").collect()
+    assert rows[0].np_keys == rows[0].expr_keys and rows[0].np_keys is not None
+    assert rows[1].np_keys is None and rows[2].np_keys is None
+
+
 def test_srp_keys_udf_is_arrow_vectorized(spark):
     """The SRP kernel must run as ArrowEvalPython (pandas batches), not
     row-at-a-time BatchEvalPython — the no-per-row-Python rule."""

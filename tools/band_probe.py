@@ -2,9 +2,9 @@
 the MAIN grid at the graded SFs?
 
 For every rep fingerprint and every layer transition, runs
-edge_dijkstra_viterbi_step twice (band=True / band=False) on the same
+edge_routing.state_search twice (band=True / band=False) on the same
 seeds/targets and compares (values, origins) exactly. Also counts
-_pairwise_band_step invocations and measures the BF fixpoint round
+routing._pairwise_repair invocations and measures the BF fixpoint round
 count (max over transitions) for the oracle's unroll bound.
 """
 import os
@@ -15,12 +15,12 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 from pfaedle_spark import datagen
-from pfaedle_spark.operators import candidates, edge_routing
+from pfaedle_spark.operators import candidates, edge_routing, routing
 from pfaedle_spark.session import get_spark
 
 SF = os.environ.get("SF", "/root/testdata/sf0.01")
 
-spark = get_spark(cores=8)
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 
 eds = datagen.edges(spark)
@@ -40,13 +40,13 @@ keyed = (
 tbv = edge_routing.build_variant_transitions(spark, eds)
 
 pair_calls = [0]
-orig_pair = edge_routing._pairwise_band_step
+orig_pair = routing._pairwise_repair
 
 def counting_pair(*a, **kw):
     pair_calls[0] += 1
     return orig_pair(*a, **kw)
 
-edge_routing._pairwise_band_step = counting_pair
+routing._pairwise_repair = counting_pair
 
 REV_OFF = edge_routing.REV_OFF
 mismatch = 0
@@ -56,14 +56,12 @@ max_bf_rounds = 0
 
 def bf_rounds(csr, seeds, targets):
     """Rounds until the dp-seeded BF reaches fixpoint on the needed targets."""
-    idx = csr["idx"]
     n = len(csr["states"])
-    INF = np.inf
-    cur = np.full(n, INF)
-    for s, c in seeds:
-        si = idx.get(int(s))
-        if si is not None and np.isfinite(c):
-            cur[si] = min(cur[si], c)
+    cur = np.full(n, np.inf)
+    si = routing.index_of(csr, [s for s, _ in seeds])
+    for i, (_, c) in zip(si, seeds):
+        if i >= 0 and np.isfinite(c):
+            cur[i] = min(cur[i], c)
     indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
     frm = np.repeat(np.arange(n), np.diff(indptr))
     r = 0
@@ -95,8 +93,8 @@ for fpr, grp in keyed.groupby("fingerprint"):
         prev_l, cur_l = layers[li - 1], layers[li]
         seeds = list(zip((int(s) for s in prev_l["state"]), dp.tolist()))
         tgts = [int(t) for t in cur_l["state"]]
-        d1, o1 = edge_routing.edge_dijkstra_viterbi_step(csr, seeds, tgts, band=True)
-        d0, o0 = edge_routing.edge_dijkstra_viterbi_step(csr, seeds, tgts, band=False)
+        d1, o1 = edge_routing.state_search(csr, seeds, tgts, band=True)
+        d0, o0 = edge_routing.state_search(csr, seeds, tgts)
         n_layers += 1
         if d1 != d0 or o1 != o0:
             mismatch += 1

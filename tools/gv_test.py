@@ -38,7 +38,7 @@ print(f"oracle: {len(want)} rows in {time.time()-t0:.1f}s")
 from pfaedle_spark.session import get_spark
 import __spark_entry__ as E
 
-spark = get_spark(cores=8)
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 got = E.queries()[WHICH](spark, SF).toPandas()
 print(f"spark: {len(got)} rows")

@@ -1,7 +1,7 @@
 """Probe for the shape_geoms oracle: per walked hop (consecutive chosen
 Viterbi states), how many BF rounds until (a) full fixpoint and (b) the
 on-path + in-neighbor states converge; also sanity-check the pred rule
-(min achieving pred at fixpoint == engine edge_dijkstra_path)."""
+(min achieving pred at fixpoint == engine edge_routing.state_path)."""
 import os
 import sys
 
@@ -10,11 +10,11 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 from pfaedle_spark import datagen
-from pfaedle_spark.operators import candidates, edge_routing
+from pfaedle_spark.operators import candidates, edge_routing, routing
 from pfaedle_spark.session import get_spark
 
 SF = os.environ.get("SF", "/root/testdata/sf0.01")
-spark = get_spark(cores=8)
+spark = get_spark()
 spark.sparkContext.setLogLevel("ERROR")
 
 eds = datagen.edges(spark)
@@ -33,15 +33,15 @@ for (fpr, variant), grp in reps.groupby(["fingerprint", "variant"]):
     one = grp.drop_duplicates(["seq"]).sort_values("seq")
     states = one["state_edge"].tolist()
     csr = edge_routing._vf_csr(tbv, int(variant))
-    idx, indptr, dsts, cost = csr["idx"], csr["indptr"], csr["dst"], csr["cost"]
+    indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
     stid = csr["states"]
     n = len(stid)
     frm = np.repeat(np.arange(n), np.diff(indptr))
     for i in range(len(states) - 1):
         s, t = int(states[i]), int(states[i + 1])
-        p = edge_routing.edge_dijkstra_path(csr, s, t)
+        p = edge_routing.state_path(csr, s, t)
         n_hops += 1
-        si = idx.get(s)
+        si, ti = routing.index_of(csr, [s, t]).tolist()
         cur = np.full(n, np.inf); cur[si] = 0.0
         hist = [cur.copy()]
         r = 0
@@ -59,8 +59,7 @@ for (fpr, variant), grp in reps.groupby(["fingerprint", "variant"]):
             continue
         # states whose convergence the pred rule consumes: path + in-neighbors
         need = set()
-        for st in p:
-            ui = idx[st]
+        for ui in routing.index_of(csr, p).tolist():
             need.add(ui)
             need.update(int(frm[j]) for j in range(len(frm)) if dsts[j] == ui)
         need = np.fromiter(need, dtype=np.int64)
@@ -71,7 +70,7 @@ for (fpr, variant), grp in reps.groupby(["fingerprint", "variant"]):
                 break
         # pred rule check: walk back from t with min achieving pred
         fv = hist[-1]
-        walk = [idx[t]]
+        walk = [ti]
         while walk[-1] != si:
             u = walk[-1]
             cands_p = [int(frm[j]) for j in range(len(frm)) if dsts[j] == u and fv[frm[j]] + cost[j] == fv[u]]
