@@ -156,6 +156,39 @@ def stat_simi_neutral_sql(a: str, b: str) -> str:
   ELSE 0.0 END"""
 
 
+def _presuf_value(a: str, b: str) -> bool:
+    """Python twin of :func:`_presuf_neutral`."""
+    n = len(b) + 1
+    return len(a) > n and (a[:n] == b + " " or a[-n:] == " " + b)
+
+
+def _levenshtein(a: str, b: str) -> int:
+    row = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        prev, row[0] = row[0], i
+        for j, cb in enumerate(b, 1):
+            prev, row[j] = row[j], min(row[j] + 1, row[j - 1] + 1, prev + (ca != cb))
+    return row[-1]
+
+
+def line_simi_value(a: str, b: str) -> float:
+    """Python twin of :func:`line_simi_neutral_sql`."""
+    if a == b:
+        return 1.0
+    if not a or not b:
+        return 0.0
+    return 1.0 if _presuf_value(a, b) or _presuf_value(b, a) else 0.0
+
+
+def stat_simi_value(a: str, b: str) -> float:
+    """Python twin of :func:`stat_simi_neutral_sql`."""
+    if line_simi_value(a, b) == 1.0:
+        return 1.0
+    if not a or not b:
+        return 0.0
+    return 1.0 if _levenshtein(a, b) / max(len(a), len(b)) < 0.05 else 0.0
+
+
 def prefix_edit_dist(a: Column, b: Column) -> Column:
     """min over prefixes p of b of levenshtein(a, p)."""
     return F.array_min(

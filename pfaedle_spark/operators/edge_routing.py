@@ -17,19 +17,24 @@ Reference semantics (re-expressed, not ported):
   (``router/router.cpp:105-115``, ``trgraph/restrictor.cpp:11-58``):
   soft by default (data robustness), optionally hard (+inf/absent).
 
-Spark-first design: the *entire* cost model is a relational
-``turn_transitions`` table — directed-edge self-join on the via node,
-every cost term a JVM-side column expression built from ONE
-dialect-neutral SQL string that both Spark (``F.expr``) and the DuckDB
-oracle evaluate, so every term is bit-identically checkable. The
-shared search kernel (``routing.search`` over a ``routing.build_csr``
-of the transitions, states = directed edge ids) then runs over the
-broadcast transitions inside ``applyInPandas`` groups — same axis the
-reference parallelizes with OpenMP threads.
+Driver-side design: the routing graph fits the driver (the router
+collects the transitions and broadcasts them anyway), so the whole
+cost model is ONE numpy kernel, :func:`transition_arrays`, over one
+Arrow collect each of the edges, the nodes and the F10 restrictions:
+a directed-edge self-join on the via node by argsort + searchsorted,
+then every R3 term vectorized in the order its SQL twin evaluates it.
+The DuckDB oracle (:func:`transitions_ctes`) builds the same table as
+relational CTEs around ONE dialect-neutral cost string
+(:func:`cost_expr`), so every term stays bit-identically checkable.
+The shared search kernel (``routing.search`` over a
+``routing.build_csr`` of the transitions, states = directed edge ids)
+then runs over the broadcast transitions inside ``applyInPandas``
+groups — same axis the reference parallelizes with OpenMP threads.
 
 At 100 TB the transitions table is graph-sized (scales with geography,
-not with the observation/image table), so broadcasting it follows the
-same budget argument as the node CSR in ``routing.py``.
+not with the observation/image table), so building and broadcasting it
+on the driver follows the same budget argument as the node CSR in
+``routing.py``.
 """
 
 from __future__ import annotations
@@ -43,7 +48,7 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 from ..functions import strings
-from . import gtfs_ops
+from . import graph_ops, graph_passes, gtfs_ops
 from .routing import OPTS, build_csr, heuristic, index_of, reachable, search
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
@@ -63,6 +68,13 @@ def _D(x: float) -> str:
 RATTRS = {"short_name": "l10", "from": "st 3", "to": "st 5"}
 
 REV_OFF = 1 << 40  # reverse-copy edge-id offset (same stride as graph_ops)
+
+EDGE_COLS = ("edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "oneway", "length")
+RESTR_COLS = ("via_node", "from_way", "to_way", "positive")
+TRANS_SCHEMA = (
+    "from_edge long, to_edge long, via_node long, cost double,"
+    " fx double, fy double, tx double, ty double"
+)
 
 # restricted_paths query shape: sub-grid + source/target node sets
 SUB_N = 8
@@ -112,6 +124,25 @@ def directed_full(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev)
 
 
+def directed_arrays(ed: dict) -> dict:
+    """:func:`directed_full` over collected edge columns: forward rows
+    first, then reverse rows (``edge_id + REV_OFF``, endpoints swapped,
+    ``against_oneway = oneway``)."""
+    def both(a: str, b: str) -> np.ndarray:
+        return np.concatenate([ed[a], ed[b]])
+
+    return {
+        "edge_id": np.concatenate([ed["edge_id"], ed["edge_id"] + REV_OFF]),
+        "src": both("src", "dst"), "dst": both("dst", "src"),
+        "x1": both("x1", "x2"), "y1": both("y1", "y2"),
+        "x2": both("x2", "x1"), "y2": both("y2", "y1"),
+        "level": both("level", "level"), "length": both("length", "length"),
+        "against_oneway": np.concatenate(
+            [np.zeros(len(ed["oneway"]), dtype=bool), ed["oneway"].astype(bool)]
+        ),
+    }
+
+
 def _directed_full_cte(edge_src: str = "edges") -> str:
     return f"""
 dedges AS (
@@ -154,19 +185,58 @@ def _line_cur_sql(rattrs: dict) -> str:
     return "CAST(1.0 AS DOUBLE) - " + " - ".join(terms)
 
 
+def _line_cur(line_name: str, from_stop: str, to_stop: str, rattrs: dict) -> float:
+    """Python twin of :func:`_line_cur_sql` for one line: the same three
+    subtractions in the same order."""
+    sn = rattrs["short_name"]
+    cur = 1.0 - (THIRD if not sn or strings.line_simi_value(line_name, sn) > 0.5 else 0.0)
+    for attr, val in (("to", to_stop), ("from", from_stop)):
+        want = rattrs[attr]
+        hit = not want or not val or strings.stat_simi_value(val, want) > 0.5
+        cur = cur - (THIRD if hit else 0.0)
+    return cur
+
+
 _LINE_CMP_AGG = (
     f"CASE WHEN MIN(cur) < {_D(SIMI_EPS)} THEN 0.0 ELSE MIN(cur) END"
 )  # == the reference's early-return-0 on a perfect line match
 
 
+def edge_cmp(ed: dict, rattrs: dict = RATTRS) -> tuple[np.ndarray, np.ndarray]:
+    """(edge ids, cmp) per *undirected* edge with lines, over collected
+    edge columns: min over the edge's lines of the 3-component simi
+    cost, clamped to 0 below SIMI_EPS. The lines are the synthetic
+    ``gtfs_ops.edge_lines`` (level < 3 serves 'l<level*10>' from
+    'st <src%9>' to 'st <dst%9>'); ``cur`` is evaluated once per
+    distinct line triple, not once per edge."""
+    served = ed["level"] < 3
+    eid = ed["edge_id"][served].astype(np.int64)
+    line = np.stack([
+        ed["level"][served].astype(np.int64),
+        np.fmod(ed["src"][served], 9),  # SQL %: sign of the dividend
+        np.fmod(ed["dst"][served], 9),
+    ], axis=1)
+    uniq, inv = np.unique(line, axis=0, return_inverse=True)
+    cur = np.array(
+        [_line_cur(f"l{lv * 10}", f"st {s}", f"st {d}", rattrs) for lv, s, d in uniq.tolist()],
+        dtype=np.float64,
+    )[inv.reshape(-1)]
+    ids, at = np.unique(eid, return_inverse=True)
+    best = np.full(len(ids), np.inf)
+    np.minimum.at(best, at.reshape(-1), cur)
+    return ids, np.where(best < SIMI_EPS, 0.0, best)
+
+
 def line_cmp(edges: DataFrame, rattrs: dict = RATTRS) -> DataFrame:
-    """(edge_id, cmp) per *undirected* edge: min over the edge's lines of
-    the 3-component simi cost; clamped to 0 on perfect match. Edges
-    without lines are absent (downstream coalesces to 1.0 — the
-    reference's ``best = 1`` initial)."""
-    lines = gtfs_ops.edge_lines(edges)
-    cur = lines.withColumn("cur", F.expr(_line_cur_sql(rattrs)))
-    return cur.groupBy("edge_id").agg(F.expr(_LINE_CMP_AGG).alias("cmp"))
+    """(edge_id, cmp) per *undirected* edge (:func:`edge_cmp` over one
+    collect). Edges without lines are absent (the transition kernel
+    reads them as 1.0 — the reference's ``best = 1`` initial)."""
+    ids, cmp = edge_cmp(
+        graph_ops.collect_columns(edges.select("edge_id", "src", "dst", "level")), rattrs
+    )
+    return graph_ops.columns_frame(
+        edges.sparkSession, {"edge_id": ids, "cmp": cmp}, "edge_id long, cmp double"
+    )
 
 
 def _line_cmp_cte(rattrs: dict, edge_src: str = "edges", suffix: str = "") -> str:
@@ -189,19 +259,21 @@ ecmp{suffix} AS (
 
 
 # --------------------------------------------------------------------
-# the transition cost expression (shared, dialect-neutral)
+# the transition table: numpy kernel + its SQL twin
 # --------------------------------------------------------------------
 
-def cost_expr(opts: dict = OPTS, has_rattrs: bool = True) -> str:
+def cost_expr(opts: dict = OPTS) -> str:
     """R3 collapsed cost of transition (a -> b) over via node a_dst, as
-    ONE SQL string evaluated by Spark and DuckDB over identical column
-    names. Mirrors edge_cost's weighted collapse (misc.h:85-108) and
-    CostFunc::operator() term construction (router.cpp:53-117):
+    ONE SQL string over the oracle's joined columns. Mirrors edge_cost's
+    weighted collapse (misc.h:85-108) and CostFunc::operator() term
+    construction (router.cpp:53-117):
 
     traverse(a): length x level punish, oneway/restriction meters,
-    line-unmatched meters, no-lines meters; turn terms at the via node:
-    full-turn punish (trivial reverse, or angle < fullTurnAngle at
-    deg>2 intersections), pass-through-station punish.
+    line-unmatched meters, no-lines meters (0 with route attributes);
+    turn terms at the via node: full-turn punish (trivial reverse, or
+    angle < fullTurnAngle at deg>2 intersections), pass-through-station
+    punish. :func:`transition_arrays` adds the same terms in the same
+    order.
     """
     lv = opts["level_punish"]
     lvl = ("CASE a_level " +
@@ -218,18 +290,128 @@ def cost_expr(opts: dict = OPTS, has_rattrs: bool = True) -> str:
         "((a_src = b_dst AND a_dst = b_src) OR "
         f"(deg > 2 AND {dot} > {_D(_cos_full_turn(opts))} * SQRT({l2a}) * SQRT({l2b})))"
     )
-    no_lines = "0.0" if has_rattrs else (
-        f"CASE WHEN a_cmp >= 1.0 THEN a_len * {_D(opts['no_lines_punish_fac'])} ELSE 0.0 END"
-    )
     return (
         f"a_len * ({lvl})"
         f" + CASE WHEN {viol} THEN a_len * {_D(opts['oneway_punish_fac'])}"
         f" + {_D(opts['oneway_edge_punish'])} ELSE 0.0 END"
         f" + a_len * {_D(opts['line_unmatched_punish_fac'])} * a_cmp"
-        f" + {no_lines}"
+        " + 0.0"
         f" + CASE WHEN {full_turn} THEN {_D(opts['full_turn_punish'])} ELSE 0.0 END"
         f" + CASE WHEN via_station THEN {_D(opts['pass_thru_station_punish'])} ELSE 0.0 END"
     )
+
+
+def _join_on_via(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index pairs (a, b) with ``dst[a] == src[b]`` — the equi-join as
+    argsort + searchsorted + repeat (a U-turn a -> rev(a) included)."""
+    order = np.argsort(src, kind="stable")
+    s = src[order]
+    lo = np.searchsorted(s, dst, "left")
+    cnt = np.searchsorted(s, dst, "right") - lo
+    a = np.repeat(np.arange(len(dst)), cnt)
+    b = order[np.repeat(lo - (np.cumsum(cnt) - cnt), cnt) + np.arange(len(a))]
+    return a, b
+
+
+def _row_index(keys: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Position of each row of ``q`` among the distinct rows ``keys``
+    (int64, one column per key part); -1 where absent."""
+    _, inv = np.unique(np.concatenate([keys, q]), axis=0, return_inverse=True)
+    inv = inv.reshape(-1)
+    pos = np.full(len(keys) + len(q), -1)
+    pos[inv[: len(keys)]] = np.arange(len(keys))
+    return pos[inv[len(keys):]]
+
+
+def _restricted(rs: dict, via, a_orig, b_orig) -> np.ndarray:
+    """Per transition: does it violate an F10 restriction? Either a
+    distinct negative (via, from, to) row hits, or the positive rows of
+    (via, from) mandate a different to-way (their min ``to_way``)."""
+    out = np.zeros(len(via), dtype=bool)
+    r = np.stack([np.asarray(rs[c], np.int64) for c in RESTR_COLS[:3]], axis=1)
+    at = np.flatnonzero(np.isin(via, r[:, 0]))
+    if not len(at):
+        return out
+    q = np.stack([via[at], a_orig[at], b_orig[at]], axis=1)
+    pos = rs["positive"].astype(bool)
+    rneg = _row_index(np.unique(r[~pos], axis=0), q) >= 0
+    keys, inv = np.unique(r[pos, :2], axis=0, return_inverse=True)
+    rpos_to = np.full(len(keys), np.iinfo(np.int64).max)
+    np.minimum.at(rpos_to, inv.reshape(-1), r[pos, 2])
+    hit = _row_index(keys, q[:, :2])
+    found = hit >= 0
+    out[at] = rneg
+    out[at[found]] |= rpos_to[hit[found]] != q[found, 2]
+    return out
+
+
+def transition_arrays(
+    edge_cols: dict,
+    node_cols: dict,
+    restr_cols: dict,
+    rattrs: dict = RATTRS,
+    opts: dict = OPTS,
+) -> dict:
+    """The edge-graph as driver-side columns: one row per directed-edge
+    pair (a, b) sharing the via node ``a.dst == b.src``, with the full
+    R3 transition cost.
+
+    Inputs are collected columns: edges (:data:`EDGE_COLS`), nodes
+    (``node_id``, ``is_station``; a via node missing from them is not a
+    station) and F10 restrictions (:data:`RESTR_COLS`, the rows of
+    ``gtfs_ops.read_restrictions``). Output columns: from_edge,
+    to_edge, via_node, cost, plus the start-node coordinates of both
+    states (fx, fy, tx, ty) for the A* heuristic — every transition
+    cost >= a_len >= the displacement of the from-edge's start node,
+    so straight-line-to-target-start is admissible and consistent.
+
+    Bit-identical to :func:`transitions_ctes`: the terms of
+    :func:`cost_expr` are added left to right, products associate as
+    written there."""
+    de = directed_arrays(edge_cols)
+    a, b = _join_on_via(de["src"], de["dst"])
+    eid = de["edge_id"]
+    via = de["dst"][a]
+    a_orig, b_orig = np.fmod(eid[a], REV_OFF), np.fmod(eid[b], REV_OFF)
+
+    # degree: both ends of every undirected edge, parallel edges counted
+    ends, _, counts = graph_passes.endpoint_degrees(edge_cols)
+    deg = counts[np.searchsorted(ends, via)]
+    order = np.argsort(node_cols["node_id"], kind="stable")
+    pos, hit = graph_ops.lookup(node_cols["node_id"][order], via)
+    via_station = np.zeros(len(via), dtype=bool)
+    via_station[hit] = node_cols["is_station"][order][pos[hit]].astype(bool)
+    ids, cmp = edge_cmp(edge_cols, rattrs)
+    pos, hit = graph_ops.lookup(ids, a_orig)
+    a_cmp = np.ones(len(via))
+    a_cmp[hit] = cmp[pos[hit]]
+
+    a_level, a_len = de["level"][a].astype(np.int64), de["length"][a]
+    lvl = np.ones(len(via))
+    in_table = (a_level >= 0) & (a_level < 8)
+    lvl[in_table] = np.array([opts["level_punish"][i] for i in range(8)])[a_level[in_table]]
+    viol = de["against_oneway"][a] | _restricted(restr_cols, via, a_orig, b_orig)
+    ax1, ay1, ax2, ay2 = (de[c][a] for c in ("x1", "y1", "x2", "y2"))
+    bx1, by1, bx2, by2 = (de[c][b] for c in ("x1", "y1", "x2", "y2"))
+    dot = (ax1 - ax2) * (bx2 - bx1) + (ay1 - ay2) * (by2 - by1)
+    l2a = (ax1 - ax2) * (ax1 - ax2) + (ay1 - ay2) * (ay1 - ay2)
+    l2b = (bx2 - bx1) * (bx2 - bx1) + (by2 - by1) * (by2 - by1)
+    # a_dst == b_src holds by the join, so the trivial reverse is a_src == b_dst
+    full_turn = (de["src"][a] == de["dst"][b]) | (
+        (deg > 2) & (dot > _cos_full_turn(opts) * np.sqrt(l2a) * np.sqrt(l2b))
+    )
+    cost = (
+        a_len * lvl
+        + np.where(viol, a_len * opts["oneway_punish_fac"] + opts["oneway_edge_punish"], 0.0)
+        + a_len * opts["line_unmatched_punish_fac"] * a_cmp
+        + 0.0  # no-lines term: 0 whenever route attributes are given
+        + np.where(full_turn, opts["full_turn_punish"], 0.0)
+        + np.where(via_station, opts["pass_thru_station_punish"], 0.0)
+    )
+    return {
+        "from_edge": eid[a], "to_edge": eid[b], "via_node": via, "cost": cost,
+        "fx": ax1, "fy": ay1, "tx": bx1, "ty": by1,
+    }
 
 
 def turn_transitions(
@@ -239,84 +421,18 @@ def turn_transitions(
     rattrs: dict = RATTRS,
     opts: dict = OPTS,
 ) -> DataFrame:
-    """The edge-graph: one row per legal directed-edge pair sharing the
-    via node, with the full R3 transition cost.
+    """The edge-graph as a DataFrame: one collect each of edges, nodes
+    and restrictions, :func:`transition_arrays` on the driver, and the
+    columns back as a local Arrow relation.
 
-    Output: (from_edge, to_edge, via_node, cost).
-
-    Scale shape: dedges self-join on the via node (shuffle equi-join on
-    node_id); degree / station / restriction / line-cmp sides are
-    graph-metadata joins (broadcast). Everything is JVM column math —
-    no Python rows.
-    """
-    de = directed_full(edges)
-    a = de.select(
-        F.col("edge_id").alias("a_edge"),
-        F.col("src").alias("a_src"),
-        F.col("dst").alias("a_dst"),
-        F.col("x1").alias("a_x1"), F.col("y1").alias("a_y1"),
-        F.col("x2").alias("a_x2"), F.col("y2").alias("a_y2"),
-        F.col("level").alias("a_level"),
-        F.col("length").alias("a_len"),
-        F.col("against_oneway").alias("a_ow"),
-        (F.col("edge_id") % REV_OFF).alias("a_orig"),
+    Output: (from_edge, to_edge, via_node, cost, fx, fy, tx, ty)."""
+    cols = transition_arrays(
+        graph_ops.collect_columns(edges.select(*EDGE_COLS)),
+        graph_ops.collect_columns(nodes.select("node_id", "is_station")),
+        graph_ops.collect_columns(restrictions.select(*RESTR_COLS)),
+        rattrs, opts,
     )
-    b = de.select(
-        F.col("edge_id").alias("b_edge"),
-        F.col("src").alias("b_src"),
-        F.col("dst").alias("b_dst"),
-        F.col("x1").alias("b_x1"), F.col("y1").alias("b_y1"),
-        F.col("x2").alias("b_x2"), F.col("y2").alias("b_y2"),
-        (F.col("edge_id") % REV_OFF).alias("b_orig"),
-    )
-    from . import graph_ops
-
-    deg = graph_ops.degrees(edges).select(
-        F.col("node_id").alias("a_dst"), F.col("degree").alias("deg")
-    )
-    st = nodes.select(F.col("node_id").alias("a_dst"), "is_station")
-    rneg = (
-        restrictions.filter(~F.col("positive"))
-        .select(
-            F.col("via_node").alias("a_dst"),
-            F.col("from_way").alias("a_orig"),
-            F.col("to_way").alias("b_orig"),
-        )
-        .distinct()
-        .withColumn("rneg_hit", F.lit(True))
-    )
-    rpos = (
-        restrictions.filter(F.col("positive"))
-        .groupBy(
-            F.col("via_node").alias("a_dst"), F.col("from_way").alias("a_orig")
-        )
-        .agg(F.min("to_way").alias("rpos_to"))
-    )
-    lc = line_cmp(edges, rattrs).select(
-        F.col("edge_id").alias("a_orig"), "cmp"
-    )
-    j = (
-        a.join(b, F.col("a_dst") == F.col("b_src"))
-        .join(F.broadcast(deg), "a_dst")
-        .join(F.broadcast(st), "a_dst", "left")
-        .join(F.broadcast(rneg), ["a_dst", "a_orig", "b_orig"], "left")
-        .join(F.broadcast(rpos), ["a_dst", "a_orig"], "left")
-        .join(F.broadcast(lc), "a_orig", "left")
-        .withColumn("via_station", F.coalesce(F.col("is_station"), F.lit(False)))
-        .withColumn("rneg", F.coalesce(F.col("rneg_hit"), F.lit(False)))
-        .withColumn("a_cmp", F.coalesce(F.col("cmp"), F.lit(1.0)))
-    )
-    return j.select(
-        F.col("a_edge").alias("from_edge"),
-        F.col("b_edge").alias("to_edge"),
-        F.col("a_dst").alias("via_node"),
-        F.expr(cost_expr(opts)).alias("cost"),
-        # state start-node coords (A* heuristic: every transition cost
-        # >= a_len >= displacement of the from-edge's start node, so
-        # straight-line-to-target-start is admissible + consistent)
-        F.col("a_x1").alias("fx"), F.col("a_y1").alias("fy"),
-        F.col("b_x1").alias("tx"), F.col("b_y1").alias("ty"),
-    )
+    return graph_ops.columns_frame(edges.sparkSession, cols, TRANS_SCHEMA)
 
 
 def transitions_ctes(
@@ -706,7 +822,13 @@ def restricted_paths_cogrouped(
     trans = turn_transitions(edges, restr, nodes)
     comp = nodes.select("node_id", "component")
     trans_c = (
-        trans.join(comp.withColumnRenamed("node_id", "via_node"), "via_node")
+        # fresh component attribute: the local transitions relation shares
+        # no lineage with comp, so without the alias both cogroup sides
+        # would carry the same component attribute (an ambiguous self-join)
+        trans.join(
+            comp.select(F.col("node_id").alias("via_node"), F.col("component").alias("component")),
+            "via_node",
+        )
         .withColumn("bucket", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
     )
     de = directed_full(edges)
@@ -1105,22 +1227,30 @@ def _viterbi_full_one(
     )
 
 
-_DEDGES_PDF_CACHE: dict = {}
+_EDGE_COLS_CACHE: dict = {}
 
 
-def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
-    """Driver-side memo of the directed-edge collect (graph-sized,
-    static across queries) — same Amdahl argument as
-    routing.edges_broadcast: re-collecting per invocation is serial
+def _edge_columns(spark: SparkSession, edges: DataFrame) -> dict:
+    """Driver-side memo of the edge collect (graph-sized, static across
+    queries), keyed per (session, edge plan): the transitions build and
+    :func:`directed_full_pdf` share ONE collect — same Amdahl argument
+    as routing.edges_broadcast: re-collecting per invocation is serial
     driver time that does not shrink with cluster size."""
     from .routing import session_token
 
     key = (session_token(spark), edges.semanticHash())
-    if key not in _DEDGES_PDF_CACHE:
-        if len(_DEDGES_PDF_CACHE) > 4:
-            _DEDGES_PDF_CACHE.clear()
-        _DEDGES_PDF_CACHE[key] = directed_full(edges).toPandas()
-    return _DEDGES_PDF_CACHE[key]
+    if key not in _EDGE_COLS_CACHE:
+        if len(_EDGE_COLS_CACHE) > 4:
+            _EDGE_COLS_CACHE.clear()
+        _EDGE_COLS_CACHE[key] = graph_ops.collect_columns(edges.select(*EDGE_COLS))
+    return _EDGE_COLS_CACHE[key]
+
+
+def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
+    """:func:`directed_full` on the driver: the directed-edge arrays of
+    the memoized edge collect, so a query that also builds transitions
+    over ``edges`` issues no second collect."""
+    return pd.DataFrame(directed_arrays(_edge_columns(spark, edges)))
 
 
 _VARIANT_TRANS_CACHE: dict = {}
@@ -1132,12 +1262,13 @@ def build_variant_transitions(
     """One transition table per route-attr variant (the reference keys
     its route cache by rAttrs the same way, router.cpp:626-688).
 
-    Memoized per (session, edge-plan): the tables are deterministic
-    functions of the graph, and both viterbi_full and shape_assembly
-    need them — rebuilding 3 self-join jobs per query invocation is
-    pure waste (driver-side cache, graph-sized, same budget as the CSR
-    broadcast). The composed lifecycle passes a DIFFERENT edge set than
-    the standalone queries, so the key carries the plan hash."""
+    The edges, nodes and F10 restrictions are collected once each;
+    :func:`transition_arrays` then runs once per variant on the driver,
+    where the tables are needed anyway (viterbi_full and shape_assembly
+    broadcast them). Memoized per (session, edge plan, node plan): the
+    tables are deterministic functions of the graph, and the composed
+    lifecycle passes a DIFFERENT edge set than the standalone queries,
+    so the key carries the plan hashes."""
     from .. import datagen
 
     from .routing import session_token
@@ -1148,35 +1279,21 @@ def build_variant_transitions(
         nodes.semanticHash() if nodes is not None else None,
     )
     if key not in _VARIANT_TRANS_CACHE:
-        restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
         if nodes is None:
             nodes = datagen.nodes(spark)
+        ed = _edge_columns(spark, edges)
+        nd = graph_ops.collect_columns(nodes.select("node_id", "is_station"))
+        rs = graph_ops.collect_columns(
+            gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
+            .select(*RESTR_COLS)
+        )
         if len(_VARIANT_TRANS_CACHE) > 4:
             _VARIANT_TRANS_CACHE.clear()
         _VARIANT_TRANS_CACHE[key] = tag_transitions({
-            v: pdf.drop(columns="__variant__").reset_index(drop=True)
-            for v, pdf in _all_variant_transitions(edges, restr, nodes)
+            v: pd.DataFrame(transition_arrays(ed, nd, rs, rattrs_for_variant(v)))
+            for v in range(N_RATTR_VARIANTS)
         })
     return _VARIANT_TRANS_CACHE[key]
-
-
-def _all_variant_transitions(edges, restr, nodes):
-    """All variants' transition tables in ONE Spark job (union with a
-    variant tag + single Arrow collect) instead of N sequential
-    build+collect jobs — the per-variant branches differ only in folded
-    rattr literals, so they parallelize perfectly inside one job."""
-    from functools import reduce
-
-    dfs = [
-        turn_transitions(edges, restr, nodes, rattrs=rattrs_for_variant(v))
-        .withColumn("__variant__", F.lit(v))
-        for v in range(N_RATTR_VARIANTS)
-    ]
-    allpdf = reduce(lambda a, b: a.unionByName(b), dfs).toPandas()
-    return [
-        (v, allpdf[allpdf["__variant__"] == v])
-        for v in range(N_RATTR_VARIANTS)
-    ]
 
 
 def restricted_paths_sql() -> str:

@@ -20,7 +20,7 @@ aggregates, altNames station similarity, self edges.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
@@ -433,6 +433,17 @@ FROM he GROUP BY trip_id
 # commonArea (Geo.h:55-106 box algebra): pairwise trip-extent overlap
 # --------------------------------------------------------------------
 
+def native_level(span: Column, n_levels: int) -> Column:
+    """Hierarchical-grid level of a box with extent ``span``: the
+    coarsest-enough level k with CELL * 2^k >= span, clamped to
+    [0, n_levels - 1]. A degenerate box (span <= 0) is level 0
+    explicitly, not through log2 of zero."""
+    from .. import constants as C
+
+    k = F.greatest(F.ceil(F.log2(span / F.lit(float(C.CELL)))).cast("int"), F.lit(0))
+    return F.least(F.when(span > 0, k).otherwise(F.lit(0)), F.lit(n_levels - 1))
+
+
 def box_overlaps(points: DataFrame) -> DataFrame:
     """Pairwise overlap area of the padded trip extents (``commonArea``
     over ``getBoundingBox``+``pad`` results).
@@ -481,10 +492,7 @@ def box_overlaps(points: DataFrame) -> DataFrame:
         F.col("xmax_pad") - F.col("xmin_pad"),
         F.col("ymax_pad") - F.col("ymin_pad"),
     )
-    native = F.least(
-        F.greatest(F.ceil(F.log2(span / F.lit(float(C.CELL)))).cast("int"), F.lit(0)),
-        F.lit(n_levels - 1),
-    )
+    native = native_level(span, n_levels)
     # memberships: native-level cells plus coarsened cells at every
     # coarser level (<= 2 cells per axis at any m >= k, <= 4L rows/box)
     size_m = F.lit(float(C.CELL)) * F.pow(F.lit(2.0), F.col("m").cast("double"))

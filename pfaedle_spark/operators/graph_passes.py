@@ -57,7 +57,7 @@ def first_rows(*keys: np.ndarray) -> np.ndarray:
     return order[np.r_[True, g[1:] != g[:-1]]] if len(g) else order
 
 
-def _endpoint_degrees(e: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def endpoint_degrees(e: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(node ids, inverse of concat(src, dst) into them, degrees)."""
     return np.unique(np.concatenate([e["src"], e["dst"]]),
                      return_inverse=True, return_counts=True)
@@ -67,7 +67,7 @@ def delete_orphan_arrays(e: dict, station_ids: np.ndarray, rounds: int = ORPHAN_
     """G4 kernel: `rounds` rounds of dropping every edge with a degree-1
     non-station endpoint (a round with nothing to drop ends the pass)."""
     for _ in range(rounds):
-        ids, _, deg = _endpoint_degrees(e)
+        ids, _, deg = endpoint_degrees(e)
         hang = np.setdiff1d(ids[deg == 1], station_ids)
         if not len(hang):
             break
@@ -80,7 +80,7 @@ def fix_gaps_arrays(nodes: dict, e: dict, max_dist: float = GAP_DIST) -> dict:
     smallest-id such node within `max_dist`. Pairs come from the padded
     cell pairing (the J5/J6 pattern), so only same/adjacent-cell pairs
     are ever compared."""
-    ids, _, deg = _endpoint_degrees(e)
+    ids, _, deg = endpoint_degrees(e)
     d1 = np.isin(nodes["node_id"], ids[deg == 1]) & ~nodes["is_station"].astype(bool)
     nid, x, y = nodes["node_id"][d1], nodes["x"][d1], nodes["y"][d1]
     ia, ib = cells.cell_pairs(cells.box_cells(x, y, x, y, max_dist), cells.box_cells(x, y, x, y))
@@ -115,7 +115,7 @@ def collapse_arrays(e: dict, station_ids: np.ndarray) -> dict:
     e = {k: v for k, v in e.items() if k in COLLAPSE_COLS}
     for _ in range(COLLAPSE_MAX_ROUNDS):
         eid, src, dst = e["edge_id"], e["src"], e["dst"]
-        ids, inv, deg = _endpoint_degrees(e)
+        ids, inv, deg = endpoint_degrees(e)
         is_mid = (deg == 2) & ~np.isin(ids, station_ids)
         # the two incidences of each mid sorted by (mid, edge_id): a self-
         # loop at mid yields the same edge twice and fails a != b below

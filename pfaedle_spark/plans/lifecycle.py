@@ -199,11 +199,13 @@ def checkpointed_lifecycle(
         lambda: candidates.candidate_edges(datagen.points(spark, sf_dir), edges_f),
         inputs=["graph_edges", "documents"],
     )
-    # the transitions build (3 self-join jobs + Arrow collect) is
-    # DEFERRED into the stage lambdas: it only runs when a DP stage
-    # actually recomputes, so a fully-checkpointed resume never pays it
-    # (it is session-memoized on edges_f's semantic hash, so the two
-    # lambdas share one build when both recompute)
+    # the transitions build (one Arrow collect each of edges, nodes and
+    # restrictions + the driver-side kernel per variant) is DEFERRED
+    # into the stage lambdas: it only runs when a DP stage actually
+    # recomputes, so a fully-checkpointed resume never pays it (it is
+    # session-memoized on edges_f's semantic hash, so the two lambdas
+    # share one build when both recompute, and the shapes stage's
+    # directed edges come from the same edge collect)
     def _tbv():
         return edge_routing.build_variant_transitions(
             spark, edges_f, nodes=nodes_f

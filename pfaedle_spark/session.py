@@ -39,12 +39,15 @@ def host_defaults(meminfo: str = "/proc/meminfo") -> tuple[int, str]:
     workers, the page cache and whatever else shares the machine).
     ``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` override either."""
     cores = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
-    mem = os.environ.get("SPARK_DRIVER_MEM")
-    if not mem:
-        with open(meminfo) as fh:
-            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
-        mem = f"{kb // 2 // 1024}m"
+    mem = os.environ.get("SPARK_DRIVER_MEM") or f"{mem_total_mb(meminfo) // 2}m"
     return int(cores), mem
+
+
+def mem_total_mb(meminfo: str = "/proc/meminfo") -> int:
+    """The host's MemTotal in MiB."""
+    with open(meminfo) as fh:
+        kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    return kb // 1024
 
 
 def get_spark(

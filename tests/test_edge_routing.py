@@ -12,7 +12,7 @@ import __spark_entry__ as entrymod
 from conftest import assert_matches_oracle
 from pfaedle_spark import datagen
 from pfaedle_spark.operators import edge_routing as ER
-from pfaedle_spark.operators import gtfs_ops, routing
+from pfaedle_spark.operators import graph_ops, gtfs_ops, routing
 
 
 def brute_force_cost(trans: pd.DataFrame, src: int, dst: int, max_hops: int = 8):
@@ -241,10 +241,135 @@ def test_turn_transitions_matches_oracle(spark):
     )
 
 
+def _toy_graph():
+    """Hand-built graph that reaches every branch of the transition
+    kernel. Node 14 is missing from the node table (not a station);
+    node 5 is a station. The restriction rule (via = src % 11 == 0,
+    from/to = min/max edge id out of it, positive iff src % 22 == 0)
+    yields no_left_turn at 11 (6 -> 8) and only_straight_on at 22
+    (10 -> 13)."""
+    xy = {
+        3: (0.0, 0.0), 5: (100.0, 0.0), 11: (100.0, 100.0), 22: (200.0, 0.0),
+        7: (200.0, 100.0), 9: (300.0, 0.0), 14: (100.0, -100.0),
+    }
+    rows = [  # edge_id, src, dst, level, oneway
+        (1, 3, 5, 1, False),    # line l10 'st 3' -> 'st 5': cmp clamps to 0 in variant 1
+        (2, 5, 11, 0, False),
+        (4, 5, 22, 2, True),    # oneway
+        (6, 11, 7, 3, False),   # level 3: no lines
+        (8, 11, 14, 9, False),  # level outside the punish table
+        (10, 22, 9, 1, False),
+        (12, 22, 7, 0, False),  # 12 / 13: parallel pair
+        (13, 22, 7, 0, False),
+        (15, 9, 9, 2, False),   # self-loop
+        (17, 7, 5, 1, False),
+    ]
+    eid, src, dst, level, oneway = (np.array(c) for c in zip(*rows))
+    x1, y1 = (np.array([xy[s][i] for s in src]) for i in (0, 1))
+    x2, y2 = (np.array([xy[d][i] for d in dst]) for i in (0, 1))
+    length = np.where(src == dst, 50.0, np.hypot(x2 - x1, y2 - y1))
+    edges = pd.DataFrame({
+        "edge_id": eid.astype(np.int64), "src": src.astype(np.int64),
+        "dst": dst.astype(np.int64), "x1": x1, "y1": y1, "x2": x2, "y2": y2,
+        "level": level.astype(np.int32), "oneway": oneway.astype(bool), "length": length,
+    })
+    ids = np.array(sorted(set(xy) - {14}), dtype=np.int64)
+    nodes = pd.DataFrame({"node_id": ids, "is_station": ids == 5})
+    return edges, nodes
+
+
+@pytest.mark.parametrize("variant", range(ER.N_RATTR_VARIANTS))
+def test_transition_arrays_match_oracle_ctes(spark, variant):
+    """The numpy kernel vs the DuckDB CTE chain on the toy graph, every
+    rattr variant: same rows, costs equal as bit patterns."""
+    import duckdb
+
+    edges, nodes = _toy_graph()
+    restr = graph_ops.collect_columns(
+        gtfs_ops.read_restrictions(
+            gtfs_ops.restriction_members(spark, spark.createDataFrame(edges))
+        ).select(*ER.RESTR_COLS)
+    )
+    assert sorted(zip(restr["via_node"].tolist(), restr["positive"].tolist())) == [
+        (11, False), (22, True)
+    ]
+    rattrs = ER.rattrs_for_variant(variant)
+    got = pd.DataFrame(ER.transition_arrays(
+        {c: edges[c].to_numpy() for c in edges},
+        {c: nodes[c].to_numpy() for c in nodes},
+        restr, rattrs,
+    ))
+    con = duckdb.connect()
+    con.register("toy_edges", edges)
+    con.register("toy_nodes", nodes)
+    want = con.execute(
+        ER.transitions_ctes(
+            rattrs=rattrs,
+            head="WITH nodes AS (SELECT * FROM toy_nodes), edges AS (SELECT * FROM toy_edges)",
+        )
+        + "SELECT from_edge, to_edge, via_node, cost FROM trans"
+    ).fetchdf()
+    con.close()
+    key = ["from_edge", "to_edge"]
+    got = got.sort_values(key, ignore_index=True)
+    want = want.sort_values(key, ignore_index=True)
+    assert len(got) == len(want) > 0
+    for c in ("from_edge", "to_edge", "via_node"):
+        assert got[c].astype(np.int64).tolist() == want[c].astype(np.int64).tolist(), c
+    assert np.array_equal(
+        got["cost"].to_numpy(np.float64).view(np.int64),
+        want["cost"].to_numpy(np.float64).view(np.int64),
+    )
+    # the branches the toy graph is built for are all present
+    loop = (got["from_edge"] == 15) & (got["to_edge"] == 15)
+    assert loop.sum() == 1
+    assert ((got["from_edge"] == 12) & (got["to_edge"] == 13 + ER.REV_OFF)).sum() == 1
+    assert (got["via_node"] == 14).any() and (got["via_node"] == 5).any()
+
+
+def test_variant_transitions_job_budget(spark, tmp_path):
+    """A cold build_variant_transitions over parquet-read edges and
+    nodes is one collect each of edges, nodes and restrictions — not a
+    self-join job chain per variant — and the directed edges for the
+    shapes stage come from the same edge collect (no further job)."""
+    datagen.edges(spark).write.parquet(str(tmp_path / "edges"))
+    datagen.nodes(spark).write.parquet(str(tmp_path / "nodes"))
+    eds = spark.read.parquet(str(tmp_path / "edges"))
+    nds = spark.read.parquet(str(tmp_path / "nodes"))
+    sc = spark.sparkContext
+
+    def jobs_of(group: str, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tbv, n_build = jobs_of(
+        "variant-transitions-job-budget",
+        lambda: ER.build_variant_transitions(spark, eds, nodes=nds),
+    )
+    assert sorted(tbv) == list(range(ER.N_RATTR_VARIANTS))
+    assert 0 < n_build <= 6, f"{n_build} jobs"
+    dedges, n_dedges = jobs_of(
+        "directed-edges-after-build", lambda: ER.directed_full_pdf(spark, eds)
+    )
+    assert len(dedges) == 2 * eds.count()
+    assert n_dedges == 0, f"{n_dedges} jobs"
+
+
 def test_restricted_paths_matches_oracle(spark):
     assert_matches_oracle(
         entrymod.queries()["restricted_paths"](spark, None),
         entrymod.oracle_sql()["restricted_paths"],
+    )
+
+
+def test_restricted_paths_cogrouped_matches_oracle(spark):
+    assert_matches_oracle(
+        entrymod.queries()["restricted_paths_cogrouped"](spark, None),
+        entrymod.oracle_sql()["restricted_paths_cogrouped"],
     )
 
 

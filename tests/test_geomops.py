@@ -159,3 +159,50 @@ def test_box_overlaps_matches_oracle(spark):
         entrymod.queries()["box_overlaps"](spark, SF_DIR),
         entrymod.oracle_sql()["box_overlaps"],
     )
+
+
+def test_box_overlaps_one_image_trip_level_zero(spark, tmp_path):
+    """A one-image trip has a zero-span raw box; padded it is still far
+    below one cell, so it indexes at level 0 — and box_overlaps keeps
+    matching its oracle with such trips in the input."""
+    import os
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from conftest import SF_DIR, TABLES
+    from pfaedle_spark import datagen
+    from pfaedle_spark.operators import geomops
+
+    docs = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    # 20 full trips of 8 images, then 40 trips of one image each
+    docs = docs[(docs["doc_id"] < 160) | ((docs["doc_id"] < 480) & (docs["doc_id"] % 8 == 0))]
+    docs.to_parquet(tmp_path / "documents.parquet", index=False)
+    for t in TABLES:
+        if t != "documents":
+            os.symlink(f"{SF_DIR}/{t}.parquet", tmp_path / f"{t}.parquet")
+    sf = str(tmp_path)
+
+    ext = geomops.trip_extent(datagen.points(spark, sf)).filter("n_points = 1")
+    padded = F.greatest(F.col("xmax_pad") - F.col("xmin_pad"), F.col("ymax_pad") - F.col("ymin_pad"))
+    raw = F.greatest(F.col("xmax") - F.col("xmin"), F.col("ymax") - F.col("ymin"))
+    levels = ext.select(
+        raw.alias("raw"),
+        geomops.native_level(raw, 8).alias("k_raw"),
+        geomops.native_level(padded, 8).alias("k_pad"),
+    ).toPandas()
+    assert len(levels) == 40
+    assert (levels["raw"] == 0.0).all()
+    assert (levels["k_raw"] == 0).all() and (levels["k_pad"] == 0).all()
+
+    spans = spark.createDataFrame(
+        [(0.0,), (200.0,), (2000.0,), (2001.0,), (1e12,)], "span double"
+    )
+    got = spans.select(geomops.native_level(F.col("span"), 5).alias("k")).toPandas()
+    assert got["k"].tolist() == [0, 0, 0, 1, 4]
+
+    out = entrymod.queries()["box_overlaps"](spark, sf)
+    one_image = {f"trip_{d // 8}" for d in range(160, 480, 8)}
+    pairs = out.toPandas()
+    assert (pairs["a_trip"].isin(one_image) | pairs["b_trip"].isin(one_image)).any()
+    assert_matches_oracle(out, entrymod.oracle_sql()["box_overlaps"], sf_dir=sf)

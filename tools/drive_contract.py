@@ -5,12 +5,12 @@ Besides the per-query stdout lines, a FULL run (no name filter) writes
 ``CONTRACT_FULL_r{N}.json`` at the repo root in the same shape as the
 driver's CORRECTNESS artifact — the compensating record for the
 queries outside the driver's 50-row grading window."""
-import glob, json, sys, time, duckdb, pandas as pd
-sys.path.insert(0, "/root/repo")
+import glob, json, os, sys, time, duckdb, pandas as pd
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)  # the checkout this script lives in, not an installed copy
 import __spark_entry__ as E
-from pfaedle_spark.session import get_spark
+from pfaedle_spark.session import get_spark, mem_total_mb
 
-import os
 SF = os.environ.get("SF", "/root/testdata/sf0.01")
 TABLES = ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]
 
@@ -22,8 +22,10 @@ assert n >= 0
 
 con = duckdb.connect()
 # big-SF DP oracles can otherwise grab most of the host's RAM and
-# starve the Spark JVM sharing the box; spill to disk instead.
-con.execute(f"SET memory_limit='{os.environ.get('ORACLE_MEM', '48GB')}'")
+# starve the Spark JVM sharing the box (it takes half of MemTotal);
+# cap DuckDB at a quarter and spill to disk instead. ORACLE_MEM overrides.
+oracle_mem = os.environ.get("ORACLE_MEM") or f"{mem_total_mb() // 4}MB"
+con.execute(f"SET memory_limit='{oracle_mem}'")
 con.execute("SET temp_directory='/tmp/duckdb_spill'")
 for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
@@ -110,8 +112,8 @@ for name, fn in qs.items():
 if not only:  # full sweep: publish the compensating artifact
     # number off existing CONTRACT_FULL files (not the driver's
     # CORRECTNESS artifacts) and never clobber an existing sweep.
-    rnd = len(glob.glob("/root/repo/CORRECTNESS_r*.json")) + 1
-    while os.path.exists(f"/root/repo/CONTRACT_FULL_r{rnd:02d}.json"):
+    rnd = len(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))) + 1
+    while os.path.exists(os.path.join(ROOT, f"CONTRACT_FULL_r{rnd:02d}.json")):
         rnd += 1
     oracled = [k for k in results if "note" not in results[k]]
     summary = {
@@ -126,7 +128,7 @@ if not only:  # full sweep: publish the compensating artifact
         }
     }
     summary.update(results)
-    out = f"/root/repo/CONTRACT_FULL_r{rnd:02d}.json"
+    out = os.path.join(ROOT, f"CONTRACT_FULL_r{rnd:02d}.json")
     with open(out, "w") as fh:
         json.dump(summary, fh, indent=1)
     m = summary["_meta"]

@@ -1,5 +1,6 @@
 """Iterate on the gridviterbi oracle: run Spark viterbi_full vs the
 DuckDB oracle at sf0.01 and diff."""
+import os
 import sys
 import time
 
@@ -7,8 +8,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-import os
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = os.environ.get("SF", "/root/testdata/sf0.01")
 WHICH = sys.argv[1] if len(sys.argv) > 1 else "viterbi_full"

@@ -8,7 +8,7 @@ import sys
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pfaedle_spark import datagen
 from pfaedle_spark.operators import candidates, edge_routing, routing
 from pfaedle_spark.session import get_spark
