@@ -7,11 +7,15 @@ Large-scale training-data pipeline ops, Spark-first:
 * SimHash           — 60-bit signature + pigeonhole-banded near-dup pairs
 * n-gram Jaccard    — exact similarity on LSH candidate pairs only
 
-Everything is built-in column expressions (JVM-side, codegen); the only
-"hash" primitive is md5 so the DuckDB oracle reproduces every value
-bit-identically (engine hash functions like xxhash differ between
-engines). The token hash is the md5-derived 60-bit integer reduced mod
-2^31-1 so permuted hashes ``(a*h+b) mod p`` never overflow int64.
+The relational parts (groupings, band joins, pair scoring) are built-in
+column expressions (JVM-side, codegen). The per-doc shingle / MinHash /
+band arrays are one numpy kernel per Arrow batch (``mapInArrow``):
+as Catalyst higher-order functions they ran interpreted once per
+shingle x perm. The only "hash" primitive is md5 so the DuckDB oracle
+reproduces every value bit-identically (engine hash functions like
+xxhash differ between engines). The token hash is the md5-derived
+60-bit integer reduced mod 2^31-1 so permuted hashes ``(a*h+b) mod p``
+never overflow int64.
 
 Scale notes (100 TB): every stage is a shuffle on a well-distributed
 key (doc_id, shingle hash, band signature). The band self-join is the
@@ -21,6 +25,11 @@ AQE skew-join covers pathological buckets. No driver-side state.
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -67,6 +76,12 @@ def _h31_sql(expr: str) -> str:
     return f"({_h60_sql(expr)} % {P31})"
 
 
+def _h31_py(s: str) -> int:
+    """h31 of one string with hashlib (md5 of its UTF-8 bytes, as both
+    engines hash)."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P31
+
+
 # --------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------
@@ -107,62 +122,11 @@ FROM keyed k JOIN grp g USING (text_hash)
 ROLL_B = 1000003  # polynomial base of the shingle rolling hash
 
 
-def _tok_hash_df(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, th): one md5 per token, materialized in its OWN
-    projection. The shingle builder then slices the HASH array k times
-    (cheap array reads); slicing the token array and hashing each slice
-    would md5 every token k times — the two-projection form measured 2x
-    faster on sf0.1 and is bit-identical. CollapseProject keeps the two
-    projects apart because `th` is a non-cheap expression referenced k
-    times downstream (SPARK-36718), so the hash really runs once.
-
-    Also applies the family-wide short-doc filter (LEN(toks) >= k),
-    matching the oracle CTEs."""
-    toks = F.split(F.col("text"), " ")
-    return docs.filter(F.size(toks) >= k).select(
-        "doc_id", F.transform(toks, lambda t: h31(t)).alias("th")
-    )
-
-
-def _shingle_from_th(k: int = SHINGLE_K):
-    """Array of shingle hashes from the materialized token-hash array
-    `th`: integer polynomial (((th[i]*B % P) + th[i+1]) * B % P + ...)
-    % P. Intermediates stay < P*B ~ 2.1e15, well inside BIGINT —
-    bit-identical in DuckDB.
-
-    Built by zip_with over k SHIFTED SLICES of the `th` column, not
-    element_at inside a transform lambda: a non-trivial child expression
-    referenced inside a HOF lambda is re-evaluated per element (no CSE
-    across lambda scopes), which turns n hashes into O(k*n^2) —
-    measured 10x slower on this exact operator."""
-    n_sh = F.size(F.col("th")) - (k - 1)
-    parts = [F.slice(F.col("th"), j + 1, n_sh) for j in range(k)]
-    sh = parts[0]
-    for j in range(1, k):
-        sh = F.zip_with(sh, parts[j], lambda a, b: (a * ROLL_B % P31 + b) % P31)
-    return sh
-
-
 def _roll_sql(i_base: str, k: int) -> str:
     expr = f"th[{i_base}+1]"
     for j in range(1, k):
         expr = f"(({expr}) * {ROLL_B} % {P31} + th[{i_base}+{j + 1}]) % {P31}"
     return expr
-
-
-def shingles(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """Distinct word k-shingle hashes per doc.
-
-    One md5 per TOKEN (not per shingle string, and not per token per
-    slice — measured the dominant cost of the dedup family), combined
-    per shingle with a pure-integer rolling polynomial; per-doc dedup
-    happens array-side (array_distinct), so the operator is completely
-    shuffle-free.
-    """
-    return _tok_hash_df(docs, k).select(
-        "doc_id",
-        F.explode(F.array_distinct(_shingle_from_th(k))).alias("sh_hash"),
-    )
 
 
 def _shingles_cte(k: int = SHINGLE_K) -> str:
@@ -191,48 +155,7 @@ def perm_constants(num_perms: int = NUM_PERMS) -> list[tuple[int, int]]:
     with hashlib, bit-identical to the engines' md5 (NOT multiples of a
     shared base: a_i = c*i would make every permuted hash a multiple of
     one value and collapse all minima onto a single shared shingle)."""
-    import hashlib
-
-    def hh(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % P31
-
-    return [(hh(f"{i}a") % (P31 - 1) + 1, hh(f"{i}b")) for i in range(num_perms)]
-
-
-def _minhash_fold(hs, num_perms: int = NUM_PERMS):
-    """Signature array from a shingle-hash array column: one fold over
-    the hashes, each updating all num_perms minima (a per-perm
-    array_min would recompute the hash array once per perm — measured
-    4x slower)."""
-    consts = perm_constants(num_perms)
-    pa = F.array(*[F.lit(a).cast("long") for a, _ in consts])
-    pb = F.array(*[F.lit(b).cast("long") for _, b in consts])
-    init = F.array_repeat(F.lit(P31).cast("long"), num_perms)
-    return F.aggregate(
-        hs,
-        init,
-        lambda acc, h: F.transform(
-            acc,
-            lambda ac, i: F.least(
-                ac, (h * F.element_at(pa, i + 1) + F.element_at(pb, i + 1)) % P31
-            ),
-        ),
-    )
-
-
-def minhash_signatures(docs: DataFrame, num_perms: int = NUM_PERMS) -> DataFrame:
-    """(doc_id, perm, minhash): min over shingles of (a_i*h + b_i) mod p.
-
-    Array-native: the whole signature computes in one narrow projection
-    (shingle array -> hash array -> per-perm fold) — zero shuffle; the
-    old explode(num_perms x shingles)+groupBy plan shuffled
-    |docs| x |shingles| x num_perms rows for the same result.
-    """
-    k = SHINGLE_K
-    hs = F.array_distinct(_shingle_from_th(k))
-    return _tok_hash_df(docs, k).select(
-        "doc_id", F.posexplode(_minhash_fold(hs, num_perms)).alias("perm", "minhash")
-    )
+    return [(_h31_py(f"{i}a") % (P31 - 1) + 1, _h31_py(f"{i}b")) for i in range(num_perms)]
 
 
 def _minhash_cte(num_perms: int = NUM_PERMS) -> str:
@@ -249,72 +172,152 @@ sig AS (
 )"""
 
 
-def lsh_bands(signatures: DataFrame, bands: int = BANDS) -> DataFrame:
-    """(doc_id, band, band_sig): md5 of the ordered minhashes of the band."""
-    rows = NUM_PERMS // bands
-    banded = signatures.withColumn("band", (F.col("perm") / rows).cast("int"))
-    return banded.groupBy("doc_id", "band").agg(
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-            )
-        ).alias("band_sig")
-    )
-
-
 # --------------------------------------------------------------------
 # shared array-native pair kernel
 # --------------------------------------------------------------------
 # The whole pair family (minhash_pairs / ngram_jaccard / dedup_chain)
 # runs off ONE per-doc table of (distinct shingle-hash array, signature
-# array) and ONE integer-band candidate join. The exploded-row form
-# (64 sig rows + |shingles| rows per doc through three joins) measured
-# ~2x slower at sf0.1 and scaled 0.66 at N->4N vs 0.77 array-native —
-# the decomposition is in SCALING.md round-4 notes.
+# array, integer band keys) and ONE integer-band candidate join. The
+# exploded-row form (64 sig rows + |shingles| rows per doc through three
+# joins) measured ~2x slower at sf0.1 and scaled 0.66 at N->4N vs 0.77
+# array-native — the decomposition is in SCALING.md round-4 notes.
+
+# Byte budget of one MinHash block of (NUM_PERMS x shingles) int64
+# permuted hashes: one-shot, a batch would materialize 8*NUM_PERMS
+# bytes per shingle of the whole batch at once (and 8 MiB blocks also
+# measured faster than one-shot on the benchmark corpus).
+_MINHASH_CHUNK_BYTES = 8 << 20
+_MINHASH_CHUNK_ROWS = _MINHASH_CHUNK_BYTES // (8 * NUM_PERMS)
+
+
+def _token_hashes(tokens: pa.Array) -> np.ndarray:
+    """h31 of every token, md5-ing each DISTINCT token of the array
+    once (a corpus repeats its vocabulary; the md5 is the costly part)."""
+    uniq = pc.unique(tokens)
+    th = np.array([_h31_py(t) for t in uniq.to_pylist()], dtype=np.int64)
+    return th[pc.index_in(tokens, value_set=uniq).to_numpy()]
+
+
+def _shingle_hashes(th: np.ndarray, lens: np.ndarray, k: int = SHINGLE_K):
+    """(doc index, hash) of every word k-shingle, docs laid out back to
+    back in the flat token-hash array `th` with `lens` (each >= k)
+    tokens: the integer polynomial (((th[i]*B % P) + th[i+1]) * B % P
+    + ...) % P, whose intermediates stay < P*B ~ 2.1e15 — the oracle's
+    _roll_sql exactly."""
+    doc = np.repeat(np.arange(len(lens)), lens - (k - 1))
+    # each doc has k-1 fewer shingles than tokens, so the flat shingle
+    # index runs (k-1) per preceding doc behind its first token's index
+    pos = np.arange(len(doc)) + doc * (k - 1)
+    s = th[pos]
+    for j in range(1, k):
+        s = (s * ROLL_B % P31 + th[pos + j]) % P31
+    return doc, s
+
+
+def _distinct_per_doc(doc: np.ndarray, s: np.ndarray):
+    """Per-doc distinct values in first-occurrence order (Spark's
+    array_distinct). `doc` is ascending and s < 2^31, so doc<<31 | s is
+    a unique key per (doc, value)."""
+    _, first = np.unique((doc << 31) | s, return_index=True)
+    first.sort()
+    return doc[first], s[first]
+
+
+def _minhash(hs: np.ndarray, doc: np.ndarray, n_docs: int, a: np.ndarray, b: np.ndarray,
+             chunk_rows: int = _MINHASH_CHUNK_ROWS) -> np.ndarray:
+    """(n_docs, len(a)) signatures: per doc and perm the minimum of
+    (a*h + b) % P over its hashes `hs` (grouped by ascending `doc`).
+    At most `chunk_rows` hashes are permuted at once; a doc that spans
+    chunks folds its partial minima with np.minimum. The block is
+    perm-major so each reduceat runs along contiguous memory (measured
+    2x faster than hash-major on the benchmark corpus)."""
+    sig = np.full((len(a), n_docs), P31, dtype=np.int64)
+    for lo in range(0, len(hs), chunk_rows):
+        h, d = hs[lo:lo + chunk_rows], doc[lo:lo + chunk_rows]
+        cut = np.flatnonzero(np.r_[True, d[1:] != d[:-1]])
+        x = a[:, None] * h
+        x += b[:, None]
+        np.remainder(x, P31, out=x)
+        sig[:, d[cut]] = np.minimum(sig[:, d[cut]], np.minimum.reduceat(x, cut, axis=1))
+    return sig.T
+
+
+def _band_keys(sig: np.ndarray) -> np.ndarray:
+    """Integer band signatures: the shingle polynomial folded (from 0,
+    so the first step is the first minhash) over each ROWS_PER_BAND
+    slice of the signature — an 8-byte join key instead of a 32-char
+    md5 string. Collisions in the 2^31 space add a few deterministic
+    spurious candidate pairs per million docs — identical in both
+    engines (the oracle folds the same polynomial via list_reduce), and
+    spurious pairs just score near-0 like any LSH false positive."""
+    rows = sig.reshape(len(sig), BANDS, ROWS_PER_BAND)
+    key = np.zeros((len(sig), BANDS), dtype=np.int64)
+    for j in range(ROWS_PER_BAND):
+        key = (key * ROLL_B + rows[:, :, j]) % P31
+    return key
+
+
+def _list_array(offsets: np.ndarray, values: np.ndarray) -> pa.ListArray:
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(values, pa.int64()))
+
+
+def _row_lists(m: np.ndarray) -> pa.ListArray:
+    """One list per row of the 2-D array `m`."""
+    return _list_array(np.arange(0, m.size + 1, m.shape[1]), m.ravel())
+
+
+def _doc_array_batches(batches):
+    """mapInArrow kernel: (doc_id, text) batches -> (doc_id, hs, sig,
+    bands) for every doc with at least SHINGLE_K tokens. Tokens are the
+    ' '-split of text (leading, trailing and repeated spaces give empty
+    tokens, as Spark's split and DuckDB's STRING_SPLIT do); null text is
+    dropped like the oracle's LEN(NULL) >= k filter. Each batch is
+    self-contained: no state carries from one batch to the next."""
+    a, b = (np.array(c, dtype=np.int64) for c in zip(*perm_constants()))
+    for rb in batches:
+        toks = pc.split_pattern(rb.column("text"), " ")
+        keep = pc.fill_null(pc.greater_equal(pc.list_value_length(toks), SHINGLE_K), False)
+        toks = toks.filter(keep)
+        n = len(toks)
+        if n == 0:
+            continue
+        lens = pc.list_value_length(toks).to_numpy().astype(np.int64)
+        doc, s = _shingle_hashes(_token_hashes(pc.list_flatten(toks)), lens)
+        doc, hs = _distinct_per_doc(doc, s)
+        sig = _minhash(hs, doc, n, a, b)
+        yield pa.RecordBatch.from_arrays(
+            [
+                rb.column("doc_id").filter(keep),
+                _list_array(np.r_[0, np.cumsum(np.bincount(doc, minlength=n))], hs),
+                _row_lists(sig),
+                _row_lists(_band_keys(sig)),
+            ],
+            names=["doc_id", "hs", "sig", "bands"],
+        )
+
+
+def _doc_array_rows(docs: DataFrame) -> DataFrame:
+    """The lazy per-doc array table: one Arrow batch kernel over
+    (doc_id, text), no per-element Catalyst lambdas."""
+    return docs.select("doc_id", "text").mapInArrow(
+        _doc_array_batches,
+        "doc_id long, hs array<long>, sig array<long>, bands array<long>",
+    )
 
 
 def _doc_arrays(docs: DataFrame) -> DataFrame:
     """Per-doc (hs = distinct shingle-hash array, sig = minhash
-    signature array), eagerly materialized: the md5-per-token hash is
-    the dominant CPU of the family and every consumer branches off it
-    at least twice. The EAGER localCheckpoint makes the materialization
-    its own fully-parallel job at a deterministic point."""
-    return (
-        _tok_hash_df(docs)
-        .select("doc_id", F.array_distinct(_shingle_from_th()).alias("hs"))
-        .withColumn("sig", _minhash_fold(F.col("hs")))
-        .localCheckpoint(eager=True)
-    )
-
-
-def _int_band_arr():
-    """Integer band signatures: the same rolling polynomial as the
-    shingle hash, folded over each signature SLICE — an 8-byte join key
-    instead of lsh_bands' 32-char md5 string (1 string build + 1 md5
-    per band-row saved; the self-join compares longs). Collisions in
-    the 2^31 space add a few deterministic spurious candidate pairs per
-    million docs — identical in both engines (the oracle folds the same
-    polynomial via list_reduce), and spurious pairs just score near-0
-    like any LSH false positive."""
-    rows = NUM_PERMS // BANDS
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(BANDS - 1)),
-        lambda b: F.aggregate(
-            F.slice(F.col("sig"), b * rows + 1, rows),
-            F.lit(0).cast("long"),
-            lambda acc, mh: (acc * ROLL_B + mh) % P31,
-        ),
-    )
+    signature array, bands = integer band keys), eagerly materialized:
+    every consumer branches off it at least twice. The EAGER
+    localCheckpoint makes the materialization its own job at a
+    deterministic point."""
+    return _doc_array_rows(docs).localCheckpoint(eager=True)
 
 
 def _band_pairs(arr: DataFrame) -> DataFrame:
     """LSH candidate pairs from the array table: explode integer bands,
     one equi-self-join, ordered dedup."""
-    bands = arr.select("doc_id", F.posexplode(_int_band_arr()).alias("band", "band_sig"))
+    bands = arr.select("doc_id", F.posexplode("bands").alias("band", "band_sig"))
     left = bands.select(F.col("doc_id").alias("doc_a"), "band", "band_sig")
     right = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_sig")
     return (

@@ -366,7 +366,9 @@ def _srp_keys_expr() -> Column:
     pw = F.array(*[F.lit(1 << i).cast("long") for i in range(BAND_W)])
     # NOTE: bits must bind via a let-style outer reference if this ever
     # feeds a multi-band consumer directly — no CSE across HOF lambda
-    # scopes (the measured 10x trap documented at dedup._shingle_from_th).
+    # scopes: a non-trivial child expression referenced inside a lambda
+    # is re-evaluated per element (measured 10x slower on a shingle
+    # builder of this shape).
     return F.transform(
         F.sequence(F.lit(0), F.lit(SRP_BANDS - 1)),
         lambda band: F.aggregate(

@@ -41,7 +41,9 @@ def test_dedup_chain_plan_is_array_native(spark):
     joins and score with array expressions — not re-explode 64 sig rows
     + |shingles| rows per doc into a cascade of small AQE stages (the
     shape that measured 0.57 tail scaling; SCALING.md round-4 notes).
-    Also: no Python anywhere in the chain."""
+    Also: no row-at-a-time Python in the chain. Its only Python is the
+    one Arrow batch kernel that builds the per-doc arrays, which this
+    plan reads back from their checkpoint."""
     plan = plan_of(_q("dedup_chain", spark))
     assert "BatchEvalPython" not in plan and "PythonUDF" not in plan
     assert "array_intersect" in plan and "zip_with" in plan
@@ -49,6 +51,19 @@ def test_dedup_chain_plan_is_array_native(spark):
     # Generate (explode) anywhere in the final plan — per pair the join
     # moves 2 arrays, never 64 sig rows + |shingles| shingle rows
     assert "Generate" not in plan
+
+
+def test_dedup_doc_arrays_are_one_arrow_batch_kernel(spark):
+    """The per-doc shingle / MinHash / band arrays are built by one
+    Arrow batch kernel, not by higher-order-function lambdas that the
+    JVM evaluates interpreted once per shingle x perm."""
+    from pfaedle_spark import datagen
+    from pfaedle_spark.operators import dedup
+
+    plan = plan_of(dedup._doc_array_rows(datagen.dedup_corpus(spark, SF_DIR)))
+    assert "MapInArrow" in plan
+    for hof in ("lambdafunction", "aggregate(", "zip_with", "transform("):
+        assert hof not in plan, hof
 
 
 def test_tile_assign_is_narrow(spark):

@@ -310,6 +310,110 @@ def test_dedup_chain_matches_composed_oracle(spark):
         assert e == est[k] and j == ex[k], k
 
 
+# hand-built corner cases of the token split and the shingle roll; ids
+# that are multiples of 5 or 7 also get the oracle corpus's planted copies
+_KERNEL_DOCS = [
+    (1, None),
+    (2, ""),
+    (3, "two tokens"),
+    (4, "exactly three tokens"),
+    (5, "planted near copy base text"),
+    (6, "same same same same same"),
+    (7, "planted exact copy"),
+    (8, " leading space here"),
+    (9, "trailing space here "),
+    (11, "double  space  between  words"),
+    (12, "  "),
+    (13, "größe straße café 東京 駅 naïve"),
+    (16, "a b c a b c a b c d"),
+    (17, "nospace"),
+]
+
+
+def test_doc_array_kernel_matches_oracle_ctes():
+    """The Arrow batch kernel's per-doc hs / sig / bands against the
+    oracle's shingles / sig / bands CTEs, bit for bit, on split corner
+    cases: hs as a set and a size, and in first-occurrence order of the
+    doc's shingle sequence (Spark's array_distinct)."""
+    import duckdb
+    import pandas as pd
+    import pyarrow as pa
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(_KERNEL_DOCS, columns=["doc_id", "text"]))
+    cte = f"WITH {dedup._int_pairs_cte().lstrip()}\n"
+
+    def per_doc(sql):
+        return {d: list(v) for d, v in con.execute(cte + sql).fetchall()}
+
+    corpus = con.execute(cte + "SELECT doc_id, text FROM corpus").fetch_arrow_table()
+    want_sets = per_doc("SELECT doc_id, LIST(sh_hash) FROM shingles GROUP BY doc_id")
+    want_seq = per_doc(
+        f"SELECT doc_id, LIST_TRANSFORM(RANGE(0, n - {dedup.SHINGLE_K - 1}), "
+        f"i -> {dedup._roll_sql('i', dedup.SHINGLE_K)}) FROM tokh"
+    )
+    want_sig = per_doc("SELECT doc_id, LIST(minhash ORDER BY perm) FROM sig GROUP BY doc_id")
+    want_bands = per_doc("SELECT doc_id, LIST(band_sig ORDER BY band) FROM bands GROUP BY doc_id")
+    con.close()
+
+    longs = pa.list_(pa.int64())
+    schema = pa.schema([("doc_id", pa.int64()), ("hs", longs), ("sig", longs), ("bands", longs)])
+    out = pa.Table.from_batches(
+        dedup._doc_array_batches(corpus.to_batches()), schema=schema
+    ).to_pylist()
+    got = {r["doc_id"]: r for r in out}
+    assert len(got) == len(out)
+    assert got.keys() == want_sets.keys() == want_sig.keys() == want_bands.keys()
+    # null, empty, 1- and 2-token texts are dropped; the rest are kept
+    assert {1, 2, 3, 17}.isdisjoint(got)
+    assert {4, 6, 8, 9, 11, 12, 13, 16, 1000005, 2000007} <= got.keys()
+    assert len(got[16]["hs"]) < len(want_seq[16])
+    for d, r in got.items():
+        assert sorted(r["hs"]) == sorted(want_sets[d]), d
+        assert r["hs"] == list(dict.fromkeys(want_seq[d])), d
+        assert r["sig"] == want_sig[d], d
+        assert r["bands"] == want_bands[d], d
+
+
+def test_dedup_chain_independent_of_arrow_batch_size(spark):
+    """The kernel's per-batch token table and offsets must not leak
+    across batches: 3-record Arrow batches give the same chain rows as
+    the default batch size."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def rows():
+        return sorted(dedup.dedup_chain(_corpus(spark)).collect(), key=str)
+
+    want = rows()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got = rows()
+    finally:
+        spark.conf.set(key, old)
+    assert any(r.kind == "pair" for r in want)
+    assert got == want
+
+
+def test_minhash_chunks_match_one_shot_minimum():
+    """The chunked MinHash at a 1-row, a 7-row and the default budget
+    equals the one-shot per-doc minimum of (h*a + b) % P, including a
+    doc with more shingles than the budget (it spans several chunks)."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    a, b = (np.array(c, dtype=np.int64) for c in zip(*dedup.perm_constants()))
+    sizes = [1, 3, 20, 2, dedup._MINHASH_CHUNK_ROWS + 1000, 7, 8, 1]
+    doc = np.repeat(np.arange(len(sizes)), sizes)
+    hs = rng.integers(0, dedup.P31, size=len(doc), dtype=np.int64)
+    starts = np.r_[0, np.cumsum(sizes)[:-1]]
+    want = np.minimum.reduceat((hs[:, None] * a + b) % dedup.P31, starts, axis=0)
+    for rows in (1, 7, dedup._MINHASH_CHUNK_ROWS):
+        assert max(sizes) > rows
+        got = dedup._minhash(hs, doc, len(sizes), a, b, chunk_rows=rows)
+        assert np.array_equal(got, want), rows
+
+
 def test_phash_clusters_matches_closure_oracle(spark):
     """Near-dup pairs -> CC clusters -> keep-one: checked against the
     transitive-closure recursive-CTE oracle, plus the semantic gates a
