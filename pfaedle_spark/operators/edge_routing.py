@@ -1103,11 +1103,10 @@ def viterbi_trip_debug(
 _VF_CSR_CACHE: dict = {}
 
 # driver-side token generator: two DIFFERENT transition tables must never
-# share a cache slot (same hazard class as routing._ROUTE_CACHE keying on
-# id(csr) — a dead object's address can be reused). The token is minted
-# once per transitions dict on the driver and travels inside the
-# broadcast, so executor-side cache keys are collision-free by
-# construction.
+# share a cache slot (keying on id() alone is unsafe: a dead object's
+# address can be reused). The token is minted once per transitions dict
+# on the driver and travels inside the broadcast, so executor-side
+# cache keys are collision-free by construction.
 _VF_TOKEN_COUNTER = __import__("itertools").count(1)
 
 
@@ -1234,7 +1233,7 @@ def _edge_columns(spark: SparkSession, edges: DataFrame) -> dict:
     """Driver-side memo of the edge collect (graph-sized, static across
     queries), keyed per (session, edge plan): the transitions build and
     :func:`directed_full_pdf` share ONE collect — same Amdahl argument
-    as routing.edges_broadcast: re-collecting per invocation is serial
+    as routing.hop_broadcast: re-collecting per invocation is serial
     driver time that does not shrink with cluster size."""
     from .routing import session_token
 

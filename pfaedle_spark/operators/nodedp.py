@@ -11,15 +11,16 @@ Exactness:
    {1, 1.5, 2, 3, 4, 6, 8} is dyadic, so each arc cost and every
    shortest-path sum is an exact float64 integer below 2^53. Summation
    ORDER therefore cannot matter: a plain unrolled Bellman-Ford equals
-   the engine's search (cached_dijkstra -> routing.search) bit-for-bit,
-   and the hop table depends only on the source node — computed ONCE per distinct
+   the engine's hop table (routing.hop_table) bit-for-bit, and the hop
+   table depends only on the source node — computed ONCE per distinct
    candidate node and shared by every trip/layer (exactly like the
-   engine's route cache) and by BOTH oracles.
+   engine's broadcast table, routing.hop_broadcast) and by BOTH oracles.
 
 2. **DP float order replicated literally.** viterbi:
    ``total = (dp + hop) + emission`` (numpy broadcast order in
-   _viterbi_one_trip); greedy2: ``score = emission + hop`` and
-   ``acc = acc + score`` sequential (inf-latched). Emissions are
+   routing.viterbi_batch); greedy2 (routing.greedy2_batch):
+   ``score = emission + hop`` and ``acc = acc + score`` sequential
+   (inf-latched). Emissions are
    ``dist * CAND_PEN_FAC`` floats, so these adds stay in engine order.
 
 3. **Tie-breaks.** Layer rows are pre-sorted by edge_id and np.argmin

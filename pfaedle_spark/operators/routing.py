@@ -16,15 +16,15 @@ Reference:
   candidate layers → sink; optimum == HMM/Viterbi on candidate states.
 * R10 path → geometry assembly (``shape_builder.cpp:80-119``).
 
-Spark strategy: the per-trip DP is `applyInPandas` over trip groups —
-the same axis the reference parallelizes with OpenMP
-(``shape_builder.cpp:234``). The road graph ships to executors as a
-broadcast of flat numpy arrays (CSR adjacency): one city-scale
-component is a few MB, far under broadcast limits even at 10^12
-observation rows, because graph size scales with geography, not with
-the image table. For continent-scale graphs the plan is a per-component
-subgraph equi-join instead; candidates carry their component label so
-that join prunes precisely.
+Spark strategy: the node-state DPs run as ONE batched numpy kernel per
+hash bucket of trips — the trip axis the reference parallelizes with
+OpenMP (``shape_builder.cpp:234``). Each DP layer gathers from the
+**hop table** (:func:`hop_broadcast`), built once on the driver in
+place of the reference's per-thread route cache and broadcast: 8 MiB
+for the grid's 1,024 nodes, as graph size scales with geography. For
+continent-scale graphs the plan is a per-component subgraph equi-join
+instead (:func:`hop_shortest_paths_cogrouped`); candidates carry their
+component label so that join prunes precisely.
 """
 
 from __future__ import annotations
@@ -65,22 +65,18 @@ def dp_partitions(spark) -> int:
 
 def bucketed_apply(df: DataFrame, key: str, n_part: int, solve, schema: str) -> DataFrame:
     """``groupBy(key).applyInPandas(solve)`` with the per-group Arrow
-    constant amortized: groups a hash BUCKET of keys per pandas call
-    and loops ``solve`` over the real groups inside. One group per trip
-    was the right axis when trips were few and long; the structural
-    main grid has many short trips, where ~2-3 ms of per-group
-    scaffolding × thousands of groups dominated the DP stages. Output
-    is identical — ``solve`` still sees exactly one key's rows."""
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.concat(
-            [solve(g) for _, g in pdf.groupby(key, sort=False)], ignore_index=True
-        )
-
+    constant amortized: ``solve`` receives a whole hash BUCKET of keys
+    in one pandas call and solves all of them at once (the batched
+    kernels below). One group per trip was the right axis when trips
+    were few and long; the structural main grid has many short trips,
+    where ~2-3 ms of per-group scaffolding × thousands of groups
+    dominated the DP stages. The frame also carries the ``_bucket``
+    column, which ``solve`` ignores."""
     return (
         df.withColumn("_bucket", F.pmod(F.hash(key), F.lit(n_part)))
         .repartition(n_part, "_bucket")
         .groupBy("_bucket")
-        .applyInPandas(run, schema=schema)
+        .applyInPandas(solve, schema=schema)
     )
 
 
@@ -316,16 +312,14 @@ def _pairwise_repair(csr: dict, live, suspects: set, cap: float, harr) -> dict:
     return best
 
 
-# R9 route cache (reference ``router::cache``/``getCachedHops``,
-# ``router.cpp:626-688`` — per-THREAD there, per-python-WORKER here).
-# Pure memoization: results are identical with or without it. Keys
-# carry the CSR identity so different graphs never collide; bounded
-# size with whole-cache eviction (the reference clears per run).
-_CSR_CACHE: dict = {}
-_ROUTE_CACHE: dict = {}
-_ROUTE_CACHE_MAX = 200_000
+# R6/R9 hop table (reference ``router::cache``/``getCachedHops``,
+# ``router.cpp:626-688``, a per-THREAD cache there): ONE dense table per
+# (session, edge plan, level_punish), built on the driver and broadcast.
+# Same budget as the OSM shard guard (sources/osm.py): a graph whose
+# table would not fit fails on the driver before anything is broadcast.
+_HOP_TABLE_MAX_BYTES = 256 << 20
 
-_EDGES_BC_CACHE: dict = {}
+_HOP_BC_CACHE: dict = {}
 
 
 def session_token(spark) -> str:
@@ -337,71 +331,69 @@ def session_token(spark) -> str:
     return f"{sc.applicationId}:{sc.startTime}"
 
 
-def edges_broadcast(spark, edges_directed: DataFrame):
-    """Driver-side memo: ONE toPandas + broadcast per distinct edge plan
-    per session. The graph is static across queries, and a fresh collect
-    per invocation is pure serial driver time — at N->4N parallelism it
-    is the Amdahl term that caps scaling efficiency (the collect costs
-    the same at every cluster size)."""
-    key = (session_token(spark), edges_directed.semanticHash())
-    if key not in _EDGES_BC_CACHE:
-        if len(_EDGES_BC_CACHE) > 8:
-            _EDGES_BC_CACHE.clear()
-        pdf = edges_directed.select(
-            "src", "dst", "length", "level", "x1", "y1", "x2", "y2"
-        ).toPandas()
-        _EDGES_BC_CACHE[key] = spark.sparkContext.broadcast(pdf)
-    return _EDGES_BC_CACHE[key]
+def hop_table(csr: dict) -> np.ndarray:
+    """R6 all-pairs hop costs: ``H[i, j]`` = shortest-path cost from
+    state index i to state index j (float64, +inf where unreachable).
 
-_CSR_TOKEN = 0  # monotonically increasing: route-cache keys carry this
-                # token, NOT id(csr) — a dict freed after eviction can be
-                # re-allocated at the same address, aliasing stale entries.
-
-
-def csr_for_broadcast(bc, level_punish: bool = True) -> dict:
-    """Build (or reuse) the CSR for a broadcast edge table — once per
-    python worker, not once per group."""
-    global _CSR_TOKEN
-    # worker-side Broadcasts carry a stable spill path; fall back to the
-    # driver-side object id (stable for the lifetime of the broadcast
-    # because the Broadcast handle itself is kept alive by the closure)
-    bkey = getattr(bc, "_path", None) or id(bc)
-    key = (bkey, level_punish)
-    if key not in _CSR_CACHE:
-        if len(_CSR_CACHE) > 4:
-            _CSR_CACHE.clear()
-            _ROUTE_CACHE.clear()  # route entries reference evicted CSRs
-        csr = node_csr(bc.value, level_punish=level_punish)
-        _CSR_TOKEN += 1
-        csr["token"] = _CSR_TOKEN
-        _CSR_CACHE[key] = csr
-    return _CSR_CACHE[key]
+    Frontier Bellman-Ford: relax the out-arcs of the (source, node)
+    pairs improved last round, keep the minimum per (source, node) and
+    write only improvements, until none is left. Bit-exact with
+    :func:`search` for any non-negative costs: round-to-nearest is
+    monotone, so both equal the min over paths of the left-to-right
+    arc-cost sum."""
+    indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
+    n = len(indptr) - 1
+    hop = np.full((n, n), np.inf)
+    flat = hop.reshape(-1)  # a view: pair (source, node) is key source * n + node
+    key = np.arange(n) * (n + 1)
+    flat[key] = 0.0
+    deg = np.diff(indptr)
+    while len(key):
+        node = key % n
+        cnt = deg[node]
+        ends = np.cumsum(cnt)
+        arc = np.repeat(indptr[node] - ends + cnt, cnt) + np.arange(ends[-1])
+        k = np.repeat(key - node, cnt) + dsts[arc]
+        c = np.repeat(flat[key], cnt) + cost[arc]
+        better = c < flat[k]
+        order = np.lexsort((c[better], k[better]))  # min cost first per key
+        k, c = k[better][order], c[better][order]
+        first = np.ones(len(k), dtype=bool)
+        first[1:] = k[1:] != k[:-1]
+        key = k[first]
+        flat[key] = c[first]
+    return hop
 
 
-def cached_dijkstra(csr: dict, source: int, targets: set[int]) -> dict[int, float]:
-    """Memoized multi-target node search (exact-key memo): {target:
-    cost} for the reachable targets."""
-    seeds = [(source, 0.0)]
-    targets = reachable(csr, seeds, targets)
-    if not targets:
-        return {}
-    key = (csr.get("token", id(csr)), source, tuple(sorted(targets)))
-    hit = _ROUTE_CACHE.get(key)
-    if hit is None:
-        if len(_ROUTE_CACHE) > _ROUTE_CACHE_MAX:
-            _ROUTE_CACHE.clear()
-        dist, _ = search(csr, seeds, targets, heuristic(csr, targets))
-        # store ONLY the target distances: callers read targets and
-        # nothing else, and full settled-set dicts at the cache cap are
-        # gigabytes per worker (measured: 16 workers swapped the box and
-        # scaling efficiency fell off a cliff)
-        hit = {t: dist[t] for t in targets if t in dist}
-        _ROUTE_CACHE[key] = hit
-    return hit
+def hop_lookup(csr: dict) -> dict:
+    """The node-state DPs' gather source: :func:`hop_table` plus an +inf
+    row and column that :func:`index_of`'s -1 (node not in graph) reads."""
+    hop = np.pad(hop_table(csr), ((0, 1), (0, 1)), constant_values=np.inf)
+    return {"states": csr["states"], "H": hop}
+
+
+def hop_broadcast(spark, edges: DataFrame, level_punish: bool = True):
+    """Driver-side memo: ONE edge collect, :func:`hop_table` build and
+    broadcast per (session, edge plan, level_punish) — a re-collect per
+    query is serial driver time that does not shrink with cluster size.
+    The value is :func:`hop_lookup`; a graph whose table exceeds
+    ``_HOP_TABLE_MAX_BYTES`` raises before anything is broadcast."""
+    key = (session_token(spark), edges.semanticHash(), level_punish)
+    if key not in _HOP_BC_CACHE:
+        if len(_HOP_BC_CACHE) > 8:
+            _HOP_BC_CACHE.clear()
+        pdf = edges.select("src", "dst", "length", "level").toPandas()
+        csr = node_csr(pdf, level_punish=level_punish)
+        n = len(csr["states"])
+        if n * n * 8 > _HOP_TABLE_MAX_BYTES:
+            raise ValueError(f"hop table for |V| = {n:,} nodes needs {n * n * 8:,} "
+                             f"bytes, over the {_HOP_TABLE_MAX_BYTES:,}-byte budget")
+        _HOP_BC_CACHE[key] = spark.sparkContext.broadcast(hop_lookup(csr))
+    return _HOP_BC_CACHE[key]
 
 
 # ---------------------------------------------------------------------------
-# distributed hop matrix + Viterbi
+# batched node-state DPs: every trip of a bucket in one numpy layer loop
 # ---------------------------------------------------------------------------
 
 _ALIGN_SCHEMA = (
@@ -409,6 +401,111 @@ _ALIGN_SCHEMA = (
     "emission double, acc_cost double"
 )
 _DEBUG_SCHEMA = _ALIGN_SCHEMA + ", chosen boolean"
+_DP_COLS = ["trip_id", "seq", "image_id", "edge_id", "cand_node", "dist"]
+
+
+def _layer_grid(pdf: pd.DataFrame, hops: dict) -> dict:
+    """Candidate rows of many trips, any row order, laid out for the
+    batched DPs. Rows sort by (trip, seq, edge_id) — so every argmin's
+    first-minimum tie-break is the smaller edge_id — and each (trip,
+    seq) layer becomes one row of a (layer, slot) grid padded to the
+    widest layer: ``em`` (emission) and ``ni`` (hop-table index, -1 for
+    nodes missing from the graph). Padding slots hold em = +inf and
+    ni = -1, so their costs stay +inf and the first-minimum argmin
+    never picks one over a real slot. A trip's layers are consecutive
+    grid rows, ``n_lay`` of them from ``first`` on."""
+    trip = pd.factorize(pdf["trip_id"], sort=True)[0]
+    seq = pdf["seq"].to_numpy(np.int64)
+    order = np.lexsort((pdf["edge_id"].to_numpy(np.int64), seq, trip))
+    trip, seq = trip[order], seq[order]
+    new_lay = np.ones(len(order), dtype=bool)
+    new_lay[1:] = (trip[1:] != trip[:-1]) | (seq[1:] != seq[:-1])
+    lay = np.cumsum(new_lay) - 1
+    lay_start = np.flatnonzero(new_lay)
+    slot = np.arange(len(order)) - lay_start[lay]
+    lay_trip = trip[lay_start]
+    new_trip = np.ones(len(lay_start), dtype=bool)
+    new_trip[1:] = lay_trip[1:] != lay_trip[:-1]
+    first = np.flatnonzero(new_trip)
+    shape = (len(lay_start), int(slot.max()) + 1)
+    em, ni = np.full(shape, np.inf), np.full(shape, -1, dtype=np.int64)
+    em[lay, slot] = pdf["dist"].to_numpy(np.float64)[order] * C.CAND_PEN_FAC
+    ni[lay, slot] = index_of(hops, pdf["cand_node"].to_numpy(np.int64)[order])
+    return {
+        "rows": pdf[["trip_id", "seq", "image_id", "edge_id", "cand_node"]]
+        .iloc[order].reset_index(drop=True),
+        "lay": lay, "slot": slot, "lay_start": lay_start, "em": em, "ni": ni,
+        "first": first, "n_lay": np.diff(np.append(first, len(lay_start))),
+    }
+
+
+def _steps(g: dict):
+    """(previous, current) grid rows of every trip still active at each
+    layer step t >= 1."""
+    for t in range(1, int(g["n_lay"].max())):
+        cur = g["first"][g["n_lay"] > t] + t
+        yield cur - 1, cur
+
+
+def viterbi_batch(pdf: pd.DataFrame, hops: dict, debug: bool = False) -> pd.DataFrame:
+    """R7 forward DP + backtrack for every trip of ``pdf`` at once: per
+    layer, ``total = (dp + hop) + emission`` with ``hop`` the gather
+    ``H[ni[prev]][:, ni[cur]]`` and np.argmin's first minimum. Rows come
+    out sorted by (trip_id, seq[, edge_id]); see :func:`viterbi_align`
+    for the two output surfaces."""
+    g = _layer_grid(pdf, hops)
+    em, ni, hop = g["em"], g["ni"], hops["H"]
+    dp = em.copy()
+    back = np.zeros(em.shape, dtype=np.int64)
+    for prev, cur in _steps(g):
+        total = (dp[prev][:, :, None] + hop[ni[prev][:, :, None], ni[cur][:, None, :]]) \
+            + em[cur][:, None, :]
+        best = np.argmin(total, axis=1)
+        dp[cur] = np.take_along_axis(total, best[:, None, :], axis=1)[:, 0, :]
+        back[cur] = best
+    last = g["first"] + g["n_lay"] - 1
+    choice = np.zeros(len(em), dtype=np.int64)
+    choice[last] = np.argmin(dp[last], axis=1)
+    for prev, cur in reversed(list(_steps(g))):
+        choice[prev] = back[cur, choice[cur]]
+
+    out = g["rows"]
+    if debug:
+        # -T surface: every state of every layer with its forward-DP
+        # cost; chosen marks the backtracked path (== the default output)
+        out["emission"] = em[g["lay"], g["slot"]]
+        out["acc_cost"] = dp[g["lay"], g["slot"]]
+        out["chosen"] = g["slot"] == choice[g["lay"]]
+        return out
+    rows = np.arange(len(em))
+    out = out.iloc[g["lay_start"] + choice].reset_index(drop=True)
+    out["emission"] = em[rows, choice]
+    out["acc_cost"] = dp[rows, choice]
+    return out
+
+
+def greedy2_batch(pdf: pd.DataFrame, hops: dict) -> pd.DataFrame:
+    """R8 routeGreedy2 for every trip of ``pdf`` at once: layer 0 takes
+    its min-emission slot, each later layer argmin(``emission + hop``
+    from the previous choice), ``acc = acc + score`` with inf latched."""
+    g = _layer_grid(pdf, hops)
+    em, ni, hop = g["em"], g["ni"], hops["H"]
+    rows = np.arange(len(em))
+    first = g["first"]
+    pick = np.zeros(len(em), dtype=np.int64)
+    acc = np.zeros(len(em))
+    pick[first] = np.argmin(em[first], axis=1)
+    score = em[first, pick[first]]
+    acc[first] = np.where(np.isfinite(score), 0.0 + score, np.inf)
+    for prev, cur in _steps(g):
+        sc = em[cur] + hop[ni[prev, pick[prev]][:, None], ni[cur]]
+        pick[cur] = np.argmin(sc, axis=1)
+        score = sc[np.arange(len(cur)), pick[cur]]
+        acc[cur] = np.where(np.isfinite(score), acc[prev] + score, np.inf)
+    out = g["rows"].iloc[g["lay_start"] + pick].reset_index(drop=True)
+    out["emission"] = em[rows, pick]
+    out["acc_cost"] = acc
+    return out
 
 
 def viterbi_align(
@@ -420,8 +517,8 @@ def viterbi_align(
     """R7: per-trip global optimum over candidate layers.
 
     emission(cand)   = dist * CAND_PEN_FAC   (A5, station_group.cpp:56-93)
-    transition(a, b) = Dijkstra cost cand_node(a) -> cand_node(b)
-                       (R6; cross-component => +inf, router.cpp:598-599)
+    transition(a, b) = H[cand_node(a), cand_node(b)], the shortest-path
+                       cost (R6; cross-component => +inf, router.cpp:598-599)
 
     Tie-break at every argmin: smaller (cost, edge_id) — deterministic
     across partitionings (SURVEY §7 risk 1).
@@ -432,98 +529,16 @@ def viterbi_align(
     layer DP cost and a ``chosen`` flag (the chosen=true subset equals
     the default output).
     """
-    spark = candidates.sparkSession
-    bc = edges_broadcast(spark, edges_directed)
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _viterbi_one_trip(
-            pdf, csr_for_broadcast(bc, level_punish=level_punish), debug=debug
-        )
-
-    cols = ["trip_id", "seq", "image_id", "edge_id", "cand_node", "dist"]
+    bc = hop_broadcast(candidates.sparkSession, edges_directed, level_punish)
     # explicit hash repartition by the group key: AQE's byte-based
     # coalescing would collapse this tiny-by-bytes but CPU-heavy Python
     # stage onto one task; an explicit repartition is never coalesced,
     # and HashPartitioning satisfies the grouping distribution, so no
     # second shuffle is inserted.
-    n_part = dp_partitions(candidates.sparkSession)
     return bucketed_apply(
-        candidates.select(*cols), "trip_id", n_part, solve,
+        candidates.select(*_DP_COLS), "trip_id", dp_partitions(candidates.sparkSession),
+        lambda pdf: viterbi_batch(pdf, bc.value, debug=debug),
         _DEBUG_SCHEMA if debug else _ALIGN_SCHEMA,
-    )
-
-
-def _viterbi_one_trip(pdf: pd.DataFrame, csr: dict, debug: bool = False) -> pd.DataFrame:
-    """Forward DP + backtrack for one trip. Pure function — unit-testable
-    against the brute-force oracle without Spark."""
-    # flat-numpy layer prep (same shape as edge_routing._viterbi_full_one:
-    # the pandas slice/iloc version cost ~2-3 ms of scaffolding per trip);
-    # (seq, edge_id) is unique per candidate set, so this lexsort IS the
-    # old sort_values order and argmin tie-breaks are unchanged
-    seq0 = pdf["seq"].to_numpy(np.int64)
-    eid0 = pdf["edge_id"].to_numpy(np.int64)
-    order = np.lexsort((eid0, seq0))
-    seq, eid = seq0[order], eid0[order]
-    node = pdf["cand_node"].to_numpy(np.int64)[order]
-    dist = pdf["dist"].to_numpy(np.float64)[order]
-    tid = pdf["trip_id"].to_numpy()[order]
-    iid = pdf["image_id"].to_numpy()[order]
-    seqs = np.unique(seq)
-    bounds = np.append(np.searchsorted(seq, seqs), len(seq))
-    lay = [slice(int(bounds[i]), int(bounds[i + 1])) for i in range(len(seqs))]
-
-    # forward pass
-    dp_cost: list[np.ndarray] = []
-    dp_prev: list[np.ndarray] = []
-    dp_cost.append(dist[lay[0]] * C.CAND_PEN_FAC)
-    dp_prev.append(np.full(bounds[1] - bounds[0], -1, dtype=np.int64))
-    for li in range(1, len(seqs)):
-        prev_nodes = node[lay[li - 1]]
-        cur_nodes = node[lay[li]]
-        # hop matrix: one Dijkstra per distinct source node (R6)
-        trans = np.full((len(prev_nodes), len(cur_nodes)), np.inf)
-        tgt = set(int(t) for t in np.unique(cur_nodes))
-        for un in np.unique(prev_nodes):
-            d = cached_dijkstra(csr, int(un), tgt)
-            row = np.array([d.get(int(cn), np.inf) for cn in cur_nodes])
-            trans[prev_nodes == un, :] = row
-        emission = dist[lay[li]] * C.CAND_PEN_FAC
-        total = dp_cost[-1][:, None] + trans + emission[None, :]
-        # deterministic argmin: np.argmin returns first minimum; rows are
-        # pre-sorted by edge_id so ties break toward the smaller edge_id
-        best_prev = np.argmin(total, axis=0)
-        dp_cost.append(total[best_prev, np.arange(total.shape[1])])
-        dp_prev.append(best_prev)
-
-    # backtrack (argmin over final layer, first-min tie-break)
-    choice = np.zeros(len(seqs), dtype=np.int64)
-    choice[-1] = int(np.argmin(dp_cost[-1]))
-    for li in range(len(seqs) - 1, 0, -1):
-        choice[li - 1] = dp_prev[li][choice[li]]
-
-    if debug:
-        # -T surface: every state of every layer with its forward-DP
-        # cost; chosen marks the backtracked path (== the default output)
-        chosen = np.zeros(len(seq), dtype=bool)
-        chosen[bounds[:-1] + choice] = True
-        return pd.DataFrame(
-            {
-                "trip_id": tid, "seq": seq, "image_id": iid, "edge_id": eid,
-                "cand_node": node, "emission": dist * C.CAND_PEN_FAC,
-                "acc_cost": np.concatenate(dp_cost), "chosen": chosen,
-            }
-        )
-
-    pick = bounds[:-1] + choice
-    return pd.DataFrame(
-        {
-            "trip_id": tid[pick], "seq": seq[pick], "image_id": iid[pick],
-            "edge_id": eid[pick], "cand_node": node[pick],
-            "emission": dist[pick] * C.CAND_PEN_FAC,
-            "acc_cost": np.array(
-                [float(dp_cost[li][int(choice[li])]) for li in range(len(seqs))]
-            ),
-        }
     )
 
 
@@ -535,47 +550,16 @@ def greedy2_align(
     """R8 routeGreedy2 (``router.cpp:352-398``): chain from the previous
     chosen candidate — layer 0 takes its min-emission candidate, each
     later layer takes argmin(transition from previous choice + emission).
-    Cheaper than the global solve (one Dijkstra per layer), same output
+    Cheaper than the global solve (one hop row per layer), same output
     schema as viterbi_align minus acc optimality.
 
     ``level_punish=False`` makes edge cost = raw length, the variant the
     closed-form Manhattan SQL oracle checks (greedy2_manhattan)."""
-    spark = candidates.sparkSession
-    bc = edges_broadcast(spark, edges_directed)
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        csr = csr_for_broadcast(bc, level_punish=level_punish)
-        pdf = pdf.sort_values(["seq", "edge_id"], ignore_index=True)
-        seqs = sorted(pdf["seq"].unique())
-        layers = [pdf[pdf["seq"] == s].reset_index(drop=True) for s in seqs]
-        out = []
-        prev_node = None
-        acc = 0.0
-        for lay in layers:
-            em = lay["dist"].to_numpy(np.float64) * C.CAND_PEN_FAC
-            if prev_node is None:
-                score = em
-            else:
-                nodes = lay["cand_node"].to_numpy(np.int64)
-                d = cached_dijkstra(csr, int(prev_node), set(int(n) for n in np.unique(nodes)))
-                score = em + np.array([d.get(int(n), np.inf) for n in nodes])
-            i = int(np.argmin(score))  # rows pre-sorted by edge_id: ties
-            # break toward the smaller edge_id (deterministic)
-            r = lay.iloc[i]
-            acc = acc + float(score[i]) if np.isfinite(score[i]) else float("inf")
-            out.append(
-                (r["trip_id"], int(r["seq"]), r["image_id"], int(r["edge_id"]),
-                 int(r["cand_node"]), float(em[i]), float(acc))
-            )
-            prev_node = int(r["cand_node"])
-        return pd.DataFrame(
-            out,
-            columns=["trip_id", "seq", "image_id", "edge_id", "cand_node", "emission", "acc_cost"],
-        )
-
-    cols = ["trip_id", "seq", "image_id", "edge_id", "cand_node", "dist"]
-    n_part = dp_partitions(spark)
-    return bucketed_apply(candidates.select(*cols), "trip_id", n_part, solve, _ALIGN_SCHEMA)
+    bc = hop_broadcast(candidates.sparkSession, edges_directed, level_punish)
+    return bucketed_apply(
+        candidates.select(*_DP_COLS), "trip_id", dp_partitions(candidates.sparkSession),
+        lambda pdf: greedy2_batch(pdf, bc.value), _ALIGN_SCHEMA,
+    )
 
 
 def hop_shortest_paths_cogrouped(
@@ -673,13 +657,11 @@ def hop_shortest_paths(candidates: DataFrame, edges_bidir: DataFrame) -> DataFra
 
     Uniform weights on the synthetic full grid admit a closed-form
     oracle (Manhattan distance), giving a CONFIRMED correctness gate
-    for the Dijkstra kernel. Cross-component hops report +inf as NULL.
+    for the hop table. Cross-component hops report +inf as NULL.
     """
     from pyspark.sql import Window
 
-    spark = candidates.sparkSession
-    bc = edges_broadcast(spark, edges_bidir)
-
+    bc = hop_broadcast(candidates.sparkSession, edges_bidir, level_punish=False)
     w = Window.partitionBy("trip_id").orderBy("seq")
     hops = (
         candidates.filter("rank = 1")
@@ -690,16 +672,10 @@ def hop_shortest_paths(candidates: DataFrame, edges_bidir: DataFrame) -> DataFra
     )
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        csr = csr_for_broadcast(bc, level_punish=False)
-        us = pdf["cand_node"].to_numpy(np.int64)
-        vs = pdf["to_node"].to_numpy(np.int64)
-        costs = np.full(len(pdf), np.nan)
-        for u in np.unique(us):  # one multi-target Dijkstra per source
-            mask = us == u
-            d = cached_dijkstra(csr, int(u), set(int(v) for v in np.unique(vs[mask])))
-            costs[mask] = [d.get(int(v), np.nan) for v in vs[mask]]
+        hop = bc.value
+        cost = hop["H"][index_of(hop, pdf["cand_node"]), index_of(hop, pdf["to_node"])]
         out = pdf[["trip_id", "seq", "image_id", "to_image", "cand_node", "to_node"]].copy()
-        out["path_cost"] = costs
+        out["path_cost"] = np.where(np.isinf(cost), np.nan, cost)
         return out
 
     schema = (

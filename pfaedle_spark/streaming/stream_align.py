@@ -16,10 +16,12 @@ tests/test_streaming.py).
 Scale shape: state is keyed by trip_id (uniform, high-cardinality —
 no hot keys); per-trip state is the trip's own candidate rows (tiny:
 stops x top-k), NOT graph data — the road graph ships once per worker
-as the same memoized CSR broadcast the batch path uses
-(``routing.edges_broadcast``). Re-solving a trip costs O(layers x k^2)
-on arrays already in memory, so per-batch work is proportional to the
-batch's arrivals, never to the total state size.
+as the same memoized hop-table broadcast the batch path uses
+(``routing.hop_broadcast``), and a re-solve is the batch kernel
+(``routing.viterbi_batch``) over one trip. Re-solving a trip costs
+O(layers x k^2) table gathers on arrays already in memory, so
+per-batch work is proportional to the batch's arrivals, never to the
+total state size.
 
 State LIFETIME is bounded by an event-time TTL (``ttl_ms``): each
 update arms ``setTimeoutTimestamp(last event time + ttl)``; once the
@@ -39,12 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.routing import (
-    _ALIGN_SCHEMA,
-    _viterbi_one_trip,
-    csr_for_broadcast,
-    edges_broadcast,
-)
+from ..operators.routing import _ALIGN_SCHEMA, hop_broadcast, viterbi_batch
 
 # accumulated candidate layers for one trip, column-major arrays, plus
 # the max event time seen (0 when the feed carries no event time)
@@ -75,16 +72,14 @@ def stream_viterbi_align(
     ``ttl_ms`` of event time is finalized (its alignment re-emitted one
     last time from stored state) and its state row evicted.
     """
-    spark = cand_stream.sparkSession
-    bc = edges_broadcast(spark, edges_directed)
+    bc = hop_broadcast(cand_stream.sparkSession, edges_directed, level_punish)
     if ttl_ms is not None:
         cand_stream = cand_stream.withWatermark("ts", watermark_delay)
 
     def _solve(merged: pd.DataFrame, trip_id) -> pd.DataFrame:
         trip = merged.copy()
         trip["trip_id"] = trip_id
-        csr = csr_for_broadcast(bc, level_punish=level_punish)
-        return _viterbi_one_trip(trip, csr)
+        return viterbi_batch(trip, bc.value)
 
     def _unpack(state: GroupState) -> tuple:
         seqs, image_ids, edge_ids, cand_nodes, dists, max_ts = state.get

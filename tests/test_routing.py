@@ -206,3 +206,163 @@ def test_heuristic_admissibility_gate_pure():
     bad = ok.assign(length=[1.0, 100.0])  # arc cheaper than its span
     csr2 = node_csr(bad, level_punish=False)
     assert "xy" not in csr2  # heuristic dropped -> plain Dijkstra
+
+
+def _search_rows(csr):
+    """All-pairs costs from one untargeted routing.search per source."""
+    n = len(csr["states"])
+    want = np.full((n, n), np.inf)
+    for s in range(n):
+        dist, _ = routing.search(csr, [(s, 0.0)], None, None)
+        want[s, list(dist)] = list(dist.values())
+    return want
+
+
+def _random_graph_pdf():
+    """Seeded node graph: non-dyadic float costs, a zero-length arc, a
+    one-way arc, two weak components {0..19} and {21..39}, an isolated
+    id 20 and a node (39) with in-arcs but no out-arcs."""
+    import pandas as pd
+
+    rng = np.random.RandomState(5)
+    arcs = []
+    for lo, hi in ((0, 20), (21, 40)):
+        for _ in range(45):
+            u, v = rng.randint(lo, hi, 2)
+            if u != v and u != 39 and v != 39:
+                c = float(rng.uniform(0.1, 10.0) * np.pi)
+                arcs += [(u, v, c), (v, u, c * 1.1)]
+    arcs += [(0, 1, 0.0), (1, 0, 0.0), (2, 17, 0.3), (38, 39, 1.7), (25, 39, 0.7)]
+    pdf = pd.DataFrame(arcs, columns=["src", "dst", "length"]).assign(level=0)
+    assert not ((pdf.src == 17) & (pdf.dst == 2)).any()  # 2 -> 17 is one-way
+    return pdf
+
+
+def test_hop_table_equals_search(spark):
+    """routing.hop_table == per-source routing.search, bit for bit
+    (int64 bit patterns), on the main grid with and without level
+    punish and on a random graph with non-dyadic costs."""
+    edges_pdf = graph_ops.write_odir_edges(datagen.edges(spark)).select(
+        "src", "dst", "length", "level"
+    ).toPandas()
+    graphs = [
+        routing.node_csr(edges_pdf, level_punish=True),
+        routing.node_csr(edges_pdf, level_punish=False),
+        routing.node_csr(_random_graph_pdf(), level_punish=False),
+    ]
+    for csr in graphs:
+        got, want = routing.hop_table(csr), _search_rows(csr)
+        assert got.dtype == np.float64
+        assert np.array_equal(got.view(np.int64), want.view(np.int64))
+    rand = graphs[-1]
+    assert len(np.unique(rand["comp"])) >= 3  # two components + isolated 20
+    hop = routing.hop_table(rand)
+    assert hop[0, 1] == 0.0 and np.isinf(hop[2, 25]) and np.isinf(hop[39, 38])
+    assert np.isinf(hop[20]).sum() == len(hop) - 1
+
+
+def _dp_frame():
+    """Hand-built candidates over a two-component toy graph (nodes 0..5
+    and 6..8): a 1-layer trip, an 8-layer trip with 1- and 3-candidate
+    layers, a cross-component layer (every total inf) and a node (99)
+    missing from the graph, and a 2-layer trip whose last layer ties on
+    total (same node, same dist), broken by the smaller edge_id."""
+    import pandas as pd
+
+    rows = [("t1", 0, 11, 3, 4.0), ("t1", 0, 12, 1, 2.5), ("t1", 0, 13, 2, 2.5)]
+    eight = [
+        [(21, 0, 1.0), (22, 1, 0.5), (23, 2, 3.0)],
+        [(24, 3, 1.0)],
+        [(25, 4, 0.2), (26, 99, 0.1), (27, 5, 0.9)],
+        [(28, 2, 1.0), (29, 0, 2.0), (30, 1, 1.5)],
+        [(31, 6, 0.1), (32, 7, 0.2), (33, 8, 0.3)],  # cross-component
+        [(34, 7, 1.0)],
+        [(35, 8, 1.0), (36, 6, 0.5)],
+        [(37, 0, 0.0), (38, 99, 0.0), (39, 7, 0.1)],
+    ]
+    rows += [("t8", 10 * li, eid, node, d) for li, lay in enumerate(eight) for eid, node, d in lay]
+    rows += [("tie", 0, 40, 0, 1.0), ("tie", 1, 49, 1, 1.0), ("tie", 1, 44, 1, 1.0)]
+    pdf = pd.DataFrame(rows, columns=["trip_id", "seq", "edge_id", "cand_node", "dist"])
+    pdf.insert(2, "image_id", pdf.trip_id + "_" + pdf.seq.astype(str))
+    return pdf
+
+
+def _toy_hops():
+    import pandas as pd
+
+    arcs = [(0, 1, 1.5), (1, 2, 2.25), (2, 3, 0.75), (3, 4, 1.0), (4, 5, 3.0),
+            (5, 0, 0.5), (1, 0, 1.5), (3, 1, 2.0), (6, 7, 1.0), (7, 8, 1.0), (8, 6, 1.0)]
+    pdf = pd.DataFrame(arcs, columns=["src", "dst", "length"]).assign(level=0)
+    return routing.hop_lookup(routing.node_csr(pdf, level_punish=False))
+
+
+@pytest.mark.parametrize("kernel", ["viterbi", "viterbi_debug", "greedy2"])
+def test_batched_dp_equals_per_trip_calls(kernel):
+    """One multi-trip kernel call == the concatenation of one-trip calls
+    (trips in trip_id order), and shuffling the input rows changes
+    nothing. Pure numpy — no Spark session."""
+    import pandas as pd
+
+    run = {
+        "viterbi": lambda p, h: routing.viterbi_batch(p, h),
+        "viterbi_debug": lambda p, h: routing.viterbi_batch(p, h, debug=True),
+        "greedy2": routing.greedy2_batch,
+    }[kernel]
+    pdf, hops = _dp_frame(), _toy_hops()
+    got = run(pdf, hops)
+    per_trip = pd.concat(
+        [run(g, hops) for _, g in pdf.groupby("trip_id", sort=True)], ignore_index=True
+    )
+    pd.testing.assert_frame_equal(got, per_trip)
+    for seed in range(3):
+        shuffled = pdf.sample(frac=1, random_state=seed).reset_index(drop=True)
+        pd.testing.assert_frame_equal(run(shuffled, hops), got)
+
+    plain = got[got.chosen].drop(columns="chosen").reset_index(drop=True) \
+        if kernel == "viterbi_debug" else got
+    assert plain.groupby("trip_id").size().to_dict() == {"t1": 1, "t8": 8, "tie": 2}
+    assert plain[plain.trip_id == "t1"].edge_id.tolist() == [12]  # emission tie -> min edge_id
+    assert plain[plain.trip_id == "tie"].edge_id.tolist() == [40, 44]
+    t8 = plain[plain.trip_id == "t8"]
+    assert np.isfinite(t8.acc_cost.iloc[3]) and np.isinf(t8.acc_cost.iloc[4:]).all()
+    if kernel == "viterbi_debug":
+        assert len(got) == len(pdf)
+        pd.testing.assert_frame_equal(plain, routing.viterbi_batch(pdf, hops))
+
+
+def test_hop_table_guard_raises_before_broadcast(spark, monkeypatch):
+    """A graph whose hop table exceeds _HOP_TABLE_MAX_BYTES raises on the
+    driver: the edge collect (needed to learn |V|) is the only job, and
+    nothing is broadcast or memoized."""
+    eds = datagen.edges(spark)
+    cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
+    monkeypatch.setattr(routing, "_HOP_BC_CACHE", {})
+    monkeypatch.setattr(routing, "_HOP_TABLE_MAX_BYTES", 1024 * 1024 * 8 - 1)
+    sc, group = spark.sparkContext, "hop-table-guard"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="1,024 nodes"):
+            routing.viterbi_align(cand, graph_ops.write_odir_edges(eds))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert routing._HOP_BC_CACHE == {}
+
+
+def test_hop_table_built_once_per_plan(spark, monkeypatch):
+    """viterbi_align, viterbi_align(debug=True) and greedy2_align over
+    the same edge plan and level_punish share one hop table: one edge
+    collect job, one memo entry."""
+    eds = datagen.edges(spark)
+    cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
+    monkeypatch.setattr(routing, "_HOP_BC_CACHE", {})
+    sc, group = spark.sparkContext, "hop-table-once"
+    sc.setJobGroup(group, group)
+    try:
+        routing.viterbi_align(cand, graph_ops.write_odir_edges(eds))
+        routing.viterbi_align(cand, graph_ops.write_odir_edges(eds), debug=True)
+        routing.greedy2_align(cand, graph_ops.write_odir_edges(eds))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert len(routing._HOP_BC_CACHE) == 1
