@@ -510,11 +510,15 @@ def _q_self_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_shape_geoms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R10+W2: assembled trip polylines (oriented edge concat along the
-    walked Dijkstra paths) with cumulative distance."""
+    walked Dijkstra paths between viterbi_full's chosen states) with
+    cumulative distance, over the un-echoed candidate join."""
     eds = datagen.edges(spark)
+    cand = _grid_cand(spark, sf_dir)
     tbv = edge_routing.build_variant_transitions(spark, eds)
     dedges = edge_routing.directed_full_pdf(spark, eds)
-    return edge_routing.shape_assembly(_grid_cand(spark, sf_dir), tbv, dedges)
+    return edge_routing.shape_assembly(
+        edge_routing.viterbi_full(cand, tbv), cand, tbv, dedges
+    )
 
 
 def _q_eq_reach(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,8 +25,9 @@ backtrack, recursive per-pair path reconstruction, and window-sum
 geometry emission.
 
 The Spark side runs the REAL operators (candidate_edges,
-build_variant_transitions, shape_assembly) — nothing is special-cased
-for the corridor; only the input world is.
+build_variant_transitions, viterbi_full, then shape_assembly walking
+viterbi_full's chosen states) — nothing is special-cased for the
+corridor; only the input world is.
 """
 
 from __future__ import annotations
@@ -90,7 +91,8 @@ def shapes_corridor(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators (no corridor-specific engine code)."""
     eds, cand, tbv = _corridor_inputs(spark, sf_dir)
     return edge_routing.shape_assembly(
-        cand, tbv, edge_routing.directed_full_pdf(spark, eds)
+        edge_routing.viterbi_full(cand, tbv), cand, tbv,
+        edge_routing.directed_full_pdf(spark, eds),
     )
 
 

@@ -28,8 +28,12 @@ relational CTEs around ONE dialect-neutral cost string
 (:func:`cost_expr`), so every term stays bit-identically checkable.
 The shared search kernel (``routing.search`` over a
 ``routing.build_csr`` of the transitions, states = directed edge ids)
-then runs over the broadcast transitions inside ``applyInPandas``
-groups — same axis the reference parallelizes with OpenMP threads.
+then runs inside ``routing.bucketed_apply`` groups over per-variant
+CSRs that the driver builds once per call and broadcasts
+(:func:`_csr_broadcast`) — same axis the reference parallelizes with
+OpenMP threads. Each fingerprint is solved once, by
+:func:`viterbi_full`; :func:`shape_assembly` only walks its chosen
+states.
 
 At 100 TB the transitions table is graph-sized (scales with geography,
 not with the observation/image table), so building and broadcasting it
@@ -49,7 +53,10 @@ from pyspark.sql import functions as F
 from .. import sqlgen
 from ..functions import strings
 from . import graph_ops, graph_passes, gtfs_ops
-from .routing import OPTS, build_csr, heuristic, index_of, reachable, search
+from .routing import (
+    OPTS, bucketed_apply, build_csr, dp_partitions, heuristic, index_of,
+    reachable, search,
+)
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
 SIMI_EPS = 0.0001    # router.cpp:116 "cur < 0.0001 => perfect match"
@@ -535,6 +542,16 @@ def transition_csr(trans_pdf: pd.DataFrame) -> dict:
     )
 
 
+def _csr_broadcast(spark: SparkSession, transitions_by_variant: dict):
+    """``{variant: transition_csr(table)}``, built once on the driver
+    (which already holds the tables) and broadcast: workers index
+    ``bc.value[variant]`` and build nothing, so two transition dicts
+    never share worker-side state."""
+    return spark.sparkContext.broadcast(
+        {v: transition_csr(t) for v, t in transitions_by_variant.items()}
+    )
+
+
 def state_search(
     csr: dict, seeds: list[tuple[int, float]], targets: list[int], band: bool = False
 ) -> tuple[dict[int, float], dict[int, int]]:
@@ -582,6 +599,7 @@ def state_path(csr: dict, source_edge: int, target_edge: int) -> list[int] | Non
 
 
 def shape_assembly(
+    aligned: DataFrame,
     cand: DataFrame,
     transitions_by_variant: dict[int, pd.DataFrame],
     dedges_pdf: pd.DataFrame,
@@ -589,134 +607,101 @@ def shape_assembly(
     """R10 + W2: assemble the aligned trip polyline from the walked
     directed edges and emit cumulative distance along it.
 
-    Reference ``get_shape_line`` (shape_builder.cpp:80-119): walk hop
-    edge lists, orient each edge geometry by node identity ⊕ reversed
-    flag, concatenate; then the W2 running distance (:380-526). Directed
-    states already carry oriented coordinates, so orientation is the
-    state itself; hop paths come from per-winning-pair Dijkstra path
-    capture (the N×M matrix never materializes paths — only the
-    backtracked optimum re-runs 1×1 with predecessors, like the
-    reference's per-target path capture).
+    Reference ``get_shape_line`` (shape_builder.cpp:80-119): walk the
+    hop edge lists of the SOLVED route, orient each edge geometry by
+    node identity ⊕ reversed flag, concatenate; then the W2 running
+    distance (:380-526). ``aligned`` is :func:`viterbi_full`'s output
+    over the same ``cand`` — the DP does not run again here. Per
+    fingerprint representative, consecutive chosen states are joined by
+    a 1x1 :func:`state_path` (the reference's per-target path capture).
+    Directed states already carry oriented coordinates
+    (:func:`directed_arrays`), so orientation is one gather by state id
+    into ``dedges_pdf``.
 
     Output: (trip_id, pt_seq, x, y, cum_dist, hop_seq, edge_state).
     """
     spark = cand.sparkSession
-    # the candidate spatial join feeds THREE branches (fingerprints,
-    # keyed, trips) — materialize it once
+    # the candidate join feeds the fingerprint and stop-coordinate
+    # branches — materialize it once
     cand = cand.localCheckpoint(eager=False)
     fingerprints = trip_fingerprints(cand)
-    bc = spark.sparkContext.broadcast(tag_transitions(transitions_by_variant))
-    bc_edges = spark.sparkContext.broadcast(
-        dedges_pdf.set_index("edge_id")[["x1", "y1", "x2", "y2", "length"]]
+    bc = _csr_broadcast(spark, transitions_by_variant)
+    de = dedges_pdf.sort_values("edge_id")
+    bc_geo = spark.sparkContext.broadcast(
+        {c: de[c].to_numpy() for c in ("edge_id", "x1", "y1", "x2", "y2", "length")}
+    )
+    # the cluster representative's chosen states and stop coords stand
+    # in for every member, exactly as the reference copies the rep's
+    # shape to the cluster (shape_builder.cpp:219)
+    reps = (
+        fingerprints.filter(F.col("trip_id") == F.col("rep_trip"))
+        .join(aligned.select("trip_id", "seq", "state_edge"), "trip_id")
+        .join(cand.select("trip_id", "seq", "x", "y").distinct(), ["trip_id", "seq"])
+        .select("fingerprint", "variant", "seq", "state_edge", "x", "y")
     )
 
-    with_emis = cand.withColumn("emission", F.expr(emission_expr()))
-    keyed = with_emis.join(
-        fingerprints.select("trip_id", "fingerprint", "rep_trip", "variant"), "trip_id"
-    )
-    # see viterbi_full: materialize before fan-out to reps + trips join
-    keyed = keyed.localCheckpoint(eager=False)
-    reps = keyed.filter(F.col("trip_id") == F.col("rep_trip")).select(
-        "fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank",
-        "x", "y",
-    )
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        chosen = _viterbi_full_one(pdf, bc.value)
-        variant = int(pdf["variant"].iloc[0])
-        csr = _vf_csr(bc.value, variant)
-        geo = bc_edges.value
-        fpr = chosen["fingerprint"].iloc[0]
-        states = chosen.sort_values("seq")["state_edge"].tolist()
-        # stop coords per layer (constant within a seq group): the
-        # cluster representative's coords stand in for every member,
-        # exactly as the reference copies the rep's shape to the
-        # cluster (shape_builder.cpp:219)
-        stop_xy = pdf.groupby("seq")[["x", "y"]].first().sort_index()
+    def walk_one(pdf: pd.DataFrame) -> list[tuple]:
+        pdf = pdf.sort_values("seq", kind="stable").drop_duplicates("seq")
+        fpr = pdf["fingerprint"].iloc[0]
+        csr = bc.value[int(pdf["variant"].iloc[0])]
+        states = pdf["state_edge"].tolist()
         walk: list[int] = []
-        for i in range(len(states) - 1):
-            p = state_path(csr, int(states[i]), int(states[i + 1]))
-            if p is None:
-                continue
-            walk.extend(p[:-1])  # target re-enters as next hop's source
-        if states:
-            walk.append(int(states[-1]))
+        for s, t in zip(states[:-1], states[1:]):
+            p = state_path(csr, s, t)
+            if p is not None:
+                walk.extend(p[:-1])  # target re-enters as next hop's source
+        walk.append(states[-1])
+        geo = bc_geo.value
+        at = np.searchsorted(geo["edge_id"], walk)
+        sx, sy, ex, ey, ln = (geo[c][at].tolist() for c in ("x1", "y1", "x2", "y2", "length"))
 
-        def oriented(st: int):
-            e = geo.loc[st % REV_OFF]
-            if st >= REV_OFF:
-                return float(e["x2"]), float(e["y2"]), float(e["x1"]), float(e["y1"]), float(e["length"])
-            return float(e["x1"]), float(e["y1"]), float(e["x2"]), float(e["y2"]), float(e["length"])
-
-        def proj_t(px: float, py: float, st: int) -> float:
-            """Clamped projection parameter of the stop onto the state's
-            oriented segment (Geo.h projectOn:1113-1146)."""
-            sx, sy, ex, ey, _ = oriented(st)
-            len2 = (ex - sx) * (ex - sx) + (ey - sy) * (ey - sy)
+        def proj_t(px: float, py: float, k: int) -> float:
+            """Clamped projection parameter of the stop onto walked
+            state k's oriented segment (Geo.h projectOn:1113-1146)."""
+            len2 = (ex[k] - sx[k]) * (ex[k] - sx[k]) + (ey[k] - sy[k]) * (ey[k] - sy[k])
             if len2 <= 0.0:
                 return 0.0
-            t = ((px - sx) * (ex - sx) + (py - sy) * (ey - sy)) / len2
+            t = ((px - sx[k]) * (ex[k] - sx[k]) + (py - sy[k]) * (ey[k] - sy[k])) / len2
             return min(1.0, max(0.0, t))
 
         # R10 endpoint clipping (get_gtfs_shape, shape_builder.cpp:
         # 404-518): the shape starts at the FIRST stop's projection onto
         # the first chosen edge and ends at the LAST stop's projection
         # onto the last chosen edge — not at the raw edge endpoints.
-        if walk:
-            fx, fy = float(stop_xy["x"].iloc[0]), float(stop_xy["y"].iloc[0])
-            lx, ly = float(stop_xy["x"].iloc[-1]), float(stop_xy["y"].iloc[-1])
-            t0 = proj_t(fx, fy, walk[0])
-            tL = proj_t(lx, ly, walk[-1])
-            if len(walk) == 1 and tL < t0:
-                tL = t0  # degenerate single-edge trip: monotone along travel
+        x, y = pdf["x"].tolist(), pdf["y"].tolist()
+        last = len(walk) - 1
+        t0, tL = proj_t(x[0], y[0], 0), proj_t(x[-1], y[-1], last)
+        if last == 0 and tL < t0:
+            tL = t0  # degenerate single-edge trip: monotone along travel
         rows = []
         cum = 0.0
-        for hop_seq, st in enumerate(walk):
-            sx, sy, ex, ey, ln = oriented(st)
+        for k, st in enumerate(walk):
+            px, py = ex[k], ey[k]
             frac = 1.0
-            if hop_seq == 0:
+            if k == 0:
                 # clip the head: start at the projection point
-                sx = sx + t0 * (ex - sx)
-                sy = sy + t0 * (ey - sy)
+                rows.append((fpr, 0, sx[k] + t0 * (ex[k] - sx[k]),
+                             sy[k] + t0 * (ey[k] - sy[k]), 0.0, -1, st))
                 frac -= t0
-                rows.append((fpr, 0, sx, sy, 0.0, -1, int(st)))
-            if hop_seq == len(walk) - 1:
+            if k == last:
                 # clip the tail: end at the projection point
-                ex0, ey0 = ex, ey
-                sx0, sy0, _, _, _ = oriented(st)
-                ex = sx0 + tL * (ex0 - sx0)
-                ey = sy0 + tL * (ey0 - sy0)
+                px = sx[k] + tL * (ex[k] - sx[k])
+                py = sy[k] + tL * (ey[k] - sy[k])
                 frac -= 1.0 - tL
-            cum += ln * max(frac, 0.0)
-            rows.append((fpr, len(rows), ex, ey, cum, hop_seq, int(st)))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "fingerprint", "pt_seq", "x", "y", "cum_dist", "hop_seq", "edge_state",
-            ],
-        )
+            cum += ln[k] * max(frac, 0.0)
+            rows.append((fpr, len(rows), px, py, cum, k, st))
+        return rows
 
-    from .routing import dp_partitions
+    cols = ["fingerprint", "pt_seq", "x", "y", "cum_dist", "hop_seq", "edge_state"]
 
-    n_part = dp_partitions(spark)
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = [r for _, g in pdf.groupby("fingerprint", sort=False) for r in walk_one(g)]
+        return pd.DataFrame(rows, columns=cols)
 
-    # bucketed like viterbi_full: loop reps inside one pandas call so
-    # the per-group Arrow constant amortizes over distinct fingerprints
-    def solve_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = [solve(g) for _, g in pdf.groupby("fingerprint", sort=False)]
-        return pd.concat(out, ignore_index=True)
-
-    solved = (
-        reps.withColumn("_bucket", F.pmod(F.hash("fingerprint"), F.lit(n_part)))
-        .repartition(n_part, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(
-            solve_bucket,
-            schema=(
-                "fingerprint string, pt_seq long, x double, y double, "
-                "cum_dist double, hop_seq long, edge_state long"
-            ),
-        )
+    solved = bucketed_apply(
+        reps, "fingerprint", dp_partitions(spark), solve,
+        "fingerprint string, pt_seq long, x double, y double, "
+        "cum_dist double, hop_seq long, edge_state long",
     )
     trips = fingerprints.select("trip_id", "fingerprint").distinct()
     return trips.join(solved, "fingerprint").select(
@@ -772,16 +757,14 @@ def restricted_paths(spark: SparkSession) -> DataFrame:
         .select("edge_id", "dst")
         .collect()
     ]
-    trans_pdf = trans.toPandas()
-    bc = spark.sparkContext.broadcast(trans_pdf)
+    bc = spark.sparkContext.broadcast(transition_csr(trans.toPandas()))
     tgt_states = sorted(t for t, _ in targets)
     tgt_nodes = dict(targets)
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        csr = transition_csr(bc.value)
         out = []
         for fe, sn in zip(pdf["from_edge"], pdf["src_node"]):
-            d, _ = state_search(csr, [(int(fe), 0.0)], tgt_states)
+            d, _ = state_search(bc.value, [(int(fe), 0.0)], tgt_states)
             for t in tgt_states:
                 out.append((int(fe), int(sn), t, tgt_nodes[t], d.get(t)))
         return pd.DataFrame(
@@ -1016,7 +999,7 @@ def viterbi_full(
     cand = cand.localCheckpoint(eager=False)
     if fingerprints is None:
         fingerprints = trip_fingerprints(cand)
-    bc = spark.sparkContext.broadcast(tag_transitions(transitions_by_variant))
+    bc = _csr_broadcast(spark, transitions_by_variant)
 
     with_emis = cand.withColumn("emission", F.expr(emission_expr()))
     keyed = with_emis.join(
@@ -1030,34 +1013,16 @@ def viterbi_full(
         "fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank"
     )
 
-    from .routing import dp_partitions
-
-    n_part = dp_partitions(spark)
-
-    # one pandas group per fingerprint pays the Arrow+pandas per-group
-    # constant once per REPRESENTATIVE — fine when clustering collapses
-    # many trips per rep, but the main grid's structural trips are all
-    # distinct, so the constant dominated (625 groups ~ +1.5 s at
-    # sf0.1). Group a hash BUCKET of fingerprints per call instead and
-    # loop the per-rep DP inside; buckets stay the distributed axis.
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = [
-            _viterbi_full_one(g, bc.value)
-            for _, g in pdf.groupby("fingerprint", sort=False)
-        ]
-        return pd.concat(out, ignore_index=True)
-
-    solved = (
-        reps.withColumn("_bucket", F.pmod(F.hash("fingerprint"), F.lit(n_part)))
-        .repartition(n_part, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(
-            solve,
-            schema=(
-                "fingerprint string, seq long, state_edge long, edge_id long, "
-                "emission double, acc_cost double"
-            ),
+        return pd.concat(
+            [_viterbi_full_one(g, bc.value) for _, g in pdf.groupby("fingerprint", sort=False)],
+            ignore_index=True,
         )
+
+    solved = bucketed_apply(
+        reps, "fingerprint", dp_partitions(spark), solve,
+        "fingerprint string, seq long, state_edge long, edge_id long, "
+        "emission double, acc_cost double",
     )
     members = keyed.select("trip_id", "fingerprint", "seq", "image_id").distinct()
     return members.join(solved, ["fingerprint", "seq"]).select(
@@ -1081,7 +1046,7 @@ def viterbi_trip_debug(
     spark = cand.sparkSession
     one = cand.filter(F.col("trip_id") == trip_id).localCheckpoint(eager=False)
     fps = trip_fingerprints(one)
-    bc = spark.sparkContext.broadcast(tag_transitions(transitions_by_variant))
+    bc = _csr_broadcast(spark, transitions_by_variant)
     keyed = (
         one.withColumn("emission", F.expr(emission_expr()))
         .join(fps.select("trip_id", "fingerprint", "variant"), "trip_id")
@@ -1100,54 +1065,16 @@ def viterbi_trip_debug(
     )
 
 
-_VF_CSR_CACHE: dict = {}
-
-# driver-side token generator: two DIFFERENT transition tables must never
-# share a cache slot (keying on id() alone is unsafe: a dead object's
-# address can be reused). The token is minted once per transitions dict
-# on the driver and travels inside the broadcast, so executor-side
-# cache keys are collision-free by construction.
-_VF_TOKEN_COUNTER = __import__("itertools").count(1)
-
-
-class TransitionSet(dict):
-    """Transitions-by-variant mapping + an identity token (a plain dict
-    subclass: keys/iteration unchanged, the token rides as an instance
-    attribute and survives pickling into the broadcast)."""
-
-    _vf_token: tuple | None = None
-
-
-def tag_transitions(tbv: dict) -> "TransitionSet":
-    """Return a token-carrying view of a transitions-by-variant dict
-    (idempotent on already-tagged sets). All executor cache keys derive
-    from the token."""
-    if getattr(tbv, "_vf_token", None) is not None:
-        return tbv  # type: ignore[return-value]
-    out = TransitionSet(tbv)
-    out._vf_token = (id(tbv), next(_VF_TOKEN_COUNTER))
-    return out
-
-
-def _vf_csr(bc_value: dict, variant: int) -> dict:
-    key = (getattr(bc_value, "_vf_token", None), variant)
-    if key not in _VF_CSR_CACHE:
-        if len(_VF_CSR_CACHE) > 8:
-            _VF_CSR_CACHE.clear()
-        _VF_CSR_CACHE[key] = transition_csr(bc_value[variant])
-    return _VF_CSR_CACHE[key]
-
-
 def _viterbi_full_one(
-    pdf: pd.DataFrame, trans_by_variant: dict, debug: bool = False
+    pdf: pd.DataFrame, csrs: dict, debug: bool = False
 ) -> pd.DataFrame:
-    """Layered min-plus DP over directed-edge candidate states; ties
-    break toward the smaller state id (rows pre-sorted). With ``debug``,
-    emits every candidate state per layer (DP cost + chosen flag)
-    instead of the winners only."""
+    """Layered min-plus DP over directed-edge candidate states, over
+    ``csrs[variant]`` (:func:`_csr_broadcast`); ties break toward the
+    smaller state id (rows pre-sorted). With ``debug``, emits every
+    candidate state per layer (DP cost + chosen flag) instead of the
+    winners only."""
     fpr = pdf["fingerprint"].iloc[0]
-    variant = int(pdf["variant"].iloc[0])
-    csr = _vf_csr(trans_by_variant, variant)
+    csr = csrs[int(pdf["variant"].iloc[0])]
 
     # Layer prep in flat numpy (the pandas slice/concat/iloc version
     # cost ~2-3 ms PER TRIP of pure scaffolding — the dominant term on
@@ -1263,11 +1190,11 @@ def build_variant_transitions(
 
     The edges, nodes and F10 restrictions are collected once each;
     :func:`transition_arrays` then runs once per variant on the driver,
-    where the tables are needed anyway (viterbi_full and shape_assembly
-    broadcast them). Memoized per (session, edge plan, node plan): the
-    tables are deterministic functions of the graph, and the composed
-    lifecycle passes a DIFFERENT edge set than the standalone queries,
-    so the key carries the plan hashes."""
+    where the CSRs are built anyway (:func:`_csr_broadcast`). Memoized
+    per (session, edge plan, node plan): the tables are deterministic
+    functions of the graph, and the composed lifecycle passes a
+    DIFFERENT edge set than the standalone queries, so the key carries
+    the plan hashes."""
     from .. import datagen
 
     from .routing import session_token
@@ -1288,10 +1215,10 @@ def build_variant_transitions(
         )
         if len(_VARIANT_TRANS_CACHE) > 4:
             _VARIANT_TRANS_CACHE.clear()
-        _VARIANT_TRANS_CACHE[key] = tag_transitions({
+        _VARIANT_TRANS_CACHE[key] = {
             v: pd.DataFrame(transition_arrays(ed, nd, rs, rattrs_for_variant(v)))
             for v in range(N_RATTR_VARIANTS)
-        })
+        }
     return _VARIANT_TRANS_CACHE[key]
 
 

@@ -287,8 +287,9 @@ def _path_walk_ctes() -> str:
     via the sorted states array). Verified pred-rule == state_path on all 428
     hops at both graded SFs (tools/path_probe.py). Ends with
     ``walk(fid, state, hop_seq, n_walk)`` — the engine's walked state
-    sequence (each hop path minus its target, then the final chosen
-    state; unreachable hops skipped, shape_assembly's ``p is None``)."""
+    sequence: shape_assembly walks the representative's viterbi_full
+    states (each hop path minus its target, then the final chosen
+    state; unreachable hops skipped, its ``p is None``)."""
     parts = [f""",
 hops AS MATERIALIZED (
   SELECT b1.fid, b1.li AS hop, b1.state AS src_state, b2.state AS tgt_state,
@@ -358,8 +359,9 @@ def shape_geoms_grid_sql() -> str:
     shape_assembly semantics (shape_builder.cpp:80-119,404-518), float
     ops in the engine's exact order (the cumsum is a recursive CTE, one
     fl(cum + fl(len*frac)) per step — a window SUM's pairwise order
-    would not be bit-stable). echo=False: the shape_geoms query feeds
-    shape_assembly the un-echoed candidate join."""
+    would not be bit-stable). echo=False: the shape_geoms query runs
+    viterbi_full over the un-echoed candidate join and hands its chosen
+    states, with the same candidates, to shape_assembly."""
     return _dp_ctes(echo=False, trip_filter=None) + _path_walk_ctes() + """,
 wg AS MATERIALIZED (
   SELECT w.fid, w.hop_seq, w.n_walk, w.state,

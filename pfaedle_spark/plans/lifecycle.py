@@ -219,7 +219,7 @@ def checkpointed_lifecycle(
     shapes = cp.stage(
         "shapes",
         lambda: edge_routing.shape_assembly(
-            cand, _tbv(), edge_routing.directed_full_pdf(spark, edges_f)
+            aligned, cand, _tbv(), edge_routing.directed_full_pdf(spark, edges_f)
         ),
         inputs=["viterbi", "graph_edges"],
     )

@@ -519,7 +519,7 @@ def test_shape_assembly_geometric_invariants(spark):
         for v in range(ER.N_RATTR_VARIANTS)
     }
     dedges = ER.directed_full(eds).toPandas()
-    got = ER.shape_assembly(cand, tbv, dedges).toPandas()
+    got = ER.shape_assembly(ER.viterbi_full(cand, tbv), cand, tbv, dedges).toPandas()
     assert len(got) > 0
     geo = dedges.set_index("edge_id")
     # stop coords per (trip, seq) for the projection-clipped endpoints —
@@ -594,6 +594,112 @@ def test_shape_assembly_geometric_invariants(spark):
     assert first_choice.keys() == first_walk.keys()
     for t in first_choice:
         assert first_choice[t] == first_walk[t], t
+
+
+def _grid_world(spark):
+    """Main-grid edges, sf0.001 candidates and the per-variant transition
+    tables: unlike the 8x8 sub-grid, whose trips have one candidate
+    layer each, this world has multi-layer trips to walk."""
+    from pfaedle_spark.operators import candidates as cand_ops
+
+    eds = datagen.edges(spark)
+    pts = datagen.points(spark, "/root/testdata/sf0.001")
+    cand = cand_ops.candidate_edges(pts, eds).localCheckpoint(eager=True)
+    return eds, cand, ER.build_variant_transitions(spark, eds)
+
+
+def test_shape_assembly_walks_the_states_it_is_given(spark):
+    """The DP runs once: shape_assembly walks the chosen states of the
+    aligned rows it is handed. Swapping one middle layer's state of a
+    representative for its reverse twin re-routes that trip's walk
+    through the twin, still connected, and leaves every other trip's
+    shape rows unchanged."""
+    eds, cand, tbv = _grid_world(spark)
+    dedges = ER.directed_full_pdf(spark, eds)
+    vf = ER.viterbi_full(cand, tbv)
+    aligned = vf.toPandas().sort_values(["trip_id", "seq"], ignore_index=True)
+    fps = ER.trip_fingerprints(cand).toPandas().set_index("trip_id")
+    csrs = {v: ER.transition_csr(t) for v, t in tbv.items()}
+
+    def twin_of(st):
+        return st - ER.REV_OFF if st >= ER.REV_OFF else st + ER.REV_OFF
+
+    def comps(variant, sts):
+        csr = csrs[variant]
+        return csr["comp"][routing.index_of(csr, sts)].tolist()
+
+    # the main grid has two weak components, and a hop across them is
+    # skipped: take the first representative whose middle twin shares a
+    # component with both neighbouring chosen states
+    for trip in sorted(fps.index[fps.index == fps["rep_trip"]]):
+        variant = int(fps.at[trip, "variant"])
+        chosen = aligned.index[aligned["trip_id"] == trip]
+        if len(chosen) < 3:
+            continue
+        prev, mid, nxt = chosen[len(chosen) // 2 - 1: len(chosen) // 2 + 2]
+        twin = twin_of(int(aligned.at[mid, "state_edge"]))
+        sts = [int(aligned.at[prev, "state_edge"]), twin, int(aligned.at[nxt, "state_edge"])]
+        if len(set(comps(variant, sts))) == 1:
+            break
+    else:
+        pytest.fail("no representative with a walkable middle twin")
+    swapped = aligned.copy()
+    swapped.at[mid, "state_edge"] = twin
+
+    def shapes(pdf):
+        out = ER.shape_assembly(spark.createDataFrame(pdf, vf.schema), cand, tbv, dedges)
+        return out.toPandas().sort_values(["trip_id", "pt_seq"], ignore_index=True)
+
+    base, got = shapes(aligned), shapes(swapped)
+    members = set(fps.index[fps["fingerprint"] == fps.at[trip, "fingerprint"]])
+    pd.testing.assert_frame_equal(
+        base[~base["trip_id"].isin(members)].reset_index(drop=True),
+        got[~got["trip_id"].isin(members)].reset_index(drop=True),
+    )
+    walk = got.loc[got["trip_id"] == trip].iloc[1:]  # row 0: the clipped head
+    states = walk["edge_state"].tolist()
+    assert twin in states
+    assert states != base.loc[base["trip_id"] == trip, "edge_state"].iloc[1:].tolist()
+    # connected: every step is a transition, except a skipped hop
+    # between components
+    arcs = set(zip(tbv[variant]["from_edge"], tbv[variant]["to_edge"]))
+    c = comps(variant, states)
+    for a, b, ca, cb in zip(states[:-1], states[1:], c[:-1], c[1:]):
+        assert (a, b) in arcs or ca != cb, (a, b)
+    # every interior point is its walked state's oriented end point
+    ends = dedges.set_index("edge_id")
+    for st, x, y in zip(states[:-1], walk["x"].iloc[:-1], walk["y"].iloc[:-1]):
+        assert (x, y) == (ends.at[st, "x2"], ends.at[st, "y2"])
+
+
+def test_viterbi_full_never_mixes_two_transition_dicts(spark):
+    """Two transition dicts in one session never share worker state:
+    after a run over ``tbv``, a run over the same tables with every cost
+    doubled, then ``tbv`` again, each run equals the driver-side DP over
+    its own dict (the collision a worker-side CSR cache keyed on the
+    dict's identity could produce)."""
+    _, cand, tbv = _grid_world(spark)
+    doubled = {v: t.assign(cost=t["cost"] * 2.0) for v, t in tbv.items()}
+    fps = ER.trip_fingerprints(cand)
+    reps = (
+        cand.withColumn("emission", F.expr(ER.emission_expr()))
+        .join(fps, "trip_id")
+        .filter(F.col("trip_id") == F.col("rep_trip"))
+        .toPandas()
+    )
+    key = ["trip_id", "seq"]
+    runs = []
+    for table in (tbv, doubled, tbv):
+        got = ER.viterbi_full(cand, table).toPandas()
+        csrs = {v: ER.transition_csr(t) for v, t in table.items()}
+        for trip, g in reps.groupby("trip_id"):
+            want = ER._viterbi_full_one(g, csrs)
+            mine = got[got["trip_id"] == trip].sort_values("seq")
+            assert mine["state_edge"].tolist() == want["state_edge"].tolist(), trip
+            assert mine["acc_cost"].tolist() == want["acc_cost"].tolist(), trip
+        runs.append(got.sort_values(key, ignore_index=True))
+    assert (runs[1]["acc_cost"] != runs[0]["acc_cost"]).any()
+    pd.testing.assert_frame_equal(runs[0], runs[2])
 
 
 def test_trip_clusters_matches_oracle(spark):

@@ -40,7 +40,7 @@ def _iter_transitions(keyed, tbv):
     REV_OFF = edge_routing.REV_OFF
     for fpr, grp in keyed.groupby("fingerprint"):
         variant = int(grp["variant"].iloc[0])
-        csr = edge_routing._vf_csr(tbv, variant)
+        csr = edge_routing.transition_csr(tbv[variant])
         base = grp[["seq", "edge_id", "emission"]].drop_duplicates()
         fwd = base.copy()
         fwd["state"] = fwd["edge_id"]
@@ -152,7 +152,7 @@ def test_path_bf_rounds_and_pred_rule(spark):
     assert len(hops) > 100
     checked = 0
     for variant, s, t in hops[::3]:
-        csr = edge_routing._vf_csr(tbv, variant)
+        csr = edge_routing.transition_csr(tbv[variant])
         indptr, dsts, cost, stid = csr["indptr"], csr["dst"], csr["cost"], csr["states"]
         si, ti = routing.index_of(csr, [s, t]).tolist()
         assert si >= 0 and ti >= 0

@@ -81,7 +81,7 @@ def bf_rounds(csr, seeds, targets):
 
 for fpr, grp in keyed.groupby("fingerprint"):
     variant = int(grp["variant"].iloc[0])
-    csr = edge_routing._vf_csr(tbv, variant)
+    csr = edge_routing.transition_csr(tbv[variant])
     base = grp[["seq", "edge_id", "emission"]].drop_duplicates()
     fwd = base.copy(); fwd["state"] = fwd["edge_id"]
     rev = base.copy(); rev["state"] = rev["edge_id"] + REV_OFF

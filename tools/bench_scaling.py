@@ -151,8 +151,9 @@ if mode == "lifecycle":
     dedges = edge_routing.directed_full_pdf(spark, edges_f)
 
     def pipeline(p):
-        cand = candidates.candidate_edges(p, edges_f)
-        return edge_routing.shape_assembly(cand, tbv, dedges)
+        cand = candidates.candidate_edges(p, edges_f).localCheckpoint(eager=False)
+        aligned = edge_routing.viterbi_full(cand, tbv)
+        return edge_routing.shape_assembly(aligned, cand, tbv, dedges)
 elif mode == "flagship":
     def pipeline(p):
         cand = candidates.candidate_edges(p, eds)

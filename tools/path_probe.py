@@ -32,7 +32,7 @@ max_full, max_needed, n_hops, pred_mism = 0, 0, 0, 0
 for (fpr, variant), grp in reps.groupby(["fingerprint", "variant"]):
     one = grp.drop_duplicates(["seq"]).sort_values("seq")
     states = one["state_edge"].tolist()
-    csr = edge_routing._vf_csr(tbv, int(variant))
+    csr = edge_routing.transition_csr(tbv[int(variant)])
     indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
     stid = csr["states"]
     n = len(stid)
