@@ -1,18 +1,19 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship pipeline smoke at sf0.001.
-``queries()``   — one callable per implemented operator (98 queries:
+``queries()``   — one callable per implemented operator (96 queries:
                   a priority tier of new/never-driver-graded ones, then
                   the other queries rotated deterministically by round
                   so each re-enters the driver's grading window; the
                   SURVEY.md §2 map is COVERAGE.md).
-``oracle_sql()``— DuckDB-equivalent SQL per query: ALL 98 queries carry
+``oracle_sql()``— DuckDB-equivalent SQL per query: ALL 96 queries carry
                   bit-identical oracles (0 rows-only since round 5).
                   Highlights: the MAIN-grid full-cost Viterbi, -T
                   debug, AND R10 shape assembly (dp-seeded
                   lexicographic unrolled-BF layer DP + min-achieving-
                   pred path walk, operators/gridviterbi.py); the
-                  MAIN-grid node-state Viterbi + greedy2 alignments
+                  MAIN-grid node-state Viterbi + greedy2 alignments,
+                  entry()'s flagship chain and the node-state -T rows
                   (shared exact-dyadic BF hop table,
                   operators/nodedp.py); the REAL-world eval chain over
                   the aligned path — segmentize's projectOnAfter cut
@@ -20,9 +21,8 @@
                   accumulated), the d_f histogram, the sequential
                   print_stats accumulator — and Douglas-Peucker as an
                   interval-splitting recursion (operators/evalsql.py);
-                  recursive-CTE oracles for the Manhattan-variant
-                  greedy2/Viterbi DPs; the per-hop Fréchet
-                  Eiter/Mannila DP (max AND accumulated-sum variants);
+                  the per-hop Fréchet Eiter/Mannila DP (max AND
+                  accumulated-sum variants);
                   the round-unrolled composed lifecycle graph with its
                   candidate join / penalty model / transitive-closure
                   components; the shared-intermediate dedup chain; and
@@ -560,64 +560,34 @@ def _q_greedy2_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     return routing.greedy2_align(cand, graph_ops.write_odir_edges(eds))
 
 
-_ALIGNED_MEMO: dict[tuple[str, str], DataFrame] = {}
-_GRID_CAND_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _grid_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized main-grid J5 candidate join (eager
-    localCheckpoint), shared by the DP consumers (viterbi_full,
-    shape_geoms, trip_clusters, trip_debug, viterbi_align's memo) —
-    each otherwise re-runs the identical cell join. candidates_knn and
-    greedy_assign deliberately do NOT use it: their graded rows and
-    plan assertions cover the live join itself."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _GRID_CAND_MEMO.get(key)
-    if hit is not None:
-        return hit
-    cand = candidates.candidate_edges(
-        datagen.points(spark, sf_dir), datagen.edges(spark)
-    ).localCheckpoint(eager=True)
-    if len(_GRID_CAND_MEMO) > 4:
-        # unpersist evicted checkpoint blocks (they'd otherwise stay
-        # pinned in executor storage until context shutdown)
-        for old in _GRID_CAND_MEMO.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _GRID_CAND_MEMO.clear()
-    _GRID_CAND_MEMO[key] = cand
-    return cand
+    """Session-memoized main-grid J5 candidate join, shared by the DP
+    consumers (viterbi_full, shape_geoms, trip_clusters, trip_debug,
+    trip_debug_align, viterbi_align's memo) — each otherwise re-runs
+    the identical cell join. candidates_knn and greedy_assign
+    deliberately do NOT use it: their graded rows and plan assertions
+    cover the live join itself."""
+    return routing.checkpoint_memo(
+        spark, ("grid_cand", sf_dir),
+        lambda: candidates.candidate_edges(
+            datagen.points(spark, sf_dir), datagen.edges(spark)
+        ),
+    )
 
 
 def _viterbi_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The R7 node-state alignment shared by viterbi_align and the four
     eval consumers (frechet_eval, df_histogram, segmentize,
-    eval_summary). Deterministic per (session, sf_dir); memoized behind
-    an eager localCheckpoint so the candidates -> alignment DP runs
-    once per session instead of once per query."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _ALIGNED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    eds = datagen.edges(spark)
-    aligned = routing.viterbi_align(
-        _grid_cand(spark, sf_dir), graph_ops.write_odir_edges(eds)
-    ).localCheckpoint(eager=True)
-    if len(_ALIGNED_MEMO) > 4:
-        for old in _ALIGNED_MEMO.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _ALIGNED_MEMO.clear()
-    _ALIGNED_MEMO[key] = aligned
-    return aligned
+    eval_summary). Deterministic per (session, sf_dir); memoized so the
+    candidates -> alignment DP runs once per session instead of once
+    per query."""
+    return routing.checkpoint_memo(
+        spark, ("aligned", sf_dir),
+        lambda: routing.viterbi_align(
+            _grid_cand(spark, sf_dir),
+            graph_ops.write_odir_edges(datagen.edges(spark)),
+        ),
+    )
 
 
 def _aligned_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,29 +640,16 @@ def _q_trip_debug(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edge_routing.viterbi_trip_debug(_grid_cand(spark, sf_dir), tbv, "trip_3")
 
 
-def _q_trip_debug_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The -T debug surface on the Manhattan world: EVERY candidate
-    state of one trip with its forward-DP layer cost and the chosen
-    flag — fully SQL-oracled (the shared Manhattan CTE chain's dp table
-    holds all states, LEFT JOINed to its backtrack). The full-cost
-    trip_debug keeps its py-ref gate (chosen rows == viterbi_full)."""
+def _q_trip_debug_align(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The node-state -T surface (app.cpp:206-224): EVERY candidate
+    state of one trip with its forward-DP layer cost under the full
+    cost model and the backtrack's chosen flag — oracled by
+    nodedp.trip_debug_align_grid_sql."""
     eds = datagen.edges(spark)
-    bidir = graph_ops.write_odir_edges(eds.withColumn("oneway", F.lit(False)))
-    pts = datagen.points(spark, sf_dir).filter(F.col("trip_id") == "trip_3")
-    cand = candidates.candidate_edges(pts, eds)
-    return routing.viterbi_align(cand, bidir, level_punish=False, debug=True)
-
-
-def _trip_debug_manhattan_sql() -> str:
-    return _viterbi_manhattan_ctes() + """
-SELECT d.trip_id, d.seq, d.image_id, d.edge_id, d.cand_node,
-       d.em AS emission, d.dp AS acc_cost,
-       (b.edge_id IS NOT NULL) AS chosen
-FROM dp d
-LEFT JOIN back b
-  ON b.trip_id = d.trip_id AND b.seq = d.seq AND b.edge_id = d.edge_id
-WHERE d.trip_id = 'trip_3'
-"""
+    # filtering the memoized candidate join equals joining the
+    # pre-filtered points: the J5 join/rank are per-image
+    cand = _grid_cand(spark, sf_dir).filter(F.col("trip_id") == nodedp.DEBUG_TRIP)
+    return routing.viterbi_align(cand, graph_ops.write_odir_edges(eds), debug=True)
 
 
 def _q_frechet_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -707,27 +664,17 @@ def _q_frechet_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _frechet_hops_df(spark, sf_dir)
 
 
-_HOPS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _frechet_hops_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-hop Eiter/Mannila DP rows shared by frechet_hops,
     eval_hops_summary and df_histogram_hops — memoized per (session,
-    sf_dir) behind an eager localCheckpoint like ``_viterbi_aligned``."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _HOPS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    stops = datagen.fh_stops(spark, sf_dir).select(
-        "trip_id", "stop_seq", "x", "y"
+    sf_dir) like ``_viterbi_aligned``."""
+    return routing.checkpoint_memo(
+        spark, ("frechet_hops", sf_dir),
+        lambda: evalmetrics.frechet_hops(
+            datagen.fh_aligned(spark, sf_dir),
+            datagen.fh_stops(spark, sf_dir).select("trip_id", "stop_seq", "x", "y"),
+        ),
     )
-    out = evalmetrics.frechet_hops(
-        datagen.fh_aligned(spark, sf_dir), stops
-    ).localCheckpoint(eager=True)
-    _HOPS_MEMO[key] = out
-    return out
 
 
 def _q_acc_frechet_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -900,7 +847,7 @@ _PRIORITY = [
     "eval_hops_summary", "df_histogram_hops",
     "lifecycle_candidates", "lifecycle_penalties", "lifecycle_components",
     "dedup_chain", "phash_clusters", "simplify_staircase",
-    "flagship_manhattan", "trip_debug_manhattan", "shapes_corridor",
+    "flagship", "trip_debug_align", "shapes_corridor",
     "viterbi_corridor", "trip_debug_corridor",
     "tile_vector", "tile_raster", "raster_to_vector", "tile_pyramid",
     "corpus_gate",
@@ -999,10 +946,8 @@ def _queries_ordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "alt_name_simi": _q_alt_name_simi,
         "self_edges": _q_self_edges,
         "netgraph_usage": _q_netgraph_usage,
-        "greedy2_manhattan": _q_greedy2_manhattan,
-        "viterbi_manhattan": _q_viterbi_manhattan,
-        "flagship_manhattan": _q_flagship_manhattan,
-        "trip_debug_manhattan": _q_trip_debug_manhattan,
+        "flagship": _flagship,
+        "trip_debug_align": _q_trip_debug_align,
         "shapes_corridor": corridor.shapes_corridor,
         "viterbi_corridor": corridor.viterbi_corridor,
         "trip_debug_corridor": corridor.trip_debug_corridor,
@@ -1046,193 +991,6 @@ def _q_restricted_paths_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame
     """Broadcast-free restricted routing (component-cogrouped transition
     subgraphs) — same semantics and oracle as restricted_paths."""
     return edge_routing.restricted_paths_cogrouped(spark)
-
-
-def _q_greedy2_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R8 greedy2 on the unpunished bidirectional grid — the variant
-    whose per-layer Dijkstra hop has the Manhattan closed form, so the
-    WHOLE chained argmin is SQL-checkable (recursive CTE oracle). The
-    full-cost variant (greedy2_align) keeps its py-ref gates."""
-    eds = datagen.edges(spark)
-    bidir = graph_ops.write_odir_edges(eds.withColumn("oneway", F.lit(False)))
-    cand = candidates.candidate_edges(datagen.points(spark, sf_dir), eds)
-    return routing.greedy2_align(cand, bidir, level_punish=False)
-
-
-def _greedy2_manhattan_sql() -> str:
-    """Recursive-CTE oracle: walk each trip's layers in seq order; per
-    step pick argmin(hop + emission) with (score, edge_id) tie-break —
-    hop = Manhattan x spacing on the same river side, +inf across
-    (exactly the unpunished grid's shortest path)."""
-    g, rc, sp = C.GRID_N, C.RIVER_COL, C.GRID_SPACING
-    fac = C.CAND_PEN_FAC
-    hop = (
-        f"CASE WHEN (g.cand_node % {g} < {rc}) = (n.cand_node % {g} < {rc}) "
-        f"THEN (ABS(g.cand_node // {g} - n.cand_node // {g}) "
-        f"    + ABS(g.cand_node % {g} - n.cand_node % {g})) * {sp!r} "
-        f"ELSE CAST('infinity' AS DOUBLE) END"
-    )
-    return candidates.candidates_cte_sql() + f""",
-cand_m AS MATERIALIZED (SELECT * FROM cand),
-layers AS MATERIALIZED (SELECT DISTINCT trip_id, seq FROM cand_m),
-nxt AS MATERIALIZED (
-  SELECT trip_id, seq,
-         LEAD(seq) OVER (PARTITION BY trip_id ORDER BY seq) AS next_seq
-  FROM layers
-),
-first_layer AS MATERIALIZED (SELECT trip_id, MIN(seq) AS seq FROM layers GROUP BY trip_id),
-greedy AS (
-  WITH RECURSIVE g(trip_id, seq, image_id, edge_id, cand_node, emission, acc_cost) AS (
-    SELECT trip_id, seq, image_id, edge_id, cand_node, em, em FROM (
-      SELECT c.trip_id, c.seq, c.image_id, c.edge_id, c.cand_node,
-             c.dist * {fac!r} AS em,
-             ROW_NUMBER() OVER (PARTITION BY c.trip_id
-                                ORDER BY c.dist * {fac!r} ASC, c.edge_id ASC) AS rk
-      FROM cand_m c JOIN first_layer f ON f.trip_id = c.trip_id AND f.seq = c.seq
-    ) WHERE rk = 1
-    UNION ALL
-    SELECT trip_id, seq, image_id, edge_id, cand_node, em, acc FROM (
-      SELECT n.trip_id, n.seq, n.image_id, n.edge_id, n.cand_node,
-             n.dist * {fac!r} AS em,
-             g.acc_cost + (n.dist * {fac!r} + {hop}) AS acc,
-             ROW_NUMBER() OVER (PARTITION BY n.trip_id
-                                ORDER BY (n.dist * {fac!r} + {hop}) ASC,
-                                         n.edge_id ASC) AS rk
-      FROM (SELECT gg.*, x.next_seq
-            FROM g gg JOIN nxt x ON x.trip_id = gg.trip_id AND x.seq = gg.seq
-            WHERE x.next_seq IS NOT NULL) g
-      JOIN cand_m n ON n.trip_id = g.trip_id AND n.seq = g.next_seq
-    ) WHERE rk = 1
-  )
-  SELECT * FROM g
-)
-SELECT trip_id, seq, image_id, edge_id, cand_node, emission, acc_cost
-FROM greedy
-"""
-
-
-def _q_flagship_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FLAGSHIP e2e chain (entry(): candidates -> Viterbi -> tile
-    assignment) in its Manhattan variant — the whole headline pipeline
-    SQL-oracled end to end: the candidate cell join, the forward DP +
-    backtrack recursive CTEs, the observation re-join and the tile
-    cell id compose into ONE DuckDB statement."""
-    pts = datagen.points(spark, sf_dir)
-    eds = datagen.edges(spark)
-    bidir = graph_ops.write_odir_edges(eds.withColumn("oneway", F.lit(False)))
-    cand = candidates.candidate_edges(pts, eds)
-    aligned = routing.viterbi_align(cand, bidir, level_punish=False)
-    return cells.tile_assign(
-        aligned.join(pts.select("image_id", "x", "y"), "image_id")
-    )
-
-
-def _flagship_manhattan_sql() -> str:
-    """entry()'s exact output contract (image_id..cell_id) over the
-    Manhattan-variant DP chain plus the tile grid id (Grid.h:269-280)."""
-    from pfaedle_spark import sqlgen
-
-    return f"""WITH vit AS (
-{_viterbi_manhattan_sql()}
-),{sqlgen.points_cte()}
-SELECT v.image_id, v.trip_id, v.seq, v.edge_id, v.cand_node,
-       v.emission, v.acc_cost, p.x, p.y,
-       {sqlgen.cell_id('p.x', 'p.y')} AS cell_id
-FROM vit v JOIN points p USING (image_id)
-"""
-
-
-def _q_viterbi_manhattan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R7 global Viterbi on the unpunished bidirectional grid — the
-    variant whose hop matrix has the Manhattan closed form, so the WHOLE
-    forward DP + backtrack is SQL-checkable (two recursive CTEs). The
-    full-cost variants (viterbi_align / viterbi_full) keep their py-ref
-    brute-force gates."""
-    eds = datagen.edges(spark)
-    bidir = graph_ops.write_odir_edges(eds.withColumn("oneway", F.lit(False)))
-    cand = candidates.candidate_edges(datagen.points(spark, sf_dir), eds)
-    return routing.viterbi_align(cand, bidir, level_punish=False)
-
-
-def _viterbi_manhattan_ctes() -> str:
-    """Shared CTE chain for the Manhattan-variant R7 oracles: candidates
-    -> forward recursive DP (EVERY layer's per-candidate cost + best
-    predecessor) -> backtrack. Final SELECTs differ per query
-    (chosen-path for viterbi/flagship, full-state for trip debug)."""
-    g, rc, sp = C.GRID_N, C.RIVER_COL, C.GRID_SPACING
-    fac = C.CAND_PEN_FAC
-    hop = (
-        f"CASE WHEN (p.cand_node % {g} < {rc}) = (n.cand_node % {g} < {rc}) "
-        f"THEN (ABS(p.cand_node // {g} - n.cand_node // {g}) "
-        f"    + ABS(p.cand_node % {g} - n.cand_node % {g})) * {sp!r} "
-        f"ELSE CAST('infinity' AS DOUBLE) END"
-    )
-    return candidates.candidates_cte_sql() + f""",
-cand_m AS MATERIALIZED (SELECT * FROM cand),
-layers AS MATERIALIZED (SELECT DISTINCT trip_id, seq FROM cand_m),
-nxt AS MATERIALIZED (
-  SELECT trip_id, seq,
-         LEAD(seq) OVER (PARTITION BY trip_id ORDER BY seq) AS next_seq
-  FROM layers
-),
-first_layer AS MATERIALIZED (SELECT trip_id, MIN(seq) AS seq FROM layers GROUP BY trip_id),
-last_layer AS MATERIALIZED (SELECT trip_id, MAX(seq) AS seq FROM layers GROUP BY trip_id),
-dp AS MATERIALIZED (
-  WITH RECURSIVE fwd(trip_id, seq, edge_id, cand_node, image_id, em, dp, prev_edge) AS (
-    SELECT c.trip_id, c.seq, c.edge_id, c.cand_node, c.image_id,
-           c.dist * {fac!r}, c.dist * {fac!r}, CAST(-1 AS BIGINT)
-    FROM cand_m c JOIN first_layer f ON f.trip_id = c.trip_id AND f.seq = c.seq
-    UNION ALL
-    SELECT trip_id, seq, edge_id, cand_node, image_id, em, total, prev_edge FROM (
-      SELECT n.trip_id, n.seq, n.edge_id, n.cand_node, n.image_id,
-             n.dist * {fac!r} AS em,
-             (p.dp + {hop}) + n.dist * {fac!r} AS total,
-             p.edge_id AS prev_edge,
-             ROW_NUMBER() OVER (PARTITION BY n.trip_id, n.seq, n.edge_id
-                                ORDER BY (p.dp + {hop}) + n.dist * {fac!r} ASC,
-                                         p.edge_id ASC) AS rk
-      FROM (SELECT f.*, x.next_seq
-            FROM fwd f JOIN nxt x ON x.trip_id = f.trip_id AND x.seq = f.seq
-            WHERE x.next_seq IS NOT NULL) p
-      JOIN cand_m n ON n.trip_id = p.trip_id AND n.seq = p.next_seq
-    ) WHERE rk = 1
-  )
-  SELECT * FROM fwd
-),
-prv AS MATERIALIZED (
-  SELECT trip_id, seq,
-         LAG(seq) OVER (PARTITION BY trip_id ORDER BY seq) AS prev_seq
-  FROM layers
-),
-back AS (
-  WITH RECURSIVE bk(trip_id, seq, edge_id) AS (
-    SELECT trip_id, seq, edge_id FROM (
-      SELECT d.trip_id, d.seq, d.edge_id,
-             ROW_NUMBER() OVER (PARTITION BY d.trip_id
-                                ORDER BY d.dp ASC, d.edge_id ASC) AS rk
-      FROM dp d JOIN last_layer l ON l.trip_id = d.trip_id AND l.seq = d.seq
-    ) WHERE rk = 1
-    UNION ALL
-    SELECT d.trip_id, p.prev_seq, d.prev_edge
-    FROM bk b
-    JOIN dp d ON d.trip_id = b.trip_id AND d.seq = b.seq AND d.edge_id = b.edge_id
-    JOIN prv p ON p.trip_id = b.trip_id AND p.seq = b.seq
-    WHERE p.prev_seq IS NOT NULL
-  )
-  SELECT * FROM bk
-)"""
-
-
-def _viterbi_manhattan_sql() -> str:
-    """Float parity: the DP total is built as (dp + hop) + em in both
-    engines; argmin ties -> smaller edge_id (the engine's first-minimum
-    over edge_id-sorted rows)."""
-    return _viterbi_manhattan_ctes() + """
-SELECT d.trip_id, d.seq, d.image_id, d.edge_id, d.cand_node,
-       d.em AS emission, d.dp AS acc_cost
-FROM back b
-JOIN dp d ON d.trip_id = b.trip_id AND d.seq = b.seq AND d.edge_id = b.edge_id
-"""
 
 
 def _frechet_hops_sql() -> str:
@@ -1684,10 +1442,8 @@ FROM stations s JOIN station_nodes n ON s.true_node_id = n.node_id
 """,
         "station_groups": stations.station_groups_sql(),
         "edge_tracks": osmfilter.edge_tracks_sql(),
-        "greedy2_manhattan": _greedy2_manhattan_sql(),
-        "viterbi_manhattan": _viterbi_manhattan_sql(),
-        "flagship_manhattan": _flagship_manhattan_sql(),
-        "trip_debug_manhattan": _trip_debug_manhattan_sql(),
+        "flagship": nodedp.flagship_grid_sql(),
+        "trip_debug_align": nodedp.trip_debug_align_grid_sql(),
         "shapes_corridor": corridor.shapes_corridor_sql(),
         "viterbi_corridor": corridor.viterbi_corridor_sql(),
         "trip_debug_corridor": corridor.trip_debug_corridor_sql(),

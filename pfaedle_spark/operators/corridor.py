@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import datagen
 from . import candidates, edge_routing
+from .routing import checkpoint_memo
 from .edge_routing import (
     OPTS,
     REV_OFF,
@@ -54,34 +55,18 @@ from .. import constants as C
 BF_ROUNDS = C.COR_EDGES + 10
 
 
-_CAND_MEMO: dict = {}
-
-
 def _corridor_inputs(spark: SparkSession, sf_dir: str):
     """Session-memoized shared prefix of the three corridor queries:
-    the J5 candidate join (eager localCheckpoint — shapes_corridor,
+    the J5 candidate join (routing.checkpoint_memo — shapes_corridor,
     viterbi_corridor and trip_debug_corridor would otherwise each
     re-run the cell join) plus the transition tables (already memoized
     per (session, plan) inside build_variant_transitions)."""
-    from .routing import session_token
-
     eds = datagen.corridor_edges(spark)
     nds = datagen.corridor_nodes(spark)
-    key = (session_token(spark), sf_dir)
-    cand = _CAND_MEMO.get(key)
-    if cand is None:
-        if len(_CAND_MEMO) > 4:
-            # release evicted checkpoint blocks, don't just drop the refs
-            for old in _CAND_MEMO.values():
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            _CAND_MEMO.clear()
-        cand = candidates.candidate_edges(
-            datagen.corridor_points(spark, sf_dir), eds
-        ).localCheckpoint(eager=True)
-        _CAND_MEMO[key] = cand
+    cand = checkpoint_memo(
+        spark, ("corridor_cand", sf_dir),
+        lambda: candidates.candidate_edges(datagen.corridor_points(spark, sf_dir), eds),
+    )
     tbv = edge_routing.build_variant_transitions(spark, eds, nodes=nds)
     return eds, cand, tbv
 
@@ -448,8 +433,8 @@ DEBUG_TRIP = "ctrip_3"
 def trip_debug_corridor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``pfaedle -T`` debug surface under the FULL cost model on the
     corridor: every directed-edge candidate state of one trip with its
-    banded-DP layer cost and the backtrack's chosen flag — the
-    full-cost twin of ``trip_debug_manhattan`` (which runs unpunished).
+    banded-DP layer cost and the backtrack's chosen flag (the
+    node-state twin on the main grid is ``trip_debug_align``).
     Inf acc_cost rows are real: they are the states every seed pair
     reaches only outside the R5 hop band."""
     _, cand, tbv = _corridor_inputs(spark, sf_dir)

@@ -3,8 +3,8 @@
 Closes the round-4 verdict's largest trust gap: ``viterbi_full`` (R7
 with the complete model — directed-edge candidate states, A5 emissions,
 full R3 transition costs with restrictions and per-trip route-attr
-variants, A1 clustering) was rows-only on the main grid; its bit-exact
-twins lived on purpose-built exact worlds (Manhattan, corridor).
+variants, A1 clustering) was rows-only on the main grid; its only
+bit-exact twin lived on a purpose-built exact world (the corridor).
 
 This generator produces a DuckDB statement that reproduces the engine
 (``edge_routing.viterbi_full``) bit-for-bit on the REAL grid world with

@@ -1,7 +1,9 @@
 """SQL oracles for the NODE-state DPs on the main grid: ``viterbi_align``
 (R7 over cand_node states, routing.viterbi_align) and ``greedy2_align``
-(R8 routeGreedy2, routing.greedy2_align). Closes two more of the
-rows-only surfaces with bit-exact DuckDB twins.
+(R8 routeGreedy2, routing.greedy2_align), plus two surfaces built on
+the viterbi chain: ``flagship`` (entry()'s candidates -> Viterbi ->
+tile cell chain) and ``trip_debug_align`` (the node-state -T debug
+rows). All at full level-punish cost, bit-exact.
 
 Exactness:
 
@@ -41,10 +43,14 @@ Reference semantics: router.cpp:408-549 (layer DP), router.cpp:352-398
 from __future__ import annotations
 
 from .. import constants as C
+from .. import sqlgen
 from . import candidates
 from .gridviterbi import N_LAYERS
 
 NODE_BF_ROUNDS = 56
+
+# the trip whose every candidate state the -T surface lists
+DEBUG_TRIP = "trip_3"
 
 _INF = "CAST('infinity' AS DOUBLE)"
 
@@ -185,6 +191,35 @@ valigned AS MATERIALIZED (
   JOIN crow c ON c.trip_id = b.trip_id AND c.li = b.li AND c.rix = b.rix
 )""")
     return "".join(parts)
+
+
+def flagship_grid_sql() -> str:
+    """Oracle for ``entry()``'s chain (``flagship``): the
+    ``viterbi_align`` oracle re-joined to its observations, plus the
+    tile grid cell id (Grid.h:269-280)."""
+    return f"""WITH vit AS (
+{viterbi_align_grid_sql()}
+),{sqlgen.points_cte()}
+SELECT v.image_id, v.trip_id, v.seq, v.edge_id, v.cand_node,
+       v.emission, v.acc_cost, p.x, p.y,
+       {sqlgen.cell_id('p.x', 'p.y')} AS cell_id
+FROM vit v JOIN points p USING (image_id)
+"""
+
+
+def trip_debug_align_grid_sql() -> str:
+    """Oracle for ``trip_debug_align`` (``viterbi_align(debug=True)``):
+    every DP state of ``DEBUG_TRIP`` with its layer cost, ``chosen`` =
+    membership in the backtrack. The DP is per trip, so filtering the
+    output equals filtering the candidates first."""
+    return viterbi_align_grid_sql(final_select=False) + f"""
+SELECT c.trip_id, c.seq, c.image_id, c.edge_id, c.cand_node, c.emission,
+       d.dp AS acc_cost, (b.rix IS NOT NULL) AS chosen
+FROM dpall d
+JOIN crow c ON c.trip_id = d.trip_id AND c.li = d.li AND c.rix = d.rix
+LEFT JOIN vback b ON b.trip_id = d.trip_id AND b.li = d.li AND b.rix = d.rix
+WHERE d.trip_id = '{DEBUG_TRIP}'
+"""
 
 
 def greedy2_align_grid_sql() -> str:

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import heapq
 import math
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -331,6 +332,32 @@ def session_token(spark) -> str:
     return f"{sc.applicationId}:{sc.startTime}"
 
 
+# eager-checkpointed intermediates several queries of one session share
+# (the candidate join, the aligned path, the staircase Fréchet rows)
+_CHECKPOINT_MEMO: OrderedDict = OrderedDict()
+_CHECKPOINT_MEMO_MAX = 8
+
+
+def checkpoint_memo(spark, key: tuple, build) -> DataFrame:
+    """``build()`` behind an eager localCheckpoint, memoized per
+    (session, ``key``) so its consumers run it once per session. The
+    memo holds at most ``_CHECKPOINT_MEMO_MAX`` frames and drops the
+    least recently used one beyond that. Dropping the reference is all
+    eviction can do: ``unpersist()`` does not release localCheckpoint
+    blocks; the ContextCleaner frees them once no frame references the
+    checkpointed RDD."""
+    key = (session_token(spark), *key)
+    hit = _CHECKPOINT_MEMO.get(key)
+    if hit is not None:
+        _CHECKPOINT_MEMO.move_to_end(key)
+        return hit
+    out = build().localCheckpoint(eager=True)
+    _CHECKPOINT_MEMO[key] = out
+    while len(_CHECKPOINT_MEMO) > _CHECKPOINT_MEMO_MAX:
+        _CHECKPOINT_MEMO.popitem(last=False)
+    return out
+
+
 def hop_table(csr: dict) -> np.ndarray:
     """R6 all-pairs hop costs: ``H[i, j]`` = shortest-path cost from
     state index i to state index j (float64, +inf where unreachable).
@@ -509,10 +536,7 @@ def greedy2_batch(pdf: pd.DataFrame, hops: dict) -> pd.DataFrame:
 
 
 def viterbi_align(
-    candidates: DataFrame,
-    edges_directed: DataFrame,
-    level_punish: bool = True,
-    debug: bool = False,
+    candidates: DataFrame, edges_directed: DataFrame, debug: bool = False
 ) -> DataFrame:
     """R7: per-trip global optimum over candidate layers.
 
@@ -529,7 +553,7 @@ def viterbi_align(
     layer DP cost and a ``chosen`` flag (the chosen=true subset equals
     the default output).
     """
-    bc = hop_broadcast(candidates.sparkSession, edges_directed, level_punish)
+    bc = hop_broadcast(candidates.sparkSession, edges_directed)
     # explicit hash repartition by the group key: AQE's byte-based
     # coalescing would collapse this tiny-by-bytes but CPU-heavy Python
     # stage onto one task; an explicit repartition is never coalesced,
@@ -542,20 +566,13 @@ def viterbi_align(
     )
 
 
-def greedy2_align(
-    candidates: DataFrame,
-    edges_directed: DataFrame,
-    level_punish: bool = True,
-) -> DataFrame:
+def greedy2_align(candidates: DataFrame, edges_directed: DataFrame) -> DataFrame:
     """R8 routeGreedy2 (``router.cpp:352-398``): chain from the previous
     chosen candidate — layer 0 takes its min-emission candidate, each
     later layer takes argmin(transition from previous choice + emission).
     Cheaper than the global solve (one hop row per layer), same output
-    schema as viterbi_align minus acc optimality.
-
-    ``level_punish=False`` makes edge cost = raw length, the variant the
-    closed-form Manhattan SQL oracle checks (greedy2_manhattan)."""
-    bc = hop_broadcast(candidates.sparkSession, edges_directed, level_punish)
+    schema as viterbi_align minus acc optimality."""
+    bc = hop_broadcast(candidates.sparkSession, edges_directed)
     return bucketed_apply(
         candidates.select(*_DP_COLS), "trip_id", dp_partitions(candidates.sparkSession),
         lambda pdf: greedy2_batch(pdf, bc.value), _ALIGN_SCHEMA,

@@ -56,7 +56,6 @@ _CAND_COLS = ["seq", "image_id", "edge_id", "cand_node", "dist"]
 def stream_viterbi_align(
     cand_stream: DataFrame,
     edges_directed: DataFrame,
-    level_punish: bool = True,
     ttl_ms: int | None = None,
     watermark_delay: str = "0 seconds",
 ) -> DataFrame:
@@ -72,7 +71,7 @@ def stream_viterbi_align(
     ``ttl_ms`` of event time is finalized (its alignment re-emitted one
     last time from stored state) and its state row evicted.
     """
-    bc = hop_broadcast(cand_stream.sparkSession, edges_directed, level_punish)
+    bc = hop_broadcast(cand_stream.sparkSession, edges_directed)
     if ttl_ms is not None:
         cand_stream = cand_stream.withWatermark("ts", watermark_delay)
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from conftest import assert_matches_oracle
+from conftest import SF_DIR, assert_matches_oracle
 from pfaedle_spark import datagen
 from pfaedle_spark.operators import edge_routing as ER
 from pfaedle_spark.operators import graph_ops, gtfs_ops, routing
@@ -373,43 +373,64 @@ def test_restricted_paths_cogrouped_matches_oracle(spark):
     )
 
 
-def _bf_state_cost(trans: pd.DataFrame, rounds: int = 220) -> dict:
-    """Independent all-pairs shortest path: Bellman-Ford relaxation over
-    the raw transition rows (no CSR/heap code shared with the engine)."""
+def _grid_world(spark):
+    """Main-grid edges, sf0.001 candidates and the per-variant transition
+    tables: unlike the 8x8 sub-grid, whose trips have one candidate
+    layer each, this world has multi-layer trips to walk."""
+    from pfaedle_spark.operators import candidates as cand_ops
+
+    eds = datagen.edges(spark)
+    pts = datagen.points(spark, SF_DIR)
+    cand = cand_ops.candidate_edges(pts, eds).localCheckpoint(eager=True)
+    return eds, cand, ER.build_variant_transitions(spark, eds)
+
+
+def _bf_state_cost(trans: pd.DataFrame, sources, rounds: int = 220) -> dict:
+    """Independent shortest paths: Bellman-Ford relaxation over the raw
+    transition rows (no CSR/heap code shared with the engine), one row
+    per source state; a round relaxes every arc at once, as one
+    min-reduce of the arc candidates per head state."""
     frm = trans["from_edge"].to_numpy(np.int64)
     to = trans["to_edge"].to_numpy(np.int64)
-    c = trans["cost"].to_numpy(np.float64)
-    states = sorted(set(frm) | set(to))
-    idx = {s: i for i, s in enumerate(states)}
-    n = len(states)
-    d = np.full((n, n), np.inf)
-    d[np.arange(n), np.arange(n)] = 0.0
-    fi = np.array([idx[s] for s in frm])
-    ti = np.array([idx[s] for s in to])
+    states = np.unique(np.concatenate([frm, to]))
+    order = np.argsort(to, kind="stable")
+    fi = np.searchsorted(states, frm[order])
+    ti = np.searchsorted(states, to[order])
+    c = trans["cost"].to_numpy(np.float64)[order]
+    starts = np.flatnonzero(np.r_[True, ti[1:] != ti[:-1]])
+    heads = ti[starts]
+    src = sorted(set(sources) & set(states.tolist()))
+    d = np.full((len(src), len(states)), np.inf)
+    d[np.arange(len(src)), np.searchsorted(states, src)] = 0.0
     for _ in range(rounds):
         nd = d.copy()
-        for k in range(len(fi)):
-            cand = d[:, fi[k]] + c[k]
-            np.minimum(nd[:, ti[k]], cand, out=nd[:, ti[k]])
+        nd[:, heads] = np.minimum(
+            d[:, heads], np.minimum.reduceat(d[:, fi] + c, starts, axis=1)
+        )
         if np.array_equal(nd, d, equal_nan=True):
             break
         d = nd
-    return {"d": d, "idx": idx}
+    return {
+        "d": d,
+        "row": {s: i for i, s in enumerate(src)},
+        "col": {s: i for i, s in enumerate(states.tolist())},
+    }
 
 
-def _bf_viterbi(layers, apsp) -> float:
+def _bf_viterbi(layers, apsp) -> list[dict]:
     """Brute-force DP over (state, emission) layers using the BF matrix;
-    returns the optimal total cost."""
-    d, idx = apsp["d"], apsp["idx"]
+    returns every layer's {state: optimal cost}."""
+    d, row, col = apsp["d"], apsp["row"], apsp["col"]
     costs = [em for _, em in layers[0]]
     prev = layers[0]
+    out = [dict(zip((st for st, _ in prev), costs))]
     for lay in layers[1:]:
         new = []
         for st, em in lay:
             best = np.inf
             for i, (pst, _) in enumerate(prev):
-                if pst in idx and st in idx:
-                    t = d[idx[pst], idx[st]]
+                if pst in row and st in col:
+                    t = d[row[pst], col[st]]
                 else:
                     t = np.inf
                 cand = costs[i] + t + em
@@ -418,34 +439,24 @@ def _bf_viterbi(layers, apsp) -> float:
             new.append(best)
         costs = new
         prev = lay
-    return float(np.min(costs))
+        out.append(dict(zip((st for st, _ in lay), costs)))
+    return out
 
 
 def test_viterbi_full_matches_brute_force(spark):
-    """Engine viterbi_full vs an independent BF-matrix DP on two trips
-    restricted to the 8x8 sub-grid world."""
-    from pfaedle_spark.operators import candidates as cand_ops
-
-    eds = ER._sub_edges(spark)
-    pts = datagen.points(spark, "/root/testdata/sf0.001").filter(
-        (F.col("x") < ER.SUB_N * 2048.0) & (F.col("y") < ER.SUB_N * 2048.0)
-    )
-    cand = cand_ops.candidate_edges(pts, eds)
-    assert cand.count() > 0, "no sub-grid candidates at sf0.001"
-    restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, eds))
-    nodes = datagen.nodes(spark)
-    tbv = {
-        v: ER.turn_transitions(
-            eds, restr, nodes, rattrs=ER.rattrs_for_variant(v)
-        ).toPandas()
-        for v in range(ER.N_RATTR_VARIANTS)
-    }
+    """Engine viterbi_full vs an independent BF-matrix DP on the main
+    grid world's multi-layer trips. The R5 band never binds on this
+    world (tests/test_gridviterbi.py::test_band_never_binds_on_grid),
+    so the unbanded DP is the reference."""
+    _, cand, tbv = _grid_world(spark)
     got = ER.viterbi_full(cand, tbv).toPandas()
 
     cand_pdf = cand.withColumn("emission", F.expr(ER.emission_expr())).toPandas()
-    apsp = {v: _bf_state_cost(tbv[v]) for v in tbv}
-    for trip_id, g in cand_pdf.groupby("trip_id"):
-        variant = int(trip_id.split("_")[1]) % ER.N_RATTR_VARIANTS
+    trips = sorted(cand_pdf["trip_id"].unique())[:12]
+    layers_of, variant_of = {}, {}
+    for trip_id in trips:
+        g = cand_pdf[cand_pdf["trip_id"] == trip_id]
+        variant_of[trip_id] = int(trip_id.split("_")[1]) % ER.N_RATTR_VARIANTS
         layers = []
         for seq in sorted(g["seq"].unique()):
             lay = g[g["seq"] == seq][["edge_id", "emission"]].drop_duplicates()
@@ -454,13 +465,33 @@ def test_viterbi_full_matches_brute_force(spark):
                 states.append((int(e), float(em)))
                 states.append((int(e) + ER.REV_OFF, float(em)))
             layers.append(sorted(states))
-        total = _bf_viterbi(layers, apsp[variant])
+        layers_of[trip_id] = layers
+    # BF rows only for the states a compared trip leaves from
+    apsp = {
+        v: _bf_state_cost(tbv[v], {
+            st for t in trips if variant_of[t] == v
+            for lay in layers_of[t][:-1] for st, _ in lay
+        })
+        for v in set(variant_of.values())
+    }
+    deep = 0
+    for trip_id in trips:
+        layers = layers_of[trip_id]
+        costs = _bf_viterbi(layers, apsp[variant_of[trip_id]])
         eng = got[got["trip_id"] == trip_id].sort_values("seq")
         assert len(eng) == len(layers), trip_id
-        # compare the accumulated optimum (equal-cost ties may choose
-        # different paths across independent implementations; the
-        # optimal VALUE is unique)
+        # compare the accumulated optimum, and per layer the chosen
+        # state's optimal cost (equal-cost ties may choose different
+        # paths across independent implementations; the optimal VALUE
+        # of each state is unique)
+        total = min(costs[-1].values())
         assert float(eng["acc_cost"].iloc[-1]) == pytest.approx(total, rel=1e-12), trip_id
+        for li, (st, acc) in enumerate(zip(eng["state_edge"], eng["acc_cost"])):
+            assert acc == pytest.approx(costs[li][int(st)], rel=1e-12), (trip_id, li)
+        deep = max(deep, int(np.isfinite(eng["acc_cost"]).sum()))
+    # trips hop the river between stops, and a cross-component layer is
+    # +inf from there on: finite layers are each trip's prefix
+    assert deep >= 3, "no compared trip has 3+ layers at a finite cost"
 
 
 def test_viterbi_full_echo_trips_identical(spark):
@@ -499,27 +530,19 @@ def test_viterbi_full_echo_trips_identical(spark):
 
 
 def test_shape_assembly_geometric_invariants(spark):
-    """R10 gates: the assembled polyline is connected (every consecutive
-    point pair is a directed edge of the graph, correctly oriented),
-    cum_dist is the running sum of walked edge lengths, and the walk
-    starts at the first chosen candidate state's source point."""
-    from pfaedle_spark.operators import candidates as cand_ops
-
-    eds = ER._sub_edges(spark)
-    pts = datagen.points(spark, "/root/testdata/sf0.001").filter(
-        (F.col("x") < ER.SUB_N * 2048.0) & (F.col("y") < ER.SUB_N * 2048.0)
-    )
-    cand = cand_ops.candidate_edges(pts, eds)
-    restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, eds))
-    nodes = datagen.nodes(spark)
-    tbv = {
-        v: ER.turn_transitions(
-            eds, restr, nodes, rattrs=ER.rattrs_for_variant(v)
-        ).toPandas()
-        for v in range(ER.N_RATTR_VARIANTS)
-    }
+    """R10 gates on the main grid world's multi-layer trips: the
+    assembled polyline is connected (every consecutive point pair is a
+    directed edge of the graph, correctly oriented), cum_dist is the
+    running sum of walked edge lengths, and the walk starts at the first
+    chosen candidate state's source point. Trips on this world hop the
+    river between stops, and a hop across the two weak components has
+    no path and is skipped: there the polyline jumps, and a skipped
+    first hop starts the walk at the first chosen state that shares a
+    component with its successor."""
+    eds, cand, tbv = _grid_world(spark)
     dedges = ER.directed_full(eds).toPandas()
-    got = ER.shape_assembly(ER.viterbi_full(cand, tbv), cand, tbv, dedges).toPandas()
+    vf = ER.viterbi_full(cand, tbv)
+    got = ER.shape_assembly(vf, cand, tbv, dedges).toPandas()
     assert len(got) > 0
     geo = dedges.set_index("edge_id")
     # stop coords per (trip, seq) for the projection-clipped endpoints —
@@ -546,13 +569,26 @@ def test_shape_assembly_geometric_invariants(spark):
     # clustered trips carry their representative's shape (the engine
     # solves once per fingerprint and copies, shape_builder.cpp:219) —
     # so the clipped endpoints are the REP trip's stop projections
-    rep_of = (
-        ER.trip_fingerprints(cand)
-        .select("trip_id", "rep_trip").toPandas()
-        .set_index("trip_id")["rep_trip"].to_dict()
-    )
+    fps = ER.trip_fingerprints(cand).toPandas().set_index("trip_id")
+    rep_of = fps["rep_trip"].to_dict()
+    vit = vf.toPandas().sort_values(["trip_id", "seq"])
+    csrs = {v: ER.transition_csr(t) for v, t in tbv.items()}
+    arcs = {v: set(zip(t["from_edge"], t["to_edge"])) for v, t in tbv.items()}
+
+    def chosen(trip):
+        """The rep's chosen states and their component labels."""
+        sts = vit.loc[vit["trip_id"] == rep_of[trip], "state_edge"].tolist()
+        csr = csrs[int(fps.at[trip, "variant"])]
+        return sts, csr["comp"][routing.index_of(csr, sts)].tolist()
+
+    n_layers = vit.groupby("trip_id").size()
+    longer = jumps = 0
     for trip_id, g in got.groupby("trip_id"):
         g = g.sort_values("pt_seq").reset_index(drop=True)
+        walked = [int(st) for st in g["edge_state"]]
+        sts, c = chosen(trip_id)
+        # the walk resumes at a chosen state entered by a skipped hop
+        resumes = {sts[j] for j in range(1, len(sts)) if c[j - 1] != c[j]}
         sxy = stop_xy.get_group(rep_of[trip_id])
         t0 = proj_t(sxy["x"].iloc[0], sxy["y"].iloc[0], int(g["edge_state"].iloc[0]))
         tL = proj_t(sxy["x"].iloc[-1], sxy["y"].iloc[-1], int(g["edge_state"].iloc[-1]))
@@ -577,35 +613,31 @@ def test_shape_assembly_geometric_invariants(spark):
                 frac -= 1.0 - tL
             assert g["x"].iloc[i] == pytest.approx(ex, abs=1e-9), (trip_id, i)
             assert g["y"].iloc[i] == pytest.approx(ey, abs=1e-9), (trip_id, i)
-            assert g["x"].iloc[i - 1] == pytest.approx(sx, abs=1e-9), (trip_id, i)
-            assert g["y"].iloc[i - 1] == pytest.approx(sy, abs=1e-9), (trip_id, i)
+            # row 1 walks row 0's state; every later step is a
+            # transition, or the jump over skipped hops
+            if i > 1 and (walked[i - 1], st) not in arcs[int(fps.at[trip_id, "variant"])]:
+                assert st in resumes, (trip_id, i)
+                jumps += 1
+            else:
+                assert g["x"].iloc[i - 1] == pytest.approx(sx, abs=1e-9), (trip_id, i)
+                assert g["y"].iloc[i - 1] == pytest.approx(sy, abs=1e-9), (trip_id, i)
             assert g["cum_dist"].iloc[i] - g["cum_dist"].iloc[i - 1] == pytest.approx(
                 ln * max(frac, 0.0), rel=1e-9, abs=1e-9
             )
+        # walked states (row 0 is the clipped head) beyond one per layer
+        longer += n - 1 > n_layers[trip_id]
+    assert longer > 0, "no checked shape walks a state between its layers"
+    assert jumps > 0
     # the viterbi choice and the walk agree: each trip's first walked
-    # state is its first chosen candidate state
-    vit = ER.viterbi_full(cand, tbv).toPandas()
-    first_choice = (
-        vit.sort_values("seq").groupby("trip_id").first()["state_edge"].to_dict()
-    )
+    # state is its first chosen candidate state with a walkable hop
     first_walk = (
         got.sort_values("pt_seq").groupby("trip_id").first()["edge_state"].to_dict()
     )
-    assert first_choice.keys() == first_walk.keys()
-    for t in first_choice:
-        assert first_choice[t] == first_walk[t], t
-
-
-def _grid_world(spark):
-    """Main-grid edges, sf0.001 candidates and the per-variant transition
-    tables: unlike the 8x8 sub-grid, whose trips have one candidate
-    layer each, this world has multi-layer trips to walk."""
-    from pfaedle_spark.operators import candidates as cand_ops
-
-    eds = datagen.edges(spark)
-    pts = datagen.points(spark, "/root/testdata/sf0.001")
-    cand = cand_ops.candidate_edges(pts, eds).localCheckpoint(eager=True)
-    return eds, cand, ER.build_variant_transitions(spark, eds)
+    assert first_walk.keys() == set(n_layers.index)
+    for t, first in first_walk.items():
+        sts, c = chosen(t)
+        k = next((k for k in range(len(sts) - 1) if c[k] == c[k + 1]), len(sts) - 1)
+        assert first == sts[k], t
 
 
 def test_shape_assembly_walks_the_states_it_is_given(spark):

@@ -74,3 +74,26 @@ def test_greedy2_align_grid_oracle_bit_exact(spark):
     got = routing.greedy2_align(cand, graph_ops.write_odir_edges(eds)).toPandas()
     want = duck(SF_DIR).execute(nodedp.greedy2_align_grid_sql()).fetchdf()
     _assert_bit_exact(got, want)
+
+
+def test_flagship_grid_oracle_bit_exact(spark):
+    """entry()'s chain (candidates -> viterbi_align -> tile cell id) at
+    full cost against the viterbi_align oracle re-joined to its points."""
+    import __spark_entry__ as entrymod
+
+    got = entrymod.queries()["flagship"](spark, SF_DIR).toPandas()
+    want = duck(SF_DIR).execute(nodedp.flagship_grid_sql()).fetchdf()
+    _assert_bit_exact(got, want)
+
+
+def test_trip_debug_align_grid_oracle_bit_exact(spark):
+    """The node-state -T surface: every state of the debug trip with its
+    forward-DP cost and chosen flag, against the oracle's DP table LEFT
+    JOINed to its backtrack."""
+    import __spark_entry__ as entrymod
+
+    got = entrymod.queries()["trip_debug_align"](spark, SF_DIR).toPandas()
+    want = duck(SF_DIR).execute(nodedp.trip_debug_align_grid_sql()).fetchdf()
+    _assert_bit_exact(got, want)
+    assert set(got["trip_id"]) == {nodedp.DEBUG_TRIP}
+    assert got["chosen"].sum() == got["seq"].nunique() < len(got)

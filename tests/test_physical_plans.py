@@ -129,7 +129,7 @@ def test_lifecycle_candidates_broadcast_composed_graph(spark):
 def test_new_relational_queries_stay_jvm_side(spark):
     """Round-3 additions keep the no-Python-in-relational-paths rule."""
     for name in ["edge_tracks", "candidate_penalties", "lifecycle_graph",
-                 "greedy2_manhattan"]:
+                 "greedy2_align"]:
         plan = plan_of(_q(name, spark))
         assert "BatchEvalPython" not in plan, f"{name} fell off the JVM path"
         assert "PythonUDF" not in plan, f"{name} uses row-at-a-time Python"

@@ -366,3 +366,33 @@ def test_hop_table_built_once_per_plan(spark, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
     assert len(routing._HOP_BC_CACHE) == 1
+
+
+def test_checkpoint_memo_hits_and_stays_bounded(spark, monkeypatch):
+    """The session memo of eager-checkpointed shares: a hit returns the
+    same frame without building again, and the memo never holds more
+    than its bound (the least recently used entry is dropped and is
+    built again on its next use)."""
+    from collections import OrderedDict
+
+    monkeypatch.setattr(routing, "_CHECKPOINT_MEMO", OrderedDict())
+    builds = []
+
+    def share(i):
+        def build():
+            builds.append(i)
+            return spark.range(3).withColumn("i", F.lit(i))
+
+        return routing.checkpoint_memo(spark, ("memo-test", i), build)
+
+    first = share(0)
+    assert share(0) is first
+    assert builds == [0]
+    assert sorted(r.id for r in first.collect()) == [0, 1, 2]
+    bound = routing._CHECKPOINT_MEMO_MAX
+    for i in range(1, bound + 3):
+        share(i)
+        assert len(routing._CHECKPOINT_MEMO) <= bound
+    assert builds == list(range(bound + 3))
+    share(0)
+    assert builds[-1] == 0
