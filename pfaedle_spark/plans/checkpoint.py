@@ -13,6 +13,35 @@ the last durable checkpoint. Lineage is the declared input-stage list;
 metrics are per-partition (per output file) row/byte counts read from
 the parquet footers.
 
+Stage DAG: :meth:`CheckpointedPipeline.run` takes a pipeline as
+:class:`Stage` declarations in declaration order and starts each stage
+on its own thread as soon as every stage named among its inputs has
+finished, so stages that do not depend on each other overlap (their
+Spark jobs share the executors; a lifecycle run is mostly per-job
+latency, not saturated cores). Rules:
+
+* an input naming an EARLIER stage is a dependency; any other name
+  (``documents``, ``stations``) is a lineage label only; an input
+  naming a later stage (or the stage itself) is a ``ValueError``;
+* a stage function is called with its dependencies' finished frames
+  as keyword arguments and nothing else, so an undeclared read fails
+  instead of racing;
+* the resume rule is the one above, decided after every input has
+  finished: complete entry, output (or marker) present, and no
+  declared input recomputed in this run;
+* manifest appends and the ``computed`` / ``skipped`` lists are
+  updated under one lock; when ``run`` returns both lists are in
+  declaration order, whatever order the stages finished in;
+* when a stage raises, no ``complete`` entry is written for it, its
+  dependents never start, stages already running finish, and ``run``
+  re-raises the first exception in declaration order. A re-run
+  resumes every stage that completed.
+
+Threads come from :func:`concurrently` (one per thunk, started with
+``pyspark.inheritable_thread_target`` so Spark local properties such as
+job groups follow the thread); the pipeline's stage count is its
+thread count.
+
 This mirrors what the reference cannot do (single-shot C++ batch,
 ``src/apps/pfaedle/app.cpp:130-417`` recomputes everything on restart)
 and what a 1000-executor job needs: partition-grained restartability
@@ -26,12 +55,61 @@ metrics stay meaningful at any input size.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import threading
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def concurrently(thunks: Sequence[Callable[[], Any]]) -> list:
+    """Run each thunk on its own thread and return their results in
+    order. Threads start through ``pyspark.inheritable_thread_target``
+    with the active session, so the caller's Spark local properties
+    (job group, scheduler pool) and tags follow them. Every thunk runs
+    to its end; the first exception in thunk order is then re-raised."""
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
+
+    results: list = [None] * len(thunks)
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            results[i] = thunks[i]()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors[i] = e
+
+    threads = [
+        threading.Thread(target=inherit(functools.partial(run, i)))
+        for i in range(len(thunks))
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+    return results
+
+
+class Stage(NamedTuple):
+    """One declaration for :meth:`CheckpointedPipeline.run`. ``fn`` gets
+    the finished frames of the stages named in ``inputs`` as keyword
+    arguments. An ``effect`` stage returns nothing and is checkpointed
+    by its manifest entry and ``marker`` path (see ``effect_stage``)."""
+
+    name: str
+    fn: Callable[..., DataFrame | None]
+    inputs: tuple[str, ...] = ()
+    effect: bool = False
+    marker: str | None = None
 
 
 class CheckpointedPipeline:
@@ -41,6 +119,7 @@ class CheckpointedPipeline:
         self.manifest_path = os.path.join(root, "MANIFEST.jsonl")
         os.makedirs(root, exist_ok=True)
         self._entries = self._load()
+        self._lock = threading.Lock()   # manifest + computed/skipped
         self.computed: list[str] = []   # stages actually executed this run
         self.skipped: list[str] = []    # stages resumed from checkpoint
 
@@ -56,9 +135,27 @@ class CheckpointedPipeline:
         return entries
 
     def _append(self, entry: dict) -> None:
-        with open(self.manifest_path, "a") as f:
-            f.write(json.dumps(entry) + "\n")
-        self._entries[entry["stage"]] = entry
+        with self._lock:
+            with open(self.manifest_path, "a") as f:
+                f.write(json.dumps(entry) + "\n")
+            self._entries[entry["stage"]] = entry
+            self.computed.append(entry["stage"])
+
+    def _resumable(self, name: str, inputs: list[str] | None, present: bool) -> bool:
+        """The resume rule: a complete entry, its output present, and no
+        declared input recomputed in this run (lineage cascade). A
+        resumable stage is recorded as skipped."""
+        with self._lock:
+            entry = self._entries.get(name)
+            ok = (
+                entry is not None
+                and entry.get("status") == "complete"
+                and present
+                and not any(i in self.computed for i in (inputs or []))
+            )
+            if ok:
+                self.skipped.append(name)
+            return ok
 
     # -- stage runner --------------------------------------------------
     def _stage_dir(self, name: str) -> str:
@@ -89,17 +186,7 @@ class CheckpointedPipeline:
     ) -> DataFrame:
         """Run (or resume) one stage; returns the materialized DataFrame."""
         path = self._stage_dir(name)
-        entry = self._entries.get(name)
-        # lineage cascade: if any declared input was recomputed in this
-        # run, this stage's checkpoint is stale — recompute it too.
-        inputs_fresh = not any(i in self.computed for i in (inputs or []))
-        if (
-            entry
-            and entry.get("status") == "complete"
-            and os.path.isdir(path)
-            and inputs_fresh
-        ):
-            self.skipped.append(name)
+        if self._resumable(name, inputs, os.path.isdir(path)):
             return self.spark.read.parquet(path)
 
         t0 = time.perf_counter()
@@ -120,7 +207,6 @@ class CheckpointedPipeline:
                 "ts": time.time(),
             }
         )
-        self.computed.append(name)
         return self.spark.read.parquet(path)
 
     def effect_stage(
@@ -135,15 +221,7 @@ class CheckpointedPipeline:
         input recomputed this run, and the marker path still exists —
         so a clean resume is metadata-only instead of re-paying the full
         feed rewrite."""
-        entry = self._entries.get(name)
-        inputs_fresh = not any(i in self.computed for i in (inputs or []))
-        if (
-            entry
-            and entry.get("status") == "complete"
-            and inputs_fresh
-            and (marker is None or os.path.exists(marker))
-        ):
-            self.skipped.append(name)
+        if self._resumable(name, inputs, marker is None or os.path.exists(marker)):
             return
         t0 = time.perf_counter()
         fn()
@@ -158,7 +236,53 @@ class CheckpointedPipeline:
                 "ts": time.time(),
             }
         )
-        self.computed.append(name)
+
+    def run(self, stages: Sequence[Stage]) -> dict[str, DataFrame | None]:
+        """Run (or resume) a stage DAG; returns stage name -> its frame
+        (``None`` for an effect stage). See the module docstring for
+        the scheduling, resume and failure rules."""
+        order = {s.name: i for i, s in enumerate(stages)}
+        if len(order) != len(stages):
+            raise ValueError("duplicate stage names")
+        deps = {}
+        for i, s in enumerate(stages):
+            later = [x for x in s.inputs if order.get(x, -1) >= i]
+            if later:
+                raise ValueError(f"stage {s.name!r} lists later stage(s) {later} as inputs")
+            deps[s.name] = [x for x in s.inputs if x in order]
+        done = {s.name: threading.Event() for s in stages}
+        out: dict[str, DataFrame | None] = {}
+        failed: set[str] = set()
+
+        def one(s: Stage) -> None:
+            try:
+                for d in deps[s.name]:
+                    done[d].wait()
+                if failed.intersection(deps[s.name]):
+                    failed.add(s.name)  # never starts; nor do its dependents
+                    return
+                call = functools.partial(s.fn, **{d: out[d] for d in deps[s.name]})
+                # self.stage resolves through the class at call time, so
+                # a patched method (the benchmark's layer tracer) sees it
+                if s.effect:
+                    out[s.name] = self.effect_stage(
+                        s.name, call, inputs=list(s.inputs), marker=s.marker
+                    )
+                else:
+                    out[s.name] = self.stage(s.name, call, inputs=list(s.inputs))
+            except BaseException:
+                failed.add(s.name)
+                raise
+            finally:
+                done[s.name].set()
+
+        try:
+            concurrently([functools.partial(one, s) for s in stages])
+        finally:
+            with self._lock:
+                for lst in (self.computed, self.skipped):
+                    lst.sort(key=lambda n: order.get(n, -1))
+        return out
 
     def invalidate(self, name: str) -> None:
         """Drop a stage's checkpoint (forces recompute on next run)."""
@@ -177,29 +301,29 @@ def checkpointed_flagship(
 
     Killing the job after any stage and re-running resumes from the
     last completed checkpoint (see tests/test_checkpoint.py)."""
-    from pyspark.sql import functions as F
-
     from .. import datagen
     from ..operators import candidates, cells, graph_ops, routing
 
     cp = CheckpointedPipeline(spark, root)
-    pts = cp.stage("points", lambda: datagen.points(spark, sf_dir), inputs=["documents"])
-    eds = cp.stage("edges", lambda: graph_ops.write_odir_edges(datagen.edges(spark)))
-    cand = cp.stage(
-        "candidates",
-        lambda: candidates.candidate_edges(pts, datagen.edges(spark)),
-        inputs=["points", "edges"],
-    )
-    aligned = cp.stage(
-        "viterbi",
-        lambda: routing.viterbi_align(cand, eds),
-        inputs=["candidates", "edges"],
-    )
-    tiles = cp.stage(
-        "tiles",
-        lambda: cells.tile_assign(
-            aligned.join(pts.select("image_id", "x", "y"), "image_id")
+    out = cp.run([
+        Stage("points", lambda: datagen.points(spark, sf_dir), ("documents",)),
+        Stage("edges", lambda: graph_ops.write_odir_edges(datagen.edges(spark))),
+        Stage(
+            "candidates",
+            lambda points, edges: candidates.candidate_edges(points, datagen.edges(spark)),
+            ("points", "edges"),
         ),
-        inputs=["viterbi", "points"],
-    )
-    return tiles, cp
+        Stage(
+            "viterbi",
+            lambda candidates, edges: routing.viterbi_align(candidates, edges),
+            ("candidates", "edges"),
+        ),
+        Stage(
+            "tiles",
+            lambda viterbi, points: cells.tile_assign(
+                viterbi.join(points.select("image_id", "x", "y"), "image_id")
+            ),
+            ("viterbi", "points"),
+        ),
+    ])
+    return out["tiles"], cp

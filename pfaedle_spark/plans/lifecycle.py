@@ -15,8 +15,25 @@ Two surfaces:
   (fix-gaps remap + snap rounds + orphan/collapse rounds, every value
   bit-checkable).
 * :func:`checkpointed_lifecycle` — the whole chain through the DP tail
-  and the GTFS shapes sink, checkpointed per stage (kill + re-run
-  resumes from the last durable stage; see tests/test_checkpoint.py).
+  and the GTFS sink, checkpointed per stage (kill + re-run resumes
+  from the last durable stage; see tests/test_checkpoint.py).
+
+The checkpointed run is a stage DAG (``CheckpointedPipeline.run``):
+each stage starts as soon as the stages it reads have finished::
+
+    snaps -> graph_nodes, graph_edges -> components
+    graph_edges -> candidates -> viterbi -> shapes -> gtfs_shapes -> gtfs_feed
+    (documents, stations) -> gtfs_tables
+
+``viterbi`` and ``shapes`` also read ``graph_nodes`` (the transitions
+build) and ``shapes`` reads ``candidates``. ``gtfs_tables`` writes the
+input feed's tables (stops, trips, stop_times and the pass-through
+tables) concurrently from t=0, beside the graph and DP chain;
+``gtfs_feed`` writes only ``shapes.txt``. ``components`` runs beside
+the candidate join and the DP. Nothing reads ``components``: it is
+written for its manifest entry and for consumers of the checkpoint.
+The run's cost is mostly per-Spark-job latency, so overlapping
+independent stages shortens it on the same cores.
 
 Scale notes: the road graph fits the driver (the router collects it
 anyway), so the prefix is one collect of nodes, edges and stations,
@@ -29,13 +46,16 @@ partition-parallel.
 
 from __future__ import annotations
 
+import functools
+import threading
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen, sqlgen
 from ..operators import graph_ops, graph_passes, snap
-from .checkpoint import CheckpointedPipeline
+from .checkpoint import CheckpointedPipeline, Stage, concurrently
 
 
 _COMPOSED_MEMO: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
@@ -52,8 +72,9 @@ def composed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame
     projection nodes join the node table, final edges re-acquire
     endpoint coordinates. Returns (final_nodes, final_edges, snaps).
 
-    Nodes, edges and stations are collected once; the passes run as
-    driver-side kernels, round for round what the oracle unrolls.
+    Nodes, edges and stations are collected once, concurrently; the
+    passes run as driver-side kernels, round for round what the oracle
+    unrolls.
     Memoized per session: three consumers run the prefix in one
     session (``lifecycle_graph``, ``lifecycle_candidates``, the
     checkpointed run); the memo dies with the context (keyed on
@@ -64,13 +85,15 @@ def composed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame
     hit = _COMPOSED_MEMO.get(tok)
     if hit is not None:
         return hit
-    nd = graph_ops.collect_columns(datagen.nodes(spark).select("node_id", "x", "y", "is_station"))
-    e1 = graph_passes.fix_gaps_arrays(
-        nd, graph_ops.collect_columns(datagen.edges(spark).select(*snap.EDGE_COLS))
-    )
-    snaps, e2 = snap.snap_arrays(
-        graph_ops.collect_columns(datagen.stations(spark).select("stop_id", "x", "y")), e1
-    )
+    nd, e0, st = concurrently([
+        functools.partial(graph_ops.collect_columns, df)
+        for df in (
+            datagen.nodes(spark).select("node_id", "x", "y", "is_station"),
+            datagen.edges(spark).select(*snap.EDGE_COLS),
+            datagen.stations(spark).select("stop_id", "x", "y"),
+        )
+    ])
+    snaps, e2 = snap.snap_arrays(st, graph_passes.fix_gaps_arrays(nd, e0))
     # every snapped node is a station node from here on (the reference
     # attaches the stop to the node, osm_builder.cpp:1363-1506); split
     # projections are NEW nodes at (qx, qy)
@@ -167,89 +190,105 @@ lcedges AS MATERIALIZED (
 def checkpointed_lifecycle(
     spark: SparkSession, sf_dir: str, root: str
 ) -> tuple[DataFrame, CheckpointedPipeline]:
-    """The full lifecycle, checkpointed per stage. Returns the assembled
-    GTFS-shaped shape rows + the pipeline handle (manifest carries
-    per-stage lineage, wall time and per-partition row/byte counts)."""
+    """The full lifecycle, checkpointed per stage and run as a stage DAG
+    (module docstring). Returns the assembled GTFS-shaped shape rows +
+    the pipeline handle (manifest carries per-stage lineage, wall time
+    and per-partition row/byte counts)."""
+    import os
+
     from ..operators import candidates, edge_routing
     from ..sources import gtfs
 
-    cp = CheckpointedPipeline(spark, root)
-
-    nodes_f_l, edges_f_l, snaps_l = None, None, None
+    graph: list[tuple[DataFrame, DataFrame, DataFrame]] = []
+    graph_lock = threading.Lock()
 
     def _graph():
-        nonlocal nodes_f_l, edges_f_l, snaps_l
-        if edges_f_l is None:
-            nodes_f_l, edges_f_l, snaps_l = composed_graph(spark)
-        return nodes_f_l, edges_f_l, snaps_l
+        # the three graph outputs share one composition, built only when
+        # a stage actually recomputes (a fully-checkpointed resume never
+        # re-collects the graph); graph_nodes and graph_edges may ask
+        # for it at once
+        with graph_lock:
+            if not graph:
+                graph.append(composed_graph(spark))
+        return graph[0]
 
-    # the three graph outputs share one composition; _graph() is only
-    # invoked when a stage actually recomputes, so a fully-checkpointed
-    # resume never re-collects the graph
-    snaps = cp.stage("snaps", lambda: _graph()[2], inputs=["stations", "edges"])
-    nodes_f = cp.stage("graph_nodes", lambda: _graph()[0], inputs=["snaps"])
-    edges_f = cp.stage("graph_edges", lambda: _graph()[1], inputs=["snaps"])
-    comps = cp.stage(
-        "components",
-        lambda: graph_ops.road_components(nodes_f, edges_f),
-        inputs=["graph_nodes", "graph_edges"],
-    )
-    cand = cp.stage(
-        "candidates",
-        lambda: candidates.candidate_edges(datagen.points(spark, sf_dir), edges_f),
-        inputs=["graph_edges", "documents"],
-    )
     # the transitions build (one Arrow collect each of edges, nodes and
-    # restrictions + the driver-side kernel per variant) is DEFERRED
-    # into the stage lambdas: it only runs when a DP stage actually
-    # recomputes, so a fully-checkpointed resume never pays it (it is
-    # session-memoized on edges_f's semantic hash, so the two lambdas
-    # share one build when both recompute, and the shapes stage's
-    # directed edges come from the same edge collect)
-    def _tbv():
-        return edge_routing.build_variant_transitions(
-            spark, edges_f, nodes=nodes_f
-        )
+    # restrictions + the driver-side kernel per variant) runs inside the
+    # DP stages, so a fully-checkpointed resume never pays it; it is
+    # session-memoized on the frames' semantic hashes, so viterbi and
+    # shapes share one build, and shapes' directed edges come from the
+    # same edge collect
+    def _tbv(graph_edges, graph_nodes):
+        return edge_routing.build_variant_transitions(spark, graph_edges, nodes=graph_nodes)
 
-    aligned = cp.stage(
-        "viterbi",
-        lambda: edge_routing.viterbi_full(cand, _tbv()),
-        inputs=["candidates", "graph_edges"],
-    )
-    shapes = cp.stage(
-        "shapes",
-        lambda: edge_routing.shape_assembly(
-            aligned, cand, _tbv(), edge_routing.directed_full_pdf(spark, edges_f)
-        ),
-        inputs=["viterbi", "graph_edges"],
-    )
-    # S5: GTFS shapes rows (synthetic_feed's lat/lon convention)
-    gtfs_shapes = cp.stage(
-        "gtfs_shapes",
-        lambda: shapes.select(
-            F.concat(F.lit("shp_"), F.substring("trip_id", 6, 10)).alias("shape_id"),
-            (F.col("y") / 100000.0).alias("shape_pt_lat"),
-            (F.col("x") / 100000.0).alias("shape_pt_lon"),
-            F.col("pt_seq").cast("long").alias("shape_pt_sequence"),
-            F.col("cum_dist").alias("shape_dist_traveled"),
-        ),
-        inputs=["shapes"],
-    )
     # distributed CSV sink — the COMPLETE output feed (what `pfaedle -x`
     # emits: the input feed's tables plus the matched shapes,
-    # app.cpp:286-398); executors write, the driver never collects. Its
-    # own checkpointed stage: a clean resume skips the full feed rewrite.
-    import os
-
+    # app.cpp:286-398); executors write, the driver never collects. The
+    # input feed's tables depend on the documents and stations only, so
+    # they are their own effect stage beside the graph and DP chain
     feed_dir = os.path.join(root, "feed")
 
-    def _write_feed() -> None:
-        gtfs.write_table(gtfs_shapes, feed_dir, "shapes")
-        for name, df in gtfs.synthetic_feed(spark, sf_dir).items():
-            gtfs.write_table(df, feed_dir, name)
+    def _write_tables() -> None:
+        feed = gtfs.synthetic_feed(spark, sf_dir)
+        concurrently([
+            functools.partial(gtfs.write_table, df, feed_dir, name)
+            for name, df in feed.items()
+        ])
 
-    cp.effect_stage(
-        "gtfs_feed", _write_feed, inputs=["gtfs_shapes"], marker=feed_dir
-    )
-    _ = comps  # G7 runs for its manifest entry; routing reads the CSRs
-    return gtfs_shapes, cp
+    cp = CheckpointedPipeline(spark, root)
+    out = cp.run([
+        Stage("snaps", lambda: _graph()[2], ("stations", "edges")),
+        Stage("graph_nodes", lambda snaps: _graph()[0], ("snaps",)),
+        Stage("graph_edges", lambda snaps: _graph()[1], ("snaps",)),
+        Stage(
+            "components",
+            lambda graph_nodes, graph_edges: graph_ops.road_components(graph_nodes, graph_edges),
+            ("graph_nodes", "graph_edges"),
+        ),
+        Stage(
+            "candidates",
+            lambda graph_edges: candidates.candidate_edges(
+                datagen.points(spark, sf_dir), graph_edges
+            ),
+            ("graph_edges", "documents"),
+        ),
+        Stage(
+            "viterbi",
+            lambda candidates, graph_edges, graph_nodes: edge_routing.viterbi_full(
+                candidates, _tbv(graph_edges, graph_nodes)
+            ),
+            ("candidates", "graph_edges", "graph_nodes"),
+        ),
+        Stage(
+            "shapes",
+            lambda viterbi, candidates, graph_edges, graph_nodes: edge_routing.shape_assembly(
+                viterbi, candidates, _tbv(graph_edges, graph_nodes),
+                edge_routing.directed_full_pdf(spark, graph_edges),
+            ),
+            ("viterbi", "candidates", "graph_edges", "graph_nodes"),
+        ),
+        # S5: GTFS shapes rows (synthetic_feed's lat/lon convention)
+        Stage(
+            "gtfs_shapes",
+            lambda shapes: shapes.select(
+                F.concat(F.lit("shp_"), F.substring("trip_id", 6, 10)).alias("shape_id"),
+                (F.col("y") / 100000.0).alias("shape_pt_lat"),
+                (F.col("x") / 100000.0).alias("shape_pt_lon"),
+                F.col("pt_seq").cast("long").alias("shape_pt_sequence"),
+                F.col("cum_dist").alias("shape_dist_traveled"),
+            ),
+            ("shapes",),
+        ),
+        # each sink is its own effect stage: a clean resume skips the
+        # feed rewrite, and a DP-only recompute rewrites shapes.txt only
+        Stage("gtfs_tables", _write_tables, ("documents", "stations"),
+              effect=True, marker=feed_dir),
+        Stage(
+            "gtfs_feed",
+            lambda gtfs_shapes: gtfs.write_table(gtfs_shapes, feed_dir, "shapes"),
+            ("gtfs_shapes",),
+            effect=True,
+            marker=os.path.join(feed_dir, "shapes.txt"),
+        ),
+    ])
+    return out["gtfs_shapes"], cp

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -330,14 +331,17 @@ def synthetic_pass_through(
             ),
         )
     )
+    # one row through Arrow (a LocalTableScan); a Python list would be
+    # an ExistingRDD scan, which starts a Python worker pool to write it
     feed_info = spark.createDataFrame(
-        [
-            (
+        pd.DataFrame(
+            [(
                 "pfaedle_spark synthetic", "feed-url-placeholder",
                 "en", "en", "20260101", "20261231", "r5",
                 "feed-contact-placeholder", "feed-contact-url-placeholder",
-            )
-        ],
+            )],
+            columns=SCHEMAS["feed_info"].names,
+        ),
         SCHEMAS["feed_info"],
     )
     return {

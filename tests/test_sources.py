@@ -135,6 +135,15 @@ def test_gtfs_pass_through_roundtrip_bit_identical(spark, tmp_path):
         assert feed[name].count() > 0, name
 
 
+def test_synthetic_feed_has_no_python_row_scan(spark):
+    """Every synthetic feed table enters the plan as a file scan or an
+    Arrow local relation: an ExistingRDD scan (``createDataFrame`` of a
+    Python list) starts a Python worker pool to write a few rows."""
+    for name, df in gtfs.synthetic_feed(spark, SF_DIR).items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+
+
 def test_gtfs_missing_optional_column(spark, tmp_path):
     fd = str(tmp_path / "feed2")
     os.makedirs(fd)
