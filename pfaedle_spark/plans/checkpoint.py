@@ -27,7 +27,7 @@ latency, not saturated cores). Rules:
   as keyword arguments and nothing else, so an undeclared read fails
   instead of racing;
 * the resume rule is the one above, decided after every input has
-  finished: complete entry, output (or marker) present, and no
+  finished: complete entry, output (or every marker) present, and no
   declared input recomputed in this run;
 * manifest appends and the ``computed`` / ``skipped`` lists are
   updated under one lock; when ``run`` returns both lists are in
@@ -103,13 +103,13 @@ class Stage(NamedTuple):
     """One declaration for :meth:`CheckpointedPipeline.run`. ``fn`` gets
     the finished frames of the stages named in ``inputs`` as keyword
     arguments. An ``effect`` stage returns nothing and is checkpointed
-    by its manifest entry and ``marker`` path (see ``effect_stage``)."""
+    by its manifest entry and ``markers`` paths (see ``effect_stage``)."""
 
     name: str
     fn: Callable[..., DataFrame | None]
     inputs: tuple[str, ...] = ()
     effect: bool = False
-    marker: str | None = None
+    markers: tuple[str, ...] = ()
 
 
 class CheckpointedPipeline:
@@ -214,14 +214,15 @@ class CheckpointedPipeline:
         name: str,
         fn: Callable[[], None],
         inputs: list[str] | None = None,
-        marker: str | None = None,
+        markers: Sequence[str] = (),
     ) -> None:
         """Checkpoint a non-DataFrame side effect (e.g. the GTFS feed
         CSV sink): skipped on resume when already complete, no declared
-        input recomputed this run, and the marker path still exists —
-        so a clean resume is metadata-only instead of re-paying the full
-        feed rewrite."""
-        if self._resumable(name, inputs, marker is None or os.path.exists(marker)):
+        input recomputed this run, and every marker path (one per file
+        the effect writes) still exists — so a clean resume is
+        metadata-only instead of re-paying the full feed rewrite, and a
+        lost file is written again."""
+        if self._resumable(name, inputs, all(os.path.exists(m) for m in markers)):
             return
         t0 = time.perf_counter()
         fn()
@@ -266,7 +267,7 @@ class CheckpointedPipeline:
                 # a patched method (the benchmark's layer tracer) sees it
                 if s.effect:
                     out[s.name] = self.effect_stage(
-                        s.name, call, inputs=list(s.inputs), marker=s.marker
+                        s.name, call, inputs=list(s.inputs), markers=s.markers
                     )
                 else:
                     out[s.name] = self.stage(s.name, call, inputs=list(s.inputs))

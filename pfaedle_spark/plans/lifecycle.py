@@ -280,15 +280,16 @@ def checkpointed_lifecycle(
             ("shapes",),
         ),
         # each sink is its own effect stage: a clean resume skips the
-        # feed rewrite, and a DP-only recompute rewrites shapes.txt only
-        Stage("gtfs_tables", _write_tables, ("documents", "stations"),
-              effect=True, marker=feed_dir),
+        # feed rewrite, a DP-only recompute rewrites shapes.txt only, and
+        # a lost input table reruns gtfs_tables (one marker per table)
+        Stage("gtfs_tables", _write_tables, ("documents", "stations"), effect=True,
+              markers=tuple(os.path.join(feed_dir, f"{t}.txt") for t in gtfs.INPUT_TABLES)),
         Stage(
             "gtfs_feed",
             lambda gtfs_shapes: gtfs.write_table(gtfs_shapes, feed_dir, "shapes"),
             ("gtfs_shapes",),
             effect=True,
-            marker=os.path.join(feed_dir, "shapes.txt"),
+            markers=(os.path.join(feed_dir, "shapes.txt"),),
         ),
     ])
     return out["gtfs_shapes"], cp

@@ -166,6 +166,8 @@ PASS_THROUGH = [
     "transfers",
     "feed_info",
 ]
+# the tables synthetic_feed derives (the input feed; shapes come from matching)
+INPUT_TABLES = ("stops", "trips", "stop_times", *PASS_THROUGH)
 
 
 def gtfs_time_to_seconds(col) -> F.Column:
@@ -250,7 +252,13 @@ def synthetic_feed(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         F.lit(None).cast("string").alias("parent_station"),
         (F.col("true_node_id") % 4).cast("string").alias("platform_code"),
     )
-    pts = datagen.points(spark, sf_dir)
+    # scanned once: the seven point-derived tables read this cache,
+    # built here, instead of each re-scanning documents. Unlike a
+    # localCheckpoint, a cache keeps the file scan's partitioning, so
+    # each distinct's output order, and the CSV row order, is the file
+    # scan's. It lives as long as the session; a second call reuses it.
+    pts = datagen.points(spark, sf_dir).select("trip_id", "doc_id", "seq").cache()
+    pts.count()
     trips = pts.select("trip_id").distinct().select(
         F.concat(F.lit("route_"), F.substring("trip_id", 6, 10)).alias("route_id"),
         F.lit("svc1").alias("service_id"),

@@ -119,6 +119,27 @@ def test_lifecycle_checkpoints_and_resumes(spark, tmp_path):
     assert shapes3.count() == n1
 
 
+def test_lifecycle_rewrites_lost_feed_table(spark, tmp_path):
+    """A feed table deleted after a complete run is written again: each
+    input table is a resume marker of ``gtfs_tables``, so the re-run
+    recomputes that sink alone (the feed directory still exists)."""
+    import os
+
+    from pfaedle_spark.plans.lifecycle import checkpointed_lifecycle
+
+    root = str(tmp_path / "lc")
+    checkpointed_lifecycle(spark, SF_DIR, root)
+    stops = os.path.join(root, "feed", "stops.txt")
+    with open(stops) as f:
+        want = f.read()
+    os.remove(stops)
+    _, cp = checkpointed_lifecycle(spark, SF_DIR, root)
+    assert cp.computed == ["gtfs_tables"]
+    assert "gtfs_feed" in cp.skipped
+    with open(stops) as f:
+        assert f.read() == want
+
+
 def test_lifecycle_graph_composed_once_on_partial_resume(spark, tmp_path, monkeypatch):
     """graph_nodes and graph_edges run at once when both are lost but
     snaps is complete; they share ONE composition of the road graph."""

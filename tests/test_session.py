@@ -18,3 +18,19 @@ def test_host_defaults_env_overrides(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
     monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
     assert session.host_defaults(str(tmp_path / "absent")) == (6, "2g")
+
+
+def test_driver_jvm_compiles_with_c1_only(spark):
+    """The live driver JVM got the C1-only flag, through
+    ``defaultJavaOptions``: Spark prepends it to ``extraJavaOptions``,
+    so a launcher that sets ``extraJavaOptions`` (as the benchmark's
+    ``PYSPARK_SUBMIT_ARGS`` does) cannot replace it."""
+    assert session.DRIVER_JAVA_OPTIONS == "-XX:TieredStopAtLevel=1"
+    jvm = spark.sparkContext._jvm
+    args = list(jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments())
+    assert session.DRIVER_JAVA_OPTIONS in args
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.driver.defaultJavaOptions") == session.DRIVER_JAVA_OPTIONS
+    for key in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions",
+                "spark.executor.defaultJavaOptions"):
+        assert session.DRIVER_JAVA_OPTIONS not in (conf.get(key) or ""), key

@@ -144,6 +144,23 @@ def test_synthetic_feed_has_no_python_row_scan(spark):
         assert "ExistingRDD" not in plan, (name, plan)
 
 
+def test_synthetic_feed_scans_documents_once(spark, tmp_path):
+    """The point-derived feed tables read one cached scan of
+    ``documents``: once ``synthetic_feed`` returns, every table is
+    written with the file gone."""
+    import shutil
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_DIR}/documents.parquet", sf / "documents.parquet")
+    feed = gtfs.synthetic_feed(spark, str(sf))
+    (sf / "documents.parquet").unlink()
+    fd = str(tmp_path / "feed")
+    for name, df in feed.items():
+        gtfs.write_table(df, fd, name)
+    assert sorted(os.listdir(fd)) == sorted(f"{n}.txt" for n in gtfs.INPUT_TABLES)
+
+
 def test_gtfs_missing_optional_column(spark, tmp_path):
     fd = str(tmp_path / "feed2")
     os.makedirs(fd)
