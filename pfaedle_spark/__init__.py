@@ -4,7 +4,9 @@ Re-expresses the query semantics of the reference map-matcher
 (vesavlad/pfaedle, C++ — see SURVEY.md) as idiomatic Spark DataFrame
 plans: grid-cell equi-joins for spatial candidate search, vectorized
 column math / Arrow-batched pandas UDFs for geometry, and per-trip
-``applyInPandas`` dynamic programming for the Viterbi alignment.
+dynamic programming for the Viterbi alignment in one grouped runner
+(``operators.routing.bucketed_apply``) that streams key-sorted Arrow
+batches.
 
 Not a port: the reference is a single-node in-memory engine; this
 package declares logical plans and lets Catalyst/Tungsten pick the

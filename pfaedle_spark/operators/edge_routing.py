@@ -28,8 +28,8 @@ relational CTEs around ONE dialect-neutral cost string
 (:func:`cost_expr`), so every term stays bit-identically checkable.
 The shared search kernel (``routing.search`` over a
 ``routing.build_csr`` of the transitions, states = directed edge ids)
-then runs inside ``routing.bucketed_apply`` groups over per-variant
-CSRs that the driver builds once per call and broadcasts
+then runs in ``routing.bucketed_apply``, the grouped runner, over
+per-variant CSRs that the driver builds once per call and broadcasts
 (:func:`_csr_broadcast`) — same axis the reference parallelizes with
 OpenMP threads. Each fingerprint is solved once, by
 :func:`viterbi_full`; :func:`shape_assembly` only walks its chosen
@@ -54,8 +54,8 @@ from .. import sqlgen
 from ..functions import strings
 from . import graph_ops, graph_passes, gtfs_ops
 from .routing import (
-    OPTS, bucketed_apply, build_csr, dp_partitions, heuristic, index_of,
-    reachable, search,
+    OPTS, bucketed_apply, build_csr, heuristic, index_of, per_key, reachable,
+    search, session_memo,
 )
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
@@ -640,7 +640,9 @@ def shape_assembly(
         .select("fingerprint", "variant", "seq", "state_edge", "x", "y")
     )
 
-    def walk_one(pdf: pd.DataFrame) -> list[tuple]:
+    cols = ["fingerprint", "pt_seq", "x", "y", "cum_dist", "hop_seq", "edge_state"]
+
+    def walk_one(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("seq", kind="stable").drop_duplicates("seq")
         fpr = pdf["fingerprint"].iloc[0]
         csr = bc.value[int(pdf["variant"].iloc[0])]
@@ -690,16 +692,10 @@ def shape_assembly(
                 frac -= 1.0 - tL
             cum += ln[k] * max(frac, 0.0)
             rows.append((fpr, len(rows), px, py, cum, k, st))
-        return rows
-
-    cols = ["fingerprint", "pt_seq", "x", "y", "cum_dist", "hop_seq", "edge_state"]
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = [r for _, g in pdf.groupby("fingerprint", sort=False) for r in walk_one(g)]
         return pd.DataFrame(rows, columns=cols)
 
     solved = bucketed_apply(
-        reps, "fingerprint", dp_partitions(spark), solve,
+        reps, "fingerprint", per_key(walk_one, "fingerprint"),
         "fingerprint string, pt_seq long, x double, y double, "
         "cum_dist double, hop_seq long, edge_state long",
     )
@@ -739,8 +735,8 @@ def restricted_paths(spark: SparkSession) -> DataFrame:
     Source states: directed edges leaving SOURCE_NODES; target states:
     directed edges entering TARGET_NODES. Unreachable => NULL.
 
-    Distribution: one applyInPandas group per source state over the
-    broadcast transition CSR (graph-sized — see module docstring).
+    Distribution: source states in ``routing.bucketed_apply`` runs over
+    the broadcast transition CSR (graph-sized — see module docstring).
     """
     from .. import datagen
 
@@ -771,14 +767,9 @@ def restricted_paths(spark: SparkSession) -> DataFrame:
             out, columns=["from_edge", "src_node", "to_edge", "dst_node", "path_cost"]
         )
 
-    n_part = spark.sparkContext.defaultParallelism
-    return (
-        sources.repartition(n_part, "from_edge")
-        .groupBy("from_edge")
-        .applyInPandas(
-            solve,
-            schema="from_edge long, src_node long, to_edge long, dst_node long, path_cost double",
-        )
+    return bucketed_apply(
+        sources, "from_edge", solve,
+        "from_edge long, src_node long, to_edge long, dst_node long, path_cost double",
     )
 
 
@@ -1013,14 +1004,8 @@ def viterbi_full(
         "fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank"
     )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.concat(
-            [_viterbi_full_one(g, bc.value) for _, g in pdf.groupby("fingerprint", sort=False)],
-            ignore_index=True,
-        )
-
     solved = bucketed_apply(
-        reps, "fingerprint", dp_partitions(spark), solve,
+        reps, "fingerprint", per_key(lambda g: _viterbi_full_one(g, bc.value), "fingerprint"),
         "fingerprint string, seq long, state_edge long, edge_id long, "
         "emission double, acc_cost double",
     )
@@ -1053,15 +1038,11 @@ def viterbi_trip_debug(
         .select("fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank")
     )
 
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _viterbi_full_one(pdf, bc.value, debug=True)
-
-    return keyed.groupBy("fingerprint").applyInPandas(
-        solve,
-        schema=(
-            "fingerprint string, seq long, state_edge long, edge_id long, "
-            "emission double, acc_cost double, chosen boolean"
-        ),
+    return bucketed_apply(
+        keyed, "fingerprint",
+        per_key(lambda g: _viterbi_full_one(g, bc.value, debug=True), "fingerprint"),
+        "fingerprint string, seq long, state_edge long, edge_id long, "
+        "emission double, acc_cost double, chosen boolean",
     )
 
 
@@ -1153,23 +1134,17 @@ def _viterbi_full_one(
     )
 
 
-_EDGE_COLS_CACHE: dict = {}
-
-
 def _edge_columns(spark: SparkSession, edges: DataFrame) -> dict:
-    """Driver-side memo of the edge collect (graph-sized, static across
-    queries), keyed per (session, edge plan): the transitions build and
-    :func:`directed_full_pdf` share ONE collect — same Amdahl argument
-    as routing.hop_broadcast: re-collecting per invocation is serial
-    driver time that does not shrink with cluster size."""
-    from .routing import session_token
-
-    key = (session_token(spark), edges.semanticHash())
-    if key not in _EDGE_COLS_CACHE:
-        if len(_EDGE_COLS_CACHE) > 4:
-            _EDGE_COLS_CACHE.clear()
-        _EDGE_COLS_CACHE[key] = graph_ops.collect_columns(edges.select(*EDGE_COLS))
-    return _EDGE_COLS_CACHE[key]
+    """The edge collect (graph-sized, static across queries) in the
+    ``routing.session_memo``, keyed per (session, edge plan): the
+    transitions build and :func:`directed_full_pdf` share ONE collect —
+    same Amdahl argument as routing.hop_broadcast: re-collecting per
+    invocation is serial driver time that does not shrink with cluster
+    size."""
+    return session_memo(
+        spark, ("edge_columns", edges.semanticHash()),
+        lambda: graph_ops.collect_columns(edges.select(*EDGE_COLS)),
+    )
 
 
 def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
@@ -1177,9 +1152,6 @@ def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
     the memoized edge collect, so a query that also builds transitions
     over ``edges`` issues no second collect."""
     return pd.DataFrame(directed_arrays(_edge_columns(spark, edges)))
-
-
-_VARIANT_TRANS_CACHE: dict = {}
 
 
 def build_variant_transitions(
@@ -1191,35 +1163,29 @@ def build_variant_transitions(
     The edges, nodes and F10 restrictions are collected once each;
     :func:`transition_arrays` then runs once per variant on the driver,
     where the CSRs are built anyway (:func:`_csr_broadcast`). Memoized
-    per (session, edge plan, node plan): the tables are deterministic
-    functions of the graph, and the composed lifecycle passes a
-    DIFFERENT edge set than the standalone queries, so the key carries
-    the plan hashes."""
+    (``routing.session_memo``) per (session, edge plan, node plan): the
+    tables are deterministic functions of the graph, and the composed
+    lifecycle passes a DIFFERENT edge set than the standalone queries,
+    so the key carries the plan hashes."""
     from .. import datagen
 
-    from .routing import session_token
-
-    key = (
-        session_token(spark),
-        edges.semanticHash(),
-        nodes.semanticHash() if nodes is not None else None,
-    )
-    if key not in _VARIANT_TRANS_CACHE:
-        if nodes is None:
-            nodes = datagen.nodes(spark)
+    def build():
         ed = _edge_columns(spark, edges)
-        nd = graph_ops.collect_columns(nodes.select("node_id", "is_station"))
+        nd = graph_ops.collect_columns(
+            (nodes if nodes is not None else datagen.nodes(spark)).select("node_id", "is_station")
+        )
         rs = graph_ops.collect_columns(
             gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
             .select(*RESTR_COLS)
         )
-        if len(_VARIANT_TRANS_CACHE) > 4:
-            _VARIANT_TRANS_CACHE.clear()
-        _VARIANT_TRANS_CACHE[key] = {
+        return {
             v: pd.DataFrame(transition_arrays(ed, nd, rs, rattrs_for_variant(v)))
             for v in range(N_RATTR_VARIANTS)
         }
-    return _VARIANT_TRANS_CACHE[key]
+
+    key = ("variant_transitions", edges.semanticHash(),
+           nodes.semanticHash() if nodes is not None else None)
+    return session_memo(spark, key, build)
 
 
 def restricted_paths_sql() -> str:

@@ -8,10 +8,11 @@
   cut the matched polyline at the per-stop projections (ordered
   ``projectOnAfter``), yielding one sub-polyline per hop.
 
-Both run per trip in ``applyInPandas`` (the DP/scan is inherently
-sequential per trip — exactly the reference's per-trip loop, which is
-the distributed axis). Fréchet itself is the numpy implementation in
-``functions/geo.py`` (``Geo.h:1560-1627`` semantics).
+Both run per trip in ``routing.bucketed_apply``, the grouped runner
+(the DP/scan is inherently sequential per trip — exactly the
+reference's per-trip loop, which is the distributed axis). Fréchet
+itself is the numpy implementation in ``functions/geo.py``
+(``Geo.h:1560-1627`` semantics).
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.geo import acc_frechet_dist, frechet_dist, frechet_dists_batch
+from .routing import bucketed_apply, key_frames, per_key
 
 UNMATCHED_DF = 20.0
 DF_BINS = [10.0, 20.0, 30.0, 40.0, 50.0, 60.0, 70.0, 80.0, 90.0, 100.0]
@@ -41,14 +43,14 @@ def frechet_eval(aligned_xy: DataFrame, truth_xy: DataFrame) -> DataFrame:
 
     cols = ["trip_id", "n_pts", "d_f", "acc_d_f", "unmatched", "len_m"]
 
-    # one pandas group per trip would pay the ~65k-iteration scalar DP
-    # per call; grouping a BUCKET of trips per call feeds them all to
-    # the batched wavefront DP (geo.frechet_dists_batch, bit-identical
-    # to the scalar kernels) — the per-trip python constant amortizes
-    # across the bucket while trip buckets stay the distributed axis
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+    # one call per trip would pay the ~65k-iteration scalar DP per
+    # call; every trip of a runner frame goes to the batched wavefront
+    # DP at once (geo.frechet_dists_batch, bit-identical to the scalar
+    # kernels) — the per-trip python constant amortizes across the frame
+    def per_run(pdf: pd.DataFrame) -> pd.DataFrame:
         metas, paths = [], []
-        for trip_id, g in pdf.groupby("trip_id", sort=False):
+        for g in key_frames(pdf, "trip_id"):
+            trip_id = g["trip_id"].iloc[0]
             g = g.sort_values(["side", "seq"])
             ga = g[g["side"] == 0]
             gb = g[g["side"] == 1]
@@ -59,7 +61,7 @@ def frechet_eval(aligned_xy: DataFrame, truth_xy: DataFrame) -> DataFrame:
             paths.append((ax, ay, bx, by))
             metas.append((trip_id, len(ga), _seq_length(ax, ay)))
         if not paths:
-            return pd.DataFrame(columns=cols)
+            return pd.DataFrame()
         dfs, adfs = frechet_dists_batch(paths)
         return pd.DataFrame(
             [
@@ -70,20 +72,10 @@ def frechet_eval(aligned_xy: DataFrame, truth_xy: DataFrame) -> DataFrame:
             columns=cols,
         )
 
-    from .routing import dp_partitions
-
-    n_part = dp_partitions(aligned_xy.sparkSession)
-    return (
-        both.withColumn("_bucket", F.pmod(F.hash("trip_id"), F.lit(n_part)))
-        .repartition(n_part, "_bucket")
-        .groupBy("_bucket")
-        .applyInPandas(
-            per_bucket,
-            schema=(
-                "trip_id string, n_pts long, d_f double, acc_d_f double, "
-                "unmatched boolean, len_m double"
-            ),
-        )
+    return bucketed_apply(
+        both, "trip_id", per_run,
+        "trip_id string, n_pts long, d_f double, acc_d_f double, "
+        "unmatched boolean, len_m double",
     )
 
 
@@ -366,6 +358,42 @@ def _sub_polyline(xs, ys, seg_len, cum, a: float, b: float):
     return sx, sy
 
 
+def _per_trip_hops(aligned_xy: DataFrame, stops_xy: DataFrame, hop_rows, schema: str):
+    """``hop_rows(xs, ys, spx, spy, stop_seq)`` per trip, in the grouped
+    runner: the trip's polyline vertices (aligned (trip_id, seq, x, y))
+    and its stops (trip_id, stop_seq, x, y), each in order. It yields
+    one row per hop, the columns of ``schema`` after trip_id. A trip
+    with fewer than two vertices or stops has no hops."""
+    line = aligned_xy.select("trip_id", F.col("seq").alias("ord"), "x", "y", F.lit(0).alias("side"))
+    stops = stops_xy.select(
+        "trip_id", F.col("stop_seq").alias("ord"), "x", "y", F.lit(1).alias("side")
+    )
+    cols = [c.split()[0] for c in schema.split(", ")]
+
+    def per_trip(pdf: pd.DataFrame) -> pd.DataFrame:
+        ln = pdf[pdf["side"] == 0].sort_values("ord")
+        st = pdf[pdf["side"] == 1].sort_values("ord")
+        if len(ln) < 2 or len(st) < 2:
+            return pd.DataFrame()
+        rows = hop_rows(ln["x"].to_numpy(float), ln["y"].to_numpy(float),
+                        st["x"].to_numpy(float), st["y"].to_numpy(float), st["ord"].to_numpy())
+        return pd.DataFrame([(pdf["trip_id"].iloc[0], *r) for r in rows], columns=cols)
+
+    return bucketed_apply(
+        line.unionByName(stops), "trip_id", per_key(per_trip, "trip_id"), schema
+    )
+
+
+def _frechet_rows(metric, xs, ys, spx, spy):
+    """(hop_seq, metric, len_m) per hop: the hop's sub-polyline between
+    its ordered stop projections against the truth hop, the straight
+    segment between consecutive stops."""
+    pos, seg_len, cum = _cut_positions(xs, ys, spx, spy)
+    for i in range(len(pos) - 1):
+        sx, sy = _sub_polyline(xs, ys, seg_len, cum, pos[i], pos[i + 1])
+        yield i, float(metric(sx, sy, spx[i:i + 2], spy[i:i + 2])), _seq_length(sx, sy)
+
+
 def frechet_hops(aligned_xy: DataFrame, stops_xy: DataFrame) -> DataFrame:
     """A6 at the reference's real granularity — ``collector::get_da``
     (collector.cpp:443-462) runs the Fréchet test PER HOP: the matched
@@ -377,53 +405,13 @@ def frechet_hops(aligned_xy: DataFrame, stops_xy: DataFrame) -> DataFrame:
     Inputs: aligned (trip_id, seq, x, y) polyline vertices; stops
     (trip_id, stop_seq, x, y). Output one row per hop:
     (trip_id, hop_seq, d_f, len_m, unmatched)."""
-    a = (
-        aligned_xy.select("trip_id", "seq", "x", "y")
-        .withColumn("side", F.lit(0))
-        .withColumnRenamed("seq", "ord")
-    )
-    s = stops_xy.select(
-        "trip_id", F.col("stop_seq").alias("ord"), "x", "y"
-    ).withColumn("side", F.lit(1))
-    both = a.unionByName(s)
+    def hop_rows(xs, ys, spx, spy, _):
+        for i, d, ln in _frechet_rows(frechet_dist, xs, ys, spx, spy):
+            yield i, d, ln, bool(d >= UNMATCHED_DF)
 
-    cols = ["trip_id", "hop_seq", "d_f", "len_m", "unmatched"]
-
-    def per_trip(pdf: pd.DataFrame) -> pd.DataFrame:
-        line = pdf[pdf["side"] == 0].sort_values("ord")
-        stops = pdf[pdf["side"] == 1].sort_values("ord")
-        if len(line) < 2 or len(stops) < 2:
-            return pd.DataFrame(columns=cols)
-        xs, ys = line["x"].to_numpy(float), line["y"].to_numpy(float)
-        spx = stops["x"].to_numpy(float)
-        spy = stops["y"].to_numpy(float)
-        pos, seg_len, cum = _cut_positions(xs, ys, spx, spy)
-        rows = []
-        for i in range(len(pos) - 1):
-            sx, sy = _sub_polyline(xs, ys, seg_len, cum, pos[i], pos[i + 1])
-            # truth hop: the straight segment between consecutive stops
-            tx = np.array([spx[i], spx[i + 1]])
-            ty = np.array([spy[i], spy[i + 1]])
-            df_ = float(frechet_dist(sx, sy, tx, ty))
-            ln = _seq_length(sx, sy)
-            rows.append(
-                (pdf["trip_id"].iloc[0], i, df_, ln, bool(df_ >= UNMATCHED_DF))
-            )
-        return pd.DataFrame(rows, columns=cols)
-
-    from .routing import dp_partitions
-
-    n_part = dp_partitions(aligned_xy.sparkSession)
-    return (
-        both.repartition(n_part, "trip_id")
-        .groupBy("trip_id")
-        .applyInPandas(
-            per_trip,
-            schema=(
-                "trip_id string, hop_seq long, d_f double, len_m double, "
-                "unmatched boolean"
-            ),
-        )
+    return _per_trip_hops(
+        aligned_xy, stops_xy, hop_rows,
+        "trip_id string, hop_seq long, d_f double, len_m double, unmatched boolean",
     )
 
 
@@ -437,49 +425,10 @@ def acc_frechet_hops(aligned_xy: DataFrame, stops_xy: DataFrame) -> DataFrame:
     variant becomes bit-checkable on the staircase world.
 
     Output one row per hop: (trip_id, hop_seq, acc_d_f, len_m)."""
-    a = (
-        aligned_xy.select("trip_id", "seq", "x", "y")
-        .withColumn("side", F.lit(0))
-        .withColumnRenamed("seq", "ord")
-    )
-    s = stops_xy.select(
-        "trip_id", F.col("stop_seq").alias("ord"), "x", "y"
-    ).withColumn("side", F.lit(1))
-    both = a.unionByName(s)
-
-    cols = ["trip_id", "hop_seq", "acc_d_f", "len_m"]
-
-    def per_trip(pdf: pd.DataFrame) -> pd.DataFrame:
-        line = pdf[pdf["side"] == 0].sort_values("ord")
-        stops = pdf[pdf["side"] == 1].sort_values("ord")
-        if len(line) < 2 or len(stops) < 2:
-            return pd.DataFrame(columns=cols)
-        xs, ys = line["x"].to_numpy(float), line["y"].to_numpy(float)
-        spx = stops["x"].to_numpy(float)
-        spy = stops["y"].to_numpy(float)
-        pos, seg_len, cum = _cut_positions(xs, ys, spx, spy)
-        rows = []
-        for i in range(len(pos) - 1):
-            sx, sy = _sub_polyline(xs, ys, seg_len, cum, pos[i], pos[i + 1])
-            tx = np.array([spx[i], spx[i + 1]])
-            ty = np.array([spy[i], spy[i + 1]])
-            adf = float(acc_frechet_dist(sx, sy, tx, ty))
-            ln = _seq_length(sx, sy)
-            rows.append((pdf["trip_id"].iloc[0], i, adf, ln))
-        return pd.DataFrame(rows, columns=cols)
-
-    from .routing import dp_partitions
-
-    n_part = dp_partitions(aligned_xy.sparkSession)
-    return (
-        both.repartition(n_part, "trip_id")
-        .groupBy("trip_id")
-        .applyInPandas(
-            per_trip,
-            schema=(
-                "trip_id string, hop_seq long, acc_d_f double, len_m double"
-            ),
-        )
+    return _per_trip_hops(
+        aligned_xy, stops_xy,
+        lambda xs, ys, spx, spy, _: _frechet_rows(acc_frechet_dist, xs, ys, spx, spy),
+        "trip_id string, hop_seq long, acc_d_f double, len_m double",
     )
 
 
@@ -490,51 +439,14 @@ def segmentize(aligned_xy: DataFrame, stops_xy: DataFrame) -> DataFrame:
     Inputs: aligned (trip_id, seq, x, y) = polyline vertices in order;
     stops (trip_id, stop_seq, x, y). Output: (trip_id, stop_seq,
     start_pos, end_pos, seg_len) in meters along the line."""
-    a = aligned_xy.select("trip_id", "seq", "x", "y").withColumn("side", F.lit(0)).withColumnRenamed("seq", "ord")
-    s = stops_xy.select(
-        "trip_id", F.col("stop_seq").alias("ord"), "x", "y"
-    ).withColumn("side", F.lit(1))
-    both = a.unionByName(s)
-
-    def per_trip(pdf: pd.DataFrame) -> pd.DataFrame:
-        line = pdf[pdf["side"] == 0].sort_values("ord")
-        stops = pdf[pdf["side"] == 1].sort_values("ord")
-        if len(line) < 2 or len(stops) < 2:
-            return pd.DataFrame(
-                columns=["trip_id", "stop_seq", "start_pos", "end_pos", "seg_len"]
-            )
-        xs, ys = line["x"].to_numpy(float), line["y"].to_numpy(float)
+    def hop_rows(xs, ys, spx, spy, sseq):
         # ordered projectOnAfter (PolyLine.h:98-119), monotone cuts
-        pos, _, _ = _cut_positions(
-            xs, ys, stops["x"].to_numpy(float), stops["y"].to_numpy(float)
-        )
-        rows = []
-        sseq = stops["ord"].to_numpy()
+        pos, _, _ = _cut_positions(xs, ys, spx, spy)
         for i in range(len(pos) - 1):
-            rows.append(
-                (
-                    pdf["trip_id"].iloc[0],
-                    int(sseq[i]),
-                    float(pos[i]),
-                    float(pos[i + 1]),
-                    float(max(0.0, pos[i + 1] - pos[i])),
-                )
-            )
-        return pd.DataFrame(
-            rows, columns=["trip_id", "stop_seq", "start_pos", "end_pos", "seg_len"]
-        )
+            yield (int(sseq[i]), float(pos[i]), float(pos[i + 1]),
+                   float(max(0.0, pos[i + 1] - pos[i])))
 
-    from .routing import dp_partitions
-
-    n_part = dp_partitions(aligned_xy.sparkSession)
-    return (
-        both.repartition(n_part, "trip_id")
-        .groupBy("trip_id")
-        .applyInPandas(
-            per_trip,
-            schema=(
-                "trip_id string, stop_seq long, start_pos double, "
-                "end_pos double, seg_len double"
-            ),
-        )
+    return _per_trip_hops(
+        aligned_xy, stops_xy, hop_rows,
+        "trip_id string, stop_seq long, start_pos double, end_pos double, seg_len double",
     )

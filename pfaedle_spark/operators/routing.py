@@ -16,9 +16,14 @@ Reference:
   candidate layers → sink; optimum == HMM/Viterbi on candidate states.
 * R10 path → geometry assembly (``shape_builder.cpp:80-119``).
 
-Spark strategy: the node-state DPs run as ONE batched numpy kernel per
-hash bucket of trips — the trip axis the reference parallelizes with
-OpenMP (``shape_builder.cpp:234``). Each DP layer gathers from the
+Spark strategy: every per-key Python site (the DPs here and in
+edge_routing, the eval metrics, station grouping) runs through ONE
+grouped runner, :func:`bucketed_apply`: hash buckets of keys — the
+trip axis the reference parallelizes with OpenMP
+(``shape_builder.cpp:234``) — sorted by key and streamed to the kernel
+one Arrow batch at a time, cut at key boundaries, so a kernel call
+holds at most one batch plus one key. The node-state DPs are batched
+numpy kernels over such a run of trips. Each DP layer gathers from the
 **hop table** (:func:`hop_broadcast`), built once on the driver in
 place of the reference's per-thread route cache and broadcast: 8 MiB
 for the grid's 1,024 nodes, as graph size scales with geography. For
@@ -31,7 +36,9 @@ from __future__ import annotations
 
 import heapq
 import math
+import threading
 from collections import OrderedDict
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -64,20 +71,88 @@ def dp_partitions(spark) -> int:
     return max(fixed, spark.sparkContext.defaultParallelism * 2)
 
 
-def bucketed_apply(df: DataFrame, key: str, n_part: int, solve, schema: str) -> DataFrame:
-    """``groupBy(key).applyInPandas(solve)`` with the per-group Arrow
-    constant amortized: ``solve`` receives a whole hash BUCKET of keys
-    in one pandas call and solves all of them at once (the batched
-    kernels below). One group per trip was the right axis when trips
-    were few and long; the structural main grid has many short trips,
-    where ~2-3 ms of per-group scaffolding × thousands of groups
-    dominated the DP stages. The frame also carries the ``_bucket``
-    column, which ``solve`` ignores."""
+def key_runs(frames: Iterator[pd.DataFrame], key: str) -> Iterator[pd.DataFrame]:
+    """Re-cut a stream of frames sorted by ``key`` into frames of
+    complete keys. A batch's last key may go on in the next batch, so
+    it is carried there; every other key of the batch is complete. A
+    frame out holds at most one batch plus one key. A key that comes
+    back after its run has ended (keys out of order) raises
+    ``ValueError``: the runner's sort is what makes runs complete."""
+    carry: list[pd.DataFrame] = []
+    last = None
+    for pdf in frames:
+        if not len(pdf):
+            continue
+        keys = pdf[key].to_numpy()
+        starts = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+        heads = keys[np.concatenate([[0], starts])]
+        if (carry and heads[0] < last) or (heads[1:] <= heads[:-1]).any():
+            raise ValueError(f"key {key!r} is not contiguous: a run came back after it ended")
+        tail = int(starts[-1]) if len(starts) else 0
+        if carry and tail == 0 and heads[0] == last:
+            carry.append(pdf)  # the carried key goes on through this batch
+        else:
+            done = carry + [pdf.iloc[:tail]] if tail else carry
+            if done:
+                yield pd.concat(done, ignore_index=True)
+            carry = [pdf.iloc[tail:]]
+        last = keys[-1]
+    if carry:
+        yield pd.concat(carry, ignore_index=True)
+
+
+def key_frames(pdf: pd.DataFrame, key: str) -> Iterator[pd.DataFrame]:
+    """The rows of each key of a key-contiguous frame (every frame
+    :func:`bucketed_apply` hands its kernel), in order."""
+    keys = pdf[key].to_numpy()
+    cuts = np.concatenate([[0], np.flatnonzero(keys[1:] != keys[:-1]) + 1, [len(keys)]])
+    for a, b in zip(cuts[:-1], cuts[1:]):
+        yield pdf.iloc[a:b]
+
+
+def per_key(fn, key: str):
+    """A frame kernel for :func:`bucketed_apply` from a per-key one:
+    ``fn`` on each key's rows, the outputs concatenated."""
+    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
+        parts = [out for out in map(fn, key_frames(pdf, key)) if len(out)]
+        return pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+
+    return solve
+
+
+def bucketed_apply(df: DataFrame, key: str, solve, schema: str) -> DataFrame:
+    """The grouped runner: ``solve`` over runs of complete ``key``
+    groups, each run at most one Arrow batch plus one key.
+
+    Keys hash into :func:`dp_partitions` buckets. An explicit
+    repartition by bucket is never coalesced by AQE (it would collapse
+    this tiny-by-bytes but CPU-heavy stage onto one task), and its
+    hash partitioning satisfies the grouping, so no second shuffle
+    follows. The sort by (bucket, key) satisfies the grouping's order,
+    so it is the stage's only sort, and it makes each key's rows
+    contiguous. ``run`` is typed ``Iterator[pd.DataFrame] ->
+    Iterator[pd.DataFrame]``, so PySpark streams each bucket batch by
+    batch instead of building one pandas frame per bucket;
+    :func:`key_runs` cuts the stream at key boundaries. The frames
+    ``solve`` gets also carry the ``_bucket`` column, which it ignores;
+    one call amortizes the per-call pandas constant over many keys."""
+    n = dp_partitions(df.sparkSession)
+
+    # PySpark reads these hints with get_type_hints against this
+    # module's globals (``Iterator``, ``pd``); if that failed it would
+    # fall back to one frame per bucket without a word
+    def run(frames: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in key_runs(frames, key):
+            out = solve(pdf)
+            if len(out):
+                yield out
+
     return (
-        df.withColumn("_bucket", F.pmod(F.hash(key), F.lit(n_part)))
-        .repartition(n_part, "_bucket")
+        df.withColumn("_bucket", F.pmod(F.hash(key), F.lit(n)))
+        .repartition(n, "_bucket")
+        .sortWithinPartitions("_bucket", key)
         .groupBy("_bucket")
-        .applyInPandas(solve, schema=schema)
+        .applyInPandas(run, schema=schema)
     )
 
 
@@ -320,8 +395,6 @@ def _pairwise_repair(csr: dict, live, suspects: set, cap: float, harr) -> dict:
 # table would not fit fails on the driver before anything is broadcast.
 _HOP_TABLE_MAX_BYTES = 256 << 20
 
-_HOP_BC_CACHE: dict = {}
-
 
 def session_token(spark) -> str:
     """A per-SparkSession key that cannot alias across sessions the way
@@ -332,30 +405,41 @@ def session_token(spark) -> str:
     return f"{sc.applicationId}:{sc.startTime}"
 
 
-# eager-checkpointed intermediates several queries of one session share
-# (the candidate join, the aligned path, the staircase Fréchet rows)
-_CHECKPOINT_MEMO: OrderedDict = OrderedDict()
-_CHECKPOINT_MEMO_MAX = 8
+# the one driver-side memo: graph collects, hop tables, transition
+# tables, the composed road graph and eager-checkpointed shares, each
+# a deterministic function of (session, key)
+_SESSION_MEMO: OrderedDict = OrderedDict()
+_SESSION_MEMO_MAX = 16
+_SESSION_MEMO_LOCK = threading.Lock()
+
+
+def session_memo(spark, key: tuple, build):
+    """``build()`` memoized per (session, ``key``), so its consumers run
+    it once per session. ``key`` starts with a name for what is built.
+    The memo holds at most ``_SESSION_MEMO_MAX`` values and drops the
+    least recently used one beyond that; a dropped value is built again
+    on its next use. ``build`` runs outside the lock, so concurrent
+    stages (and nested memo calls) never wait on each other's jobs."""
+    key = (session_token(spark), *key)
+    with _SESSION_MEMO_LOCK:
+        if key in _SESSION_MEMO:
+            _SESSION_MEMO.move_to_end(key)
+            return _SESSION_MEMO[key]
+    out = build()
+    with _SESSION_MEMO_LOCK:
+        _SESSION_MEMO[key] = out
+        while len(_SESSION_MEMO) > _SESSION_MEMO_MAX:
+            _SESSION_MEMO.popitem(last=False)
+    return out
 
 
 def checkpoint_memo(spark, key: tuple, build) -> DataFrame:
-    """``build()`` behind an eager localCheckpoint, memoized per
-    (session, ``key``) so its consumers run it once per session. The
-    memo holds at most ``_CHECKPOINT_MEMO_MAX`` frames and drops the
-    least recently used one beyond that. Dropping the reference is all
-    eviction can do: ``unpersist()`` does not release localCheckpoint
-    blocks; the ContextCleaner frees them once no frame references the
+    """``build()`` behind an eager localCheckpoint, in the
+    :func:`session_memo`. Dropping the reference is all eviction can
+    do: ``unpersist()`` does not release localCheckpoint blocks; the
+    ContextCleaner frees them once no frame references the
     checkpointed RDD."""
-    key = (session_token(spark), *key)
-    hit = _CHECKPOINT_MEMO.get(key)
-    if hit is not None:
-        _CHECKPOINT_MEMO.move_to_end(key)
-        return hit
-    out = build().localCheckpoint(eager=True)
-    _CHECKPOINT_MEMO[key] = out
-    while len(_CHECKPOINT_MEMO) > _CHECKPOINT_MEMO_MAX:
-        _CHECKPOINT_MEMO.popitem(last=False)
-    return out
+    return session_memo(spark, key, lambda: build().localCheckpoint(eager=True))
 
 
 def hop_table(csr: dict) -> np.ndarray:
@@ -400,23 +484,22 @@ def hop_lookup(csr: dict) -> dict:
 
 
 def hop_broadcast(spark, edges: DataFrame, level_punish: bool = True):
-    """Driver-side memo: ONE edge collect, :func:`hop_table` build and
-    broadcast per (session, edge plan, level_punish) — a re-collect per
-    query is serial driver time that does not shrink with cluster size.
-    The value is :func:`hop_lookup`; a graph whose table exceeds
-    ``_HOP_TABLE_MAX_BYTES`` raises before anything is broadcast."""
-    key = (session_token(spark), edges.semanticHash(), level_punish)
-    if key not in _HOP_BC_CACHE:
-        if len(_HOP_BC_CACHE) > 8:
-            _HOP_BC_CACHE.clear()
+    """ONE edge collect, :func:`hop_table` build and broadcast per
+    (session, edge plan, level_punish), in the :func:`session_memo` — a
+    re-collect per query is serial driver time that does not shrink
+    with cluster size. The value is :func:`hop_lookup`; a graph whose
+    table exceeds ``_HOP_TABLE_MAX_BYTES`` raises before anything is
+    broadcast."""
+    def build():
         pdf = edges.select("src", "dst", "length", "level").toPandas()
         csr = node_csr(pdf, level_punish=level_punish)
         n = len(csr["states"])
         if n * n * 8 > _HOP_TABLE_MAX_BYTES:
             raise ValueError(f"hop table for |V| = {n:,} nodes needs {n * n * 8:,} "
                              f"bytes, over the {_HOP_TABLE_MAX_BYTES:,}-byte budget")
-        _HOP_BC_CACHE[key] = spark.sparkContext.broadcast(hop_lookup(csr))
-    return _HOP_BC_CACHE[key]
+        return spark.sparkContext.broadcast(hop_lookup(csr))
+
+    return session_memo(spark, ("hop_table", edges.semanticHash(), level_punish), build)
 
 
 # ---------------------------------------------------------------------------
@@ -554,13 +637,8 @@ def viterbi_align(
     the default output).
     """
     bc = hop_broadcast(candidates.sparkSession, edges_directed)
-    # explicit hash repartition by the group key: AQE's byte-based
-    # coalescing would collapse this tiny-by-bytes but CPU-heavy Python
-    # stage onto one task; an explicit repartition is never coalesced,
-    # and HashPartitioning satisfies the grouping distribution, so no
-    # second shuffle is inserted.
     return bucketed_apply(
-        candidates.select(*_DP_COLS), "trip_id", dp_partitions(candidates.sparkSession),
+        candidates.select(*_DP_COLS), "trip_id",
         lambda pdf: viterbi_batch(pdf, bc.value, debug=debug),
         _DEBUG_SCHEMA if debug else _ALIGN_SCHEMA,
     )
@@ -574,7 +652,7 @@ def greedy2_align(candidates: DataFrame, edges_directed: DataFrame) -> DataFrame
     schema as viterbi_align minus acc optimality."""
     bc = hop_broadcast(candidates.sparkSession, edges_directed)
     return bucketed_apply(
-        candidates.select(*_DP_COLS), "trip_id", dp_partitions(candidates.sparkSession),
+        candidates.select(*_DP_COLS), "trip_id",
         lambda pdf: greedy2_batch(pdf, bc.value), _ALIGN_SCHEMA,
     )
 
@@ -699,8 +777,7 @@ def hop_shortest_paths(candidates: DataFrame, edges_bidir: DataFrame) -> DataFra
         "trip_id string, seq long, image_id string, to_image string, "
         "cand_node long, to_node long, path_cost double"
     )
-    n_part = dp_partitions(candidates.sparkSession)
-    out = bucketed_apply(hops, "trip_id", n_part, solve, schema)
+    out = bucketed_apply(hops, "trip_id", solve, schema)
     # unreachable (cross-component) hops: surface as SQL NULL, not NaN
     return out.withColumn(
         "path_cost",

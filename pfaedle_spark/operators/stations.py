@@ -4,10 +4,11 @@
   (``osm_builder.cpp:1185-1258``) + ``station_group::merge``
   (``trgraph/station_group.cpp:20-37``): nodes sharing an attribute
   value (uic_ref / wikidata / name) merge into one group when within
-  maxDist. Spark: groupBy(attr value) -> per-group distance-graph
-  connected components inside ``applyInPandas`` (groups are tiny — a
-  handful of platforms per station complex — so the per-group
-  union-find is O(k^2) with k < 100 even for the largest terminus).
+  maxDist. Spark: per attribute value, distance-graph connected
+  components in ``routing.bucketed_apply``, the grouped runner (groups
+  are tiny — a handful of platforms per station complex — so the
+  per-group union-find is O(k^2) with k < 100 even for the largest
+  terminus).
 * A5 candidate penalty table — reference
   ``station_group::write_penalties`` (``station_group.cpp:56-93``):
   pen = dist * fac + trackPen (0 on platform match) + nonOsmPen.
@@ -31,6 +32,7 @@ from .. import constants as C
 from .. import sqlgen
 from ..functions.geo import point_in_polygon
 from . import cells
+from .routing import bucketed_apply, per_key
 
 GROUP_ATTR_MOD = 23        # synthetic uic_ref value: node_id % 23
 GROUP_MAX_DIST = 6500.0    # merge radius (reference: uic 500 m at city scale)
@@ -92,8 +94,9 @@ def station_groups(station_nodes: DataFrame) -> DataFrame:
         out["group_rep"] = [rep[root[i]] for i in range(n)]
         return out
 
-    return with_attr.groupBy("attr_val").applyInPandas(
-        merge_group, schema="node_id long, attr_val string, group_rep long"
+    return bucketed_apply(
+        with_attr, "attr_val", per_key(merge_group, "attr_val"),
+        "node_id long, attr_val string, group_rep long",
     )
 
 

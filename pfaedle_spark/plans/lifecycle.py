@@ -58,7 +58,6 @@ from ..operators import graph_ops, graph_passes, snap
 from .checkpoint import CheckpointedPipeline, Stage, concurrently
 
 
-_COMPOSED_MEMO: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
 NODE_SCHEMA = "node_id long, x double, y double, is_station boolean"
 EDGE_SCHEMA = (
     "edge_id long, src long, dst long, x1 double, y1 double, x2 double, y2 double,"
@@ -75,16 +74,15 @@ def composed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame
     Nodes, edges and stations are collected once, concurrently; the
     passes run as driver-side kernels, round for round what the oracle
     unrolls.
-    Memoized per session: three consumers run the prefix in one
-    session (``lifecycle_graph``, ``lifecycle_candidates``, the
-    checkpointed run); the memo dies with the context (keyed on
-    applicationId + startTime)."""
-    from ..operators.routing import session_token
+    Memoized per session (``routing.session_memo``): three consumers
+    run the prefix in one session (``lifecycle_graph``,
+    ``lifecycle_candidates``, the checkpointed run)."""
+    from ..operators.routing import session_memo
 
-    tok = session_token(spark)
-    hit = _COMPOSED_MEMO.get(tok)
-    if hit is not None:
-        return hit
+    return session_memo(spark, ("composed_graph",), lambda: _compose(spark))
+
+
+def _compose(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame]:
     nd, e0, st = concurrently([
         functools.partial(graph_ops.collect_columns, df)
         for df in (
@@ -111,12 +109,11 @@ def composed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame, DataFrame
     for end, cx, cy in (("src", "x1", "y1"), ("dst", "x2", "y2")):
         at = order[np.searchsorted(nodes["node_id"], ed[end], sorter=order)]
         ed[cx], ed[cy] = nodes["x"][at], nodes["y"][at]
-    _COMPOSED_MEMO[tok] = (
+    return (
         graph_ops.columns_frame(spark, nodes, NODE_SCHEMA),
         graph_ops.columns_frame(spark, ed, EDGE_SCHEMA),
         graph_ops.columns_frame(spark, snaps, snap.SNAP_SCHEMA),
     )
-    return _COMPOSED_MEMO[tok]
 
 
 def lifecycle_graph_sql(final_select: bool = True) -> str:

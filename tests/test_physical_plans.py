@@ -8,6 +8,7 @@ and narrow ops stay shuffle-free.
 
 import contextlib
 import io
+import re
 
 import __spark_entry__ as entrymod
 from conftest import SF_DIR
@@ -97,7 +98,10 @@ def test_grouped_dp_keeps_explicit_partitioning(spark):
     """The Viterbi stage repartitions by the explicit trip BUCKET key
     (a user-specified repartition that AQE may not coalesce away; the
     bucket amortizes the per-group Arrow constant across trips, see
-    routing.bucketed_apply). Built from the operator directly: the
+    routing.bucketed_apply). Between that Exchange and the grouped
+    Python node sits exactly one Sort, by (bucket, trip): the runner's
+    sort satisfies the grouping's order, so Spark adds neither a second
+    Sort nor a second shuffle. Built from the operator directly: the
     entry-point query serves a session-memoized localCheckpoint (Scan
     ExistingRDD) whose plan no longer shows the DP stage."""
     from pfaedle_spark import datagen
@@ -109,6 +113,15 @@ def test_grouped_dp_keeps_explicit_partitioning(spark):
     plan = plan_of(aligned)
     assert "FlatMapGroupsInPandas" in plan
     assert "hashpartitioning(_bucket" in plan
+    tree = aligned._jdf.queryExecution().executedPlan().toString().splitlines()
+    top = next(i for i, line in enumerate(tree) if "FlatMapGroupsInPandas" in line)
+    shuffle = [i for i, line in enumerate(tree) if "Exchange hashpartitioning(_bucket" in line]
+    assert len(shuffle) == 1 and shuffle[0] > top
+    between = tree[top + 1:shuffle[0]]
+    sorts = [line for line in between if "Sort [" in line]
+    assert len(sorts) == 1, between
+    assert re.search(r"Sort \[_bucket#\d+ ASC NULLS FIRST, trip_id#\d+ ASC", sorts[0]), sorts
+    assert not any("Exchange" in line for line in between), between
 
 
 def test_lifecycle_candidates_broadcast_composed_graph(spark):

@@ -8,8 +8,10 @@ Oracles:
 """
 
 import itertools
+from collections import OrderedDict
 
 import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -336,7 +338,7 @@ def test_hop_table_guard_raises_before_broadcast(spark, monkeypatch):
     nothing is broadcast or memoized."""
     eds = datagen.edges(spark)
     cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
-    monkeypatch.setattr(routing, "_HOP_BC_CACHE", {})
+    monkeypatch.setattr(routing, "_SESSION_MEMO", OrderedDict())
     monkeypatch.setattr(routing, "_HOP_TABLE_MAX_BYTES", 1024 * 1024 * 8 - 1)
     sc, group = spark.sparkContext, "hop-table-guard"
     sc.setJobGroup(group, group)
@@ -346,7 +348,7 @@ def test_hop_table_guard_raises_before_broadcast(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
-    assert routing._HOP_BC_CACHE == {}
+    assert not routing._SESSION_MEMO
 
 
 def test_hop_table_built_once_per_plan(spark, monkeypatch):
@@ -355,7 +357,7 @@ def test_hop_table_built_once_per_plan(spark, monkeypatch):
     collect job, one memo entry."""
     eds = datagen.edges(spark)
     cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
-    monkeypatch.setattr(routing, "_HOP_BC_CACHE", {})
+    monkeypatch.setattr(routing, "_SESSION_MEMO", OrderedDict())
     sc, group = spark.sparkContext, "hop-table-once"
     sc.setJobGroup(group, group)
     try:
@@ -365,17 +367,15 @@ def test_hop_table_built_once_per_plan(spark, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert len(routing._HOP_BC_CACHE) == 1
+    assert [k[1] for k in routing._SESSION_MEMO] == ["hop_table"]
 
 
 def test_checkpoint_memo_hits_and_stays_bounded(spark, monkeypatch):
-    """The session memo of eager-checkpointed shares: a hit returns the
-    same frame without building again, and the memo never holds more
-    than its bound (the least recently used entry is dropped and is
-    built again on its next use)."""
-    from collections import OrderedDict
-
-    monkeypatch.setattr(routing, "_CHECKPOINT_MEMO", OrderedDict())
+    """Eager-checkpointed shares in the one session memo: a hit returns
+    the same frame without building again, and the memo never holds
+    more than its bound (the least recently used entry is dropped and
+    is built again on its next use)."""
+    monkeypatch.setattr(routing, "_SESSION_MEMO", OrderedDict())
     builds = []
 
     def share(i):
@@ -389,10 +389,133 @@ def test_checkpoint_memo_hits_and_stays_bounded(spark, monkeypatch):
     assert share(0) is first
     assert builds == [0]
     assert sorted(r.id for r in first.collect()) == [0, 1, 2]
-    bound = routing._CHECKPOINT_MEMO_MAX
+    bound = routing._SESSION_MEMO_MAX
     for i in range(1, bound + 3):
         share(i)
-        assert len(routing._CHECKPOINT_MEMO) <= bound
+        assert len(routing._SESSION_MEMO) <= bound
     assert builds == list(range(bound + 3))
     share(0)
     assert builds[-1] == 0
+
+
+def _key_runs(batches):
+    frames = [pd.DataFrame({"k": b, "v": np.arange(len(b))}) for b in batches]
+    return frames, list(routing.key_runs(iter(frames), "k"))
+
+
+@pytest.mark.parametrize("batches", [
+    [["a", "a", "a"], ["a", "a", "a"], ["a", "b", "b"]],  # a spans three batches
+    [["a", "b", "c"], ["c", "c", "c"], ["c", "d", "e"]],  # a batch of one key
+    [["a", "a", "b", "b"], ["c", "c", "d"]],              # b ends at the boundary
+    [["a", "b"], [], ["b", "c"], ["d"]],                  # an empty batch too
+])
+def test_key_runs_hand_out_complete_keys(batches):
+    """The grouped runner's carry: every frame out holds complete keys
+    only, at most one batch plus one key of rows, and the frames out
+    are the frames in, in order."""
+    frames, runs = _key_runs(batches)
+    key_rows = pd.concat(frames)["k"].value_counts()
+    bound = max(len(b) for b in batches) + key_rows.max()
+    seen = set()
+    for run in runs:
+        assert len(run) <= bound
+        keys = set(run["k"])
+        assert not keys & seen  # no key split over two calls
+        seen |= keys
+        assert all(key_rows[k] == (run["k"] == k).sum() for k in keys)
+    assert seen == set(key_rows.index)
+    pd.testing.assert_frame_equal(pd.concat(runs, ignore_index=True),
+                                  pd.concat(frames, ignore_index=True))
+
+
+@pytest.mark.parametrize("batches", [
+    [["a", "b"], ["a"]],       # a comes back in a later batch
+    [["a", "b", "a"]],         # ... or later in the same batch
+    [["b", "b"], ["a", "c"]],  # keys out of order
+])
+def test_key_runs_reject_a_key_that_comes_back(batches):
+    """A key whose run has ended must not reappear: the runner's sort is
+    what makes each run complete, so a broken order fails loudly."""
+    with pytest.raises(ValueError, match="not contiguous"):
+        _key_runs(batches)
+
+
+def test_grouped_runner_streams_small_batches(spark):
+    """At 3-record Arrow batches, viterbi_align and segmentize return the
+    rows they return at the default batch size, and the kernel sees
+    frames smaller than a bucket: PySpark resolved the runner's
+    ``Iterator[pd.DataFrame]`` hints to the iterator eval type instead
+    of silently falling back to one frame per bucket."""
+    import __spark_entry__ as entrymod
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    eds = datagen.edges(spark)
+    cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
+    q = entrymod.queries()["segmentize"]
+
+    def rows():
+        aligned = routing.viterbi_align(cand, graph_ops.write_odir_edges(eds))
+        calls = routing.bucketed_apply(
+            cand.select("trip_id"), "trip_id",
+            lambda pdf: pd.DataFrame({"rows": [len(pdf)], "trips": [pdf["trip_id"].nunique()]}),
+            "rows long, trips long",
+        )
+        return (sorted(aligned.collect()), sorted(q(spark, SF_DIR).collect()),
+                calls.toPandas())
+
+    want_align, want_seg, whole = rows()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        got_align, got_seg, small = rows()
+    finally:
+        spark.conf.set(key, old)
+    assert len(want_align) > 0 and len(want_seg) > 0
+    assert got_align == want_align
+    assert got_seg == want_seg
+    n = routing.dp_partitions(spark)
+    per_bucket = (
+        cand.groupBy(F.pmod(F.hash("trip_id"), F.lit(n))).count().toPandas()["count"]
+    )
+    per_trip = cand.groupBy("trip_id").count().toPandas()["count"]
+    assert small["rows"].sum() == whole["rows"].sum() == per_trip.sum()
+    assert small["trips"].sum() == len(per_trip)  # each trip in one call
+    assert small["rows"].max() < per_bucket.max()
+    assert small["rows"].max() <= 3 + per_trip.max()
+
+
+def test_session_memo_threads_stay_bounded_and_consistent():
+    """Concurrent lifecycle stages share the one session memo: under
+    many threads and a tiny switch interval, every call returns its own
+    key's value, nothing raises, and the memo never exceeds its bound."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="stress", startTime=0))
+    bound = routing._SESSION_MEMO_MAX
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(400):
+                k = (w * 7 + i) % (2 * bound)
+                assert routing.session_memo(fake, ("stress", k), lambda: ("v", k)) == ("v", k)
+                assert len(routing._SESSION_MEMO) <= bound
+        except Exception as exc:  # a thread cannot fail the test itself
+            errors.append(exc)
+
+    old_switch, old_memo = sys.getswitchinterval(), routing._SESSION_MEMO
+    routing._SESSION_MEMO = OrderedDict()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,)) for w in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old_switch)
+        routing._SESSION_MEMO = old_memo
+    assert errors == []

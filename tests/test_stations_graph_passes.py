@@ -247,11 +247,10 @@ def test_composed_graph_job_budget(spark):
     """A cold composed_graph plus the lifecycle's road-graph components
     is one collect per input table and one for the components — not
     one job per pass round."""
-    from pfaedle_spark.operators import graph_ops
-    from pfaedle_spark.operators.routing import session_token
+    from pfaedle_spark.operators import graph_ops, routing
     from pfaedle_spark.plans import lifecycle
 
-    lifecycle._COMPOSED_MEMO.pop(session_token(spark), None)
+    routing._SESSION_MEMO.pop((routing.session_token(spark), "composed_graph"), None)
     sc, group = spark.sparkContext, "composed-graph-job-budget"
     sc.setJobGroup(group, "cold composed_graph + road components")
     try:
