@@ -1,12 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship pipeline smoke at sf0.001.
-``queries()``   — one callable per implemented operator (96 queries:
+``queries()``   — one callable per implemented operator (95 queries:
                   a priority tier of new/never-driver-graded ones, then
                   the other queries rotated deterministically by round
                   so each re-enters the driver's grading window; the
                   SURVEY.md §2 map is COVERAGE.md).
-``oracle_sql()``— DuckDB-equivalent SQL per query: ALL 96 queries carry
+``oracle_sql()``— DuckDB-equivalent SQL per query: ALL 95 queries carry
                   bit-identical oracles (0 rows-only since round 5).
                   Highlights: the MAIN-grid full-cost Viterbi, -T
                   debug, AND R10 shape assembly (dp-seeded
@@ -932,7 +932,6 @@ def _queries_ordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "restrictions": _q_restrictions,
         "turn_transitions": _q_turn_transitions,
         "restricted_paths": _q_restricted_paths,
-        "restricted_paths_cogrouped": _q_restricted_paths_cogrouped,
         "line_similarity": _q_line_similarity,
         "trip_clusters": _q_trip_clusters,
         "viterbi_full": _q_viterbi_full,
@@ -985,12 +984,6 @@ def _queries_ordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "normalize_chains": osmfilter.normalize_chains,
         "line_first_match": osmfilter.line_first_match,
     }
-
-
-def _q_restricted_paths_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast-free restricted routing (component-cogrouped transition
-    subgraphs) — same semantics and oracle as restricted_paths."""
-    return edge_routing.restricted_paths_cogrouped(spark)
 
 
 def _frechet_hops_sql() -> str:
@@ -1337,8 +1330,8 @@ def _lifecycle_penalties_sql() -> str:
 
 def _hop_paths_sql() -> str:
     """Shared by hop_shortest_paths and hop_paths_cogrouped — identical
-    semantics, different physical plans (broadcast CSR vs component
-    cogroup)."""
+    semantics, different physical plans (broadcast hop table vs
+    component cogroup)."""
     return candidates.candidates_cte_sql() + f""",
 r1 AS (SELECT trip_id, seq, image_id, cand_node FROM cand WHERE rank = 1),
 hops AS (
@@ -1499,7 +1492,6 @@ edges_pruned AS (
         "restrictions": gtfs_ops.restrictions_sql(),
         "turn_transitions": edge_routing.turn_transitions_sql(),
         "restricted_paths": edge_routing.restricted_paths_sql(),
-        "restricted_paths_cogrouped": edge_routing.restricted_paths_sql(),
         "line_similarity": edge_routing.transitions_ctes()
         + " SELECT edge_id, cmp FROM ecmp",
         "trip_clusters": edge_routing.trip_clusters_sql(),

@@ -33,7 +33,8 @@ per-variant CSRs that the driver builds once per call and broadcasts
 (:func:`_csr_broadcast`) — same axis the reference parallelizes with
 OpenMP threads. Each fingerprint is solved once, by
 :func:`viterbi_full`; :func:`shape_assembly` only walks its chosen
-states.
+states. :func:`restricted_paths` gathers from ``routing.hop_table``
+rows over the same CSR layout instead of searching per source.
 
 At 100 TB the transitions table is graph-sized (scales with geography,
 not with the observation/image table), so building and broadcasting it
@@ -54,8 +55,8 @@ from .. import sqlgen
 from ..functions import strings
 from . import graph_ops, graph_passes, gtfs_ops
 from .routing import (
-    OPTS, bucketed_apply, build_csr, heuristic, index_of, per_key, reachable,
-    search, session_memo,
+    OPTS, bucketed_apply, build_csr, heuristic, hop_costs, hop_lookup, index_of, per_key,
+    reachable, search, session_memo,
 )
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
@@ -105,36 +106,15 @@ def _cos_full_turn(opts: dict) -> float:
 # directed edge states
 # --------------------------------------------------------------------
 
-def directed_full(edges: DataFrame) -> DataFrame:
-    """Reverse copy for EVERY edge (unlike graph_ops.write_odir_edges,
-    which skips oneways): the reverse of a oneway is kept but flagged
+def directed_arrays(ed: dict) -> dict:
+    """Directed edge states over collected edge columns: forward rows
+    first, then a reverse copy of EVERY edge (``edge_id + REV_OFF``,
+    endpoints swapped). Unlike graph_ops.write_odir_edges, which skips
+    oneways, the reverse of a oneway is kept but flagged
     ``against_oneway`` and penalized — the reference models wrong-way
     travel as oneWay==2 with a per-meter punish, not as a missing edge
     (``edge_payload.h:47-139``, ``router.cpp:60``), for robustness
     against OSM data errors."""
-    fwd = edges.select(
-        "edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "length",
-        F.lit(False).alias("against_oneway"),
-    )
-    rev = edges.select(
-        (F.col("edge_id") + REV_OFF).alias("edge_id"),
-        F.col("dst").alias("src"),
-        F.col("src").alias("dst"),
-        F.col("x2").alias("x1"),
-        F.col("y2").alias("y1"),
-        F.col("x1").alias("x2"),
-        F.col("y1").alias("y2"),
-        "level",
-        "length",
-        F.col("oneway").alias("against_oneway"),
-    )
-    return fwd.unionByName(rev)
-
-
-def directed_arrays(ed: dict) -> dict:
-    """:func:`directed_full` over collected edge columns: forward rows
-    first, then reverse rows (``edge_id + REV_OFF``, endpoints swapped,
-    ``against_oneway = oneway``)."""
     def both(a: str, b: str) -> np.ndarray:
         return np.concatenate([ed[a], ed[b]])
 
@@ -556,8 +536,7 @@ def state_search(
     csr: dict, seeds: list[tuple[int, float]], targets: list[int], band: bool = False
 ) -> tuple[dict[int, float], dict[int, int]]:
     """:func:`routing.search` in raw edge-state ids: ONE multi-source A*
-    for a whole Viterbi layer transition, or a single-seed query
-    (restricted_paths).
+    for a whole Viterbi layer transition.
 
     ``seeds`` are (state edge id, accumulated DP cost), so a settled
     target t carries min_i(dp_i + dist(i -> t)) without ever
@@ -735,111 +714,51 @@ def restricted_paths(spark: SparkSession) -> DataFrame:
     Source states: directed edges leaving SOURCE_NODES; target states:
     directed edges entering TARGET_NODES. Unreachable => NULL.
 
-    Distribution: source states in ``routing.bucketed_apply`` runs over
-    the broadcast transition CSR (graph-sized — see module docstring).
+    Distribution: the transition CSR is built on the driver from one
+    collect each of the edges, nodes and restrictions
+    (:func:`transition_arrays`) and broadcast (graph-sized — see module
+    docstring); source states run in ``routing.bucketed_apply``, and
+    each run gathers its pairs from the ``routing.hop_table`` rows of
+    its sources.
     """
     from .. import datagen
 
     edges = _sub_edges(spark)
-    restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
-    trans = turn_transitions(edges, restr, datagen.nodes(spark))
-    de = directed_full(edges)
-    sources = de.filter(F.col("src").isin(SOURCE_NODES)).select(
-        F.col("edge_id").alias("from_edge"), F.col("src").alias("src_node")
+    ed = graph_ops.collect_columns(edges.select(*EDGE_COLS))
+    trans = transition_arrays(
+        ed,
+        graph_ops.collect_columns(datagen.nodes(spark).select("node_id", "is_station")),
+        graph_ops.collect_columns(
+            gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
+            .select(*RESTR_COLS)
+        ),
     )
-    targets = [
-        (int(r["edge_id"]), int(r["dst"]))
-        for r in de.filter(F.col("dst").isin(TARGET_NODES))
-        .select("edge_id", "dst")
-        .collect()
-    ]
-    bc = spark.sparkContext.broadcast(transition_csr(trans.toPandas()))
-    tgt_states = sorted(t for t, _ in targets)
-    tgt_nodes = dict(targets)
+    bc = spark.sparkContext.broadcast(
+        build_csr(trans["from_edge"], trans["to_edge"], trans["cost"])
+    )
+    de = directed_arrays(ed)
+    src = np.isin(de["src"], SOURCE_NODES)
+    sources = graph_ops.columns_frame(
+        spark, {"from_edge": de["edge_id"][src], "src_node": de["src"][src]},
+        "from_edge long, src_node long",
+    )
+    tgt = np.isin(de["dst"], TARGET_NODES)
+    tgt_states, tgt_nodes = de["edge_id"][tgt], de["dst"][tgt]
 
     def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for fe, sn in zip(pdf["from_edge"], pdf["src_node"]):
-            d, _ = state_search(bc.value, [(int(fe), 0.0)], tgt_states)
-            for t in tgt_states:
-                out.append((int(fe), int(sn), t, tgt_nodes[t], d.get(t)))
-        return pd.DataFrame(
-            out, columns=["from_edge", "src_node", "to_edge", "dst_node", "path_cost"]
-        )
+        fe = pdf["from_edge"].to_numpy(np.int64)
+        nf, nt = len(fe), len(tgt_states)
+        frm, to = np.repeat(fe, nt), np.tile(tgt_states, nf)
+        cost = hop_costs(hop_lookup(bc.value, fe), frm, to)
+        return pd.DataFrame({
+            "from_edge": frm, "src_node": np.repeat(pdf["src_node"].to_numpy(np.int64), nt),
+            "to_edge": to, "dst_node": np.tile(tgt_nodes, nf),
+            "path_cost": np.where(np.isinf(cost), np.nan, cost),
+        })
 
     return bucketed_apply(
         sources, "from_edge", solve,
         "from_edge long, src_node long, to_edge long, dst_node long, path_cost double",
-    )
-
-
-def restricted_paths_cogrouped(
-    spark: SparkSession, n_buckets: int = 4
-) -> DataFrame:
-    """:func:`restricted_paths` WITHOUT the driver-side transitions
-    collect — the broadcast-free continental fallback for the FULL R3
-    cost model (the edge-state twin of routing.hop_shortest_paths_
-    cogrouped): source states and the transitions table are cogrouped
-    on the via-node component label, so each task receives exactly its
-    component's transition subgraph through the shuffle. Bucket salting
-    replicates the (graph-side) transitions n_buckets x so one
-    component does not collapse to one task.
-
-    Output, semantics and the driver oracle are identical to
-    restricted_paths; only the physical plan differs.
-    """
-    from .. import datagen
-
-    edges = _sub_edges(spark)
-    restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
-    nodes = datagen.nodes(spark)
-    trans = turn_transitions(edges, restr, nodes)
-    comp = nodes.select("node_id", "component")
-    trans_c = (
-        # fresh component attribute: the local transitions relation shares
-        # no lineage with comp, so without the alias both cogroup sides
-        # would carry the same component attribute (an ambiguous self-join)
-        trans.join(
-            comp.select(F.col("node_id").alias("via_node"), F.col("component").alias("component")),
-            "via_node",
-        )
-        .withColumn("bucket", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))))
-    )
-    de = directed_full(edges)
-    sources = (
-        de.filter(F.col("src").isin(SOURCE_NODES))
-        .select(F.col("edge_id").alias("from_edge"), F.col("src").alias("src_node"))
-        .join(comp.withColumnRenamed("node_id", "src_node"), "src_node")
-        .withColumn("bucket", F.pmod(F.hash("from_edge"), F.lit(n_buckets)))
-    )
-    targets = [
-        (int(r["edge_id"]), int(r["dst"]))
-        for r in de.filter(F.col("dst").isin(TARGET_NODES))
-        .select("edge_id", "dst")
-        .collect()
-    ]  # target STATES are query constants (tiny), not graph data
-    tgt_states = sorted(t for t, _ in targets)
-    tgt_nodes = dict(targets)
-
-    def solve(src_pdf: pd.DataFrame, trans_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["from_edge", "src_node", "to_edge", "dst_node", "path_cost"]
-        out = []
-        if len(src_pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        csr = transition_csr(trans_pdf) if len(trans_pdf) else None
-        for fe, sn in zip(src_pdf["from_edge"], src_pdf["src_node"]):
-            d = state_search(csr, [(int(fe), 0.0)], tgt_states)[0] if csr else {}
-            for t in tgt_states:
-                out.append((int(fe), int(sn), t, tgt_nodes[t], d.get(t)))
-        return pd.DataFrame(out, columns=cols)
-
-    return (
-        sources.groupBy("component", "bucket")
-        .cogroup(trans_c.groupBy("component", "bucket"))
-        .applyInPandas(
-            solve,
-            schema="from_edge long, src_node long, to_edge long, dst_node long, path_cost double",
-        )
     )
 
 
@@ -970,9 +889,7 @@ FROM per_trip
 
 
 def viterbi_full(
-    cand: DataFrame,
-    transitions_by_variant: dict[int, pd.DataFrame],
-    fingerprints: DataFrame | None = None,
+    cand: DataFrame, transitions_by_variant: dict[int, pd.DataFrame]
 ) -> DataFrame:
     """R7 with the COMPLETE model: candidate states are *directed edges*
     (router/misc.h:23-33 edge_candidate), emission = A5 penalty
@@ -988,8 +905,7 @@ def viterbi_full(
     # candidate join feeds both the fingerprint and emission branches —
     # materialize once
     cand = cand.localCheckpoint(eager=False)
-    if fingerprints is None:
-        fingerprints = trip_fingerprints(cand)
+    fingerprints = trip_fingerprints(cand)
     bc = _csr_broadcast(spark, transitions_by_variant)
 
     with_emis = cand.withColumn("emission", F.expr(emission_expr()))
@@ -1148,7 +1064,7 @@ def _edge_columns(spark: SparkSession, edges: DataFrame) -> dict:
 
 
 def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
-    """:func:`directed_full` on the driver: the directed-edge arrays of
+    """:func:`directed_arrays` as a frame: the directed edge states of
     the memoized edge collect, so a query that also builds transitions
     over ``edges`` issues no second collect."""
     return pd.DataFrame(directed_arrays(_edge_columns(spark, edges)))

@@ -23,13 +23,18 @@ trip axis the reference parallelizes with OpenMP
 (``shape_builder.cpp:234``) — sorted by key and streamed to the kernel
 one Arrow batch at a time, cut at key boundaries, so a kernel call
 holds at most one batch plus one key. The node-state DPs are batched
-numpy kernels over such a run of trips. Each DP layer gathers from the
-**hop table** (:func:`hop_broadcast`), built once on the driver in
-place of the reference's per-thread route cache and broadcast: 8 MiB
-for the grid's 1,024 nodes, as graph size scales with geography. For
-continent-scale graphs the plan is a per-component subgraph equi-join
-instead (:func:`hop_shortest_paths_cogrouped`); candidates carry their
-component label so that join prunes precisely.
+numpy kernels over such a run of trips. Every source-to-targets
+shortest path is a gather from ONE kernel, the frontier Bellman-Ford
+:func:`hop_table`: all rows, built once on the driver and broadcast
+(:func:`hop_broadcast`, in place of the reference's per-thread route
+cache; 8 MiB for the grid's 1,024 nodes, as graph size scales with
+geography), or only the rows of a run's sources
+(:func:`hop_lookup` with ``sources``) — per component in
+:func:`hop_shortest_paths_cogrouped`, whose hops and edges meet in a
+component-keyed cogroup instead of a broadcast, and over the
+edge-state CSR in ``edge_routing.restricted_paths``. The label-setting
+:func:`search` serves the seeded, banded edge-state DP step and its
+path capture.
 """
 
 from __future__ import annotations
@@ -256,22 +261,15 @@ def heuristic(csr: dict, targets: frozenset):
     target (reference DistHeur, ``router/router.h`` /
     ``router.cpp:119-145``). Admissible and consistent, so popped ==
     settled exactly like Dijkstra; NaN coords give 0. One vectorized
-    pass, cached per target set — every seed of a DP layer, and every
-    source of a hop matrix row, shares one table. None without coords."""
+    pass per call (every seed of a DP layer shares it). None without
+    coords."""
     xy = csr.get("xy")
     if xy is None or not targets:
         return None
-    hcache = csr.setdefault("_hcache", {})
-    harr = hcache.get(targets)
-    if harr is None:
-        if len(hcache) > 4096:
-            hcache.clear()
-        txy = xy[np.fromiter(targets, dtype=np.int64)]
-        dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
-        dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
-        harr = np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1)
-        hcache[targets] = harr
-    return harr
+    txy = xy[np.fromiter(targets, dtype=np.int64)]
+    dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
+    dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
+    return np.nan_to_num(np.sqrt(dx * dx + dy * dy), nan=0.0).min(axis=1)
 
 
 def search(csr: dict, seeds, targets, harr, *, preds: bool = False, band=False):
@@ -442,21 +440,24 @@ def checkpoint_memo(spark, key: tuple, build) -> DataFrame:
     return session_memo(spark, key, lambda: build().localCheckpoint(eager=True))
 
 
-def hop_table(csr: dict) -> np.ndarray:
-    """R6 all-pairs hop costs: ``H[i, j]`` = shortest-path cost from
-    state index i to state index j (float64, +inf where unreachable).
+def hop_table(csr: dict, rows=None) -> np.ndarray:
+    """R6 hop costs: ``H[r, j]`` = shortest-path cost from state index
+    ``rows[r]`` to state index j (float64, +inf where unreachable).
+    ``rows=None`` is every state in index order (all pairs); otherwise
+    the table has ``len(rows)`` rows, one per entry (repeats included),
+    and every entry must be a valid index.
 
-    Frontier Bellman-Ford: relax the out-arcs of the (source, node)
-    pairs improved last round, keep the minimum per (source, node) and
-    write only improvements, until none is left. Bit-exact with
-    :func:`search` for any non-negative costs: round-to-nearest is
-    monotone, so both equal the min over paths of the left-to-right
-    arc-cost sum."""
+    Frontier Bellman-Ford: relax the out-arcs of the (row, node) pairs
+    improved last round, keep the minimum per (row, node) and write only
+    improvements, until none is left. Bit-exact with :func:`search` for
+    any non-negative costs: round-to-nearest is monotone, so both equal
+    the min over paths of the left-to-right arc-cost sum."""
     indptr, dsts, cost = csr["indptr"], csr["dst"], csr["cost"]
     n = len(indptr) - 1
-    hop = np.full((n, n), np.inf)
-    flat = hop.reshape(-1)  # a view: pair (source, node) is key source * n + node
-    key = np.arange(n) * (n + 1)
+    rows = np.arange(n) if rows is None else np.asarray(rows, dtype=np.int64)
+    hop = np.full((len(rows), n), np.inf)
+    flat = hop.reshape(-1)  # a view: pair (row r, node) is key r * n + node
+    key = np.arange(len(rows)) * n + rows
     flat[key] = 0.0
     deg = np.diff(indptr)
     while len(key):
@@ -476,11 +477,28 @@ def hop_table(csr: dict) -> np.ndarray:
     return hop
 
 
-def hop_lookup(csr: dict) -> dict:
-    """The node-state DPs' gather source: :func:`hop_table` plus an +inf
-    row and column that :func:`index_of`'s -1 (node not in graph) reads."""
-    hop = np.pad(hop_table(csr), ((0, 1), (0, 1)), constant_values=np.inf)
-    return {"states": csr["states"], "H": hop}
+def hop_lookup(csr: dict, sources=None) -> dict:
+    """The gather source of :func:`hop_costs`: :func:`hop_table` over
+    every state (``sources=None``: the node-state DPs index ``H`` with
+    :func:`index_of` on both axes), or over the distinct ``sources``
+    state ids of the graph only, plus an +inf row and column that an id
+    not in the table (index -1) reads."""
+    out = {"states": csr["states"]}
+    rows = None
+    if sources is not None:
+        ids = np.unique(np.asarray(sources, dtype=np.int64))
+        rows = index_of(csr, ids)
+        out["sources"], rows = ids[rows >= 0], rows[rows >= 0]
+    out["H"] = np.pad(hop_table(csr, rows), ((0, 1), (0, 1)), constant_values=np.inf)
+    return out
+
+
+def hop_costs(hop: dict, frm, to) -> np.ndarray:
+    """Hop cost per (``frm``, ``to``) state-id pair from a
+    :func:`hop_lookup`; +inf where unreachable or either id is not in
+    the table."""
+    rows = {"states": hop.get("sources", hop["states"])}
+    return hop["H"][index_of(rows, frm), index_of(hop, to)]
 
 
 def hop_broadcast(spark, edges: DataFrame, level_punish: bool = True):
@@ -657,43 +675,70 @@ def greedy2_align(candidates: DataFrame, edges_directed: DataFrame) -> DataFrame
     )
 
 
+_HOP_COLS = ["trip_id", "seq", "image_id", "to_image", "cand_node", "to_node"]
+_HOP_SCHEMA = (
+    "trip_id string, seq long, image_id string, to_image string, "
+    "cand_node long, to_node long, path_cost double"
+)
+
+
+def _rank1_hops(candidates: DataFrame) -> DataFrame:
+    """Consecutive rank-1 candidate nodes of each trip: one row per hop
+    (cand_node -> to_node), the last observation of a trip dropped."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("trip_id").orderBy("seq")
+    return (
+        candidates.filter("rank = 1")
+        .select("trip_id", "seq", "image_id", "cand_node")
+        .withColumn("to_node", F.lead("cand_node").over(w))
+        .withColumn("to_image", F.lead("image_id").over(w))
+        .filter(F.col("to_node").isNotNull())
+    )
+
+
+def _hop_rows(pdf: pd.DataFrame, hop: dict) -> pd.DataFrame:
+    """``pdf``'s hops with their :func:`hop_costs` gather as
+    ``path_cost`` (NaN where unreachable)."""
+    cost = hop_costs(hop, pdf["cand_node"], pdf["to_node"])
+    out = pdf[_HOP_COLS].copy()
+    out["path_cost"] = np.where(np.isinf(cost), np.nan, cost)
+    return out
+
+
+def _null_nan(df: DataFrame) -> DataFrame:
+    # unreachable (cross-component) hops: surface as SQL NULL, not NaN
+    return df.withColumn(
+        "path_cost",
+        F.when(F.isnan("path_cost"), F.lit(None)).otherwise(F.col("path_cost")),
+    )
+
+
 def hop_shortest_paths_cogrouped(
-    candidates: DataFrame,
-    edges_bidir: DataFrame,
-    components: DataFrame,
-    n_buckets: int = 8,
+    candidates: DataFrame, edges_bidir: DataFrame, components: DataFrame
 ) -> DataFrame:
     """R6 WITHOUT any driver-side graph broadcast — the continental-scale
     fallback SCALING.md designs: hops and edges are cogrouped on the
     component label, so each task receives exactly its component's
-    subgraph through the shuffle. Cross-component hops short-circuit to
-    NULL before routing (the component-infinity rule, router.cpp:598-599).
+    subgraph through the shuffle, builds its CSR (compact states) and
+    gathers from the :func:`hop_table` rows of its distinct candidate
+    nodes. Cross-component hops short-circuit to NULL before routing
+    (the component-infinity rule, router.cpp:598-599).
 
     Output and semantics are identical to :func:`hop_shortest_paths`
     (the driver oracle is shared), only the physical plan differs:
-    broadcast-CSR -> component-keyed subgraph join.
+    broadcast table -> component-keyed subgraph join.
     """
-    from pyspark.sql import Window
-
+    n_buckets = dp_partitions(candidates.sparkSession)
     comp_from = components.select(
         F.col("node_id").alias("cand_node"), F.col("label").alias("comp")
     )
     comp_to = components.select(
         F.col("node_id").alias("to_node"), F.col("label").alias("to_comp")
     )
-    w = Window.partitionBy("trip_id").orderBy("seq")
-    hops = (
-        candidates.filter("rank = 1")
-        .select("trip_id", "seq", "image_id", "cand_node")
-        .withColumn("to_node", F.lead("cand_node").over(w))
-        .withColumn("to_image", F.lead("image_id").over(w))
-        .filter(F.col("to_node").isNotNull())
-        .join(comp_from, "cand_node")
-        .join(comp_to, "to_node")
-    )
+    hops = _rank1_hops(candidates).join(comp_from, "cand_node").join(comp_to, "to_node")
     cross = hops.filter(F.col("comp") != F.col("to_comp")).select(
-        "trip_id", "seq", "image_id", "to_image", "cand_node", "to_node",
-        F.lit(None).cast("double").alias("path_cost"),
+        *_HOP_COLS, F.lit(None).cast("double").alias("path_cost"),
     )
     # trip-bucket salting: one component would otherwise be ONE task;
     # replicating the (small, graph-side) edge set n_buckets x restores
@@ -706,44 +751,22 @@ def hop_shortest_paths_cogrouped(
     )
     edges_comp = (
         edges_bidir.join(comp_src, "src")
-        .select("comp", "src", "dst", "length", "level")
+        .select("comp", "src", "dst", "length")
         .withColumn(
             "bucket", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1)))
         )
     )
 
     def solve(hops_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = ["trip_id", "seq", "image_id", "to_image", "cand_node", "to_node"]
-        if len(hops_pdf) == 0 or len(edges_pdf) == 0:
-            out = hops_pdf[cols].copy() if len(hops_pdf) else pd.DataFrame(columns=cols)
-            out["path_cost"] = np.nan
-            return out
-        csr = node_csr(edges_pdf[["src", "dst", "length", "level"]], level_punish=False)
-        us = hops_pdf["cand_node"].to_numpy(np.int64)
-        vs = hops_pdf["to_node"].to_numpy(np.int64)
-        costs = np.full(len(hops_pdf), np.nan)
-        for u in np.unique(us):
-            mask = us == u
-            d, _ = search(csr, [(int(u), 0.0)], set(np.unique(vs[mask]).tolist()), None)
-            costs[mask] = [d.get(int(v), np.nan) for v in vs[mask]]
-        out = hops_pdf[cols].copy()
-        out["path_cost"] = costs
-        return out
+        csr = build_csr(edges_pdf["src"], edges_pdf["dst"], edges_pdf["length"])
+        return _hop_rows(hops_pdf, hop_lookup(csr, hops_pdf["cand_node"]))
 
-    schema = (
-        "trip_id string, seq long, image_id string, to_image string, "
-        "cand_node long, to_node long, path_cost double"
-    )
     solved = (
         within.groupBy("comp", "bucket")
         .cogroup(edges_comp.groupBy("comp", "bucket"))
-        .applyInPandas(solve, schema=schema)
+        .applyInPandas(solve, schema=_HOP_SCHEMA)
     )
-    out = solved.unionByName(cross)
-    return out.withColumn(
-        "path_cost",
-        F.when(F.isnan("path_cost"), F.lit(None)).otherwise(F.col("path_cost")),
-    )
+    return _null_nan(solved.unionByName(cross))
 
 
 def hop_shortest_paths(candidates: DataFrame, edges_bidir: DataFrame) -> DataFrame:
@@ -754,32 +777,8 @@ def hop_shortest_paths(candidates: DataFrame, edges_bidir: DataFrame) -> DataFra
     oracle (Manhattan distance), giving a CONFIRMED correctness gate
     for the hop table. Cross-component hops report +inf as NULL.
     """
-    from pyspark.sql import Window
-
     bc = hop_broadcast(candidates.sparkSession, edges_bidir, level_punish=False)
-    w = Window.partitionBy("trip_id").orderBy("seq")
-    hops = (
-        candidates.filter("rank = 1")
-        .select("trip_id", "seq", "image_id", "cand_node")
-        .withColumn("to_node", F.lead("cand_node").over(w))
-        .withColumn("to_image", F.lead("image_id").over(w))
-        .filter(F.col("to_node").isNotNull())
+    out = bucketed_apply(
+        _rank1_hops(candidates), "trip_id", lambda pdf: _hop_rows(pdf, bc.value), _HOP_SCHEMA
     )
-
-    def solve(pdf: pd.DataFrame) -> pd.DataFrame:
-        hop = bc.value
-        cost = hop["H"][index_of(hop, pdf["cand_node"]), index_of(hop, pdf["to_node"])]
-        out = pdf[["trip_id", "seq", "image_id", "to_image", "cand_node", "to_node"]].copy()
-        out["path_cost"] = np.where(np.isinf(cost), np.nan, cost)
-        return out
-
-    schema = (
-        "trip_id string, seq long, image_id string, to_image string, "
-        "cand_node long, to_node long, path_cost double"
-    )
-    out = bucketed_apply(hops, "trip_id", solve, schema)
-    # unreachable (cross-component) hops: surface as SQL NULL, not NaN
-    return out.withColumn(
-        "path_cost",
-        F.when(F.isnan("path_cost"), F.lit(None)).otherwise(F.col("path_cost")),
-    )
+    return _null_nan(out)

@@ -182,7 +182,6 @@ class CheckpointedPipeline:
         name: str,
         fn: Callable[[], DataFrame],
         inputs: list[str] | None = None,
-        repartition: int | None = None,
     ) -> DataFrame:
         """Run (or resume) one stage; returns the materialized DataFrame."""
         path = self._stage_dir(name)
@@ -190,10 +189,7 @@ class CheckpointedPipeline:
             return self.spark.read.parquet(path)
 
         t0 = time.perf_counter()
-        df = fn()
-        if repartition:
-            df = df.repartition(repartition)
-        df.write.mode("overwrite").parquet(path)
+        fn().write.mode("overwrite").parquet(path)
         wall = time.perf_counter() - t0
         parts = self._partition_stats(path)
         self._append(

@@ -366,13 +366,6 @@ def test_restricted_paths_matches_oracle(spark):
     )
 
 
-def test_restricted_paths_cogrouped_matches_oracle(spark):
-    assert_matches_oracle(
-        entrymod.queries()["restricted_paths_cogrouped"](spark, None),
-        entrymod.oracle_sql()["restricted_paths_cogrouped"],
-    )
-
-
 def _grid_world(spark):
     """Main-grid edges, sf0.001 candidates and the per-variant transition
     tables: unlike the 8x8 sub-grid, whose trips have one candidate
@@ -540,7 +533,7 @@ def test_shape_assembly_geometric_invariants(spark):
     first hop starts the walk at the first chosen state that shares a
     component with its successor."""
     eds, cand, tbv = _grid_world(spark)
-    dedges = ER.directed_full(eds).toPandas()
+    dedges = ER.directed_full_pdf(spark, eds)
     vf = ER.viterbi_full(cand, tbv)
     got = ER.shape_assembly(vf, cand, tbv, dedges).toPandas()
     assert len(got) > 0

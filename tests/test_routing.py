@@ -62,13 +62,31 @@ def test_dijkstra_kernel_vs_floyd_warshall(grid_fw, spark):
             assert g == pytest.approx(want) or (np.isinf(g) and np.isinf(want))
 
 
-def test_hop_shortest_paths_manhattan_oracle(spark):
-    """Uniform-weight hop costs == Manhattan distance (same component)."""
-    pts = datagen.points(spark, SF_DIR)
+@pytest.fixture(scope="module")
+def hop_paths(spark):
+    """Both hop-path plans over the sf0.001 candidates on the uniform
+    bidirectional grid: the broadcast table and the component cogroup."""
     eds = datagen.edges(spark)
     bidir = graph_ops.write_odir_edges(eds.withColumn("oneway", F.lit(False)))
-    cand = candidates.candidate_edges(pts, eds)
-    got = routing.hop_shortest_paths(cand, bidir).toPandas()
+    cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
+    comps = datagen.nodes(spark).select("node_id", F.col("component").alias("label"))
+    runs = {
+        "hop_shortest_paths": lambda: routing.hop_shortest_paths(cand, bidir),
+        "hop_shortest_paths_cogrouped":
+            lambda: routing.hop_shortest_paths_cogrouped(cand, bidir, comps),
+    }
+    return {
+        name: run().toPandas().sort_values(["trip_id", "seq"], ignore_index=True)
+        for name, run in runs.items()
+    }
+
+
+@pytest.mark.parametrize("plan", ["hop_shortest_paths", "hop_shortest_paths_cogrouped"])
+def test_hop_shortest_paths_manhattan_oracle(hop_paths, plan):
+    """Uniform-weight hop costs == Manhattan distance (same component),
+    and both plans return the same rows, path costs as int64 bit
+    patterns."""
+    got = hop_paths[plan]
     g = C.GRID_N
     r1, c1 = got.cand_node // g, got.cand_node % g
     r2, c2 = got.to_node // g, got.to_node % g
@@ -78,6 +96,10 @@ def test_hop_shortest_paths_manhattan_oracle(spark):
     ok = got.path_cost[same].to_numpy() == manhattan[same].to_numpy()
     assert ok.all(), f"{(~ok).sum()} hop costs differ from Manhattan"
     assert got.path_cost[~same].isna().all()
+    other = hop_paths["hop_shortest_paths"]
+    pd.testing.assert_frame_equal(got.drop(columns="path_cost"), other.drop(columns="path_cost"))
+    bits = got.path_cost.fillna(np.inf).to_numpy(np.float64).view(np.int64)
+    assert np.array_equal(bits, other.path_cost.fillna(np.inf).to_numpy(np.float64).view(np.int64))
 
 
 def test_viterbi_vs_bruteforce(grid_fw, spark):
@@ -185,6 +207,23 @@ def test_astar_parity_and_pruning(spark):
     assert fewer >= 3, "A* should usually settle fewer nodes than Dijkstra"
 
 
+def test_search_leaves_csr_unchanged(spark):
+    """search and heuristic only read the CSR: a broadcast CSR is shared
+    by every task of a worker, so neither may add a key (such as a
+    per-CSR cache) to it."""
+    edges_pdf = graph_ops.write_odir_edges(datagen.edges(spark)).select(
+        "src", "dst", "length", "level", "x1", "y1", "x2", "y2"
+    ).toPandas()
+    csr = routing.node_csr(edges_pdf)
+    keys = sorted(csr)
+    targets = frozenset({5, 40, 900})
+    harr = routing.heuristic(csr, targets)
+    assert harr is not None
+    routing.search(csr, [(0, 0.0), (33, 1.5)], targets, harr)
+    routing.search(csr, [(7, 0.0)], targets, routing.heuristic(csr, targets), preds=True)
+    assert sorted(csr) == keys
+
+
 def test_heuristic_admissibility_gate_pure():
     """A* heuristic coords are attached only when every arc cost >=
     straight-line displacement; a config/data combination violating that
@@ -252,10 +291,18 @@ def test_hop_table_equals_search(spark):
         routing.node_csr(edges_pdf, level_punish=False),
         routing.node_csr(_random_graph_pdf(), level_punish=False),
     ]
+    rng = np.random.RandomState(3)
     for csr in graphs:
         got, want = routing.hop_table(csr), _search_rows(csr)
         assert got.dtype == np.float64
         assert np.array_equal(got.view(np.int64), want.view(np.int64))
+        n = len(csr["states"])
+        # row tables: the random graph's isolated node 20, a repeated
+        # row, a random subset and no rows at all
+        for rows in ([20, 5, 5, n - 1, 0], rng.choice(n, 7, replace=False), []):
+            sub = routing.hop_table(csr, np.asarray(rows, dtype=np.int64))
+            assert sub.shape == (len(rows), n)
+            assert np.array_equal(sub.view(np.int64), got[rows].view(np.int64))
     rand = graphs[-1]
     assert len(np.unique(rand["comp"])) >= 3  # two components + isolated 20
     hop = routing.hop_table(rand)
