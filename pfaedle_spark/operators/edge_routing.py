@@ -26,12 +26,14 @@ then every R3 term vectorized in the order its SQL twin evaluates it.
 The DuckDB oracle (:func:`transitions_ctes`) builds the same table as
 relational CTEs around ONE dialect-neutral cost string
 (:func:`cost_expr`), so every term stays bit-identically checkable.
-The shared search kernel (``routing.search`` over a
-``routing.build_csr`` of the transitions, states = directed edge ids)
-then runs in ``routing.bucketed_apply``, the grouped runner, over
-per-variant CSRs that the driver builds once per call and broadcasts
-(:func:`_csr_broadcast`) — same axis the reference parallelizes with
-OpenMP threads. Each fingerprint is solved once, by
+The edge-state Viterbi (:func:`state_viterbi_batch`) is the node-state
+one's layered driver, ``routing.layered_viterbi``, with a step of one
+banded ``routing.search`` per fingerprint and layer over a
+``routing.build_csr`` of the transitions (states = directed edge ids).
+It runs in ``routing.bucketed_apply``, the grouped runner, on runs of
+fingerprints, over per-variant CSRs that the driver builds once per
+call and broadcasts (:func:`_csr_broadcast`) — same axis the reference
+parallelizes with OpenMP threads. Each fingerprint is solved once, by
 :func:`viterbi_full`; :func:`shape_assembly` only walks its chosen
 states. :func:`restricted_paths` gathers from ``routing.hop_table``
 rows over the same CSR layout instead of searching per source.
@@ -55,8 +57,8 @@ from .. import sqlgen
 from ..functions import strings
 from . import graph_ops, graph_passes, gtfs_ops
 from .routing import (
-    OPTS, bucketed_apply, build_csr, heuristic, hop_costs, hop_lookup, index_of, per_key,
-    reachable, search, session_memo,
+    OPTS, _layer_grid, bucketed_apply, build_csr, heuristic, hop_costs, hop_lookup, index_of,
+    layered_viterbi, on_grid, per_key, reachable, search, session_memo,
 )
 
 THIRD = 0.333333333  # routing_attributes.h:40-47 uses this literal
@@ -888,6 +890,72 @@ FROM per_trip
     )
 
 
+def state_viterbi_batch(pdf: pd.DataFrame, csrs: dict, debug: bool = False) -> pd.DataFrame:
+    """R7 over directed-edge states for every fingerprint of ``pdf`` at
+    once, through ``routing.layered_viterbi``. After the (seq, edge_id,
+    emission) dedup, each candidate row is a forward state and a reverse
+    state (``edge_id + REV_OFF``); ties break toward the smaller state
+    id. The step runs, per active fingerprint, ONE banded
+    :func:`state_search` over ``csrs[variant]`` (:func:`_csr_broadcast`)
+    from the previous layer's states seeded with their DP costs: the
+    value is the search total plus emission, ``back`` the winning seed
+    ordinal (0 where a target is unreached). With ``debug``, emits every
+    candidate state per layer (DP cost + chosen flag) instead of the
+    winners only."""
+    rows = pdf.drop_duplicates(["fingerprint", "seq", "edge_id", "emission"])
+    rows = pd.concat(
+        [rows.assign(state_edge=rows["edge_id"]),
+         rows.assign(state_edge=rows["edge_id"] + REV_OFF)],
+        ignore_index=True,
+    )
+    g = _layer_grid(rows, "fingerprint", "state_edge", rows["emission"].to_numpy(np.float64))
+    em, width = g["em"], g["width"]
+    st = on_grid(g, g["rows"]["state_edge"].to_numpy(np.int64), -1)
+    variant = g["rows"]["variant"].to_numpy(np.int64)[g["lay_start"]].tolist()
+
+    def step(g, dp, prev, cur):
+        val = np.full((len(cur), em.shape[1]), np.inf)
+        back = np.zeros(val.shape, dtype=np.int64)
+        for r, (p, c) in enumerate(zip(prev.tolist(), cur.tolist())):
+            seeds = list(zip(st[p, :width[p]].tolist(), dp[p, :width[p]].tolist()))
+            targets = st[c, :width[c]].tolist()
+            d, o = state_search(csrs[variant[p]], seeds, targets, band=True)
+            val[r, :width[c]] = np.array([d.get(t, np.inf) for t in targets]) + em[c, :width[c]]
+            back[r, :width[c]] = [o.get(t, 0) for t in targets]
+        return val, back
+
+    return layered_viterbi(g, step, ["fingerprint", "seq", "state_edge", "edge_id"], debug)
+
+
+def _solve_fingerprints(
+    cand: DataFrame, transitions_by_variant: dict, debug: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """(keyed, solved): every candidate row with its A5 emission and A1
+    fingerprint, and :func:`state_viterbi_batch` over the cluster
+    representatives' rows, runs of fingerprints in the grouped runner
+    with the per-variant CSRs broadcast once."""
+    # candidate join feeds both the fingerprint and emission branches —
+    # materialize once
+    cand = cand.localCheckpoint(eager=False)
+    fingerprints = trip_fingerprints(cand)
+    keyed = cand.withColumn("emission", F.expr(emission_expr())).join(
+        fingerprints.select("trip_id", "fingerprint", "rep_trip", "variant"), "trip_id"
+    )
+    # both the reps (DP input) and members (join-back) branches read
+    # `keyed`; without materialization each branch re-runs the whole
+    # candidate spatial join — at any scale that is the dominant cost
+    keyed = keyed.localCheckpoint(eager=False)
+    reps = keyed.filter(F.col("trip_id") == F.col("rep_trip")).select(
+        "fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank"
+    )
+    bc = _csr_broadcast(cand.sparkSession, transitions_by_variant)
+    return keyed, bucketed_apply(
+        reps, "fingerprint", lambda pdf: state_viterbi_batch(pdf, bc.value, debug),
+        "fingerprint string, seq long, state_edge long, edge_id long, emission double, "
+        "acc_cost double" + (", chosen boolean" if debug else ""),
+    )
+
+
 def viterbi_full(
     cand: DataFrame, transitions_by_variant: dict[int, pd.DataFrame]
 ) -> DataFrame:
@@ -901,30 +969,7 @@ def viterbi_full(
     broadcast-join back to members via the fingerprint. Output one row
     per (trip, seq): chosen directed edge state + costs.
     """
-    spark = cand.sparkSession
-    # candidate join feeds both the fingerprint and emission branches —
-    # materialize once
-    cand = cand.localCheckpoint(eager=False)
-    fingerprints = trip_fingerprints(cand)
-    bc = _csr_broadcast(spark, transitions_by_variant)
-
-    with_emis = cand.withColumn("emission", F.expr(emission_expr()))
-    keyed = with_emis.join(
-        fingerprints.select("trip_id", "fingerprint", "rep_trip", "variant"), "trip_id"
-    )
-    # both the reps (DP input) and members (join-back) branches read
-    # `keyed`; without materialization each branch re-runs the whole
-    # candidate spatial join — at any scale that is the dominant cost
-    keyed = keyed.localCheckpoint(eager=False)
-    reps = keyed.filter(F.col("trip_id") == F.col("rep_trip")).select(
-        "fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank"
-    )
-
-    solved = bucketed_apply(
-        reps, "fingerprint", per_key(lambda g: _viterbi_full_one(g, bc.value), "fingerprint"),
-        "fingerprint string, seq long, state_edge long, edge_id long, "
-        "emission double, acc_cost double",
-    )
+    keyed, solved = _solve_fingerprints(cand, transitions_by_variant)
     members = keyed.select("trip_id", "fingerprint", "seq", "image_id").distinct()
     return members.join(solved, ["fingerprint", "seq"]).select(
         "trip_id", "seq", "image_id", "state_edge", "edge_id", "emission", "acc_cost"
@@ -944,110 +989,8 @@ def viterbi_trip_debug(
     :func:`viterbi_full` for the trip exactly (asserted in
     tests/test_edge_routing.py); the GeoJSON dump goes through
     sources.osm.geojson_sink."""
-    spark = cand.sparkSession
-    one = cand.filter(F.col("trip_id") == trip_id).localCheckpoint(eager=False)
-    fps = trip_fingerprints(one)
-    bc = _csr_broadcast(spark, transitions_by_variant)
-    keyed = (
-        one.withColumn("emission", F.expr(emission_expr()))
-        .join(fps.select("trip_id", "fingerprint", "variant"), "trip_id")
-        .select("fingerprint", "variant", "seq", "edge_id", "cand_node", "emission", "rank")
-    )
-
-    return bucketed_apply(
-        keyed, "fingerprint",
-        per_key(lambda g: _viterbi_full_one(g, bc.value, debug=True), "fingerprint"),
-        "fingerprint string, seq long, state_edge long, edge_id long, "
-        "emission double, acc_cost double, chosen boolean",
-    )
-
-
-def _viterbi_full_one(
-    pdf: pd.DataFrame, csrs: dict, debug: bool = False
-) -> pd.DataFrame:
-    """Layered min-plus DP over directed-edge candidate states, over
-    ``csrs[variant]`` (:func:`_csr_broadcast`); ties break toward the
-    smaller state id (rows pre-sorted). With ``debug``, emits every
-    candidate state per layer (DP cost + chosen flag) instead of the
-    winners only."""
-    fpr = pdf["fingerprint"].iloc[0]
-    csr = csrs[int(pdf["variant"].iloc[0])]
-
-    # Layer prep in flat numpy (the pandas slice/concat/iloc version
-    # cost ~2-3 ms PER TRIP of pure scaffolding — the dominant term on
-    # short-trip worlds). The DP arithmetic below is untouched: same
-    # d.get lookups, same emission add, same argmin tie-break.
-    seq = pdf["seq"].to_numpy(np.int64)
-    eid = pdf["edge_id"].to_numpy(np.int64)
-    emi = pdf["emission"].to_numpy(np.float64)
-    # drop_duplicates (seq, edge_id, emission), first occurrence
-    o1 = np.lexsort((np.arange(len(seq)), emi, eid, seq))
-    sq1, ei1, em1 = seq[o1], eid[o1], emi[o1]
-    keep = np.ones(len(sq1), bool)
-    keep[1:] = (
-        (sq1[1:] != sq1[:-1]) | (ei1[1:] != ei1[:-1]) | (em1[1:] != em1[:-1])
-    )
-    first_idx = np.sort(o1[keep])
-    bsq, bei, bem = seq[first_idx], eid[first_idx], emi[first_idx]
-    nb = len(bsq)
-    # directed states: fwd block then rev block, sorted by (seq, state)
-    # with the block order as the stable tie-break (REV_OFF > any edge
-    # id, so within a seq all fwd states precede all rev states)
-    s_seq = np.concatenate([bsq, bsq])
-    s_state = np.concatenate([bei, bei + REV_OFF])
-    s_eid = np.concatenate([bei, bei])
-    s_em = np.concatenate([bem, bem])
-    o2 = np.lexsort((np.arange(2 * nb), s_state, s_seq))
-    s_seq, s_state, s_eid, s_em = s_seq[o2], s_state[o2], s_eid[o2], s_em[o2]
-    seqs = np.unique(s_seq)
-    bounds = np.append(np.searchsorted(s_seq, seqs), 2 * nb)
-    lay = [slice(int(bounds[i]), int(bounds[i + 1])) for i in range(len(seqs))]
-
-    dp_cost: list[np.ndarray] = []
-    dp_prev: list[np.ndarray] = []
-    dp_cost.append(s_em[lay[0]].copy())
-    dp_prev.append(np.full(bounds[1] - bounds[0], -1, dtype=np.int64))
-    for li in range(1, len(seqs)):
-        prev_states = s_state[lay[li - 1]]
-        cur_states = [int(t) for t in s_state[lay[li]]]
-        seeds = list(zip((int(s) for s in prev_states), dp_cost[-1].tolist()))
-        d, o = state_search(csr, seeds, cur_states, band=True)
-        emission = s_em[lay[li]]
-        dp_cost.append(np.array([d.get(t, np.inf) for t in cur_states]) + emission)
-        dp_prev.append(np.array([o.get(t, 0) for t in cur_states], dtype=np.int64))
-
-    choice = np.zeros(len(seqs), dtype=np.int64)
-    choice[-1] = int(np.argmin(dp_cost[-1]))
-    for li in range(len(seqs) - 1, 0, -1):
-        choice[li - 1] = dp_prev[li][choice[li]]
-
-    if debug:
-        # -T surface: EVERY candidate state per layer with its DP cost
-        # and whether the backtrack chose it (app.cpp:206-224)
-        acc = np.concatenate(dp_cost)
-        chosen = np.zeros(2 * nb, dtype=bool)
-        chosen[bounds[:-1] + choice] = True
-        return pd.DataFrame(
-            {
-                "fingerprint": fpr, "seq": s_seq, "state_edge": s_state,
-                "edge_id": s_eid, "emission": s_em, "acc_cost": acc,
-                "chosen": chosen,
-            }
-        )
-
-    pick = bounds[:-1] + choice
-    return pd.DataFrame(
-        {
-            "fingerprint": fpr,
-            "seq": s_seq[pick],
-            "state_edge": s_state[pick],
-            "edge_id": s_eid[pick],
-            "emission": s_em[pick],
-            "acc_cost": np.array(
-                [float(dp_cost[li][int(choice[li])]) for li in range(len(seqs))]
-            ),
-        }
-    )
+    one = cand.filter(F.col("trip_id") == trip_id)
+    return _solve_fingerprints(one, transitions_by_variant, debug=True)[1]
 
 
 def _edge_columns(spark: SparkSession, edges: DataFrame) -> dict:

@@ -22,9 +22,13 @@ grouped runner, :func:`bucketed_apply`: hash buckets of keys — the
 trip axis the reference parallelizes with OpenMP
 (``shape_builder.cpp:234``) — sorted by key and streamed to the kernel
 one Arrow batch at a time, cut at key boundaries, so a kernel call
-holds at most one batch plus one key. The node-state DPs are batched
-numpy kernels over such a run of trips. Every source-to-targets
-shortest path is a gather from ONE kernel, the frontier Bellman-Ford
+holds at most one batch plus one key. Both Viterbi DPs run ONE layered
+driver, :func:`layered_viterbi`, over a run's (layer, slot) grid
+(:func:`_layer_grid`), every key of the run at once; only the layer
+step differs: a hop-table gather over node states here, one seeded,
+banded :func:`search` per fingerprint over directed-edge states in
+``edge_routing.state_viterbi_batch``. Every source-to-targets
+shortest path is a gather from the frontier Bellman-Ford
 :func:`hop_table`: all rows, built once on the driver and broadcast
 (:func:`hop_broadcast`, in place of the reference's per-thread route
 cache; 8 MiB for the grid's 1,024 nodes, as graph size scales with
@@ -32,9 +36,16 @@ geography), or only the rows of a run's sources
 (:func:`hop_lookup` with ``sources``) — per component in
 :func:`hop_shortest_paths_cogrouped`, whose hops and edges meet in a
 component-keyed cogroup instead of a broadcast, and over the
-edge-state CSR in ``edge_routing.restricted_paths``. The label-setting
-:func:`search` serves the seeded, banded edge-state DP step and its
-path capture.
+edge-state CSR in ``edge_routing.restricted_paths``.
+
+Two shortest-path kernels stay, because each wins its own shape:
+:func:`hop_table` fills row tables, the label-setting A* :func:`search`
+settles a few targets from many DP-seeded sources under the band (and
+captures paths). An edge-state step over dp-seeded hop-table rows, one
+row per live seed with the band as a pairwise mask, gave identical DP
+rows and walks but cost more edge-state DP CPU (4 cores): 0.55 s ->
+1.3 s on the 512-image lifecycle input, and 1.6 s -> 5.3 s with a
+segment break that routes every layer.
 """
 
 from __future__ import annotations
@@ -174,8 +185,9 @@ def build_csr(frm, to, cost, ends=None, states=None) -> dict:
     index (``np.searchsorted``); node graphs pass ``np.arange(n)`` so a
     node id is its own index, edge-state graphs default to the distinct
     ids. Arcs are ordered by (from, to) index, ties stable. ``ends`` =
-    (fx, fy, tx, ty), the coordinates of each arc's from/to state, feed
-    the A* heuristic (R4) when they pass the admissibility gate."""
+    (fx, fy, tx, ty), the coordinates of each arc's from/to state, are
+    kept as ``xy``: the R5 band's straight-line span always reads them,
+    the A* heuristic (R4) only when they pass the admissibility gate."""
     frm, to = np.asarray(frm, np.int64), np.asarray(to, np.int64)
     cost = np.asarray(cost, np.float64)
     if states is None:
@@ -195,8 +207,8 @@ def build_csr(frm, to, cost, ends=None, states=None) -> dict:
         xy = np.full((n, 2), np.nan)
         xy[fi, 0], xy[fi, 1] = ends[0], ends[1]
         xy[ti, 0], xy[ti, 1] = ends[2], ends[3]
-        if _heuristic_admissible(csr, xy):
-            csr["xy"] = xy  # else: plain Dijkstra (exact, just unpruned)
+        csr["xy"] = xy
+        csr["astar"] = _heuristic_admissible(csr, xy)  # else: plain Dijkstra (exact, unpruned)
     return csr
 
 
@@ -224,8 +236,8 @@ def _heuristic_admissible(csr: dict, xy: np.ndarray) -> bool:
     arc — true for the shipped config (all level factors >= 1, punish
     terms >= 0) but silently broken by an editable config with a factor
     < 1. Check the invariant on the data itself (one vectorized pass)
-    instead of trusting config semantics; on violation the caller keeps
-    the CSR heuristic-free and every search degrades to exact Dijkstra."""
+    instead of trusting config semantics; on violation :func:`heuristic`
+    is off and every search degrades to exact Dijkstra."""
     u, indptr = csr["dst"], csr["indptr"]
     src_of = np.repeat(np.arange(len(indptr) - 1), np.diff(indptr))
     d = xy[u] - xy[src_of]
@@ -262,10 +274,10 @@ def heuristic(csr: dict, targets: frozenset):
     ``router.cpp:119-145``). Admissible and consistent, so popped ==
     settled exactly like Dijkstra; NaN coords give 0. One vectorized
     pass per call (every seed of a DP layer shares it). None without
-    coords."""
-    xy = csr.get("xy")
-    if xy is None or not targets:
+    coords or when they fail the admissibility gate."""
+    if not csr.get("astar") or not targets:
         return None
+    xy = csr["xy"]
     txy = xy[np.fromiter(targets, dtype=np.int64)]
     dx = xy[:, 0:1] - txy[None, :, 0].reshape(1, -1)
     dy = xy[:, 1:2] - txy[None, :, 1].reshape(1, -1)
@@ -532,77 +544,80 @@ _DEBUG_SCHEMA = _ALIGN_SCHEMA + ", chosen boolean"
 _DP_COLS = ["trip_id", "seq", "image_id", "edge_id", "cand_node", "dist"]
 
 
-def _layer_grid(pdf: pd.DataFrame, hops: dict) -> dict:
-    """Candidate rows of many trips, any row order, laid out for the
-    batched DPs. Rows sort by (trip, seq, edge_id) — so every argmin's
-    first-minimum tie-break is the smaller edge_id — and each (trip,
-    seq) layer becomes one row of a (layer, slot) grid padded to the
-    widest layer: ``em`` (emission) and ``ni`` (hop-table index, -1 for
-    nodes missing from the graph). Padding slots hold em = +inf and
-    ni = -1, so their costs stay +inf and the first-minimum argmin
-    never picks one over a real slot. A trip's layers are consecutive
-    grid rows, ``n_lay`` of them from ``first`` on."""
-    trip = pd.factorize(pdf["trip_id"], sort=True)[0]
+def _layer_grid(pdf: pd.DataFrame, key: str, state: str, em) -> dict:
+    """Candidate rows of many ``key`` groups (trips or fingerprints), any
+    row order, laid out for the layered DPs. Rows sort by (key, seq,
+    state), ties in input order — so every argmin's first-minimum
+    tie-break is the smaller state — and each (key, seq) layer becomes
+    one row of a (layer, slot) grid padded to the widest layer. ``em``
+    is the emission of each row of ``pdf``; padding slots hold em =
+    +inf, so their costs stay +inf and the first-minimum argmin never
+    picks one over a real slot. A key's layers are consecutive grid
+    rows, ``n_lay`` of them from ``first`` on; layer l holds ``width[l]``
+    real slots."""
+    k = pd.factorize(pdf[key], sort=True)[0]
     seq = pdf["seq"].to_numpy(np.int64)
-    order = np.lexsort((pdf["edge_id"].to_numpy(np.int64), seq, trip))
-    trip, seq = trip[order], seq[order]
+    order = np.lexsort((pdf[state].to_numpy(np.int64), seq, k))
+    k, seq = k[order], seq[order]
     new_lay = np.ones(len(order), dtype=bool)
-    new_lay[1:] = (trip[1:] != trip[:-1]) | (seq[1:] != seq[:-1])
+    new_lay[1:] = (k[1:] != k[:-1]) | (seq[1:] != seq[:-1])
     lay = np.cumsum(new_lay) - 1
     lay_start = np.flatnonzero(new_lay)
     slot = np.arange(len(order)) - lay_start[lay]
-    lay_trip = trip[lay_start]
-    new_trip = np.ones(len(lay_start), dtype=bool)
-    new_trip[1:] = lay_trip[1:] != lay_trip[:-1]
-    first = np.flatnonzero(new_trip)
-    shape = (len(lay_start), int(slot.max()) + 1)
-    em, ni = np.full(shape, np.inf), np.full(shape, -1, dtype=np.int64)
-    em[lay, slot] = pdf["dist"].to_numpy(np.float64)[order] * C.CAND_PEN_FAC
-    ni[lay, slot] = index_of(hops, pdf["cand_node"].to_numpy(np.int64)[order])
-    return {
-        "rows": pdf[["trip_id", "seq", "image_id", "edge_id", "cand_node"]]
-        .iloc[order].reset_index(drop=True),
-        "lay": lay, "slot": slot, "lay_start": lay_start, "em": em, "ni": ni,
+    first = np.flatnonzero(np.diff(k[lay_start], prepend=-1))  # codes are >= 0
+    g = {
+        "rows": pdf.iloc[order].reset_index(drop=True),
+        "lay": lay, "slot": slot, "lay_start": lay_start,
+        "width": np.diff(np.append(lay_start, len(order))),
         "first": first, "n_lay": np.diff(np.append(first, len(lay_start))),
+        "shape": (len(lay_start), int(slot.max()) + 1),
     }
+    g["em"] = on_grid(g, np.asarray(em, np.float64)[order], np.inf)
+    return g
+
+
+def on_grid(g: dict, values, fill) -> np.ndarray:
+    """``values`` of the grid's sorted rows (``g["rows"]`` order) as a
+    (layer, slot) array, ``fill`` in the padding slots."""
+    values = np.asarray(values)
+    out = np.full(g["shape"], fill, dtype=values.dtype)
+    out[g["lay"], g["slot"]] = values
+    return out
 
 
 def _steps(g: dict):
-    """(previous, current) grid rows of every trip still active at each
+    """(previous, current) grid rows of every key still active at each
     layer step t >= 1."""
     for t in range(1, int(g["n_lay"].max())):
         cur = g["first"][g["n_lay"] > t] + t
         yield cur - 1, cur
 
 
-def viterbi_batch(pdf: pd.DataFrame, hops: dict, debug: bool = False) -> pd.DataFrame:
-    """R7 forward DP + backtrack for every trip of ``pdf`` at once: per
-    layer, ``total = (dp + hop) + emission`` with ``hop`` the gather
-    ``H[ni[prev]][:, ni[cur]]`` and np.argmin's first minimum. Rows come
-    out sorted by (trip_id, seq[, edge_id]); see :func:`viterbi_align`
-    for the two output surfaces."""
-    g = _layer_grid(pdf, hops)
-    em, ni, hop = g["em"], g["ni"], hops["H"]
+def layered_viterbi(g: dict, step, cols: list, debug: bool = False) -> pd.DataFrame:
+    """R7 forward DP + backtrack over a :func:`_layer_grid`, whatever
+    the state type: layer 0 costs its emission, and each later layer is
+    ``dp[cur], back[cur] = step(g, dp, prev, cur)`` for the grid rows of
+    every key still active — ``back`` is the previous layer's winning
+    slot. The backtrack starts at each key's first-minimum last-layer
+    slot. Output: ``cols`` of the chosen row of every layer, sorted by
+    (key, seq), with its ``emission`` and ``acc_cost``; with ``debug``,
+    the ``pfaedle -T``-style surface instead: EVERY state of every layer
+    with its forward-DP cost, and ``chosen`` marking the backtracked
+    path (== the default output)."""
+    em = g["em"]
     dp = em.copy()
     back = np.zeros(em.shape, dtype=np.int64)
     for prev, cur in _steps(g):
-        total = (dp[prev][:, :, None] + hop[ni[prev][:, :, None], ni[cur][:, None, :]]) \
-            + em[cur][:, None, :]
-        best = np.argmin(total, axis=1)
-        dp[cur] = np.take_along_axis(total, best[:, None, :], axis=1)[:, 0, :]
-        back[cur] = best
+        dp[cur], back[cur] = step(g, dp, prev, cur)
     last = g["first"] + g["n_lay"] - 1
     choice = np.zeros(len(em), dtype=np.int64)
     choice[last] = np.argmin(dp[last], axis=1)
     for prev, cur in reversed(list(_steps(g))):
         choice[prev] = back[cur, choice[cur]]
 
-    out = g["rows"]
+    out = g["rows"][cols]
     if debug:
-        # -T surface: every state of every layer with its forward-DP
-        # cost; chosen marks the backtracked path (== the default output)
-        out["emission"] = em[g["lay"], g["slot"]]
-        out["acc_cost"] = dp[g["lay"], g["slot"]]
+        out = out.assign(emission=em[g["lay"], g["slot"]], acc_cost=dp[g["lay"], g["slot"]])
         out["chosen"] = g["slot"] == choice[g["lay"]]
         return out
     rows = np.arange(len(em))
@@ -612,11 +627,39 @@ def viterbi_batch(pdf: pd.DataFrame, hops: dict, debug: bool = False) -> pd.Data
     return out
 
 
+def _node_grid(pdf: pd.DataFrame, hops: dict) -> dict:
+    """:func:`_layer_grid` of node-state candidate rows: trips, states
+    ordered by edge_id, emission ``dist * CAND_PEN_FAC`` (A5), plus
+    ``ni``, each slot's hop-table index (-1 for padding and for nodes
+    missing from the graph)."""
+    g = _layer_grid(pdf, "trip_id", "edge_id", pdf["dist"].to_numpy(np.float64) * C.CAND_PEN_FAC)
+    g["ni"] = on_grid(g, index_of(hops, g["rows"]["cand_node"].to_numpy(np.int64)), -1)
+    return g
+
+
+def viterbi_batch(pdf: pd.DataFrame, hops: dict, debug: bool = False) -> pd.DataFrame:
+    """R7 over node states for every trip of ``pdf`` at once: the
+    :func:`layered_viterbi` step is ``total = (dp + hop) + emission``
+    with ``hop`` the gather ``H[ni[prev]][:, ni[cur]]`` and np.argmin's
+    first minimum. Rows come out sorted by (trip_id, seq[, edge_id]);
+    see :func:`viterbi_align` for the two output surfaces."""
+    g = _node_grid(pdf, hops)
+    em, ni, hop = g["em"], g["ni"], hops["H"]
+
+    def step(g, dp, prev, cur):
+        total = (dp[prev][:, :, None] + hop[ni[prev][:, :, None], ni[cur][:, None, :]]) \
+            + em[cur][:, None, :]
+        best = np.argmin(total, axis=1)
+        return np.take_along_axis(total, best[:, None, :], axis=1)[:, 0, :], best
+
+    return layered_viterbi(g, step, _DP_COLS[:-1], debug)
+
+
 def greedy2_batch(pdf: pd.DataFrame, hops: dict) -> pd.DataFrame:
     """R8 routeGreedy2 for every trip of ``pdf`` at once: layer 0 takes
     its min-emission slot, each later layer argmin(``emission + hop``
     from the previous choice), ``acc = acc + score`` with inf latched."""
-    g = _layer_grid(pdf, hops)
+    g = _node_grid(pdf, hops)
     em, ni, hop = g["em"], g["ni"], hops["H"]
     rows = np.arange(len(em))
     first = g["first"]
@@ -630,7 +673,7 @@ def greedy2_batch(pdf: pd.DataFrame, hops: dict) -> pd.DataFrame:
         pick[cur] = np.argmin(sc, axis=1)
         score = sc[np.arange(len(cur)), pick[cur]]
         acc[cur] = np.where(np.isfinite(score), acc[prev] + score, np.inf)
-    out = g["rows"].iloc[g["lay_start"] + pick].reset_index(drop=True)
+    out = g["rows"][_DP_COLS[:-1]].iloc[g["lay_start"] + pick].reset_index(drop=True)
     out["emission"] = em[rows, pick]
     out["acc_cost"] = acc
     return out

@@ -718,7 +718,7 @@ def test_viterbi_full_never_mixes_two_transition_dicts(spark):
         got = ER.viterbi_full(cand, table).toPandas()
         csrs = {v: ER.transition_csr(t) for v, t in table.items()}
         for trip, g in reps.groupby("trip_id"):
-            want = ER._viterbi_full_one(g, csrs)
+            want = ER.state_viterbi_batch(g, csrs)
             mine = got[got["trip_id"] == trip].sort_values("seq")
             assert mine["state_edge"].tolist() == want["state_edge"].tolist(), trip
             assert mine["acc_cost"].tolist() == want["acc_cost"].tolist(), trip
@@ -821,6 +821,56 @@ def test_hop_band_no_shadowing_through_shared_state():
     assert banded[60] == 36000.0 and ob[60] == 1
     unbanded, ou = ER.state_search(tcsr, seeds, [100, 60])
     assert unbanded[60] == 35000.0 and ou[60] == 0  # min TOTAL ignores band
+
+
+def _bf_banded(trans: pd.DataFrame, pos: dict, seeds, targets) -> dict:
+    """Pairwise R5 band by brute force (router.cpp:229-306): all-pairs
+    hop costs by Floyd-Warshall over the raw arcs, pilot c0 = the hop of
+    the min (total, target, seed ordinal) pair, pend = the max
+    straight-line seed->target distance, and each target's min total
+    over its pairs with hop <= cap. Returns {target: (total, ordinal)}."""
+    ids = sorted(set(trans["from_edge"]) | set(trans["to_edge"]))
+    at = {s: i for i, s in enumerate(ids)}
+    d = np.full((len(ids), len(ids)), np.inf)
+    np.fill_diagonal(d, 0.0)
+    for f, t, c in zip(trans["from_edge"], trans["to_edge"], trans["cost"]):
+        d[at[f], at[t]] = min(d[at[f], at[t]], c)
+    for k in range(len(ids)):
+        d = np.minimum(d, d[:, k:k + 1] + d[k:k + 1, :])
+    pairs = [(c + d[at[s], at[t]], t, o, d[at[s], at[t]])
+             for o, (s, c) in enumerate(seeds) for t in targets]
+    c0 = min(p for p in pairs if np.isfinite(p[0]))[3]
+    pend = max(np.hypot(pos[s][0] - pos[t][0], pos[s][1] - pos[t][1])
+               for s, _ in seeds for t in targets)
+    cap = max(c0, pend * routing.OPTS["level_punish"][2]) * 3.0 \
+        + routing.OPTS["full_turn_punish"] + routing.OPTS["pass_thru_station_punish"]
+    best = {}
+    for total, t, o, hop in sorted(pairs):
+        if hop <= cap and t not in best:
+            best[t] = (total, o)
+    return best
+
+
+def test_hop_band_span_without_astar():
+    """The band's pend is the straight-line seed->target span even when
+    an arc cheaper than its span turns the A* heuristic off: the banded
+    search equals the pairwise brute force. Here arc 0->1 costs 100 over
+    a 9 km span, the pilot is target 1 (hop 100), and target 2 (hop
+    12000) lies inside the band only through pend. Pure numpy."""
+    pos = {0: (0.0, 0.0), 1: (9000.0, 0.0), 2: (0.0, 20.0), 3: (0.0, 10.0),
+           4: (100.0, 0.0), 5: (0.0, 30.0)}
+    arcs = [(0, 1, 100.0), (0, 3, 6000.0), (3, 2, 6000.0), (4, 2, 20000.0), (2, 5, 40000.0)]
+    toy = pd.DataFrame(arcs, columns=["from_edge", "to_edge", "cost"])
+    for c, i, end in (("fx", 0, "from_edge"), ("fy", 1, "from_edge"),
+                      ("tx", 0, "to_edge"), ("ty", 1, "to_edge")):
+        toy[c] = [pos[s][i] for s in toy[end]]
+    csr = ER.transition_csr(toy)
+    assert routing.heuristic(csr, frozenset({1})) is None  # inadmissible: A* off
+    seeds, targets = [(0, 0.0), (4, 50.0)], [1, 2, 5]
+    dist, origin = ER.state_search(csr, seeds, targets, band=True)
+    want = _bf_banded(toy, pos, seeds, targets)
+    assert {t: (dist[t], origin[t]) for t in dist} == want
+    assert want[2] == (12000.0, 0) and 5 not in want  # 52000 lies beyond the band
 
 
 def test_trip_debug_agrees_with_viterbi_full(spark, tmp_path):

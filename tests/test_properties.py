@@ -11,7 +11,7 @@ column-expression SQL mirrors, and they run in milliseconds.
 import math
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pfaedle_spark.functions import geo
@@ -61,6 +61,8 @@ def test_project_on_clamped_and_on_segment(px, py, x1, y1, x2, y2):
     assert math.isclose(got, d, rel_tol=1e-9, abs_tol=1e-6)
 
 
+# a point collinear with a hull edge (here (1, 1) on (0, 0)-(2, 2))
+@example([(0.0, 0.0), (1.0, 1.0), (2.0, 2.0), (-1.0, 0.0)])
 @given(st.lists(st.tuples(fin, fin), min_size=3, max_size=40, unique=True))
 def test_convex_hull_contains_all_points(pts):
     """Every input point is inside (or on) its convex hull; hull area
@@ -80,8 +82,18 @@ def test_convex_hull_contains_all_points(pts):
     strict = (
         (xs > xs.min()) & (xs < xs.max()) & (ys > ys.min()) & (ys < ys.max())
     )
+    # the boundary is every hull edge, not only its vertices: a point
+    # collinear with an edge is dropped from the hull yet lies on it.
+    # `fin` is a cm lattice, so the collinearity test is exact in int64
+    ix, iy = np.rint(xs * 100).astype(np.int64), np.rint(ys * 100).astype(np.int64)
     on_hull = np.zeros(len(xs), dtype=bool)
-    on_hull[idx] = True
+    for a, b in zip(idx, np.roll(idx, -1)):
+        cross = (ix[b] - ix[a]) * (iy - iy[a]) - (iy[b] - iy[a]) * (ix - ix[a])
+        on_hull |= (
+            (cross == 0)
+            & (np.minimum(ix[a], ix[b]) <= ix) & (ix <= np.maximum(ix[a], ix[b]))
+            & (np.minimum(iy[a], iy[b]) <= iy) & (iy <= np.maximum(iy[a], iy[b]))
+        )
     assert inside[strict & ~on_hull].all() or not (strict & ~on_hull).any()
 
 

@@ -225,10 +225,11 @@ def test_search_leaves_csr_unchanged(spark):
 
 
 def test_heuristic_admissibility_gate_pure():
-    """A* heuristic coords are attached only when every arc cost >=
-    straight-line displacement; a config/data combination violating that
-    must degrade to plain (exact) Dijkstra rather than return wrong
-    shortest paths. Pure numpy — no Spark session."""
+    """The A* heuristic is on only when every arc cost >= straight-line
+    displacement; a config/data combination violating that must degrade
+    to plain (exact) Dijkstra rather than return wrong shortest paths.
+    The coordinates stay either way: the R5 band's span reads them.
+    Pure numpy — no Spark session."""
     import pandas as pd
 
     from pfaedle_spark.operators.routing import node_csr
@@ -242,11 +243,13 @@ def test_heuristic_admissibility_gate_pure():
         )
     )
     csr = node_csr(ok, level_punish=False)
-    assert "xy" in csr  # admissible: cost == displacement
+    targets = frozenset({2})
+    assert routing.heuristic(csr, targets) is not None  # admissible: cost == displacement
 
     bad = ok.assign(length=[1.0, 100.0])  # arc cheaper than its span
     csr2 = node_csr(bad, level_punish=False)
-    assert "xy" not in csr2  # heuristic dropped -> plain Dijkstra
+    assert routing.heuristic(csr2, targets) is None  # heuristic off -> plain Dijkstra
+    np.testing.assert_array_equal(csr2["xy"], csr["xy"])
 
 
 def _search_rows(csr):
@@ -345,28 +348,81 @@ def _toy_hops():
     return routing.hop_lookup(routing.node_csr(pdf, level_punish=False))
 
 
-@pytest.mark.parametrize("kernel", ["viterbi", "viterbi_debug", "greedy2"])
+def _state_world():
+    """Edge-state candidates over two route-attr variants of one toy
+    transition graph (variant 1 costs three times variant 0): fa and fb
+    hold the same 3 layers under different variants, fc has 1 layer,
+    fd has 5 layers and a duplicate (seq, edge_id, emission) row. Arc
+    costs >= the span, so the A* heuristic is on."""
+    from pfaedle_spark.operators import edge_routing as ER
+
+    rng = np.random.default_rng(5)
+    ids = np.array([e + off for off in (0, ER.REV_OFF) for e in range(1, 7)])
+    xy = rng.integers(0, 40, (len(ids), 2)).astype(float)
+    f, t = np.array([(a, b) for a in range(len(ids)) for b in range(len(ids))
+                     if a != b and rng.random() < 0.3]).T
+    span = np.hypot(*(xy[t] - xy[f]).T)
+    base = pd.DataFrame({
+        "from_edge": ids[f], "to_edge": ids[t],
+        "cost": np.ceil(span) + rng.integers(1, 60, len(f)).astype(float),
+        "fx": xy[f, 0], "fy": xy[f, 1], "tx": xy[t, 0], "ty": xy[t, 1],
+    })
+    csrs = {v: ER.transition_csr(base.assign(cost=base["cost"] * (1 + 2 * v))) for v in (0, 1)}
+    layers = {"fa": [[1, 4], [2, 3, 5], [6]], "fc": [[2, 3]],
+              "fd": [[5], [1, 2], [3, 4, 6], [2], [1, 5]]}
+    layers["fb"] = layers["fa"]
+    variant = {"fa": 0, "fb": 1, "fc": 0, "fd": 1}
+    rows = [(fp, variant[fp], 10 * li, e, int(e % 2), float(e * li % 7) / 2)
+            for fp, lays in layers.items() for li, lay in enumerate(lays) for e in lay]
+    rows.append(("fd", 1, 20, 4, 0, 0.5))  # a duplicate candidate row
+    pdf = pd.DataFrame(rows, columns=["fingerprint", "variant", "seq", "edge_id",
+                                      "cand_node", "emission"])
+    return pdf, csrs
+
+
+@pytest.mark.parametrize("kernel", ["viterbi", "viterbi_debug", "greedy2", "state_viterbi"])
 def test_batched_dp_equals_per_trip_calls(kernel):
-    """One multi-trip kernel call == the concatenation of one-trip calls
-    (trips in trip_id order), and shuffling the input rows changes
-    nothing. Pure numpy — no Spark session."""
-    import pandas as pd
+    """One multi-key kernel call == the concatenation of one-key calls
+    (keys in sorted order), and shuffling the input rows changes
+    nothing: the node-state kernels over trips, and the edge-state
+    kernel over fingerprints of two route-attr variants with unequal
+    layer counts. Pure numpy — no Spark session."""
+    from pfaedle_spark.operators import edge_routing as ER
 
-    run = {
-        "viterbi": lambda p, h: routing.viterbi_batch(p, h),
-        "viterbi_debug": lambda p, h: routing.viterbi_batch(p, h, debug=True),
-        "greedy2": routing.greedy2_batch,
-    }[kernel]
-    pdf, hops = _dp_frame(), _toy_hops()
-    got = run(pdf, hops)
-    per_trip = pd.concat(
-        [run(g, hops) for _, g in pdf.groupby("trip_id", sort=True)], ignore_index=True
-    )
-    pd.testing.assert_frame_equal(got, per_trip)
-    for seed in range(3):
-        shuffled = pdf.sample(frac=1, random_state=seed).reset_index(drop=True)
-        pd.testing.assert_frame_equal(run(shuffled, hops), got)
+    if kernel == "state_viterbi":
+        (pdf, csrs), key = _state_world(), "fingerprint"
+        runs = [lambda p: ER.state_viterbi_batch(p, csrs),
+                lambda p: ER.state_viterbi_batch(p, csrs, debug=True)]
+    else:
+        pdf, hops, key = _dp_frame(), _toy_hops(), "trip_id"
+        runs = [{
+            "viterbi": lambda p: routing.viterbi_batch(p, hops),
+            "viterbi_debug": lambda p: routing.viterbi_batch(p, hops, debug=True),
+            "greedy2": lambda p: routing.greedy2_batch(p, hops),
+        }[kernel]]
+    outs = []
+    for run in runs:
+        got = run(pdf)
+        per_key = pd.concat(
+            [run(g) for _, g in pdf.groupby(key, sort=True)], ignore_index=True
+        )
+        pd.testing.assert_frame_equal(got, per_key)
+        for seed in range(3):
+            shuffled = pdf.sample(frac=1, random_state=seed).reset_index(drop=True)
+            pd.testing.assert_frame_equal(run(shuffled), got)
+        outs.append(got)
 
+    if kernel == "state_viterbi":
+        plain, debug = outs
+        assert plain.groupby("fingerprint").size().to_dict() == {"fa": 3, "fb": 3, "fc": 1, "fd": 5}
+        assert len(debug) == 2 * (len(pdf) - 1)  # forward + reverse state per distinct row
+        pd.testing.assert_frame_equal(
+            debug[debug.chosen].drop(columns="chosen").reset_index(drop=True), plain
+        )
+        last = plain.groupby("fingerprint")["acc_cost"].last()
+        assert np.isfinite(last["fa"]) and last["fb"] > last["fa"]  # the variant's own costs
+        return
+    got = outs[0]
     plain = got[got.chosen].drop(columns="chosen").reset_index(drop=True) \
         if kernel == "viterbi_debug" else got
     assert plain.groupby("trip_id").size().to_dict() == {"t1": 1, "t8": 8, "tie": 2}
@@ -488,17 +544,19 @@ def test_key_runs_reject_a_key_that_comes_back(batches):
 
 
 def test_grouped_runner_streams_small_batches(spark):
-    """At 3-record Arrow batches, viterbi_align and segmentize return the
-    rows they return at the default batch size, and the kernel sees
-    frames smaller than a bucket: PySpark resolved the runner's
-    ``Iterator[pd.DataFrame]`` hints to the iterator eval type instead
-    of silently falling back to one frame per bucket."""
+    """At 3-record Arrow batches, viterbi_align, segmentize and the
+    edge-state DP (viterbi_full and trip_debug, which read runs of
+    fingerprints) return the rows they return at the default batch
+    size, and the kernel sees frames smaller than a bucket: PySpark
+    resolved the runner's ``Iterator[pd.DataFrame]`` hints to the
+    iterator eval type instead of silently falling back to one frame
+    per bucket."""
     import __spark_entry__ as entrymod
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     eds = datagen.edges(spark)
     cand = candidates.candidate_edges(datagen.points(spark, SF_DIR), eds)
-    q = entrymod.queries()["segmentize"]
+    queries = [entrymod.queries()[q] for q in ("segmentize", "viterbi_full", "trip_debug")]
 
     def rows():
         aligned = routing.viterbi_align(cand, graph_ops.write_odir_edges(eds))
@@ -507,19 +565,18 @@ def test_grouped_runner_streams_small_batches(spark):
             lambda pdf: pd.DataFrame({"rows": [len(pdf)], "trips": [pdf["trip_id"].nunique()]}),
             "rows long, trips long",
         )
-        return (sorted(aligned.collect()), sorted(q(spark, SF_DIR).collect()),
+        return ([sorted(aligned.collect())] + [sorted(q(spark, SF_DIR).collect()) for q in queries],
                 calls.toPandas())
 
-    want_align, want_seg, whole = rows()
+    want, whole = rows()
     old = spark.conf.get(key)
     spark.conf.set(key, "3")
     try:
-        got_align, got_seg, small = rows()
+        got, small = rows()
     finally:
         spark.conf.set(key, old)
-    assert len(want_align) > 0 and len(want_seg) > 0
-    assert got_align == want_align
-    assert got_seg == want_seg
+    assert all(len(w) > 0 for w in want)
+    assert got == want
     n = routing.dp_partitions(spark)
     per_bucket = (
         cand.groupBy(F.pmod(F.hash("trip_id"), F.lit(n))).count().toPandas()["count"]
